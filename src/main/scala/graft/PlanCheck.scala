@@ -15,6 +15,8 @@ object PlanCheck {
     val which: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
       else Map(
+        "e2e_log_pipeline_hive" -> (PipelineE2E.runHive(_, _)),
+        "x14_since_pruned" -> (StorePrunedQuery.run(_, _)),
         "s6_scan_filter_project" -> (LogParityQueries.scanFilterProject(_, _)),
         "p2_since_time_filter" -> (LogParityQueries.sinceFilter(_, _)),
         "q1_pricing_summary" -> (RelationalQueries.pricingSummary(_, _)),

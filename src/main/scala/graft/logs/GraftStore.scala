@@ -20,10 +20,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * the filesystem, the manifest only says which version prefixes to list.
   *
   * Read-side contract: `resolve` names the live version's own directory
-  * (what appends write into); [[readStore]] is the composite read every
-  * engine query path uses (own + carried partitions). Plain dirs and
-  * symlink roots pass through both unchanged, so the three tiers share one
-  * code path.
+  * (what appends write into); [[readStore]] is the composite DataFrame read
+  * (own + carried partitions) of store jobs and fixtures, while `y-logcli`
+  * queries plan through the snapshot relation, `format("graft")`. Plain
+  * dirs and symlink roots pass through both unchanged, so the three tiers
+  * share one code path.
   */
 object GraftStore {
 
@@ -588,10 +589,10 @@ object GraftStore {
     else unioned
   }
 
-  /** The read-side entry point every engine query path uses: composite read
-    * of the live snapshot for pointer stores, plain read otherwise (symlink
-    * roots resolve in the filesystem and are always self-contained modulo
-    * the schema overlay, applied here on both tiers).
+  /** DataFrame read of the live snapshot: composite read for pointer
+    * stores, plain read otherwise (symlink roots resolve in the filesystem
+    * and are always self-contained modulo the schema overlay, applied here
+    * on both tiers).
     */
   def readStore(spark: SparkSession, root: String): DataFrame =
     if (isPointerStore(spark, root))
@@ -610,64 +611,6 @@ object GraftStore {
         DeleteVectors.applyTo(spark, df, dv, FileStats.listDirEntries(spark, root))
       else df
     }
-
-  /** Stats-pruned composite read ([[FileStats]]): drop files whose
-    * commit-time `time_ns` max is below the `--since` cutoff (or whose `pod`
-    * min/max range excludes the probed pod) from the scan list BEFORE Spark
-    * opens any footer. At the reference's ~1 MB object size a 100 TB store
-    * is ~10⁸ objects; a 15-minute query reads a handful of them, and without
-    * this tier the footer opens — not the data — are the query. Absent or
-    * stale sidecar lines fail open to the plain [[readStore]] path: pruning
-    * is an optimization, never a correctness gate (row-level predicates are
-    * always re-applied by the caller).
-    */
-  def readStorePruned(spark: SparkSession, root: String,
-      sinceNs: Option[Long], podEq: Option[String] = None): DataFrame = {
-    if (sinceNs.isEmpty && podEq.isEmpty) return readStore(spark, root)
-    val dir = resolve(spark, root)
-    val stats = FileStats.read(spark, dir)
-    if (stats.isEmpty) return readStore(spark, root)
-    val entries: Seq[FileEntry] =
-      if (isPointerStore(spark, root))
-        compositeEntries(spark, root, currentVersion(spark, root))
-      else {
-        val p = new Path(dir)
-        val fs = fsOf(spark, p)
-        if (!fs.exists(p)) return readStore(spark, root)
-        val base = p.toUri.getPath
-        val out = Seq.newBuilder[FileEntry]
-        val it = walkFiles(fs, p)
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toUri.getPath.stripPrefix(base)
-          if (rel.split('/').filter(_.nonEmpty).forall(visibleName))
-            out += FileEntry(rel, dir, f.getPath.toString, f.getLen)
-        }
-        out.result()
-      }
-    val kept = entries.filter { e =>
-      stats.get(e.key) match {
-        case Some(s) if s.len == e.len =>
-          sinceNs.forall(s.mayOverlapSince) && podEq.forall(s.mayContainPod)
-        case _ => true // no/stale stats line: always scan
-      }
-    }
-    if (kept.size == entries.size) return readStore(spark, root)
-    if (kept.isEmpty)
-      return readStore(spark, root).filter(org.apache.spark.sql.functions.lit(false))
-    val overlay = readSchemaOverlay(spark, dir)
-    val dv = DeleteVectors.read(spark, dir)
-    val unioned = kept.groupBy(_.legBase).toSeq.sortBy(_._1).map { case (base, es) =>
-      val r = spark.read.option("basePath", base)
-      val r2 = if (overlay.nonEmpty) r.option("mergeSchema", "true") else r
-      val df0 = r2.parquet(es.map(_.physical).sorted: _*)
-      applyOverlay(if (dv.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlay)
-    }.reduce(_.unionByName(_))
-    // vectors for pruned-out files are inert (no row matches their path);
-    // kept files get theirs applied like any other read
-    if (dv.nonEmpty) DeleteVectors.applyTo(spark, unioned, dv, kept)
-    else unioned
-  }
 
   /** Hidden/metadata names (`_SUCCESS`, `_graft_manifest`, `.crc`, trash)
     * are invisible to Spark's file listing and to store accounting.

@@ -57,8 +57,9 @@ object LogLayout {
   * Partition pruning (SURVEY §4): for [[LogLayout.Positional]] the glob is
   * rewritten from the selectors before `spark.read` ever lists — the same
   * altitude as the reference's `build_s3_path` (y-logcli:106-123). For
-  * [[LogLayout.Hive]] the same selectors become column predicates and
-  * Catalyst's `PartitioningAwareFileIndex` prunes. Residual selector columns
+  * [[LogLayout.Hive]] the same selectors become column predicates and the
+  * store's snapshot file index ([[graft.sources.GraftFileIndex]]) prunes
+  * partitions and, from commit-time stats, files. Residual selector columns
   * are always also filtered (defense in depth; globs prune, filters prove).
   * Time predicates are applied on BOTH the µs `time` column and the `time_ns`
   * long so parquet row-group stats prune whichever column the file carries.
@@ -114,23 +115,23 @@ final case class LogQuery(
               .unionByName(positionalScan(spark, root, "arrow"))
         }
       case LogLayout.Hive =>
-        // pointer stores (object-store tier) indirect through _current and
-        // may carry partitions from older version prefixes by manifest
-        // (incremental compaction); plain/symlink roots are a plain read.
-        // Stats-pruned when a `--since` cutoff or pod probe is present: the
-        // commit-time sidecar drops non-overlapping files from the scan
-        // list before any footer is opened ([[FileStats]]). The plan-time
-        // cutoff for an un-pinned `--since` uses driver now(), which is ≤
-        // the row filter's execution-time now() — pruning keeps a strict
-        // superset of what the exact row-level predicate below retains.
-        val pruneCutoffNs = sinceSeconds.map { s =>
-          asOfNanos.getOrElse(System.currentTimeMillis() * 1000000L) -
-            s * 1000000000L
-        }
-        GraftStore.readStorePruned(spark, root, pruneCutoffNs,
-          selector.labels.get("pod"))
+        // the store's snapshot relation: every tier (plain, symlink,
+        // pointer with carried partitions) listed once into its file index,
+        // schema from one footer on the driver, deletion vectors applied.
+        // The selector and `--since` predicates below push into that index,
+        // which drops files whose commit-time stats exclude them
+        // ([[FileStats]]) before any footer is opened; an un-pinned
+        // `--since` folds current_timestamp() to a literal at optimization,
+        // so it prunes too.
+        spark.read.format("graft").load(root)
     }
+    selectFrom(base)
+  }
 
+  /** The row-level half of [[dataFrame]] over an already-chosen scan:
+    * selector and `--since` predicates, output projection, `time_ns` order.
+    */
+  private[graft] def selectFrom(base: DataFrame): DataFrame = {
     // layouts that record no pod uid (the positional layout by design,
     // pre-pod_id hive stores by age) surface the column as null, so a
     // pod_id selector matches NOTHING there — the silent alternative,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** x14 — the stats-pruned `--since` read ([[FileStats]] +
-  * [[GraftStore.readStorePruned]]), oracle-gated.
+/** x14 — the stats-pruned `--since` read ([[FileStats]] through the
+  * snapshot relation's [[graft.sources.GraftFileIndex]]), oracle-gated.
   *
   * Builds a date-partitioned versioned store from `events`, then runs the
   * engine's `--since 7d` query pinned at the newest event: the commit-time

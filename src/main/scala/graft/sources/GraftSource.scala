@@ -7,33 +7,42 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession, SQL
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe => CEqualNullSafe, EqualTo => CEqualTo, Expression, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, In => CIn, InSet => CInSet, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Or => COr, StartsWith => CStartsWith}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory, PartitioningUtils}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the versioned
   * store as an ordinary Spark data source (registered short name, so plain
   * SQL `CREATE TABLE ... USING graft` works too).
   *
-  * The engine's own query paths call [[GraftStore]] directly; this connector
-  * is the USER surface a reference operator switching to the library gets —
-  * snapshot reads with every store behavior (composite manifests, schema
-  * overlays, deletion vectors, stats-based data skipping) applied without
-  * knowing any of those exist. Reference anchor: the reader side of the
-  * store contract (`y-logcli:106-123` resolves globs against the committed
-  * tree; here the committed tree resolves against `_current`).
+  * This is the store's one snapshot read: `y-logcli`'s hive queries
+  * ([[graft.logs.LogQuery]]) plan through it, and so does a reference
+  * operator switching to the library — every store behavior (composite
+  * manifests, schema overlays, deletion vectors, stats-based data skipping)
+  * applies without the reader knowing any of those exist. Reference anchor:
+  * the reader side of the store contract (`y-logcli:106-123` resolves globs
+  * against the committed tree; here the committed tree resolves against
+  * `_current`).
   *
   * Read options:
   *   - `versionAsOf` (int) / `timestampAsOf` (epoch-millis, ISO-8601
   *     instant, or `yyyy-MM-dd HH:mm:ss` UTC): time travel — mutually
   *     exclusive, versioned stores only.
   *   - `sinceNs` (long) / `pod` (string): the reference CLI's `--since` /
-  *     pod-probe shortcuts — stats-pruned scan list PLUS the row predicate.
-  *     These exist for CLI parity; the native path below gets the same
-  *     skipping automatically from pushed-down filters, which is the
-  *     preferred spelling (`.filter($"time_ns" >= cutoff)`).
+  *     pod-probe shortcuts — the same `time_ns >=` / `pod =` filters over
+  *     the snapshot relation that `.filter($"time_ns" >= cutoff)` spells
+  *     natively (the preferred spelling); pushed down, they prune the file
+  *     list like any other filter.
+  *
+  * Planning lists the snapshot once, into the [[GraftFileIndex]], and runs
+  * no Spark job unless schemas merge: a non-merging schema comes from one
+  * footer read on the driver ([[GraftSourceProvider.inferSchema]]).
   *
   * Execution: two tiers, chosen per snapshot.
   *   - FAST (no live deletion vectors): a [[GraftFileIndex]] lists exactly
@@ -47,9 +56,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     Schema-overlay columns ride natively: they join the declared data
   *     schema and the parquet reader null-fills files that lack them.
   *   - WRAPPED (deletion vectors pending, or `sinceNs`/`pod` options): the
-  *     scan delegates to [[GraftStore.readVersion]]/[[readStorePruned]], so
-  *     the DV anti-join applies; pushed filters and required columns are
-  *     re-applied INSIDE the delegate frame, reaching its parquet scans.
+  *     scan delegates to a frame over the fast tier's relation with the DV
+  *     anti-join (or the option filters) on top; pushed filters and required
+  *     columns are re-applied INSIDE the delegate frame, reaching its
+  *     parquet scan.
   *     Merge-on-read debt costs this detour only until compaction
   *     materializes the vectors, which returns the store to the fast tier.
   *
@@ -215,12 +225,12 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
         "with an explicit filter instead")
 
     if (sinceOpt.nonEmpty || podOpt.nonEmpty) {
-      // CLI-parity spelling: stats-pruned scan list + the row predicates the
-      // pruning promises (readStorePruned's contract says the caller
-      // re-applies them; this caller does).
-      var df = GraftStore.readStorePruned(spark, root, sinceOpt, podOpt)
-      sinceOpt.foreach(ns => df = df.filter(col("time_ns") >= ns))
-      podOpt.foreach(p => df = df.filter(col("pod") === p))
+      // CLI-parity spelling: the native filters over the live snapshot —
+      // pushed into its file index, they drop files the stats exclude
+      val snapshot = spark.baseRelationToDataFrame(createRelationImpl(
+        sqlContext, parameters - "sinceNs" - "pod", userSchema))
+      val df = (sinceOpt.map(col("time_ns") >= _) ++ podOpt.map(col("pod") === _))
+        .foldLeft(snapshot)(_.filter(_))
       return new GraftFrameRelation(sqlContext, df)
     }
 
@@ -254,8 +264,7 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
     // parquet/Delta reader; its schema comes from the user or the overlay
     val inferred: StructType = userSchema.getOrElse {
       if (entries.isEmpty) new StructType()
-      else new ParquetFileFormat()
-        .inferSchema(spark, fmtOptions, index.allFiles())
+      else GraftSourceProvider.inferSchema(spark, fmtOptions, index.allFiles())
         .getOrElse(throw new IllegalStateException(
           s"could not infer a parquet schema for $root"))
     }
@@ -396,6 +405,39 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
                 "epoch-millis, an ISO-8601 instant (2026-01-02T03:04:05Z), " +
                 "'yyyy-MM-dd HH:mm:ss' (UTC), or a bare 'yyyy-MM-dd' date")
         }
+    }
+  }
+}
+
+private[graft] object GraftSourceProvider {
+
+  /** The data schema `ParquetFileFormat.inferSchema` reports for `files`,
+    * without its Spark job. Unless schemas merge (the option, or the
+    * session's `spark.sql.parquet.mergeSchema`), Spark's inference reads ONE
+    * footer — the first data file by path — in a one-task job, a fixed cost
+    * on every query's planning. Reading that footer here, with the same
+    * Spark-schema-key lookup and the session's converter, gives the same
+    * schema on the driver. Merging reads every footer, so it keeps Spark's
+    * distributed inference.
+    */
+  def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val parquetOptions = new ParquetOptions(options, conf)
+    if (parquetOptions.mergeSchema)
+      new ParquetFileFormat().inferSchema(spark, options, files)
+    else files.minByOption(_.getPath.toString).flatMap { first =>
+      val input = HadoopInputFile.fromStatus(first,
+        spark.sessionState.newHadoopConfWithOptions(options))
+      val footer =
+        try Some(new Footer(first.getPath, ParquetFooterReader.readFooter(
+          input, ParquetMetadataConverter.SKIP_ROW_GROUPS)))
+        catch {
+          // what Spark's inference does with an unreadable footer
+          case NonFatal(_) if parquetOptions.ignoreCorruptFiles => None
+        }
+      footer.map(ParquetFileFormat.readSchemaFromFooter(_,
+        new ParquetToSparkSchemaConverter(conf)))
     }
   }
 }
@@ -917,7 +959,7 @@ private[graft] object GraftFileIndex {
 
 /** Fallback relation for snapshots the native file-scan tier cannot express
   * (live deletion vectors; the `sinceNs`/`pod` CLI options): delegates to a
-  * store-read DataFrame. Required columns and translatable filters are
+  * DataFrame over the snapshot. Required columns and translatable filters are
   * pushed INTO the delegate, where they reach its parquet scans natively;
   * Spark re-applies every filter above ([[BaseRelation.unhandledFilters]]
   * default), so the translation is an optimization with no correctness

@@ -337,7 +337,8 @@ class DeleteVectorSpec extends SparkSpec {
 
       // pruned read path applies vectors too
       val cutoff = df.agg(min($"time_ns")).as[Long].head()
-      val pruned = GraftStore.readStorePruned(spark, root, Some(cutoff))
+      val pruned = spark.read.format("graft")
+        .option("sinceNs", cutoff.toString).load(root)
       assert(pruned.count() == total - expectDeleted)
     }
   }

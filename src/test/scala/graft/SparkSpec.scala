@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per JVM (suites share it). */
@@ -17,4 +18,15 @@ trait SparkSpec extends AnyFunSuite {
     GraftSession.configure(s)
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Files the executed scans of `df` read: their `numFiles` metric after
+    * a collect. (A file index's `inputFiles` lists the whole snapshot, not
+    * what a pruned scan opened.)
+    */
+  def scannedFiles(df: DataFrame): Long = {
+    df.collect()
+    graft.plans.PlanScans.finalNodes(df).collect {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+  }
 }
