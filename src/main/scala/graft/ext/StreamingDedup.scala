@@ -119,8 +119,9 @@ object StreamingDedup {
       indexBuckets: Int,
       maxIndexSlices: Int): BatchResult = {
     val idx = dedupIndexRoot(storeRoot)
-    // resurrection guard, the sibling-state twin of VersionedStore.init's
-    // ledger clearing: slices are only ever written AFTER their corpus
+    // resurrection guard for the sibling index (a deleted store's ledger
+    // dies with its root; this index does not): slices are only ever
+    // written AFTER their corpus
     // commit, so "store dataless but index has slices" can only mean the
     // store was deleted and re-created while its sibling index survived —
     // and trusting it would silently drop the fresh store's first

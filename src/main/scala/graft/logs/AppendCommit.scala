@@ -15,24 +15,18 @@ import org.apache.hadoop.fs.Path
   * this commit protocol restores that per-batch atomicity on top of
   * multi-file Spark writes:
   *
-  *  1. STAGE — write the batch's part-files under an invisible prefix:
-  *     `<root>/_append-<id>` on pointer stores (the `_` prefix hides the
-  *     subtree from Spark listings and `listVersions`), a sibling
-  *     `<root>.append-<id>` dir on symlink roots. A crash here leaves zero
-  *     visible rows; the debris is age-guard-swept by vacuum.
+  *  1. STAGE — write the batch's part-files under the invisible prefix
+  *     `<root>/_append-<id>` (the `_` prefix hides the subtree from Spark
+  *     listings and `listVersions`). A crash here leaves zero visible
+  *     rows; the debris is age-guard-swept by vacuum.
   *  2. PUBLISH — a short metadata-only critical section under the store's
   *     [[MaintenanceLease]] (writers queue behind maintenance and each
-  *     other with bounded retry):
-  *      - pointer tier: create the next version prefix holding ONLY a
-  *        manifest (current version's own partitions + its carried entries
-  *        + the staged partitions as `_append-<id>` holders) and the
-  *        commit record, verify the composite count, then ONE atomic
-  *        pointer PUT. Zero data bytes move — the Iceberg manifest-add
-  *        commit shape.
-  *      - symlink tier: hard-link the current version's files AND the
-  *        staged files into the next version dir (metadata-only, version
-  *        stays self-contained), then ONE atomic symlink retarget.
-  *     Either way a reader resolving the store at ANY instant sees the
+  *     other with bounded retry): create the next version prefix holding
+  *     ONLY a manifest (current version's own partitions + its carried
+  *     entries + the staged partitions as `_append-<id>` holders) and the
+  *     commit record, verify the composite count, then ONE atomic pointer
+  *     write. Zero data bytes move — the Iceberg manifest-add commit
+  *     shape. A reader resolving the store at ANY instant sees the
   *     complete old snapshot or the complete new one — never a partial
   *     append.
   *
@@ -67,84 +61,14 @@ object AppendCommit {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    if (GraftStore.isPointerStore(spark, root))
-      commitPointer(spark, df, root, partitionCols, maxRecordsPerFile, commitId,
-        retainSnapshots, verifyCounts, leaseAttempts)
-    else {
-      val local = new Path(root).toUri.getPath
-      require(VersionedStore.isVersioned(local),
-        s"$root is not a versioned store — atomic appends need a commit " +
-          "primitive; plain directories take .mode(append) writes directly")
-      commitSymlink(spark, df, root, partitionCols, maxRecordsPerFile, commitId,
-        retainSnapshots, verifyCounts, leaseAttempts)
-    }
-  }
-
-  /** The already-committed version for `commitId`, if any retained version's
-    * commit record carries it. Retained versions bound the lookback — which
-    * matches the replay window: a streaming restart replays only the most
-    * recent micro-batch(es), committed at most `retainSnapshots` commits ago.
-    */
-  private def committedVersion(spark: SparkSession, root: String,
-      id: String): Option[Int] =
-    // the durable ledger first — it survives snapshot retention, so a
-    // replay detected here is safe even after interleaved maintenance
-    // reclaimed the version that carried the commit record
-    GraftStore.txnVersion(spark, root, id).orElse {
-      val (versions, dirOf): (Seq[Int], Int => String) =
-        if (GraftStore.isPointerStore(spark, root))
-          (GraftStore.listVersions(spark, root),
-            n => s"$root/${GraftStore.versionPrefix(n)}")
-        else {
-          val local = new Path(root).toUri.getPath
-          (VersionedStore.listVersions(local), n => VersionedStore.versionName(local, n))
-        }
-      val scanned = versions
-        .filter(n => GraftStore.readCommitInfo(spark, dirOf(n)).exists(_.id == id))
-        .maxOption
-      // heal pre-ledger stores / crash-between-flip-and-marker commits
-      scanned.foreach(v => GraftStore.recordTxn(spark, root, id, v))
-      scanned
-    }
-
-  /** Staged row count, empty-safe: a ZERO-ROW batch (an idle micro-batch,
-    * a filtered-out partition) stages only `_SUCCESS` — `spark.read
-    * .parquet` on that dir fails schema inference, so probe for data files
-    * first (a recursive metadata walk over the just-written staging tree)
-    * and only open footers when some exist.
-    */
-  private def countStaged(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, stagingPath: Path): Long = {
-    def anyDataFile(p: Path): Boolean =
-      fs.listStatus(p).exists { s =>
-        Compaction.visible(s.getPath.getName) &&
-          (if (s.isDirectory) anyDataFile(s.getPath) else true)
-      }
-    if (!anyDataFile(stagingPath)) 0L
-    else spark.read.parquet(stagingPath.toString).count() // footer-only
-  }
-
-  /** Stage the batch under `stagingDir` with the store's physical write
-    * contracts (one task per partition dir, bloom filters, bounded files).
-    */
-  private def stage(df: DataFrame, stagingDir: String,
-      partitionCols: Seq[String], maxRecordsPerFile: Long): Unit =
-    df.repartition(partitionCols.map(col): _*)
-      .write
-      .partitionBy(partitionCols: _*)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .options(LogSchema.parquetBloomOptions)
-      .mode("overwrite")
-      .parquet(stagingDir)
-
-  private def commitPointer(spark: SparkSession, df: DataFrame, root: String,
-      partitionCols: Seq[String], maxRecordsPerFile: Long,
-      commitId: Option[String], retainSnapshots: Int, verifyCounts: Boolean,
-      leaseAttempts: Int): Committed = {
+    require(GraftStore.isPointerStore(spark, root),
+      s"$root is not a versioned store — atomic appends need a commit " +
+        "primitive; plain directories take .mode(append) writes directly")
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commitId.flatMap(committedVersion(spark, root, _)).foreach { v =>
+    commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
       return Committed(v, 0L, replayed = true)
     }
+
     val name = GraftStore.AppendPrefix +
       commitId.getOrElse(java.util.UUID.randomUUID().toString)
     val stagingDir = s"$root/$name"
@@ -172,7 +96,7 @@ object AppendCommit {
         s"partitionCols mismatch with the store layout?")
     MaintenanceLease.withLeaseRetry(spark, root, "append", leaseAttempts) {
       // replay could have landed while we waited for the lease
-      commitId.flatMap(committedVersion(spark, root, _)).foreach { v =>
+      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
         fs.delete(stagingPath, true)
         return Committed(v, 0L, replayed = true)
       }
@@ -244,96 +168,39 @@ object AppendCommit {
         abort(s"concurrent commit detected on $root during append publish " +
           s"(expected v$cur live); staged data kept at $stagingDir — retry")
       commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      val keep = GraftStore.closureOf(spark, root,
-        GraftStore.listVersions(spark, root)
-          .filter(_ < next).takeRight(retainSnapshots).toSet + next)
-      GraftStore.dropVersionsExcept(spark, root, keep)
+      GraftStore.reclaim(spark, root, GraftStore.listVersions(spark, root)
+        .filter(_ < next).takeRight(retainSnapshots).toSet + next)
       Committed(next, stagedRows, replayed = false)
     }
   }
 
-  private def commitSymlink(spark: SparkSession, df: DataFrame, root: String,
-      partitionCols: Seq[String], maxRecordsPerFile: Long,
-      commitId: Option[String], retainSnapshots: Int, verifyCounts: Boolean,
-      leaseAttempts: Int): Committed = {
-    import java.nio.file.{Files, Paths}
-    val local = new Path(root).toUri.getPath
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commitId.flatMap(committedVersion(spark, root, _)).foreach { v =>
-      return Committed(v, 0L, replayed = true)
-    }
-    val stagingDir = local + ".append-" +
-      commitId.getOrElse(java.util.UUID.randomUUID().toString)
-    val stagingPath = new Path(stagingDir)
-    // staging siblings are consumed at publish; a survivor is debris
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    val stagedRows = countStaged(spark, fs, stagingPath)
-    if (stagedRows == 0L) {
-      fs.delete(stagingPath, true)
-      return Committed(VersionedStore.currentVersion(local), 0L, replayed = false)
-    }
-    val depth = partitionCols.length
-    val stagedLeaves = Compaction.partitionLeaves(fs, stagingPath, depth)
-    require(stagedLeaves.nonEmpty,
-      s"staged append has rows but no partition dirs at depth $depth — " +
-        s"partitionCols mismatch with the store layout?")
-    MaintenanceLease.withLeaseRetry(spark, root, "append", leaseAttempts) {
-      commitId.flatMap(committedVersion(spark, root, _)).foreach { v =>
-        fs.delete(stagingPath, true)
-        return Committed(v, 0L, replayed = true)
+  /** Staged row count, empty-safe: a ZERO-ROW batch (an idle micro-batch,
+    * a filtered-out partition) stages only `_SUCCESS` — `spark.read
+    * .parquet` on that dir fails schema inference, so probe for data files
+    * first (a recursive metadata walk over the just-written staging tree)
+    * and only open footers when some exist.
+    */
+  private def countStaged(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, stagingPath: Path): Long = {
+    def anyDataFile(p: Path): Boolean =
+      fs.listStatus(p).exists { s =>
+        Compaction.visible(s.getPath.getName) &&
+          (if (s.isDirectory) anyDataFile(s.getPath) else true)
       }
-      require(!fs.exists(new Path(local + ".compact-inflight")),
-        s"$root has an in-flight compaction marker — run compaction (recovery) first")
-      val prev = VersionedStore.currentVersion(local)
-      val prevDir = VersionedStore.versionName(local, prev)
-      val next = VersionedStore.listVersions(local).max + 1
-      val nextDir = VersionedStore.versionName(local, next)
-      if (fs.exists(new Path(nextDir))) fs.delete(new Path(nextDir), true) // debris
-      Files.createDirectories(Paths.get(nextDir))
-      def abort(msg: String): Nothing = {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(msg)
-      }
-      // carry EVERYTHING from the live version plus the staged files — all
-      // hard links (metadata-only), so the new version is self-contained
-      // and plain spark.read.parquet(root) keeps working on this tier
-      Compaction.hardLinkCarry(
-        Compaction.partitionLeaves(fs, new Path(prevDir), depth),
-        new Path(nextDir), new Path(prevDir))
-      Compaction.hardLinkCarry(stagedLeaves, new Path(nextDir), stagingPath)
-      GraftStore.carrySchemaOverlay(spark, prevDir, nextDir)
-      GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("append",
-        commitId.getOrElse(java.util.UUID.randomUUID().toString),
-        System.currentTimeMillis()))
-      // O(delta) stats: hard-linked files keep their rel key+len and reuse
-      // the predecessor's lines; only the staged files are footer-read.
-      // Written BEFORE the verify below, which they accelerate.
-      val nextEntries = GraftStore.compositeEntries(spark, local, next)
-      DeleteVectors.carryInto(spark, prevDir, nextDir, nextEntries.map(_.key).toSet)
-      FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, prevDir))
-      if (verifyCounts) {
-        val prevRows = // empty fresh store: count by listing, no schema to read
-          if (Compaction.dataFilesUnder(fs, new Path(prevDir)).isEmpty) 0L
-          else FileStats.rowCountFromStats(spark, local, prev)
-            .getOrElse(spark.read.parquet(prevDir).count())
-        val stagedTotal = FileStats.rowCountFromStats(spark, local, next)
-          .getOrElse(spark.read.parquet(nextDir).count())
-        if (stagedTotal != prevRows + stagedRows)
-          abort(s"staged version holds $stagedTotal rows, expected " +
-            s"$prevRows + $stagedRows; aborting with $prevDir live")
-      }
-      if (VersionedStore.currentVersion(local) != prev)
-        abort(s"concurrent commit detected on $root during append publish " +
-          s"(expected v$prev live); staged data kept at $stagingDir — retry")
-      VersionedStore.retarget(local, next) // THE commit: one atomic rename
-      commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      fs.delete(stagingPath, true) // files live on as links in the version
-      val keep = VersionedStore.listVersions(local)
-        .filter(_ <= prev).takeRight(retainSnapshots).toSet + next
-      VersionedStore.dropVersionsExcept(local, keep)
-      Committed(next, stagedRows, replayed = false)
-    }
+    if (!anyDataFile(stagingPath)) 0L
+    else spark.read.parquet(stagingPath.toString).count() // footer-only
   }
+
+  /** Stage the batch under `stagingDir` with the store's physical write
+    * contracts (one task per partition dir, bloom filters, bounded files).
+    */
+  private def stage(df: DataFrame, stagingDir: String,
+      partitionCols: Seq[String], maxRecordsPerFile: Long): Unit =
+    df.repartition(partitionCols.map(col): _*)
+      .write
+      .partitionBy(partitionCols: _*)
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .options(LogSchema.parquetBloomOptions)
+      .mode("overwrite")
+      .parquet(stagingDir)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * stores (one date partition per calendar day) from the events table,
   * plants a small-file mess in exactly ONE partition of each, then times an
   * INCREMENTAL commit against a FULL rewrite of the same store. The ratio
-  * is the whole point of the manifest/hard-link carry: maintenance cost
+  * is the whole point of the manifest carry: maintenance cost
   * tracks dirty data, not store size, so it should approach
   * 1/(partition count) plus fixed commit overhead as the store grows.
   *
@@ -37,7 +37,7 @@ object CompactRehearsal {
       def build(root: String): Unit = {
         LogIngest.writeHive(df, root, partitionCols = parts)
         mess.write.partitionBy(parts: _*).option("maxRecordsPerFile", 1000)
-          .mode("append").parquet(root)
+          .mode("append").parquet(GraftStore.resolve(spark, root))
       }
       def time(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -46,14 +46,14 @@ object CompactRehearsal {
       val incRoot = s"$work/inc-store"
       val fullRoot = s"$work/full-store"
       build(incRoot); build(fullRoot)
-      val rows = spark.read.parquet(incRoot).count()
+      val rows = GraftStore.readStore(spark, incRoot).count()
       val nParts = df.select($"date").distinct().count()
 
       val incSec = time(Compaction.compactHive(spark, incRoot, partitionCols = parts))
       val fullSec = time(Compaction.compactHive(spark, fullRoot, partitionCols = parts,
         full = true))
-      require(spark.read.parquet(incRoot).count() == rows, "incremental lost rows")
-      require(spark.read.parquet(fullRoot).count() == rows, "full rewrite lost rows")
+      require(GraftStore.readStore(spark, incRoot).count() == rows, "incremental lost rows")
+      require(GraftStore.readStore(spark, fullRoot).count() == rows, "full rewrite lost rows")
       // bytes the commit actually wrote (diff vs the grace snapshot): the
       // at-scale cost metric — wall time converges to fixed job overhead at
       // small SF, but rewritten bytes are what a 100 TB store pays for

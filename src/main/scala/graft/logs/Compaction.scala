@@ -14,13 +14,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * version without data I/O — so maintenance cost is proportional to dirty
   * data, not store size, which is the difference between "correct at sf1"
   * and "operable at 100 TB" (the same economics as Delta/Iceberg OPTIMIZE).
-  * How a partition is carried depends on the tier:
-  *  - pointer stores: by REFERENCE — a `_graft_manifest` beside the new
+  * How a partition is carried:
+  *  - versioned stores: by REFERENCE — a `_graft_manifest` beside the new
   *    version's data maps each carried partition to the version prefix that
   *    physically holds it ([[GraftStore.readManifest]]); zero bytes move.
-  *  - symlink ([[VersionedStore]]) roots: by HARD LINK into the staged next
-  *    version — metadata-only, same inodes, and the version dir stays
-  *    self-contained so plain `spark.read.parquet(root)` keeps working.
   *  - legacy plain roots: untouched leaves are simply never swapped.
   *
   * Rewritten partitions are `sortWithinPartitions(time_ns)` (when present),
@@ -28,34 +25,31 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * row-group time ranges keep the engine's `--since` row-group pruning
   * effective after compaction destroys ingest order.
   *
-  * Swap protocol per tier (unchanged from round 5, all snapshot-isolated):
-  *  - [[VersionedStore]] roots: promote staging to the next version dir and
-  *    atomically retarget the symlink — ONE rename.
-  *  - [[GraftStore]] pointer roots: stage under the next version prefix,
-  *    flip `_current` with ONE atomic PUT (no rename on object stores).
+  * Swap protocol:
+  *  - [[GraftStore]] versioned roots: stage under the next version prefix,
+  *    flip `_current` with ONE atomic write (no rename on object stores).
+  *    Snapshot-isolated.
   *  - legacy plain-dir roots: two metadata-only renames per dirty leaf.
   *
   * Crash safety: an in-flight marker (holding the expected TOTAL row count)
-  * brackets the swap; recovery re-applies the verified staging tree /
-  * staged version. Mutual exclusion: the whole operation holds the root's
-  * [[MaintenanceLease]], so two compactors (or compaction racing retention
-  * or vacuum) cannot interleave — the loser aborts before touching
-  * anything.
+  * brackets the swap; recovery re-applies the staged version / the
+  * verified staging tree. Mutual exclusion: the whole operation holds the
+  * root's [[MaintenanceLease]], so two compactors (or compaction racing
+  * retention or vacuum) cannot interleave — the loser aborts before
+  * touching anything.
   *
   * WRITERS are a separate discipline: appends land in the live version
   * directory, so rows appended after this job's inventory but before its
-  * pointer/symlink flip could survive only in the grace snapshot, not the
-  * new live tree. Like Delta/Iceberg OPTIMIZE under optimistic concurrency,
-  * the commit DETECTS this instead of assuming it away: immediately before
-  * the marker/flip it re-inventories the partitions whose files the commit
-  * would replace (dirty partitions everywhere; every partition on the
-  * hardlink-carry tier, where the carry is physical; plus the partition-dir
-  * set on the pointer tier, where a brand-new partition would miss the
-  * carry manifest) and ABORTS cleanly on any change — staged data is
-  * removed, the live tree is untouched, and the writer's rows are safe.
-  * Appends to partitions carried BY REFERENCE on the pointer tier are no
-  * conflict at all: the new version lists the same physical directory, so
-  * the appended files stay visible.
+  * pointer flip could survive only in the grace snapshot, not the new live
+  * tree. Like Delta/Iceberg OPTIMIZE under optimistic concurrency, the
+  * commit DETECTS this instead of assuming it away: immediately before the
+  * marker/flip it re-inventories the partitions whose files the commit
+  * would replace (dirty partitions, plus the partition-dir set of a
+  * versioned store, where a brand-new partition would miss the carry
+  * manifest) and ABORTS cleanly on any change — staged data is removed,
+  * the live tree is untouched, and the writer's rows are safe. Appends to
+  * partitions carried BY REFERENCE are no conflict at all: the new version
+  * lists the same physical directory, so the appended files stay visible.
   */
 /** How a compaction rewrite orders rows inside each rewritten partition. */
 sealed trait ClusterSpec
@@ -105,9 +99,8 @@ object Compaction {
           convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full,
           retainSnapshots, cluster)
       else
-        compactRenameTiers(spark, root, maxRecordsPerFile, partitionCols,
-          convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full,
-          retainSnapshots, cluster)
+        compactPlainRoot(spark, root, maxRecordsPerFile, partitionCols,
+          convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full, cluster)
     }
 
   /** A partition needs rewrite when its file count exceeds `dirtyMaxFiles`,
@@ -283,11 +276,11 @@ object Compaction {
     if (!fs.exists(root)) Seq.empty else walk(root, "", depth)
   }
 
-  /** Rename tiers: symlink-versioned roots and legacy plain dirs. */
-  private def compactRenameTiers(spark0: SparkSession, root: String,
+  /** Legacy plain (unversioned) roots: per-leaf rename swap. */
+  private def compactPlainRoot(spark0: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
       convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean, retainSnapshots: Int,
+      dirtyMinAvgBytes: Long, full: Boolean,
       cluster: ClusterSpec): Unit = {
     // keep partition dir names byte-identical: type inference would read
     // 'hour=00' back as int 0 and rewrite the dir as 'hour=0', forking the
@@ -297,21 +290,20 @@ object Compaction {
     // for the duration of the rewrite (the round-14 bench failure).
     graft.ConfScope.withSessionConf(spark0,
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { spark =>
-      compactRenameTiersOn(spark, root, maxRecordsPerFile, partitionCols,
-        convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full,
-        retainSnapshots, cluster)
+      compactPlainRootOn(spark, root, maxRecordsPerFile, partitionCols,
+        convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full, cluster)
     }
   }
 
-  private def compactRenameTiersOn(spark: SparkSession, root: String,
+  private def compactPlainRootOn(spark: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
       convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean, retainSnapshots: Int,
+      dirtyMinAvgBytes: Long, full: Boolean,
       cluster: ClusterSpec): Unit = {
-    // the rename-based tiers below require an atomic rename primitive;
-    // object-store "rename" is copy+delete, so a plain (pre-pointer) store
-    // there must be migrated, not silently swapped with a seconds-long
-    // partition-missing window per leaf
+    // the per-leaf swap requires an atomic rename primitive; object-store
+    // "rename" is copy+delete, so a plain (unversioned) store there must be
+    // migrated, not silently swapped with a seconds-long partition-missing
+    // window per leaf
     val scheme = Option(new Path(root).toUri.getScheme).getOrElse("file")
     require(!GraftStore.objectStoreSchemes.contains(scheme),
       s"$root is a plain directory on an object store ($scheme), where rename " +
@@ -328,15 +320,10 @@ object Compaction {
         // Staging was verified complete before the marker was written, so it
         // is authoritative — re-apply it rather than re-staging from a live
         // tree that may have lost a partition mid-commit.
-        val expected = readMarker(fs, marker)
-        if (VersionedStore.isVersioned(root)) {
-          recoverVersioned(spark, root, staging, marker, fs, expected, retainSnapshots)
-        } else {
-          require(fs.exists(staging),
-            s"$marker exists but $staging is gone — a previous swap crashed and " +
-              "its staging tree was removed; restore from backup/upstream")
-          applyStaging(spark, live, staging, marker, fs, expected)
-        }
+        require(fs.exists(staging),
+          s"$marker exists but $staging is gone — a previous swap crashed and " +
+            "its staging tree was removed; restore from backup/upstream")
+        applyStaging(spark, live, staging, marker, fs, readMarker(fs, marker))
         return
       }
       // staging without a marker is derived data from an attempt that died
@@ -358,155 +345,56 @@ object Compaction {
             "to drop the log and compact the full listing")
         fs.delete(sinkLog, true)
       }
-      val leaves = partitionLeaves(fs, live, partitionCols.length)
-      // deletion vectors: vector-holding partitions are dirty by definition
-      // (the rewrite materializes their deletes); plain legacy roots cannot
-      // acquire vectors (deleteWhere refuses them) and stay vector-free
-      val dvCur = DeleteVectors.read(spark, root)
-      require(dvCur.isEmpty || VersionedStore.isVersioned(root),
+      // deletion vectors commit only on versioned stores (deleteWhere
+      // refuses plain roots), so a plain root never carries a sidecar
+      require(DeleteVectors.read(spark, root).isEmpty,
         s"$root is a plain directory carrying a deletion-vector sidecar — " +
           "unsupported; vectors commit only on versioned stores")
-      val dvRels = dvCur.keySet.map { k =>
-        k.split('/').filter(_.nonEmpty).take(partitionCols.length).mkString("/")
-      }
-      val dirty = leaves.filter(l =>
-        full || dvRels(l._1) || isDirty(l._2, dirtyMaxFiles, dirtyMinAvgBytes))
+      val leaves = partitionLeaves(fs, live, partitionCols.length)
+      val dirty = leaves.filter(l => full || isDirty(l._2, dirtyMaxFiles, dirtyMinAvgBytes))
       if (dirty.isEmpty) return // every partition already compact: no commit
-      // vector-applied expected count: the invariant below is "live ROWS
-      // unchanged", and with vectors the live rows are the applied view
-      val expectedRows =
-        if (dvCur.isEmpty) spark.read.parquet(root).count() // footer metadata only
-        else GraftStore.readStore(spark, root).count()
-      // overlay via the symlink (legacy plain roots never have one)
-      val overlay = GraftStore.readSchemaOverlay(spark, root)
-      val input = {
-        val r = spark.read.option("basePath", root)
-        val r2 = if (overlay.nonEmpty) r.option("mergeSchema", "true") else r
-        val df0 = r2.parquet(dirty.map(d => s"$root/${d._1}"): _*)
-        val df = GraftStore.applyOverlay(
-          if (dvCur.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlay)
-        if (dvCur.nonEmpty)
-          DeleteVectors.applyTo(spark, df, dvCur, FileStats.listDirEntries(spark, root))
-        else df
-      }
+      val expectedRows = spark.read.parquet(root).count() // footer metadata only
+      val input = spark.read.option("basePath", root)
+        .parquet(dirty.map(d => s"$root/${d._1}"): _*)
       val dirtyRows = input.count()
       rewrite(input, partitionCols, maxRecordsPerFile, staging.toString, cluster)
-      if (VersionedStore.isVersioned(root))
-        GraftStore.carrySchemaOverlay(spark, root, staging.toString)
       // verify the rewrite BEFORE touching the live tree — a short row count
       // means lost data and must abort while the original is still in place
       val stagedRows = spark.read.parquet(staging.toString).count()
       require(stagedRows == dirtyRows,
         s"compaction wrote $stagedRows rows, expected $dirtyRows; aborting with $live untouched")
-      // Optimistic concurrency: the swap replaces files captured at
-      // inventory time, so a writer landing after it would have its rows
-      // silently dropped — for EXACTLY the leaves the commit replaces:
-      // every leaf on the hardlink tier (the carry is physical), only the
-      // dirty leaves on the legacy tier (untouched leaves are never
-      // renamed there, so appends to them are harmless and must not abort
-      // an otherwise-finished rewrite). Verify nothing in scope moved and
-      // abort cleanly BEFORE the marker — staging without a marker is
-      // swept, the live tree is still complete, the writer's rows are safe.
-      def abortOnWriterChange(scope: Set[String], detectNewPartitions: Boolean): Unit = {
-        onBeforeCommit()
-        val nowAll = partitionLeaves(fs, live, partitionCols.length)
-        // On the versioned tier the staged tree REPLACES the whole root, so
-        // a partition dir born after inventory (not in any scope) would be
-        // silently absent from the promoted version — the same row-loss the
-        // pointer tier's newOwnRels check defends. The legacy tier never
-        // swaps untouched leaves, so new partitions are harmless there.
-        val newRels =
-          if (detectNewPartitions) nowAll.map(_._1).toSet -- leaves.map(_._1).toSet
-          else Set.empty[String]
-        val now = nowAll.filter(l => scope(l._1))
-        val before = leaves.filter(l => scope(l._1))
-        if (newRels.nonEmpty ||
-            fileIdentity(now.flatMap(_._2)) != fileIdentity(before.flatMap(_._2))) {
-          fs.delete(staging, true)
-          throw new IllegalStateException(
-            s"concurrent writer detected on $root during compaction" +
-              (if (newRels.nonEmpty) s" (new partitions: [${newRels.mkString(",")}])"
-               else "") +
-              "; staging removed, live tree untouched — re-run compaction " +
-              "after the writer finishes (maintenance requires the store " +
-              "quiescent or it aborts, never loses rows)")
-        }
+      // Optimistic concurrency: the swap replaces the dirty leaves' files
+      // captured at inventory time, so a writer landing in one of them
+      // after it would have its rows silently dropped. Untouched leaves are
+      // never renamed, so appends to them are harmless and must not abort
+      // an otherwise-finished rewrite. Verify no dirty leaf moved and abort
+      // cleanly BEFORE the marker — staging without a marker is swept, the
+      // live tree is still complete, the writer's rows are safe.
+      onBeforeCommit()
+      val dirtyRels = dirty.map(_._1).toSet
+      val now = partitionLeaves(fs, live, partitionCols.length).filter(l => dirtyRels(l._1))
+      if (fileIdentity(now.flatMap(_._2)) != fileIdentity(dirty.flatMap(_._2))) {
+        fs.delete(staging, true)
+        throw new IllegalStateException(
+          s"concurrent writer detected on $root during compaction; staging " +
+            "removed, live tree untouched — re-run compaction after the " +
+            "writer finishes (maintenance requires the store quiescent or " +
+            "it aborts, never loses rows)")
       }
-      if (VersionedStore.isVersioned(root)) {
-        // carry every untouched partition into the staged tree by hard link
-        // (metadata-only, same inodes) so the promoted version dir stays
-        // self-contained and plain reads through the symlink keep working
-        val dirtyRels = dirty.map(_._1).toSet
-        hardLinkCarry(leaves.filterNot(l => dirtyRels(l._1)), staging, live)
-        commitBucketSpec(spark, cluster, priorDir = root,
-          destDir = staging.toString,
-          anyCarried = leaves.exists(l => !dirtyRels(l._1)))
-        // carried files keep their vectors; rewritten files shed them
-        // (materialized by the vector-applied input above)
-        val stagedDv = DeleteVectors.carryInto(spark, root, staging.toString,
-          FileStats.listDirEntries(spark, staging.toString).map(_.key).toSet)
-        val totalStaged =
-          if (stagedDv.isEmpty) spark.read.parquet(staging.toString).count()
-          else DeleteVectors.applyTo(spark,
-            DeleteVectors.tagMeta(spark.read.parquet(staging.toString)),
-            stagedDv, FileStats.listDirEntries(spark, staging.toString)).count()
-        require(totalStaged == expectedRows,
-          s"staging holds $totalStaged rows, expected $expectedRows; aborting with $live untouched")
-        abortOnWriterChange(leaves.map(_._1).toSet, detectNewPartitions = true)
-        writeMarker(fs, marker, expectedRows)
-        commitVersioned(spark, root, staging, marker, fs, expectedRows, retainSnapshots)
-      } else {
-        // legacy tier: only the dirty leaves are staged, so only they swap;
-        // untouched leaves are never renamed at all
-        abortOnWriterChange(dirty.map(_._1).toSet, detectNewPartitions = false)
-        writeMarker(fs, marker, expectedRows)
-        applyStaging(spark, live, staging, marker, fs, expectedRows)
-      }
+      writeMarker(fs, marker, expectedRows)
+      applyStaging(spark, live, staging, marker, fs, expectedRows)
     }
   }
 
-  /** Carry untouched partitions into the staged next version with hard
-    * links: one metadata syscall per file, zero data movement, and the
-    * carried file keeps its name+size (and inode), so a snapshot diff shows
-    * it as unchanged. Falls back to a copy on filesystems without link
-    * support (the symlink tier is local-FS by contract, so this is a
-    * safety net, not a path).
-    */
-  private[logs] def hardLinkCarry(leaves: Seq[(String, Seq[FileStatus])],
-      staging: Path, liveRoot: Path): Unit = {
-    import java.nio.file.{Files, Paths}
-    // preserve the full physical layout below the carry root, including
-    // levels deeper than the rewrite key (e.g. hour= under date=), by
-    // RELATIVIZING against the root the leaves were listed from — a
-    // substring search for "/<rel>/" would mis-root the carried file when
-    // the store's own path happens to contain a partition-shaped dir name
-    // (e.g. a root named ".../date=2024-01-01/store")
-    val base = Paths.get(liveRoot.toUri.getPath).toAbsolutePath.normalize()
-    leaves.foreach { case (_, files) =>
-      files.foreach { f =>
-        val src = Paths.get(f.getPath.toUri.getPath)
-        val relFile = base.relativize(src.toAbsolutePath.normalize()).toString
-        require(!relFile.startsWith(".."),
-          s"carried file $src is outside the live root $base")
-        val dst = Paths.get(staging.toUri.getPath, relFile)
-        Files.createDirectories(dst.getParent)
-        try Files.createLink(dst, src)
-        catch {
-          case _: UnsupportedOperationException => Files.copy(src, dst)
-        }
-      }
-    }
-  }
-
-  /** Object-store (pointer) tier: stage ONLY the dirty partitions under the
-    * NEXT version prefix — readers only ever list the pointed-at prefix, so
+  /** Versioned stores: stage ONLY the dirty partitions under the NEXT
+    * version prefix — readers only ever list the pointed-at prefix, so
     * staging is invisible — write the carried-partition manifest beside
     * them, verify the composite, persist the marker, then commit by
-    * overwriting `_current` with ONE atomic PUT. No rename anywhere, which
-    * is what object stores (rename = copy+delete, non-atomic) require.
+    * overwriting `_current` with ONE atomic write. No data rename anywhere,
+    * which is what object stores (rename = copy+delete, non-atomic) require.
     * Carried partitions chain to the version that PHYSICALLY holds them
     * (an entry carried across N commits still names its original prefix),
-    * and cleanup keeps the manifest closure of every retained snapshot.
+    * and cleanup keeps every partition a retained snapshot reads.
     */
   private def compactPointerStore(spark0: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
@@ -514,7 +402,7 @@ object Compaction {
       dirtyMinAvgBytes: Long, full: Boolean, retainSnapshots: Int,
       cluster: ClusterSpec): Unit =
     // inference pinned off on a CLONED session, never the shared one — see
-    // compactRenameTiers for the byte-identical-dir-names rationale and the
+    // compactPlainRoot for the byte-identical-dir-names rationale and the
     // concurrency hazard a shared-session flip creates
     graft.ConfScope.withSessionConf(spark0,
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { spark =>
@@ -707,81 +595,21 @@ object Compaction {
     }
   }
 
-  /** Reclaim after a pointer commit: keep the live version, the newest
+  /** Reclaim after a pointer commit: keep the live version and the newest
     * `retainSnapshots` versions below it (grace snapshots for in-flight
-    * readers / time travel), and the manifest closure of all of them —
-    * a version physically holding carried partitions lives as long as any
-    * retained snapshot references it.
+    * readers / time travel); the replaced small files go once no retained
+    * snapshot reads them ([[GraftStore.reclaim]]).
     */
   private def cleanupPointer(spark: SparkSession, root: String,
       retainSnapshots: Int): Unit = {
     val live = GraftStore.currentVersion(spark, root)
     val versions = GraftStore.listVersions(spark, root)
-    val seed = versions.filter(_ < live).takeRight(retainSnapshots).toSet + live
-    val keep = GraftStore.closureOf(spark, root, seed)
-    GraftStore.dropVersionsExcept(spark, root, keep)
+    GraftStore.reclaim(spark, root,
+      versions.filter(_ < live).takeRight(retainSnapshots).toSet + live)
     // compaction absorbs append-dir files into version prefixes; once no
     // retained snapshot references a staged dir it is reclaimable (the 24 h
     // age guard protects writers staging concurrently with this commit)
-    GraftStore.sweepOrphanAppendDirs(spark, root, keep, 24L * 3600 * 1000)
-  }
-
-  /** Versioned-store commit: promote the verified staging tree to the next
-    * version directory (one rename — readers never look there), then retarget
-    * the root symlink atomically. A reader resolving the root at ANY instant
-    * sees the complete old version or the complete new one; there is no
-    * missing-partition window at all, unlike the per-leaf swap below.
-    */
-  private def commitVersioned(spark: SparkSession, root: String, staging: Path,
-      marker: Path, fs: FileSystem, expectedRows: Long,
-      retainSnapshots: Int): Unit = {
-    val prev = VersionedStore.currentVersion(root)
-    val next = VersionedStore.listVersions(root).max + 1
-    val versionDir = new Path(VersionedStore.versionName(root, next))
-    GraftStore.writeCommitInfo(spark, staging.toString, GraftStore.CommitInfo(
-      "compact", java.util.UUID.randomUUID().toString, System.currentTimeMillis()))
-    // pruning stats for the promoted tree: hard-link-carried files keep
-    // their rel key+len and reuse the replaced version's lines; only the
-    // rewritten files are footer-read
-    FileStats.refreshDir(spark, staging.toString,
-      FileStats.read(spark, VersionedStore.versionName(root, prev)))
-    require(fs.rename(staging, versionDir), s"rename $staging -> $versionDir failed")
-    VersionedStore.retarget(root, next)
-    val liveRows = GraftStore.readStore(spark, root).count() // vector-applied
-    require(liveRows == expectedRows,
-      s"post-swap count $liveRows != expected $expectedRows — inspect $root")
-    fs.delete(marker, false)
-    // keep the newest retainSnapshots REPLACED versions (anchored at the
-    // version the pointer actually named — a debris dir ahead of it must
-    // not displace the real grace snapshot) for in-flight readers /
-    // time travel; reclaimed by later commits
-    val keep = VersionedStore.listVersions(root).filter(_ <= prev)
-      .takeRight(retainSnapshots).toSet + next
-    VersionedStore.dropVersionsExcept(root, keep)
-  }
-
-  /** Versioned-store crash recovery: if staging survived, the commit never
-    * promoted it — finish the commit. Otherwise a version dir ahead of the
-    * pointer holds the verified rewrite — retarget to it. Both paths are
-    * idempotent: re-running after a second crash converges.
-    */
-  private def recoverVersioned(spark: SparkSession, root: String, staging: Path,
-      marker: Path, fs: FileSystem, expectedRows: Long,
-      retainSnapshots: Int): Unit = {
-    if (fs.exists(staging)) {
-      commitVersioned(spark, root, staging, marker, fs, expectedRows, retainSnapshots)
-    } else {
-      val prev = VersionedStore.currentVersion(root)
-      val newest = VersionedStore.listVersions(root).max
-      if (newest > prev) VersionedStore.retarget(root, newest)
-      val liveRows = GraftStore.readStore(spark, root).count() // vector-applied
-      require(liveRows == expectedRows,
-        s"recovered count $liveRows != expected $expectedRows — inspect $root")
-      fs.delete(marker, false)
-      val keep = VersionedStore.listVersions(root).filter(_ <= prev)
-        .takeRight(retainSnapshots).toSet + newest
-      VersionedStore.dropVersionsExcept(root, keep)
-    }
+    GraftStore.sweepOrphanAppendDirs(spark, root, 24L * 3600 * 1000)
   }
 
   /** Swap each STAGED leaf partition directory with two single renames: the

@@ -20,7 +20,7 @@ import org.apache.hadoop.fs.Path
   *    (by its store-layout key, the same identity [[FileStats]] uses) to the
   *    row POSITIONS deleted from it, run-length compressed;
   *  - [[deleteWhere]] commits a new version that carries every data file
-  *    untouched (manifest reference / hard link — zero data bytes move) and
+  *    untouched (by manifest reference — zero data bytes move) and
   *    adds the matched rows' positions to the sidecar: an O(metadata +
   *    matched-rows) commit regardless of store size;
   *  - every read ([[GraftStore.readVersion]] and friends) anti-joins the
@@ -271,8 +271,8 @@ object DeleteVectors {
       inserted: Long, replayed: Boolean, materialized: Boolean = false)
 
   /** Commit a row-level delete as a new version: every data file is carried
-    * untouched (manifest reference on the pointer tier, hard link on the
-    * symlink tier) and the matched rows' positions join the deletion-vector
+    * untouched (by manifest reference) and the matched rows' positions join
+    * the deletion-vector
     * sidecar. Zero data bytes move; the pre-delete snapshot stays
     * time-travelable until vacuumed. Exactly-once replay by `commitId`
     * (same contract as [[AppendCommit]]).
@@ -384,15 +384,11 @@ object DeleteVectors {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    val pointer = GraftStore.isPointerStore(spark, root)
-    if (!pointer) {
-      val local = new Path(root).toUri.getPath
-      require(VersionedStore.isVersioned(local),
-        s"$root is not a versioned store — row-level deletes commit as a new " +
-          "version and need a commit primitive (pointer or symlink tier)")
-    }
+    require(GraftStore.isPointerStore(spark, root),
+      s"$root is not a versioned store — row-level deletes commit as a new " +
+        "version and need a commit primitive")
     MaintenanceLease.withLeaseRetry(spark, root, "delete", leaseAttempts) {
-      replayedVersion(spark, root, commitId).foreach { v =>
+      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
         // A crash between the original over-cap vector commit and its
         // copy-on-write compaction leaves the big sidecar live; re-report
         // over-cap from the LIVE sidecar so the retry re-runs the deferred
@@ -478,7 +474,7 @@ object DeleteVectors {
         fs.delete(new Path(nextDir), true)
         throw new IllegalStateException(msg)
       }
-      stageCarryAll(spark, root, cur, next, pointer)
+      stageCarryAll(spark, root, cur, next)
       write(spark, nextDir, merged)
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("delete",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
@@ -526,16 +522,12 @@ object DeleteVectors {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    val pointer = GraftStore.isPointerStore(spark, root)
-    if (!pointer) {
-      val local = new Path(root).toUri.getPath
-      require(VersionedStore.isVersioned(local),
-        s"$root is not a versioned store — merge commits need a commit primitive")
-    }
+    require(GraftStore.isPointerStore(spark, root),
+      s"$root is not a versioned store — merge commits need a commit primitive")
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pair = mergeCommit(spark, root, updates, keyCols, partitionCols,
       commitId, retainSnapshots, maxRecordsPerFile, maxRanges, leaseAttempts,
-      materializeOverCap, pointer, fs)
+      materializeOverCap, fs)
     val (committed, overCapOut) = pair
     if (overCapOut) {
       // same copy-on-write fallback as deleteWhere, after the lease releases
@@ -550,10 +542,10 @@ object DeleteVectors {
       updates: DataFrame, keyCols: Seq[String], partitionCols: Seq[String],
       commitId: Option[String], retainSnapshots: Int,
       maxRecordsPerFile: Long, maxRanges: Int, leaseAttempts: Int,
-      materializeOverCap: Boolean, pointer: Boolean,
+      materializeOverCap: Boolean,
       fs: org.apache.hadoop.fs.FileSystem): (MergeCommitted, Boolean) =
     MaintenanceLease.withLeaseRetry(spark, root, "merge", leaseAttempts) {
-      replayedVersion(spark, root, commitId).foreach { v =>
+      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
         // see deleteCommit's replay note: a crash between the over-cap
         // vector commit and its compaction must be repairable by retry
         val (_, liveDir, _) = liveVersion(spark, root)
@@ -608,12 +600,9 @@ object DeleteVectors {
           s"(> $maxRanges): this merge is too large for merge-on-read — " +
           "rewrite the store instead")
       // 2. stage the update rows like an atomic append
-      val stageName =
-        (if (pointer) GraftStore.AppendPrefix else ".append-") + "merge-" +
-          commitId.getOrElse(java.util.UUID.randomUUID().toString)
-      val stagingDir =
-        if (pointer) s"$root/$stageName"
-        else new Path(root).toUri.getPath + stageName
+      val stageName = GraftStore.AppendPrefix + "merge-" +
+        commitId.getOrElse(java.util.UUID.randomUUID().toString)
+      val stagingDir = s"$root/$stageName"
       val stagingPath = new Path(stagingDir)
       if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
       updates.repartition(partitionCols.map(col): _*)
@@ -632,9 +621,9 @@ object DeleteVectors {
         fs.delete(new Path(nextDir), true)
         throw new IllegalStateException(msg)
       }
-      // 3. one commit: carry everything + reference/link the staged files +
+      // 3. one commit: carry everything + reference the staged files +
       //    the merged vector sidecar
-      stageCarryAll(spark, root, cur, next, pointer,
+      stageCarryAll(spark, root, cur, next,
         extraAppend = if (inserted > 0) Some((stageName, stagingPath)) else None)
       write(spark, nextDir, merged)
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("merge",
@@ -650,58 +639,28 @@ object DeleteVectors {
           s"$prevPhys + $inserted; aborting with $curDir live")
       flip(spark, root, cur, next, retainSnapshots, abort)
       commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      if (!pointer) fs.delete(stagingPath, true) // files live on as links
       (MergeCommitted(next, matchedRows, inserted, replayed = false), overCap)
     }
 
   // ---- shared commit plumbing -------------------------------------------
 
-  private def replayedVersion(spark: SparkSession, root: String,
-      commitId: Option[String]): Option[Int] =
-    commitId.flatMap { id =>
-      // ledger first — survives retention (see GraftStore.recordTxn)
-      GraftStore.txnVersion(spark, root, id).orElse {
-        val (versions, dirOf): (Seq[Int], Int => String) =
-          if (GraftStore.isPointerStore(spark, root))
-            (GraftStore.listVersions(spark, root),
-              n => s"$root/${GraftStore.versionPrefix(n)}")
-          else {
-            val local = new Path(root).toUri.getPath
-            (VersionedStore.listVersions(local),
-              n => VersionedStore.versionName(local, n))
-          }
-        val scanned = versions
-          .filter(n => GraftStore.readCommitInfo(spark, dirOf(n)).exists(_.id == id))
-          .maxOption
-        scanned.foreach(v => GraftStore.recordTxn(spark, root, id, v))
-        scanned
-      }
-    }
-
   private def requireNoCompactMarker(spark: SparkSession, root: String): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(root, "_compact-inflight")) &&
-        !fs.exists(new Path(new Path(root).toUri.getPath + ".compact-inflight")),
+    require(!fs.exists(new Path(root, "_compact-inflight")),
       s"$root has an in-flight compaction marker — run compaction (recovery) first")
   }
 
   private def liveVersion(spark: SparkSession,
-      root: String): (Int, String, Int => String) =
-    if (GraftStore.isPointerStore(spark, root)) {
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cur = GraftStore.currentVersion(spark, root)
-      // markerless staged-ahead prefixes are debris (we hold the lease)
-      GraftStore.listVersions(spark, root).filter(_ > cur).foreach { n =>
-        fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
-      }
-      (cur, s"$root/${GraftStore.versionPrefix(cur)}",
-        n => s"$root/${GraftStore.versionPrefix(n)}")
-    } else {
-      val local = new Path(root).toUri.getPath
-      val cur = VersionedStore.currentVersion(local)
-      (cur, VersionedStore.versionName(local, cur),
-        n => VersionedStore.versionName(local, n))
+      root: String): (Int, String, Int => String) = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = GraftStore.currentVersion(spark, root)
+    // markerless staged-ahead prefixes are debris (we hold the lease)
+    GraftStore.listVersions(spark, root).filter(_ > cur).foreach { n =>
+      fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
     }
+    (cur, s"$root/${GraftStore.versionPrefix(cur)}",
+      n => s"$root/${GraftStore.versionPrefix(n)}")
+  }
 
   /** The live snapshot with metadata columns retained and EXISTING vectors
     * applied — the frame delete/merge matching runs over.
@@ -756,48 +715,29 @@ object DeleteVectors {
       graft.expr.Compat.expression(col(PosCol)), bc)))
   }
 
-  /** Stage version `next` as a pure carry of version `cur` — manifest
-    * references on the pointer tier, hard links on the symlink tier — plus
-    * optionally one staged-append holder (the merge's inserted files).
+  /** Stage version `next` as a pure carry of version `cur` by manifest
+    * reference, plus optionally one staged-append holder (the merge's
+    * inserted files).
     */
   private def stageCarryAll(spark: SparkSession, root: String, cur: Int,
-      next: Int, pointer: Boolean,
-      extraAppend: Option[(String, Path)] = None): Unit = {
+      next: Int, extraAppend: Option[(String, Path)] = None): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (pointer) {
-      val curPrefix = GraftStore.versionPrefix(cur)
-      val curDir = s"$root/$curPrefix"
-      val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
-      val depth = partitionDepthOf(fs, curDir,
-        GraftStore.readManifest(spark, curDir), root)
-      val own = Compaction.partitionLeaves(fs, new Path(curDir), depth)
-        .map { case (rel, _) => (curPrefix, rel) }
-      val carried = GraftStore.readManifest(spark, curDir)
-      val added = extraAppend.toSeq.flatMap { case (name, p) =>
-        Compaction.partitionLeaves(fs, p, depth).map { case (rel, _) => (name, rel) }
-      }
-      require(extraAppend.isEmpty || added.nonEmpty,
-        "staged merge rows landed in no partition dirs — partitionCols " +
-          "mismatch with the store layout?")
-      GraftStore.writeManifest(spark, nextDir,
-        (own ++ carried ++ added).sortBy(e => (e._2, e._1)))
-      GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
-    } else {
-      val local = new Path(root).toUri.getPath
-      val prevDir = VersionedStore.versionName(local, cur)
-      val nextDir = VersionedStore.versionName(local, next)
-      if (fs.exists(new Path(nextDir))) fs.delete(new Path(nextDir), true)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nextDir))
-      val depth = partitionDepthOf(fs, prevDir, Seq.empty, root)
-      Compaction.hardLinkCarry(
-        Compaction.partitionLeaves(fs, new Path(prevDir), depth),
-        new Path(nextDir), new Path(prevDir))
-      extraAppend.foreach { case (_, p) =>
-        Compaction.hardLinkCarry(
-          Compaction.partitionLeaves(fs, p, depth), new Path(nextDir), p)
-      }
-      GraftStore.carrySchemaOverlay(spark, prevDir, nextDir)
+    val curPrefix = GraftStore.versionPrefix(cur)
+    val curDir = s"$root/$curPrefix"
+    val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
+    val carried = GraftStore.readManifest(spark, curDir)
+    val depth = partitionDepthOf(fs, curDir, carried)
+    val own = Compaction.partitionLeaves(fs, new Path(curDir), depth)
+      .map { case (rel, _) => (curPrefix, rel) }
+    val added = extraAppend.toSeq.flatMap { case (name, p) =>
+      Compaction.partitionLeaves(fs, p, depth).map { case (rel, _) => (name, rel) }
     }
+    require(extraAppend.isEmpty || added.nonEmpty,
+      "staged merge rows landed in no partition dirs — partitionCols " +
+        "mismatch with the store layout?")
+    GraftStore.writeManifest(spark, nextDir,
+      (own ++ carried ++ added).sortBy(e => (e._2, e._1)))
+    GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
   }
 
   /** Partition depth of the store layout, measured from the live tree (the
@@ -805,7 +745,7 @@ object DeleteVectors {
     * carry at this granularity; a flat (unpartitioned) store carries depth 0.
     */
   private def partitionDepthOf(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, manifest: Seq[(String, String)], root: String): Int = {
+      dir: String, manifest: Seq[(String, String)]): Int = {
     def depthUnder(p: Path, d: Int): Int = {
       if (!fs.exists(p)) return -1
       val subs = fs.listStatus(p).toSeq.filter(s => s.isDirectory &&
@@ -830,25 +770,13 @@ object DeleteVectors {
   }
 
   private def flip(spark: SparkSession, root: String, cur: Int, next: Int,
-      retainSnapshots: Int, abort: String => Nothing): Unit =
-    if (GraftStore.isPointerStore(spark, root)) {
-      // compare-and-swap on conditional-write stores, re-check + PUT
-      // elsewhere (see casWritePointer)
-      if (!GraftStore.casWritePointer(spark, root, cur, next))
-        abort(s"concurrent commit detected on $root during publish " +
-          s"(expected v$cur live) — staged version removed, retry")
-      val keep = GraftStore.closureOf(spark, root,
-        GraftStore.listVersions(spark, root)
-          .filter(_ < next).takeRight(retainSnapshots).toSet + next)
-      GraftStore.dropVersionsExcept(spark, root, keep)
-    } else {
-      val local = new Path(root).toUri.getPath
-      if (VersionedStore.currentVersion(local) != cur)
-        abort(s"concurrent commit detected on $root during publish " +
-          s"(expected v$cur live) — staged version removed, retry")
-      VersionedStore.retarget(local, next)
-      val keep = VersionedStore.listVersions(local)
-        .filter(_ <= cur).takeRight(retainSnapshots).toSet + next
-      VersionedStore.dropVersionsExcept(local, keep)
-    }
+      retainSnapshots: Int, abort: String => Nothing): Unit = {
+    // compare-and-swap on conditional-write stores, re-check + atomic write
+    // elsewhere (see casWritePointer)
+    if (!GraftStore.casWritePointer(spark, root, cur, next))
+      abort(s"concurrent commit detected on $root during publish " +
+        s"(expected v$cur live) — staged version removed, retry")
+    GraftStore.reclaim(spark, root, GraftStore.listVersions(spark, root)
+      .filter(_ < next).takeRight(retainSnapshots).toSet + next)
+  }
 }

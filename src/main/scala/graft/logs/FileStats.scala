@@ -427,7 +427,7 @@ object FileStats {
 
   /** Recompute the live snapshot's sidecar from scratch-or-prior — the
     * backfill/repair entry point (pre-stats stores, foreign writers).
-    * Pointer/symlink stores stamp the LIVE version dir; plain directories
+    * Versioned stores stamp the LIVE version dir; plain directories
     * stamp the root itself.
     */
   def refresh(spark: SparkSession, root: String): Seq[FileStat] = {

@@ -3,16 +3,18 @@ package graft.logs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Pointer-file store tier — the object-store analogue of [[VersionedStore]].
+/** The versioned store: one commit protocol on every Hadoop filesystem
+  * (local disk, HDFS, object stores).
   *
-  * Object stores have no symlinks and no atomic rename (rename is
-  * copy+delete, which [[graft.sources.S3LiteFileSystem]] demonstrates
-  * in-sandbox), but a single-object PUT IS atomic. So the store root holds
-  * version prefixes (`<root>/v000001`, `v000002`, ...) plus one tiny pointer
-  * object `<root>/_current` naming the live version; a maintenance commit
-  * writes the whole replacement tree under the next prefix — invisible to
-  * readers, who only ever list the pointed-at prefix — verifies it, then
-  * flips the pointer with one PUT. Readers resolving at any instant get the
+  * Object stores have no atomic rename (rename is copy+delete, which
+  * [[graft.sources.S3LiteFileSystem]] demonstrates in-sandbox), but a
+  * single-object PUT IS atomic; filesystems have an atomic overwrite-rename.
+  * So the store root holds version prefixes (`<root>/v000001`, `v000002`,
+  * ...) plus one tiny pointer object `<root>/_current` naming the live
+  * version; a maintenance commit writes the whole replacement tree under
+  * the next prefix — invisible to readers, who only ever list the
+  * pointed-at prefix — verifies it, then flips the pointer with one atomic
+  * write ([[writePointer]]). Readers resolving at any instant get the
   * complete old tree or the complete new tree. This is the "current pointer"
   * commit (Iceberg's version-hint file); since round 6 a version may also
   * carry a partition→version manifest ([[readManifest]]) so maintenance
@@ -23,8 +25,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (what appends write into); [[readStore]] is the composite DataFrame read
   * (own + carried partitions) of store jobs and fixtures, while `y-logcli`
   * queries plan through the snapshot relation, `format("graft")`. Plain
-  * dirs and symlink roots pass through both unchanged, so the three tiers
-  * share one code path.
+  * unversioned dirs (reference-layout trees) pass through both unchanged.
   */
 object GraftStore {
 
@@ -64,8 +65,8 @@ object GraftStore {
 
   /** Sibling directory suffixes for the streaming-dedup index stores
     * ([[graft.ext.StreamingDedup]]) — named here so store CREATION can
-    * clear a dead store's surviving indexes (the same resurrection hazard
-    * as the `.txns` ledger, one layer out).
+    * clear a dead store's surviving indexes (a fresh store has no seen
+    * documents, so a dead store's index would drop its first ones).
     */
   val DedupIndexSuffix = "-dedup-index"
   val NearDupIndexSuffix = "-neardup-index"
@@ -91,8 +92,8 @@ object GraftStore {
     fsOf(spark, p).exists(p)
   }
 
-  /** Data root readers should scan: `<root>/<version>` for pointer stores,
-    * `root` itself otherwise (symlinks resolve in the filesystem).
+  /** Data root readers should scan: `<root>/<version>` for versioned
+    * stores, `root` itself for plain dirs.
     */
   def resolve(spark: SparkSession, root: String): String =
     if (isPointerStore(spark, root)) s"$root/${readPointer(spark, root)}"
@@ -106,17 +107,16 @@ object GraftStore {
     * view. Fails fast when the version has been reclaimed.
     */
   def resolveVersion(spark: SparkSession, root: String, n: Int): String = {
-    val (versions, _, dirOf) = tierOf(spark, root)
+    val (versions, _) = versionsOf(spark, root)
     require(versions.contains(n),
       s"version $n of $root is not on disk (retained: ${versions.mkString(",")})")
-    dirOf(n)
+    versionDir(root, n)
   }
 
   /** Commit timestamp of a retained version (epoch millis).
     *
-    * For the LIVE version it is the instant the pointer/symlink named it —
-    * the `_current` object's mtime on the pointer tier, the symlink's own
-    * (NOFOLLOW) mtime on the symlink tier. Appends land in the live
+    * For the LIVE version it is the instant the pointer named it — the
+    * `_current` object's mtime. Appends land in the live
     * version dir, so its file mtimes drift forward without bound; reading
     * the flip artifact instead keeps the commit instant fixed — otherwise
     * an as-of read BETWEEN a retention commit and a later append would
@@ -128,22 +128,14 @@ object GraftStore {
     * ordering `versionAsOf` needs.
     */
   def commitTimeOf(spark: SparkSession, root: String, n: Int): Long = {
-    val (_, cur, dirOf) = tierOf(spark, root)
+    val cur = liveVersionOf(spark, root)
     // exact path first: a commit record written at publish time inside the
     // version dir (atomic-with-flip, mtime-independent); mtime heuristics
     // below serve only legacy stores written before the record existed
-    readCommitInfo(spark, dirOf(n)).foreach { ci => return ci.millis }
+    readCommitInfo(spark, versionDir(root, n)).foreach { ci => return ci.millis }
     if (n == cur) {
-      if (isPointerStore(spark, root)) {
-        val p = new Path(root, PointerName)
-        fsOf(spark, p).getFileStatus(p).getModificationTime
-      } else
-        // symlink tier is local-FS by contract; NOFOLLOW reads the link's
-        // own mtime (retarget time), not the target dir's
-        java.nio.file.Files
-          .getLastModifiedTime(java.nio.file.Paths.get(new Path(root).toUri.getPath),
-            java.nio.file.LinkOption.NOFOLLOW_LINKS)
-          .toMillis
+      val p = new Path(root, PointerName)
+      fsOf(spark, p).getFileStatus(p).getModificationTime
     } else {
       val p = new Path(resolveVersion(spark, root, n))
       val fs = fsOf(spark, p)
@@ -162,7 +154,7 @@ object GraftStore {
     * the snapshot that covered that instant has been vacuumed.
     */
   def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Int = {
-    val (versions, cur, _) = tierOf(spark, root)
+    val (versions, cur) = versionsOf(spark, root)
     val committed = versions.filter(_ <= cur)
       .map(n => (n, commitTimeOf(spark, root, n)))
     val eligible = committed.filter(_._2 <= tsMillis)
@@ -233,8 +225,8 @@ object GraftStore {
         .mkString("\n").getBytes("UTF-8"))
   }
 
-  /** Durable commit-id ledger (`_graft_txns/<id>` beside the versions, a
-    * sibling `.txns/` dir on the symlink tier): one tiny marker object per
+  /** Durable commit-id ledger (`_graft_txns/<id>` beside the versions): one
+    * tiny marker object per
     * EXPLICIT commit id, holding the committed version. Replay detection
     * that scans retained versions' commit records is bounded by snapshot
     * retention — if maintenance commits while a streaming writer is down,
@@ -245,19 +237,14 @@ object GraftStore {
     * Markers are written AFTER the pointer flip: a crash in between leaves
     * no marker, and the fallback scan still finds the just-flipped version.
     *
-    * Lifecycle: the pointer tier's ledger lives INSIDE the root, so
-    * deleting the store deletes it; the symlink tier's root is itself a
-    * symlink, so its ledger is the sibling `.txns/` dir and
-    * [[VersionedStore.init]] clears a stale one when a fresh store is
-    * created at the same path. Operational hazard, documented contract:
+    * Lifecycle: the ledger lives INSIDE the root, so deleting the store
+    * deletes it. Operational hazard, documented contract:
     * wiping a CHECKPOINT while keeping the store keeps its ledger too, so
     * the restarted query's batch 0 carries an already-recorded commit id
     * and is dropped as a replay — restart onto a surviving store with a
     * NEW checkpoint path, never a wiped one.
     */
-  private def txnDir(spark: SparkSession, root: String): Path =
-    if (isPointerStore(spark, root)) new Path(root, TxnDirName)
-    else new Path(new Path(root).toUri.getPath + ".txns")
+  private def txnDir(root: String): Path = new Path(root, TxnDirName)
 
   /** Stable streaming-sink identity from a checkpoint path: the first 128
     * bits of SHA-256, hex. Commit ids embed this (`g<sinkId>-b<batchId>`),
@@ -282,15 +269,15 @@ object GraftStore {
 
   private[logs] def recordTxn(spark: SparkSession, root: String, id: String,
       version: Int): Unit = {
-    val dir = txnDir(spark, root)
+    val dir = txnDir(root)
     fsOf(spark, dir).mkdirs(dir)
     atomicWriteBytes(spark, new Path(dir, id),
       version.toString.getBytes("UTF-8"))
   }
 
-  private[logs] def txnVersion(spark: SparkSession, root: String,
+  private def txnVersion(spark: SparkSession, root: String,
       id: String): Option[Int] = {
-    val p = new Path(txnDir(spark, root), id)
+    val p = new Path(txnDir(root), id)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) None
     else {
@@ -301,9 +288,28 @@ object GraftStore {
     }
   }
 
-  /** Atomic metadata-object write — single PUT on object stores, temp+rename
-    * elsewhere (see [[writeManifest]]'s rationale). Shared by the manifest
-    * and the per-file statistics sidecar ([[FileStats]]).
+  /** The already-committed version for commit id `id`, if any: the durable
+    * ledger first — it survives snapshot retention, so a replay detected
+    * there is safe even after interleaved maintenance reclaimed the version
+    * that carried the commit record — then the retained versions' commit
+    * records. A hit found only by the scan (a pre-ledger store, or a crash
+    * between flip and marker) is written back to the ledger.
+    */
+  private[logs] def committedVersion(spark: SparkSession, root: String,
+      id: String): Option[Int] =
+    txnVersion(spark, root, id).orElse {
+      val scanned = listVersions(spark, root)
+        .filter(n => readCommitInfo(spark, s"$root/${versionPrefix(n)}").exists(_.id == id))
+        .maxOption
+      scanned.foreach(v => recordTxn(spark, root, id, v))
+      scanned
+    }
+
+  /** Atomic metadata-object write — single PUT on object stores, temp +
+    * overwrite-rename elsewhere (see [[writeManifest]]'s rationale): a
+    * reader sees the old bytes or the new ones, never a missing or torn
+    * object. Shared by the pointer, the manifest, the commit ledger and the
+    * sidecars ([[FileStats]], [[DeleteVectors]]).
     */
   private[graft] def atomicWriteBytes(spark: SparkSession, p: Path,
       bytes: Array[Byte]): Unit = {
@@ -312,28 +318,57 @@ object GraftStore {
     if (objectStoreSchemes.contains(scheme)) {
       val out = fs.create(p, true)
       try out.write(bytes) finally out.close()
-    } else {
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      // overwrite-rename through FileContext: atomic replace on HDFS too,
-      // where plain FileSystem.rename returns false on an existing
-      // destination — a delete-then-rename fallback there would open a
-      // crash window with NO live manifest (reads silently drop carried
-      // partitions; vacuum loses the references protecting their versions)
-      try {
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // no AbstractFileSystem binding (exotic scheme): POSIX-style
-          // FileSystems overwrite atomically on plain rename
-          require(fs.rename(tmp, p),
-            s"atomic rename $tmp -> $p failed and $p has no FileContext binding")
-      }
+      return
+    }
+    // a temp name of its own per write: two writers of one object (racing
+    // store creators, a ledger heal beside a commit) each rename a COMPLETE
+    // file into place, never the other's half-written one
+    val tmp = new Path(p.getParent, s"${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(bytes) finally out.close()
+    localDisk(fs) match {
+      case Some(raw) =>
+        // local disk: rename(2) replaces the target atomically. The
+        // checksummed local FS's overwrite-rename deletes the target first —
+        // a window where readers find NO object (an unreadable store, for
+        // the pointer) — and a checksum file beside the target would not
+        // match the new bytes; so the data renames through the raw FS and
+        // no checksum is kept beside the object
+        def crc(x: Path) = new Path(x.getParent, s".${x.getName}.crc")
+        val (lt, lp) = (Path.getPathWithoutSchemeAndAuthority(tmp),
+          Path.getPathWithoutSchemeAndAuthority(p))
+        raw.delete(crc(lp), false)
+        require(raw.rename(lt, lp), s"atomic rename $tmp -> $p failed")
+        raw.delete(crc(lt), false)
+      case None =>
+        // overwrite-rename through FileContext: atomic replace on HDFS too,
+        // where plain FileSystem.rename returns false on an existing
+        // destination — a delete-then-rename fallback there would open a
+        // crash window with NO live manifest (reads silently drop carried
+        // partitions; vacuum loses the references protecting their versions)
+        try {
+          org.apache.hadoop.fs.FileContext
+            .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
+            .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        } catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            // no AbstractFileSystem binding (exotic scheme): POSIX-style
+            // FileSystems overwrite atomically on plain rename
+            require(fs.rename(tmp, p),
+              s"atomic rename $tmp -> $p failed and $p has no FileContext binding")
+        }
     }
   }
+
+  /** The raw local filesystem under `fs` (through any filter/checksum
+    * wrappers), when `fs` is local disk.
+    */
+  private def localDisk(fs: FileSystem): Option[org.apache.hadoop.fs.RawLocalFileSystem] =
+    fs match {
+      case raw: org.apache.hadoop.fs.RawLocalFileSystem => Some(raw)
+      case f: org.apache.hadoop.fs.FilterFileSystem => localDisk(f.getRawFileSystem)
+      case _ => None
+    }
 
   /** Schema-overlay sidecar (add-column-without-rewrite, round 7): one
     * `name\ttypeDDL` line per column added AFTER data was written. Files
@@ -476,33 +511,30 @@ object GraftStore {
   }
 
   /** Versions whose files snapshot `n` reads: itself plus every version its
-    * manifest carries partitions from. Reclaim (vacuum / post-commit
-    * cleanup) must keep the CLOSURE of what it retains — dropping a version
-    * another retained snapshot still references would corrupt that snapshot.
+    * manifest carries partitions from.
     */
   def referencedVersions(spark: SparkSession, root: String, n: Int): Set[Int] = {
-    val (versions, _, dirOf) = tierOf(spark, root)
+    val (versions, _) = versionsOf(spark, root)
     if (!versions.contains(n)) Set(n)
-    else readManifest(spark, dirOf(n)).flatMap(e => holderVersion(e._1)).toSet + n
+    else readManifest(spark, versionDir(root, n)).flatMap(e => holderVersion(e._1)).toSet + n
   }
 
   /** Append directories (staged-writer holders) snapshot `n` reads from.
-    * Reclaim must keep these as long as any retained snapshot references
-    * them; unreferenced ones are crashed-writer debris swept by [[vacuum]].
+    * Unreferenced ones are crashed-writer debris swept by [[vacuum]].
     */
   def referencedAppendDirs(spark: SparkSession, root: String, n: Int): Set[String] = {
-    val (versions, _, dirOf) = tierOf(spark, root)
+    val (versions, _) = versionsOf(spark, root)
     if (!versions.contains(n)) Set.empty
-    else readManifest(spark, dirOf(n)).map(_._1)
+    else readManifest(spark, versionDir(root, n)).map(_._1)
       .filter(_.startsWith(AppendPrefix)).toSet
   }
 
-  /** TRANSITIVE closure of manifest references from `seed`. One level is not
-    * enough for reclaim keep-sets: a version kept only because a retained
-    * snapshot carries partitions from it may ITSELF carry partitions from a
-    * still-older version — dropping that one would leave the middle version
-    * listed (and time-travelable) but unreadable, and make `snapshots()` /
-    * `rowDiff` silently undercount it.
+  /** TRANSITIVE closure of manifest references from `seed`: the versions
+    * [[reclaim]] may keep as snapshots beside the retained ones. One level is
+    * not enough: a version referenced by a retained snapshot may ITSELF
+    * carry partitions from a still-older version, and it stays a snapshot
+    * only while that one's partitions stay too — otherwise it would be
+    * listed (and time-travelable) but unreadable.
     */
   def closureOf(spark: SparkSession, root: String, seed: Set[Int]): Set[Int] = {
     var keep = Set.empty[Int]
@@ -524,8 +556,8 @@ object GraftStore {
   /** Physical directory of a manifest holder: the version prefix dir for
     * `vNNNNNN` holders, `<root>/<holder>` for staged append dirs.
     */
-  private def holderDir(root: String, holder: String, dirOf: Int => String): String =
-    holderVersion(holder).map(dirOf).getOrElse(s"$root/$holder")
+  private def holderDir(root: String, holder: String): String =
+    holderVersion(holder).map(versionDir(root, _)).getOrElse(s"$root/$holder")
 
   def readVersion(spark: SparkSession, root: String, n: Int): DataFrame =
     readVersionInternal(spark, root, n, applyDv = true, keepMeta = false)
@@ -549,7 +581,6 @@ object GraftStore {
 
   private def readVersionInternal(spark: SparkSession, root: String, n: Int,
       applyDv: Boolean, keepMeta: Boolean): DataFrame = {
-    val (_, _, dirOf) = tierOf(spark, root)
     val dir = resolveVersion(spark, root, n)
     val entries = readManifest(spark, dir)
     val overlay = readSchemaOverlay(spark, dir)
@@ -579,7 +610,7 @@ object GraftStore {
           if (hasDataFiles(spark, dir)) Seq(rd(dir, Seq(dir)))
           else Seq.empty // retention can empty a version that still carries refs
         val carried = entries.groupBy(_._1).toSeq.sortBy(_._1).map { case (h, es) =>
-          val vdir = holderDir(root, h, dirOf)
+          val vdir = holderDir(root, h)
           rd(vdir, es.map(e => s"$vdir/${e._2}"))
         }
         (own ++ carried).reduce(_.unionByName(_))
@@ -589,28 +620,13 @@ object GraftStore {
     else unioned
   }
 
-  /** DataFrame read of the live snapshot: composite read for pointer
-    * stores, plain read otherwise (symlink roots resolve in the filesystem
-    * and are always self-contained modulo the schema overlay, applied here
-    * on both tiers).
+  /** DataFrame read of the live snapshot: composite read for versioned
+    * stores, plain read of a plain dir.
     */
   def readStore(spark: SparkSession, root: String): DataFrame =
     if (isPointerStore(spark, root))
       readVersion(spark, root, currentVersion(spark, root))
-    else {
-      val overlay = readSchemaOverlay(spark, root) // root resolves via symlink
-      val dv = DeleteVectors.read(spark, root)
-      val r = if (overlay.nonEmpty) spark.read.option("mergeSchema", "true")
-      else spark.read
-      val df0 = r.parquet(root)
-      val df = applyOverlay(
-        if (dv.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlay)
-      if (dv.nonEmpty)
-        // list through the same root the read plans from, so physical paths
-        // line up with _metadata.file_path on symlink tiers too
-        DeleteVectors.applyTo(spark, df, dv, FileStats.listDirEntries(spark, root))
-      else df
-    }
+    else spark.read.parquet(root)
 
   /** Hidden/metadata names (`_SUCCESS`, `_graft_manifest`, `.crc`, trash)
     * are invisible to Spark's file listing and to store accounting.
@@ -649,7 +665,6 @@ object GraftStore {
 
   private[graft] def compositeEntries(spark: SparkSession, root: String,
       n: Int): Seq[FileEntry] = {
-    val (_, _, dirOf) = tierOf(spark, root)
     def list(dir: String, keyPrefix: String, legBase: String): Seq[FileEntry] = {
       val p = new Path(dir)
       val fs = fsOf(spark, p)
@@ -668,37 +683,38 @@ object GraftStore {
     val dir = resolveVersion(spark, root, n)
     val own = list(dir, "", dir)
     val carried = readManifest(spark, dir).flatMap { case (h, rel) =>
-      val hd = holderDir(root, h, dirOf)
+      val hd = holderDir(root, h)
       list(s"$hd/$rel", s"/$rel", hd)
     }
     own ++ carried
   }
 
-  /** Live version number on either versioned tier (pointer file or version
-    * symlink) — the tier-agnostic face of [[currentVersion]].
+  /** Live version number; unlike [[currentVersion]] it refuses a plain dir
+    * with an `IllegalArgumentException` instead of a missing-file error.
     */
-  def liveVersionOf(spark: SparkSession, root: String): Int =
-    tierOf(spark, root)._2
+  def liveVersionOf(spark: SparkSession, root: String): Int = {
+    requireStore(spark, root)
+    currentVersion(spark, root)
+  }
 
   /** True when the live snapshot references no data files at all — a fresh
     * store before its first commit (streaming sinks create the store, then
-    * batches land). Listing-bounded on either tier, no data read.
+    * batches land). Listing-bounded, no data read.
     */
   def isDataless(spark: SparkSession, root: String): Boolean = {
-    val (_, cur, _) = tierOf(spark, root)
-    compositeEntries(spark, root, cur).isEmpty
+    compositeEntries(spark, root, liveVersionOf(spark, root)).isEmpty
   }
 
   /** One row per retained version, with the live one flagged. */
   final case class SnapshotInfo(version: Int, current: Boolean, files: Long, bytes: Long)
 
-  /** Inventory of retained snapshots (either versioned tier): version
+  /** Inventory of retained snapshots: version
     * number, whether it is the live one, and its composite file count /
     * byte size (own + carried partitions; listing-bounded, not a data
     * scan).
     */
   def snapshots(spark: SparkSession, root: String): Seq[SnapshotInfo] = {
-    val (versions, cur, _) = tierOf(spark, root)
+    val (versions, cur) = versionsOf(spark, root)
     versions.map { n =>
       val fl = compositeFiles(spark, root, n)
       SnapshotInfo(n, n == cur, fl.size.toLong, fl.values.sum)
@@ -757,11 +773,11 @@ object GraftStore {
     val dvA = DeleteVectors.read(spark, resolveVersion(spark, root, from))
     val dvB = DeleteVectors.read(spark, resolveVersion(spark, root, to))
     // same store-layout key + same length = same immutable file: every
-    // write uses fresh task-UUID names, and a carry (manifest reference or
-    // hard link) moves the physical location WITHOUT changing the file —
-    // comparing physical paths would un-prune every hardlink-carried
-    // partition. A same-key length change (an overwrite the engine never
-    // performs) still counts as changed on both sides.
+    // write uses fresh task-UUID names, and a manifest carry changes the
+    // physical holder WITHOUT changing the file — comparing physical paths
+    // would un-prune every carried partition. A same-key length change (an
+    // overwrite the engine never performs) still counts as changed on both
+    // sides.
     val touched = (a.keySet ++ b.keySet).filter { k =>
       (a.get(k), b.get(k)) match {
         case (Some(x), Some(y)) => x.len != y.len || dvA.get(k) != dvB.get(k)
@@ -854,39 +870,116 @@ object GraftStore {
     tagged
   }
 
-  /** Reclaim grace snapshots NOW instead of at the next commit: drops
-    * versions below the live one, keeping the live version, the newest
-    * `retain` snapshots below it (multi-step time travel), any staged-ahead
-    * version an in-flight commit may still be writing — and the manifest
-    * CLOSURE of all of those (a version carrying partitions for a kept
-    * snapshot must itself be kept). Returns the dropped version numbers.
-    * Readers mid-scan on a dropped snapshot lose their files — same
-    * contract as Delta/Iceberg VACUUM; the default (retain 0, do nothing)
-    * already reclaims at the next commit.
+  /** Reclaim grace snapshots NOW instead of at the next commit: keeps the
+    * live version, the newest `retain` snapshots below it (multi-step time
+    * travel) and any staged-ahead version an in-flight commit may still be
+    * writing, and reclaims everything else ([[reclaim]]). Returns the
+    * versions that stopped being snapshots. Readers mid-scan on a dropped
+    * snapshot lose their files — same contract as Delta/Iceberg VACUUM; the
+    * default (retain 0, do nothing) already reclaims at the next commit.
     */
   def vacuum(spark: SparkSession, root: String, retain: Int = 0,
       orphanAppendAgeMillis: Long = 24L * 3600 * 1000): Seq[Int] =
     MaintenanceLease.withLease(spark, root, "vacuum") {
-      val (versions, cur, _) = tierOf(spark, root)
-      val seed = versions.filter(_ >= cur).toSet ++
-        versions.filter(_ < cur).sorted.takeRight(retain)
-      val keep = closureOf(spark, root, seed)
-      if (isPointerStore(spark, root)) dropVersionsExcept(spark, root, keep)
-      else VersionedStore.dropVersionsExcept(root, keep)
-      sweepOrphanAppendDirs(spark, root, keep, orphanAppendAgeMillis)
-      versions.filterNot(keep)
+      val (versions, cur) = versionsOf(spark, root)
+      val dropped = reclaim(spark, root, versions.filter(_ >= cur).toSet ++
+        versions.filter(_ < cur).takeRight(retain))
+      sweepOrphanAppendDirs(spark, root, orphanAppendAgeMillis)
+      dropped
     }
 
-  /** Reclaim staged-append directories no RETAINED version references —
+  /** Root-level marker object `_retired-vNNNNNN`: version N is no longer a
+    * snapshot. Its directory stays only as the HOLDER of partitions that
+    * retained snapshots carry from it; [[reclaim]] deletes the rest of its
+    * data. The marker is written before the first delete, so no crash can
+    * leave a listed snapshot with partitions missing.
+    */
+  val RetiredPrefix = "_retired-"
+
+  /** Reclaim after a commit (and in [[vacuum]]): every snapshot in `retain`
+    * stays whole — its own directory plus what its manifest carries — and
+    * every data file none of them reads is deleted.
+    *
+    * Manifests name the PHYSICAL holder of each carried partition, so the
+    * retained snapshots' manifests alone say which partitions of other
+    * version prefixes and `_append-*` dirs are still read. A version those
+    * manifests reference (the [[closureOf manifest closure]]) stays a
+    * snapshot while that costs no byte — all its own data and every
+    * partition it carries are read anyway. Otherwise it is retired to a
+    * holder and its unread partitions go: the small files a compaction
+    * replaced, the partitions a retention commit expired. Unreferenced
+    * versions are deleted whole; unreferenced append dirs are left to
+    * [[sweepOrphanAppendDirs]] and its age guard. Returns the versions that
+    * stopped being snapshots.
+    */
+  def reclaim(spark: SparkSession, root: String, retain: Set[Int]): Seq[Int] = {
+    val rootPath = new Path(root)
+    val fs = fsOf(spark, rootPath)
+    val (dirs, retired) = versionEntries(fs, rootPath)
+    val listed = dirs.filterNot(retired)
+    val seed = retain.filter(listed.contains)
+    // holder -> the partitions the retained snapshots read from it
+    val read: Map[String, Set[String]] = seed.toSeq
+      .flatMap(n => readManifest(spark, versionDir(root, n)))
+      .groupMap(_._1)(e => e._2.stripPrefix("/").stripSuffix("/"))
+      .map { case (h, rels) => (h, rels.toSet) }
+    def unread(holder: String): Seq[Path] =
+      unreadUnder(fs, new Path(root, holder), read.getOrElse(holder, Set.empty))
+    def isRead(holder: String, rel: String): Boolean =
+      holderVersion(holder).exists(seed) || read.get(holder).exists { rels =>
+        rel.stripPrefix("/").stripSuffix("/").split('/').inits
+          .exists(seg => rels(seg.mkString("/")))
+      }
+    val free = (closureOf(spark, root, seed) -- seed).filter(listed.contains).filter { n =>
+      unread(versionPrefix(n)).isEmpty &&
+        readManifest(spark, versionDir(root, n)).forall { case (h, rel) => isRead(h, rel) }
+    }
+    val snapshots = seed ++ free
+    dirs.filterNot(snapshots).foreach { n =>
+      val h = versionPrefix(n)
+      val marker = new Path(root, RetiredPrefix + h)
+      if (!read.contains(h)) {
+        fs.delete(new Path(root, h), true)
+        if (retired(n)) fs.delete(marker, false)
+      } else {
+        if (!retired(n)) fs.create(marker, true).close()
+        unread(h).foreach(fs.delete(_, true))
+      }
+    }
+    read.keys.filter(_.startsWith(AppendPrefix))
+      .foreach(h => unread(h).foreach(fs.delete(_, true)))
+    // markers whose directory a crashed reclaim already deleted
+    retired.filterNot(dirs.contains)
+      .foreach(n => fs.delete(new Path(root, RetiredPrefix + versionPrefix(n)), false))
+    listed.filterNot(snapshots)
+  }
+
+  /** Visible entries under `dir` outside every partition in `rels` (paths
+    * relative to `dir`; `""` is the whole dir), each at the shallowest level
+    * that holds none of them — one listing per directory on the way down to
+    * a read partition, never a walk of the partitions themselves.
+    */
+  private def unreadUnder(fs: FileSystem, dir: Path, rels: Set[String]): Seq[Path] = {
+    val above = rels.flatMap(_.split('/').inits.drop(1).map(_.mkString("/")))
+    def walk(d: Path, rel: String): Seq[Path] =
+      fs.listStatus(d).toSeq.filter(s => visibleName(s.getPath.getName)).flatMap { s =>
+        val q = if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
+        if (rels(q)) Seq.empty
+        else if (s.isDirectory && above(q)) walk(s.getPath, q)
+        else Seq(s.getPath)
+      }
+    if (rels("") || !fs.exists(dir)) Seq.empty else walk(dir, "")
+  }
+
+  /** Reclaim staged-append directories no listed version references —
     * crashed or abandoned writers. The age guard is the Delta-VACUUM
     * contract: a LIVE writer's staging is also unreferenced until its
     * publish, so only dirs whose newest file is older than
     * `minAgeMillis` are swept (default 24 h; tests pass 0 with writers
-    * quiescent). Covers both tiers: `<root>/_append-*` prefixes on pointer
-    * stores, `<root>.append-*` siblings on symlink roots.
+    * quiescent).
     */
   private[logs] def sweepOrphanAppendDirs(spark: SparkSession, root: String,
-      keepVersions: Set[Int], minAgeMillis: Long): Seq[String] = {
+      minAgeMillis: Long): Seq[String] = {
     val cutoff = System.currentTimeMillis() - minAgeMillis
     def newestMtime(fs: FileSystem, dir: Path): Long = {
       var t = fs.getFileStatus(dir).getModificationTime
@@ -894,51 +987,30 @@ object GraftStore {
       while (it.hasNext) t = math.max(t, it.next().getModificationTime)
       t
     }
-    if (isPointerStore(spark, root)) {
-      val rootPath = new Path(root)
-      val fs = fsOf(spark, rootPath)
-      val referenced = keepVersions
-        .filter(listVersions(spark, root).contains)
-        .flatMap(n => referencedAppendDirs(spark, root, n))
-      fs.listStatus(rootPath).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(AppendPrefix))
-        .filterNot(s => referenced(s.getPath.getName))
-        .filter(s => newestMtime(fs, s.getPath) < cutoff)
-        .map { s => fs.delete(s.getPath, true); s.getPath.toString }
-    } else if (VersionedStore.isVersioned(root)) {
-      // symlink tier: staging siblings are consumed (hard-linked + deleted)
-      // at publish, so ANY surviving sibling is debris once old enough
-      import java.nio.file.{Files => NF, Paths => NP}
-      import scala.jdk.CollectionConverters._
-      val rootPath = NP.get(root).toAbsolutePath
-      val prefix = rootPath.getFileName.toString + ".append-"
-      val s = NF.list(rootPath.getParent)
-      val candidates = try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(prefix)).toList
-      finally s.close()
-      candidates.filter { p =>
-        val fs = new Path(p.toString).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        newestMtime(fs, new Path(p.toString)) < cutoff
-      }.map { p =>
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile); p.toString
-      }
-    } else Seq.empty
+    val rootPath = new Path(root)
+    val fs = fsOf(spark, rootPath)
+    val referenced = listVersions(spark, root)
+      .flatMap(n => readManifest(spark, versionDir(root, n)).map(_._1)).toSet
+    fs.listStatus(rootPath).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(AppendPrefix))
+      .filterNot(s => referenced(s.getPath.getName))
+      .filter(s => newestMtime(fs, s.getPath) < cutoff)
+      .map { s => fs.delete(s.getPath, true); s.getPath.toString }
   }
 
-  /** (retained versions, live version, version → data dir) for whichever
-    * versioned tier `root` is; refuses plain unversioned directories.
+  private def requireStore(spark: SparkSession, root: String): Unit =
+    require(isPointerStore(spark, root),
+      s"$root is not a versioned store (no $PointerName pointer)")
+
+  /** (retained versions, live version) of a versioned store; refuses plain
+    * unversioned directories.
     */
-  private def tierOf(spark: SparkSession, root: String): (Seq[Int], Int, Int => String) =
-    if (isPointerStore(spark, root))
-      (listVersions(spark, root), currentVersion(spark, root),
-        n => s"$root/${versionPrefix(n)}")
-    else {
-      require(VersionedStore.isVersioned(root),
-        s"$root is not a versioned store (no $PointerName pointer, not a version symlink)")
-      (VersionedStore.listVersions(root), VersionedStore.currentVersion(root),
-        n => VersionedStore.versionName(root, n))
-    }
+  private def versionsOf(spark: SparkSession, root: String): (Seq[Int], Int) = {
+    requireStore(spark, root)
+    (listVersions(spark, root), currentVersion(spark, root))
+  }
+
+  private def versionDir(root: String, n: Int): String = s"$root/${versionPrefix(n)}"
 
   def readPointer(spark: SparkSession, root: String): String = {
     val p = new Path(root, PointerName)
@@ -952,15 +1024,15 @@ object GraftStore {
   def currentVersion(spark: SparkSession, root: String): Int =
     readPointer(spark, root).stripPrefix("v").toInt
 
-  /** One atomic PUT: object-store writes publish all-or-nothing, which is
-    * the commit primitive this tier is built on. (On a plain filesystem this
-    * is create+overwrite — fine for tests; the tier targets object stores.)
+  /** THE commit: name version `n` live in one atomic write — a single PUT
+    * on object stores, temp + overwrite-rename on filesystems
+    * ([[atomicWriteBytes]]). A plain `create(overwrite)` truncates first, so
+    * a reader landing between truncate and write (or a crash there) would
+    * find an empty pointer and no live version at all.
     */
-  def writePointer(spark: SparkSession, root: String, n: Int): Unit = {
-    val p = new Path(root, PointerName)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(versionPrefix(n).getBytes("UTF-8")) finally out.close()
-  }
+  def writePointer(spark: SparkSession, root: String, n: Int): Unit =
+    atomicWriteBytes(spark, new Path(root, PointerName),
+      versionPrefix(n).getBytes("UTF-8"))
 
   /** Compare-and-swap pointer flip: publish version `next` only if the
     * pointer STILL names `expected` at the instant of the write. On a
@@ -968,8 +1040,8 @@ object GraftStore {
     * — the S3 `If-Match` contract) this is exact: the precondition rides
     * the PUT itself, so no interleaving between a writer's re-check and its
     * flip can lose an update (the window Delta-on-S3 closes with an
-    * external LogStore). Elsewhere it degrades to re-check + plain PUT —
-    * today's best-effort, explicitly documented as such. Returns false
+    * external LogStore). Elsewhere it degrades to re-check +
+    * [[writePointer]] — best-effort, explicitly documented as such. Returns false
     * (nothing written, staged data intact) when a racing commit won.
     */
   def casWritePointer(spark: SparkSession, root: String,
@@ -998,25 +1070,23 @@ object GraftStore {
     writePointer(spark, root, 1)
   }
 
-  /** Version numbers present under the root (current, staged-ahead, stale). */
+  /** Snapshot version numbers under the root (current, staged-ahead,
+    * stale) — every version directory not marked retired.
+    */
   def listVersions(spark: SparkSession, root: String): Seq[Int] = {
     val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    if (!fs.exists(rootPath)) return Seq.empty
-    fs.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d{6}") => n.stripPrefix("v").toInt }
-      .sorted
+    val (dirs, retired) = versionEntries(fsOf(spark, rootPath), rootPath)
+    dirs.filterNot(retired)
   }
 
-  /** Delete version prefixes outside `keep` (see
-    * [[VersionedStore.dropVersionsExcept]] for the one-snapshot grace
-    * contract commits follow).
+  /** Version directories under the root, and the versions marked retired
+    * ([[RetiredPrefix]]), from one listing.
     */
-  def dropVersionsExcept(spark: SparkSession, root: String, keep: Set[Int]): Unit = {
-    val fs = fsOf(spark, new Path(root))
-    listVersions(spark, root).filterNot(keep).foreach { n =>
-      fs.delete(new Path(root, versionPrefix(n)), true)
-    }
+  private def versionEntries(fs: FileSystem, rootPath: Path): (Seq[Int], Set[Int]) = {
+    if (!fs.exists(rootPath)) return (Seq.empty, Set.empty)
+    val names = fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
+    val retired = s"$RetiredPrefix(v\\d{6})".r
+    (names.collect { case n if n.matches("v\\d{6}") => n.stripPrefix("v").toInt }.sorted,
+      names.collect { case retired(v) => v.stripPrefix("v").toInt }.toSet)
   }
 }

@@ -72,23 +72,18 @@ object LogIngest {
       maxRecordsPerFile: Long = 1000000L,
       partitionCols: Seq[String] = LogSchema.hivePartitionColumns,
       atomic: Boolean = true): Unit = {
-    // Fresh stores are created versioned so maintenance rewrites can swap
-    // the whole tree atomically under readers: symlink-rooted when the path
-    // RESOLVES to the local filesystem (VersionedStore — symlinks are a
-    // local-FS primitive), pointer-file stores everywhere else, HDFS
-    // included (GraftStore — appends resolve through `_current`). The tier
-    // decision comes from the Hadoop FileSystem the path actually maps to,
-    // NOT the URI scheme: a scheme-less path on a cluster whose
-    // fs.defaultFS is HDFS must get the pointer tier, never a driver-local
-    // symlink. Existing plain roots are appended to as-is. A concurrent
-    // first writer can lose the init race — benign, the store the winner
-    // created is exactly the one the loser wanted.
+    // Fresh stores are created versioned ([[GraftStore]] — version prefixes
+    // plus a `_current` pointer, on every filesystem) so maintenance
+    // rewrites can swap the whole tree atomically under readers. Existing
+    // plain roots are appended to as-is. A concurrent first writer can lose
+    // the init race — benign, the store the winner created is exactly the
+    // one the loser wanted.
     //
     // APPENDS to an existing versioned store commit atomically through
-    // [[AppendCommit]] (stage invisibly, publish by manifest-add/pointer
-    // flip or hardlink/retarget): readers polling mid-append see none or
-    // all of the batch, a crashed writer leaves zero visible rows, and the
-    // commit bumps the version (grace snapshot + time travel apply). The
+    // [[AppendCommit]] (stage invisibly, publish by manifest-add + pointer
+    // flip): readers polling mid-append see none or all of the batch, a
+    // crashed writer leaves zero visible rows, and the commit bumps the
+    // version (grace snapshot + time travel apply). The
     // FIRST write of a fresh store still lands directly in v1: no reader
     // can hold a reference to a store that does not exist yet, so there is
     // no torn-read window to defend. `atomic=false` forces the legacy
@@ -96,14 +91,7 @@ object LogIngest {
     // only guard) — for layouts the commit protocol cannot stage, e.g.
     // appends deeper than the store's partition column depth.
     val spark = df.sparkSession
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isLocal = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    val existingVersioned =
-      GraftStore.isPointerStore(spark, root) ||
-        (isLocal && VersionedStore.isVersioned(rootPath.toUri.getPath))
-    if (existingVersioned && atomic) {
+    if (atomic && GraftStore.isPointerStore(spark, root)) {
       AppendCommit.commit(df, root, partitionCols, maxRecordsPerFile)
       return
     }
@@ -122,10 +110,9 @@ object LogIngest {
     FileStats.refreshDir(spark, dataDir, FileStats.read(spark, dataDir))
   }
 
-  /** Create the versioned store for `root` if nothing exists there yet —
-    * symlink tier on the local filesystem, pointer tier everywhere else
-    * (tier decision from the resolved Hadoop FileSystem, not the URI
-    * scheme). Idempotent; losing a concurrent-creation race is benign.
+  /** Create the versioned store for `root` ([[GraftStore.init]]) if nothing
+    * exists there yet. Idempotent; losing a concurrent-creation race is
+    * benign.
     * A fresh store is EMPTY (v1 holds no data): the streaming sink relies
     * on this so its first micro-batch goes through the same atomic
     * [[AppendCommit]] as every later one — replayable by commit id.
@@ -133,25 +120,12 @@ object LogIngest {
   def ensureStore(spark: SparkSession, root: String): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isLocal = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
     // stale-index cleanup runs ONLY when THIS process created the store:
     // losing the create race means a concurrent creator's stream may
     // already be bootstrapping its sibling index, and deleting it from the
     // loser would silently discard a freshly built index (self-healing via
     // the dataless guard, but at the cost of a full corpus rescan)
-    if (isLocal) {
-      val p = java.nio.file.Paths.get(rootPath.toUri.getPath)
-      if (!java.nio.file.Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-        val created =
-          try { VersionedStore.init(p.toString); true }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-            case e: IllegalArgumentException if e.getMessage.contains("already exists") => false
-          }
-        if (created) dropStaleSiblingIndexes(spark, root)
-      }
-    } else if (!fs.exists(rootPath)) {
+    if (!fs.exists(rootPath)) {
       val created =
         try { GraftStore.init(spark, root); true }
         catch {
@@ -164,9 +138,8 @@ object LogIngest {
   /** A FRESH store has no seen documents, so any surviving sibling dedup
     * index at the same path is a deleted store's ghost state — trusting it
     * would silently drop the new store's first documents as duplicates of
-    * the dead corpus (the `.txns`-ledger resurrection hazard, one layer
-    * out; [[graft.ext.StreamingDedup]] keeps a dataless-store guard as
-    * defense in depth for stores created outside this path).
+    * the dead corpus ([[graft.ext.StreamingDedup]] keeps a dataless-store
+    * guard as defense in depth for stores created outside this path).
     */
   private def dropStaleSiblingIndexes(spark: SparkSession, root: String): Unit =
     Seq(GraftStore.DedupIndexSuffix, GraftStore.NearDupIndexSuffix).foreach { s =>

@@ -115,8 +115,8 @@ final case class LogQuery(
               .unionByName(positionalScan(spark, root, "arrow"))
         }
       case LogLayout.Hive =>
-        // the store's snapshot relation: every tier (plain, symlink,
-        // pointer with carried partitions) listed once into its file index,
+        // the store's snapshot relation: a plain dir or a versioned store
+        // (with carried partitions) listed once into its file index,
         // schema from one footer on the driver, deletion vectors applied.
         // The selector and `--since` predicates below push into that index,
         // which drops files whose commit-time stats exclude them

@@ -70,7 +70,7 @@ object LogStreamIngest {
 
   /** FIRST-CLASS streaming store (round 7): every micro-batch commits
     * through the store protocol ([[AppendCommit]] — stage invisibly,
-    * publish by manifest-add + pointer flip / hardlink + retarget) instead
+    * publish by manifest-add + pointer flip) instead
     * of the parquet sink's `_spark_metadata` commit log. The resulting
     * store is an ordinary versioned store from the first batch, so
     * compaction / retention / vacuum / time travel run against the LIVE

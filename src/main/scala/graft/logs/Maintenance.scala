@@ -54,14 +54,11 @@ object Maintenance {
       views: Seq[String] = Seq.empty,
       dirtyMaxFiles: Int = 4,
       dirtyMinAvgBytes: Long = 32L << 20): Debt = {
+    val versioned = GraftStore.isPointerStore(spark, root)
+    val live = if (versioned) GraftStore.currentVersion(spark, root) else 0
     val entries: Seq[GraftStore.FileEntry] =
-      if (GraftStore.isPointerStore(spark, root) ||
-          VersionedStore.isVersioned(new org.apache.hadoop.fs.Path(root).toUri.getPath))
-        GraftStore.compositeEntries(spark, root, GraftStore.liveVersionOf(spark, root))
+      if (versioned) GraftStore.compositeEntries(spark, root, live)
       else FileStats.listDirEntries(spark, root)
-    val live =
-      try GraftStore.liveVersionOf(spark, root)
-      catch { case _: IllegalArgumentException => 0 } // plain dir: unversioned
     val byPartition = entries.groupBy(e =>
       e.key.split('/').filter(_.nonEmpty).dropRight(1).mkString("/"))
     val dirty = byPartition.values.count { fs =>
@@ -84,9 +81,8 @@ object Maintenance {
     */
   def inferPartitionCols(spark: SparkSession, root: String): Option[Seq[String]] = {
     val entries =
-      if (GraftStore.isPointerStore(spark, root) ||
-          VersionedStore.isVersioned(new org.apache.hadoop.fs.Path(root).toUri.getPath))
-        GraftStore.compositeEntries(spark, root, GraftStore.liveVersionOf(spark, root))
+      if (GraftStore.isPointerStore(spark, root))
+        GraftStore.compositeEntries(spark, root, GraftStore.currentVersion(spark, root))
       else FileStats.listDirEntries(spark, root)
     val layouts = entries.map(_.key.split('/').filter(_.nonEmpty).dropRight(1)
       .toSeq.takeWhile(_.contains('=')).map(_.takeWhile(_ != '='))).distinct

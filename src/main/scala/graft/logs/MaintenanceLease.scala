@@ -15,11 +15,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * cleanly before touching anything.
   *
   * Lease placement: inside the root (`_maintenance-lease`, `_`-prefix keeps
-  * it out of Spark listings) for pointer stores — a single-object
+  * it out of Spark listings) for versioned stores — a single-object
   * create-if-absent, which [[graft.sources.S3LiteFileSystem]] honors with a
-  * HEAD-then-PUT; a SIBLING file (`<root>.maintenance-lease`) for symlink
-  * and plain roots, because the symlink tier retargets the root mid-commit
-  * and a lease inside it would migrate between versions. On `file:` roots
+  * HEAD-then-PUT; a SIBLING file (`<root>.maintenance-lease`) for plain
+  * roots, whose per-leaf swap stages beside the root. On `file:` roots
   * the acquire uses `Files.createFile` (atomic CREATE_NEW at the syscall
   * level) rather than Hadoop's check-then-create.
   *

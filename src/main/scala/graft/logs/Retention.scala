@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Two modes on versioned stores: [[enforceHive]] deletes in place inside
   * the live version (cheapest, but the live snapshot mutates under readers),
   * while [[enforceHiveSnapshot]] COMMITS the drop as a new version whose
-  * manifest / hard links carry every surviving partition — still zero data
+  * manifest carries every surviving partition — still zero data
   * movement, but in-flight readers keep their complete snapshot and the
   * pre-retention view stays time-travelable until vacuumed.
   */
@@ -86,8 +86,8 @@ object Retention {
     expiredParts.foreach { p => if (fs.delete(p, true)) deleted += p.toString }
     // partitions carried by manifest (incremental compaction) live in OLDER
     // version prefixes: dropping the manifest entry removes them from the
-    // live view at metadata cost; the physical files belong to retained
-    // snapshots and are reclaimed when their version is
+    // live view at metadata cost; their files go at the next commit or
+    // vacuum that finds no retained snapshot reading them
     if (manifestDrop.nonEmpty) {
       GraftStore.writeManifest(spark, root, manifestKeep)
       manifestDrop.foreach { case (h, rel) =>
@@ -114,9 +114,9 @@ object Retention {
 
   /** Snapshot-isolated retention on a VERSIONED store: instead of deleting
     * inside the live version, commit a NEW version that carries every
-    * surviving partition and omits the expired ones — by manifest reference
-    * on the pointer tier (the new prefix holds ONE object, its manifest) and
-    * by hard link on the symlink tier. Zero data bytes move either way; the
+    * surviving partition by manifest reference and omits the expired ones
+    * (the new prefix holds ONE data-free object, its manifest). Zero data
+    * bytes move; the
     * pre-retention snapshot stays complete for in-flight readers and for
     * time travel, and is reclaimed by vacuum / the next commit like any
     * grace snapshot. This is the manifest layer doing for retention what it
@@ -129,12 +129,14 @@ object Retention {
       cutoffDate: String, convertStreamingStore: Boolean = false): Seq[String] = {
     val fs = new Path(rawRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(rawRoot))) return Seq.empty
+    require(GraftStore.isPointerStore(spark, rawRoot),
+      s"$rawRoot is not a versioned store; snapshot-isolated retention " +
+        "needs a version commit primitive — use enforceHive for plain roots")
     MaintenanceLease.withLease(spark, rawRoot, "retention") {
-      // a compaction marker certifies a staged tree pending recovery; a
+      // a compaction marker certifies a staged version pending recovery; a
       // retention commit over it would be silently REVERTED by that recovery
       // (which re-promotes the pre-retention tree), resurrecting expired data
-      require(!fs.exists(new Path(rawRoot, "_compact-inflight")) &&
-          !fs.exists(new Path(rawRoot + ".compact-inflight")),
+      require(!fs.exists(new Path(rawRoot, "_compact-inflight")),
         s"$rawRoot has an in-flight compaction marker — run compaction (recovery) first")
       // mirror enforceHive's streaming-sink guard: the new version carries
       // only partition data, so a live streaming writer's commit log would
@@ -146,14 +148,7 @@ object Retention {
             "stop the streaming query and pass convertStreamingStore=true — the " +
             "snapshot commit converts the store to listing-based")
       }
-      if (GraftStore.isPointerStore(spark, rawRoot))
-        snapshotPointer(spark, rawRoot, cutoffDate, fs)
-      else {
-        require(VersionedStore.isVersioned(rawRoot),
-          s"$rawRoot is not a versioned store; snapshot-isolated retention " +
-            "needs a version commit primitive — use enforceHive for plain roots")
-        snapshotSymlink(spark, rawRoot, cutoffDate, fs)
-      }
+      snapshotCommit(spark, rawRoot, cutoffDate, fs)
     }
   }
 
@@ -163,7 +158,7 @@ object Retention {
   private def ownDateLeaves(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
     Compaction.partitionLeaves(fs, new Path(dir), 3)
 
-  private def snapshotPointer(spark: SparkSession, root: String,
+  private def snapshotCommit(spark: SparkSession, root: String,
       cutoffDate: String, fs: org.apache.hadoop.fs.FileSystem): Seq[String] = {
     val cur = GraftStore.currentVersion(spark, root)
     // markerless version prefixes ahead of the pointer are debris from a
@@ -218,9 +213,9 @@ object Retention {
       throw new IllegalStateException(
         s"concurrent commit detected on $root during retention publish " +
           s"(expected v$cur live); $nextDir staged — re-run retention")
-    // grace contract: keep the replaced snapshot + transitive manifest closure
-    val keep = GraftStore.closureOf(spark, root, Set(cur, next))
-    GraftStore.dropVersionsExcept(spark, root, keep)
+    // grace contract: keep the replaced snapshot; the expired partitions'
+    // bytes go once no retained snapshot reads them
+    GraftStore.reclaim(spark, root, Set(cur, next))
     expired.map { case (h, rel) => s"$root/$h/$rel" }
   }
 
@@ -231,37 +226,4 @@ object Retention {
       spark.read.option("basePath", vdir)
         .parquet(es.map(e => s"$vdir/${e._2}"): _*).count() // footer-only
     }.sum
-
-  private def snapshotSymlink(spark: SparkSession, root: String,
-      cutoffDate: String, fs: org.apache.hadoop.fs.FileSystem): Seq[String] = {
-    val prev = VersionedStore.currentVersion(root)
-    val curDir = VersionedStore.versionName(root, prev)
-    val leaves = ownDateLeaves(fs, curDir)
-    val (expired, survivors) = leaves.partition(l => relExpired(l._1, cutoffDate))
-    if (expired.isEmpty) return Seq.empty
-    require(survivors.nonEmpty,
-      s"retention cutoff $cutoffDate expires every partition of $root — " +
-        "refusing to commit an empty store; drop the store explicitly instead")
-    val next = VersionedStore.listVersions(root).max + 1
-    val staging = new Path(root + ".retention-staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    fs.mkdirs(staging)
-    Compaction.hardLinkCarry(survivors, staging, new Path(curDir)) // metadata-only carry
-    GraftStore.carrySchemaOverlay(spark, curDir, staging.toString)
-    GraftStore.writeCommitInfo(spark, staging.toString, GraftStore.CommitInfo(
-      "retention", java.util.UUID.randomUUID().toString, System.currentTimeMillis()))
-    // survivor deletion vectors carry (same rel keys under the hard links);
-    // expired files' vectors drop with the files
-    DeleteVectors.carryInto(spark, curDir, staging.toString,
-      FileStats.listDirEntries(spark, staging.toString).map(_.key).toSet)
-    // hard-linked survivors keep key+len: stats are pure line-reuse
-    FileStats.refreshDir(spark, staging.toString, FileStats.read(spark, curDir))
-    val versionDir = new Path(VersionedStore.versionName(root, next))
-    require(fs.rename(staging, versionDir), s"rename $staging -> $versionDir failed")
-    VersionedStore.retarget(root, next)
-    val keep = VersionedStore.listVersions(root).filter(_ <= prev)
-      .takeRight(1).toSet + next
-    VersionedStore.dropVersionsExcept(root, keep)
-    expired.map { case (rel, _) => s"$curDir/$rel" }
-  }
 }

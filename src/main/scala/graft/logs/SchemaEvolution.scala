@@ -9,9 +9,8 @@ import org.apache.hadoop.fs.Path
   * rewrite of 100 TB to add 4 bytes/row is a non-starter.
   *
   * The commit is metadata-only, exactly like an append publish with no
-  * data: a new version carrying every partition of the current one (by
-  * manifest reference on the pointer tier, hard link on the symlink tier)
-  * plus an updated `_graft_schema` overlay line `name\ttypeDDL`. Read-side,
+  * data: a new version carrying every partition of the current one by
+  * manifest reference, plus an updated `_graft_schema` overlay line `name\ttypeDDL`. Read-side,
   * files that physically lack the column yield NULL ([[GraftStore
   * .applyOverlay]] — the Iceberg/Delta add-column null-backfill contract);
   * rows appended after the evolution write the column physically.
@@ -31,15 +30,10 @@ object SchemaEvolution {
       partitionCols: Seq[String] = LogSchema.hivePartitionColumns): Int = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name '$name'")
     org.apache.spark.sql.types.DataType.fromDDL(typeDDL) // fail fast
+    require(GraftStore.isPointerStore(spark, root),
+      s"$root is not a versioned store — schema evolution needs a commit primitive")
     MaintenanceLease.withLeaseRetry(spark, root, "add-column") {
-      if (GraftStore.isPointerStore(spark, root))
-        addPointer(spark, root, name, typeDDL, partitionCols)
-      else {
-        val local = new Path(root).toUri.getPath
-        require(VersionedStore.isVersioned(local),
-          s"$root is not a versioned store — schema evolution needs a commit primitive")
-        addSymlink(spark, root, name, typeDDL, partitionCols)
-      }
+      addHeld(spark, root, name, typeDDL, partitionCols)
     }
   }
 
@@ -49,7 +43,7 @@ object SchemaEvolution {
     require(!physical.contains(name), s"column '$name' already exists physically")
   }
 
-  private def addPointer(spark: SparkSession, root: String, name: String,
+  private def addHeld(spark: SparkSession, root: String, name: String,
       typeDDL: String, partitionCols: Seq[String]): Int = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(new Path(root, "_compact-inflight")),
@@ -91,45 +85,8 @@ object SchemaEvolution {
     // compare-and-swap on conditional-write stores (see casWritePointer)
     if (!GraftStore.casWritePointer(spark, root, cur, next))
       abort(s"concurrent commit detected on $root during add-column publish")
-    val keep = GraftStore.closureOf(spark, root,
+    GraftStore.reclaim(spark, root,
       GraftStore.listVersions(spark, root).filter(_ < next).takeRight(1).toSet + next)
-    GraftStore.dropVersionsExcept(spark, root, keep)
-    next
-  }
-
-  private def addSymlink(spark: SparkSession, root: String, name: String,
-      typeDDL: String, partitionCols: Seq[String]): Int = {
-    import java.nio.file.{Files, Paths}
-    val local = new Path(root).toUri.getPath
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(local + ".compact-inflight")),
-      s"$root has an in-flight compaction marker — run compaction (recovery) first")
-    val prev = VersionedStore.currentVersion(local)
-    val prevDir = VersionedStore.versionName(local, prev)
-    val overlay = GraftStore.readSchemaOverlay(spark, prevDir)
-    requireFresh(overlay, name,
-      if (Compaction.dataFilesUnder(fs, new Path(prevDir)).isEmpty) Seq.empty
-      else spark.read.parquet(prevDir).columns.toSeq)
-    val next = VersionedStore.listVersions(local).max + 1
-    val nextDir = VersionedStore.versionName(local, next)
-    if (fs.exists(new Path(nextDir))) fs.delete(new Path(nextDir), true)
-    Files.createDirectories(Paths.get(nextDir))
-    def abort(msg: String): Nothing = {
-      fs.delete(new Path(nextDir), true)
-      throw new IllegalStateException(msg)
-    }
-    Compaction.hardLinkCarry(
-      Compaction.partitionLeaves(fs, new Path(prevDir), partitionCols.length),
-      new Path(nextDir), new Path(prevDir))
-    GraftStore.writeSchemaOverlay(spark, nextDir, overlay :+ (name, typeDDL))
-    GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("add-column",
-      name, System.currentTimeMillis()))
-    if (VersionedStore.currentVersion(local) != prev)
-      abort(s"concurrent commit detected on $root during add-column publish")
-    VersionedStore.retarget(local, next)
-    val keep = VersionedStore.listVersions(local)
-      .filter(_ <= prev).takeRight(1).toSet + next
-    VersionedStore.dropVersionsExcept(local, keep)
     next
   }
 }

@@ -32,7 +32,7 @@ import java.nio.file.Files
   * still reads complete, and `live_match_zero` that no deleted row survives.
   *
   * Scale: a delete commit is O(metadata + matched rows) regardless of store
-  * size — the files are carried by reference/hard link, the vector rides the
+  * size — the files are carried by reference, the vector rides the
   * sidecar, and reads apply it as a broadcast anti-join on (file, position).
   */
 object StoreDeleteQuery {

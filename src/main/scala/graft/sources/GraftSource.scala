@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.logs.{AppendCommit, DeleteVectors, FileStats, GraftStore, VersionedStore}
+import graft.logs.{AppendCommit, DeleteVectors, FileStats, GraftStore}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession, SQLContext}
@@ -172,7 +172,7 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
     val root = normRoot(parameters.getOrElse("path",
       throw new IllegalArgumentException(
         "graft stream needs a path: spark.readStream.format(\"graft\").load(<store root>)")))
-    require(isVersioned(sqlContext.sparkSession, root),
+    require(GraftStore.isPointerStore(sqlContext.sparkSession, root),
       s"$root is not a versioned store — streaming tails the commit log, " +
         "which only versioned tiers have")
     val starting = parameters.getOrElse("startingVersion", "latest")
@@ -211,7 +211,7 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
       throw new IllegalArgumentException(
         "graft source needs a path: spark.read.format(\"graft\").load(<store root>)"))
     )
-    val versioned = isVersioned(spark, root)
+    val versioned = GraftStore.isPointerStore(spark, root)
     val verOpt = parameters.get("versionAsOf").map(_.trim.toInt)
     val tsOpt = parameters.get("timestampAsOf").map(parseTimestampMillis)
     require(verOpt.isEmpty || tsOpt.isEmpty,
@@ -339,7 +339,7 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
     require(mode == SaveMode.Append,
       s"graft writes are atomic APPEND commits; got $mode — overwrite of a " +
         "versioned store is maintenance (compaction/retention), not a write mode")
-    if (!isVersioned(spark, root)) {
+    if (!GraftStore.isPointerStore(spark, root)) {
       val p = new Path(root)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       require(!fs.exists(p) || fs.listStatus(p).isEmpty,
@@ -367,18 +367,14 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
   }
 
   /** Spark's SQL surface normalizes the `path` option to a qualified URI
-    * (`file:/tmp/...`); the store tiers that are local-filesystem contracts
-    * (version symlinks) need the plain path, so strip a local scheme once
-    * here. Non-local schemes (the S3 tier) pass through untouched.
+    * (`file:/tmp/...`); strip a local scheme once here so a root names the
+    * same store path (file entries, lease, error messages) however it was
+    * spelled. Non-local schemes (the S3 tier) pass through untouched.
     */
   private def normRoot(raw: String): String = {
     val uri = new Path(raw).toUri
     if (uri.getScheme == null || uri.getScheme == "file") uri.getPath else raw
   }
-
-  private def isVersioned(spark: SparkSession, root: String): Boolean =
-    GraftStore.isPointerStore(spark, root) ||
-      VersionedStore.isVersioned(new Path(root).toUri.getPath)
 
   /** `timestampAsOf` accepts epoch-millis, ISO-8601 instants,
     * `yyyy-MM-dd HH:mm:ss` (UTC), and bare `yyyy-MM-dd` dates (midnight

@@ -1,5 +1,6 @@
 package graft
 
+import graft.logs.GraftStore
 import graft.streaming.CloseWriteDetector.PodClosed
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -56,11 +57,12 @@ class AdminLifecycleSpec extends SparkSpec {
       partitionCols = Seq("cluster", "namespace", "date"))
     // small-file mess for compaction to clean: append a second copy split
     // across many tiny files (every task hits every partition)
-    ingested.repartition(8).write.partitionBy("cluster", "namespace", "date")
-      .option("maxRecordsPerFile", 1).mode("append").parquet(hive)
-    assert(graft.logs.VersionedStore.isVersioned(hive))
-    def hiveFiles = walk(new java.io.File(hive)).filter(_.getName.endsWith(".parquet"))
-    val hiveRowsBefore = spark.read.parquet(hive).count()
+    appendRaw(ingested.repartition(8), hive, Seq("cluster", "namespace", "date"),
+      maxRecordsPerFile = 1)
+    assert(GraftStore.isPointerStore(spark, hive))
+    def hiveFiles =
+      GraftStore.compositeEntries(spark, hive, GraftStore.currentVersion(spark, hive))
+    val hiveRowsBefore = GraftStore.readStore(spark, hive).count()
     assert(hiveRowsBefore == 2 * totalRows)
     assert(hiveFiles.size >= 10) // 8 one-row files + 2 base: the mess is real
 
@@ -88,14 +90,14 @@ class AdminLifecycleSpec extends SparkSpec {
     // ---- maintenance compaction on the hive store (atomic versioned swap) ----
     graft.logs.Compaction.compactHive(spark, hive,
       partitionCols = Seq("cluster", "namespace", "date"))
-    assert(graft.logs.VersionedStore.currentVersion(hive) == 2)
-    assert(spark.read.parquet(hive).count() == hiveRowsBefore)
+    assert(GraftStore.currentVersion(spark, hive) == 2)
+    assert(GraftStore.readStore(spark, hive).count() == hiveRowsBefore)
     assert(hiveFiles.size <= 2, s"compaction left ${hiveFiles.size} files") // ≤1 per date
 
     // ---- retention: drop the expired date through the same root ----
     val deleted = graft.logs.Retention.enforceHive(spark, hive, "2024-01-16")
     assert(deleted.size == 1 && deleted.head.contains("date=2024-01-15"))
-    val remaining = spark.read.parquet(hive)
+    val remaining = GraftStore.readStore(spark, hive)
     assert(remaining.count() == hiveRowsBefore / 2) // exactly the day-two half
     assert(remaining.select(min($"date".cast("string"))).head.getString(0) == "2024-01-16")
     // serving store is untouched by hive maintenance

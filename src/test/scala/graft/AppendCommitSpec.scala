@@ -246,13 +246,13 @@ class AppendCommitSpec extends SparkSpec {
     }
   }
 
-  test("symlink tier: atomic append by hard-link carry; polling reader never torn") {
+  test("local disk: atomic append by manifest carry; polling reader never torn") {
     val root = Files.createTempDirectory("graft-atomapp").resolve("store").toString
     val df = fixture().limit(2000)
     val dates = df.select($"date").distinct().as[String].collect().sorted
     val base = df.filter($"date" === dates.head)
     LogIngest.writeHive(base, root, partitionCols = parts)
-    val before = spark.read.parquet(root).count()
+    val before = GraftStore.readStore(spark, root).count()
     val batch = df.filter($"date" =!= dates.head)
     val after = before + batch.count()
     @volatile var stop = false
@@ -265,7 +265,7 @@ class AppendCommitSpec extends SparkSpec {
         // to the commit protocol); a REAL torn snapshot reproduces on the
         // immediate retry — wrong count or persistent failure still fails
         def attempt(): Option[Long] =
-          try Some(spark.read.parquet(root).count())
+          try Some(GraftStore.readStore(spark, root).count())
           catch { case e: Exception =>
             val chain = Iterator.iterate(e: Throwable)(_.getCause)
               .takeWhile(_ != null).map(_.toString).mkString(" <- ")
@@ -282,25 +282,21 @@ class AppendCommitSpec extends SparkSpec {
     finally { stop = true; reader.join() }
     assert(bad.isEmpty, s"reader saw torn counts: ${bad.toArray.mkString(",")} " +
       s"errs: ${errs.toArray.mkString(" | ")}")
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == after)
-    // the base partition carried by hard link: same inode across versions
-    val v1 = VersionedStore.versionName(root, 1)
-    val v2 = VersionedStore.versionName(root, 2)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() == after)
+    // the base partition is carried by reference: v2 names v1's files, and
+    // holds no data of its own
+    val v2 = s"$root/${GraftStore.versionPrefix(2)}"
     val rel = s"cluster=dev/namespace=ns0/date=${dates.head}"
-    def inode(p: String) =
-      Files.getAttribute(Paths.get(p), "unix:ino").asInstanceOf[java.lang.Long]
-    val carried = Files.list(Paths.get(v1, rel)).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet"))
-    assert(carried.nonEmpty)
-    carried.foreach { p =>
-      val twin = v2 + "/" + rel + "/" + Paths.get(p).getFileName
-      assert(Files.exists(Paths.get(twin)))
-      assert(inode(twin) == inode(p))
-    }
-    // no staging sibling left behind
-    assert(!Files.list(Paths.get(root).toAbsolutePath.getParent).toArray
-      .map(_.toString).exists(_.contains(".append-")))
+    val manifest = GraftStore.readManifest(spark, v2)
+    assert(manifest.contains((GraftStore.versionPrefix(1), rel)))
+    assert(!Files.walk(Paths.get(v2)).toArray.exists(_.toString.endsWith(".parquet")))
+    // no staging left behind: every append dir is the published batch's
+    val appendDirs = Files.list(Paths.get(root)).toArray.map(_.toString)
+      .map(p => Paths.get(p).getFileName.toString)
+      .filter(_.startsWith(GraftStore.AppendPrefix)).toSet
+    assert(appendDirs.nonEmpty &&
+      appendDirs == manifest.map(_._1).filter(_.startsWith(GraftStore.AppendPrefix)).toSet)
   }
 
   test("commit records make time travel exact when every mtime is scrambled") {
@@ -324,8 +320,7 @@ class AppendCommitSpec extends SparkSpec {
         try Files.setLastModifiedTime(f, ancient) catch { case _: Exception => () }
       }
     }
-    VersionedStore.listVersions(root)
-      .foreach(n => scramble(Paths.get(VersionedStore.versionName(root, n))))
+    scramble(Paths.get(root))
     assert(GraftStore.versionAsOf(spark, root, t2) == 2,
       "commit record did not override scrambled mtimes")
     assert(GraftStore.versionAsOf(spark, root, System.currentTimeMillis()) == 3)

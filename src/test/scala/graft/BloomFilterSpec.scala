@@ -1,6 +1,6 @@
 package graft
 
-import graft.logs.{Compaction, Introspect, LogIngest, VersionedStore}
+import graft.logs.{Compaction, GraftStore, Introspect, LogIngest}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -44,7 +44,7 @@ class BloomFilterSpec extends SparkSpec {
     LogIngest.writeHive(
       fixture(concat(lit("pod-"), pmod($"event_id", lit(200)))),
       root, partitionCols = parts)
-    val glob = s"${VersionedStore.versionName(root, 1)}/cluster=dev/namespace=ns0/date=*"
+    val glob = s"$root/${GraftStore.versionPrefix(1)}/cluster=dev/namespace=ns0/date=*"
     val enc = podMeta(glob).cache()
     assert(enc.count() > 0)
     val bloom = Introspect.parquetBloomProbe(spark, glob, "pod")
@@ -69,7 +69,7 @@ class BloomFilterSpec extends SparkSpec {
       val df = fixture(concat(lit("pod-"), $"event_id"))
       LogIngest.writeHive(df, root, partitionCols = parts)
       val dates = df.select($"date").distinct().as[String].collect().sorted
-      val glob1 = s"${VersionedStore.versionName(root, 1)}/cluster=dev/namespace=ns0/date=*"
+      val glob1 = s"$root/${GraftStore.versionPrefix(1)}/cluster=dev/namespace=ns0/date=*"
       assert(podMeta(glob1).filter($"encodings".contains("DICTIONARY")).count() == 0,
         "fallback not in effect — the test would silently pass on the dict leg")
       val probe = Introspect.parquetBloomProbe(spark, glob1,
@@ -88,14 +88,12 @@ class BloomFilterSpec extends SparkSpec {
       probe.unpersist()
 
       // compaction rewrite preserves the physical contract
-      df.filter($"date" === dates.head).repartition(4)
-        .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-        .options(graft.logs.LogSchema.parquetBloomOptions)
-        .mode("append").parquet(root)
+      appendRaw(df.filter($"date" === dates.head).repartition(4), root, parts,
+        maxRecordsPerFile = 10, options = graft.logs.LogSchema.parquetBloomOptions)
       Compaction.compactHive(spark, root, partitionCols = parts)
-      assert(VersionedStore.currentVersion(root) == 2)
+      assert(GraftStore.currentVersion(spark, root) == 2)
       val rewritten = Introspect.parquetBloomProbe(spark,
-        s"${VersionedStore.versionName(root, 2)}/cluster=dev/namespace=ns0/date=${dates.head}",
+        s"$root/${GraftStore.versionPrefix(2)}/cluster=dev/namespace=ns0/date=${dates.head}",
         "pod", probe = Seq("absent-pod-xyz"))
       assert(rewritten.count() > 0)
       assert(rewritten.filter(!$"has_bloom").count() == 0)

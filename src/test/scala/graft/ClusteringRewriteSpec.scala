@@ -1,6 +1,6 @@
 package graft
 
-import graft.logs.{ClusterSpec, Compaction, GraftStore, Introspect, LogIngest, VersionedStore}
+import graft.logs.{ClusterSpec, Compaction, GraftStore, Introspect, LogIngest}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -33,7 +33,7 @@ class ClusteringRewriteSpec extends SparkSpec {
 
   /** (avg distinct pods per file, avg time_ns span per file / full span) */
   private def layoutStats(root: String): (Double, Double) = {
-    val df = spark.read.parquet(root)
+    val df = GraftStore.readStore(spark, root)
       .select(input_file_name().as("f"), $"pod", $"time_ns")
     val full = df.agg(max($"time_ns") - min($"time_ns")).head.getLong(0).toDouble
     val per = df.groupBy($"f").agg(
@@ -46,7 +46,7 @@ class ClusteringRewriteSpec extends SparkSpec {
   private def build(cluster: ClusterSpec): (String, (Double, Double)) = {
     val root = Files.createTempDirectory("graft-cluster").resolve("store").toString
     LogIngest.writeHive(fixture(), root, partitionCols = parts)
-    val before = spark.read.parquet(root).count()
+    val before = GraftStore.readStore(spark, root).count()
     // well under the ~330 rows per date partition, so every partition
     // splits into several files and the clustering choice is visible
     Compaction.compactHive(spark, root, partitionCols = parts, full = true,
@@ -54,7 +54,7 @@ class ClusteringRewriteSpec extends SparkSpec {
     // a re-clustering rewrite moves bytes but changes NOTHING: row-level
     // CDC across the commit is empty
     assert(GraftStore.rowDiff(spark, root, 1, 2).isEmpty)
-    assert(spark.read.parquet(root).count() == before)
+    assert(GraftStore.readStore(spark, root).count() == before)
     (root, layoutStats(root))
   }
 
@@ -78,7 +78,7 @@ class ClusteringRewriteSpec extends SparkSpec {
     // alone (exactly what min-max skipping evaluates)?
     def straddling(root: String): (Long, Long) = {
       val stats = Introspect.parquetRowGroupStringStats(spark,
-        s"${VersionedStore.versionName(root, 2)}/cluster=dev/namespace=ns0/date=*",
+        s"$root/${GraftStore.versionPrefix(2)}/cluster=dev/namespace=ns0/date=*",
         "pod")
       (stats.filter($"min" <= "pod-0" && $"max" >= "pod-0").count(), stats.count())
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Row-level deletes ([[DeleteVectors]]): merge-on-read deletion vectors and
   * the MERGE/upsert built on them. Asserts the Delta/Iceberg contract on
-  * both versioned tiers: a delete commit moves zero data bytes, every read
+  * local-disk and object-store stores: a delete commit moves zero data bytes, every read
   * path applies vectors, the pre-delete snapshot stays time-travelable,
   * maintenance materializes and carries correctly, and a stale vector fails
   * the read instead of corrupting it.
@@ -376,22 +376,22 @@ class DeleteVectorSpec extends SparkSpec {
     }
   }
 
-  test("symlink tier: deleteWhere + snapshot retention carry vectors") {
-    val work = java.nio.file.Files.createTempDirectory("graft-dv-sym")
+  test("local disk: deleteWhere + snapshot retention carry vectors") {
+    val work = java.nio.file.Files.createTempDirectory("graft-dv-local")
     val root = work.resolve("lake").toString
     val df = fixture().limit(2000).cache()
     val dates = df.select($"date").distinct().as[String].collect().sorted
     LogIngest.writeHive(df, root, partitionCols = parts)
-    assert(VersionedStore.isVersioned(root))
+    assert(GraftStore.isPointerStore(spark, root))
     val total = df.count()
     val expectDeleted = df.filter(delCond).count()
 
     val c = DeleteVectors.deleteWhere(spark, root, delCond)
     assert(c.version == 2 && c.deletedRows == expectDeleted)
     assert(GraftStore.readStore(spark, root).count() == total - expectDeleted)
-    // plain spark.read through the symlink shows the PHYSICAL rows (the
+    // a physical read of the snapshot's files shows every stored row (the
     // sidecar is an engine-read contract); engine reads apply it
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.readVersionPhysical(spark, root, 2).count() == total)
 
     // snapshot retention drops the oldest date and carries survivor vectors
     Retention.enforceHiveSnapshot(spark, root, dates(1))
@@ -500,11 +500,15 @@ class DeleteVectorSpec extends SparkSpec {
     DeleteVectors.deleteWhere(spark, root, delCond)
     // corrupt: replace a vectored data file with different content/length,
     // keeping its name (a write outside the commit protocol)
-    val cur = GraftStore.resolve(spark, root)
-    val dv = DeleteVectors.read(spark, cur)
+    val cur = GraftStore.currentVersion(spark, root)
+    val dv = DeleteVectors.read(spark, GraftStore.resolve(spark, root))
     assert(dv.nonEmpty)
     val key = dv.keySet.head
-    val victim = java.nio.file.Paths.get(cur + key)
+    // the live version carries the file by reference: replace it where it
+    // physically lives
+    val victim = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(
+      GraftStore.compositeEntries(spark, root, cur).find(_.key == key).get.physical)
+      .toUri.getPath)
     val clone = df.limit(3)
     val tmpOut = work.resolve("tmp-replace").toString
     clone.coalesce(1).write.mode("overwrite").parquet(tmpOut)

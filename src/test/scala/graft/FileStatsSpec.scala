@@ -383,8 +383,7 @@ class FileStatsSpec extends SparkSpec {
     val parts = Seq("cluster", "namespace", "date")
     val df = fixture()
     LogIngest.writeHive(df, root, partitionCols = parts)
-    val cur = VersionedStore.currentVersion(
-      new org.apache.hadoop.fs.Path(root).toUri.getPath)
+    val cur = GraftStore.currentVersion(spark, root)
     assert(FileStats.rowCountFromStats(spark, root, cur).contains(df.count()),
       "fully covered sidecar must yield the exact count")
     // tamper one line's length: coverage breaks, the shortcut must refuse

@@ -118,15 +118,12 @@ class GraftStreamSinkSpec extends SparkSpec {
     AppendCommit.commit(docs((1L, "a", "en")), root, Seq("lang"),
       commitId = Some("replay-probe"))
     assert(GraftStore.readStore(spark, root).count() == 1)
-    // wipe the store the way an operator would — root symlink + version
-    // dirs; the sibling .txns ledger survives exactly this way
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root))
-    Option(w.toFile.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("store.v"))
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-    // fresh store at the same path: the stale ledger must not resurrect —
-    // without init-time clearing this commit is silently dropped as a
-    // replay of the dead store's transaction
+    // wipe the store the way an operator would — the root dir, ledger
+    // included
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    // fresh store at the same path: no stale ledger may resurrect — else
+    // this commit is silently dropped as a replay of the dead store's
+    // transaction
     LogIngest.ensureStore(spark, root)
     val committed = AppendCommit.commit(docs((2L, "b", "en")), root,
       Seq("lang"), commitId = Some("replay-probe"))

@@ -1,15 +1,15 @@
 package graft
 
-import graft.logs.{Compaction, GraftStore, Introspect, LogIngest, MaintenanceLease, Retention, VersionedStore}
+import graft.logs.{Compaction, GraftStore, Introspect, LogIngest, MaintenanceLease, Retention}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Incremental compaction (round-6 gate): a maintenance commit must be
-  * proportional to DIRTY data, not store size. Covers all three tiers:
-  * symlink roots carry untouched partitions by hard link (same inode — the
-  * file-identity proof), pointer stores carry them by `_graft_manifest`
-  * reference (zero bytes move), and the legacy per-leaf swap never touches
-  * clean leaves. Plus: time_ns-sorted rewrites (row-group pruning survives
+  * proportional to DIRTY data, not store size. Covers both kinds of root:
+  * versioned stores (local disk and object store) carry untouched
+  * partitions by `_graft_manifest` reference (zero bytes move — the next
+  * snapshot reads the very same physical files), and the legacy per-leaf
+  * swap never touches clean leaves. Plus: time_ns-sorted rewrites (row-group pruning survives
   * compaction), the maintenance lease (two maintainers can't interleave),
   * retain-N snapshots with multi-step time travel, and manifest-aware
   * retention/vacuum.
@@ -44,7 +44,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
   }
 
-  test("symlink tier: only the dirty partition rewrites; the rest carry by hard link") {
+  test("local disk: only the dirty partition rewrites; the rest carry by reference") {
     val root = Files.createTempDirectory("graft-incr").resolve("store").toString
     val df = fixture()
     // base load: one compact file per date partition (clean by definition)
@@ -53,30 +53,32 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(dates.length > 10)
     val dirtyDate = dates.head
     // small-file mess in exactly ONE partition
-    df.filter($"date" === dirtyDate).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val total = spark.read.parquet(root).count()
-    val v1Dir = VersionedStore.versionName(root, 1)
+    appendRaw(df.filter($"date" === dirtyDate).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
+    val total = GraftStore.readStore(spark, root).count()
+    val v1Dir = s"$root/${GraftStore.versionPrefix(1)}"
     val v1Files = filesUnder(v1Dir).map(f => f.getPath.stripPrefix(v1Dir) -> f).toMap
     val dirtyRel = s"/cluster=dev/namespace=ns0/date=$dirtyDate"
     assert(v1Files.keys.count(_.startsWith(dirtyRel)) > 4, "mess is real")
 
     Compaction.compactHive(spark, root, partitionCols = parts)
 
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == total)
-    val v2Dir = VersionedStore.versionName(root, 2)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() == total)
+    val v2Dir = s"$root/${GraftStore.versionPrefix(2)}"
     val v2Files = filesUnder(v2Dir).map(f => f.getPath.stripPrefix(v2Dir) -> f).toMap
     // the 19+ clean partitions carried over with the SAME file identities:
-    // identical relative names AND identical inodes (hard links, no rewrite)
+    // snapshot v2 reads v1's very files (same key, same physical path, no
+    // rewrite), and v2 physically holds only the dirty partition
+    val v2Snapshot = GraftStore.compositeEntries(spark, root, 2)
+      .map(e => e.key -> new org.apache.hadoop.fs.Path(e.physical).toUri.getPath).toMap
     val carried = v1Files.keys.filterNot(_.startsWith(dirtyRel)).toSeq
     assert(carried.nonEmpty)
     carried.foreach { rel =>
-      assert(v2Files.contains(rel), s"clean partition file $rel was not carried")
-      assert(inode(v1Dir + rel) == inode(v2Dir + rel),
-        s"$rel was rewritten, not hard-linked")
+      assert(v2Snapshot.get(rel).contains(v1Dir + rel),
+        s"clean partition file $rel was not carried by reference")
     }
+    assert(v2Files.keys.forall(_.startsWith(dirtyRel)), "clean partitions were rewritten")
     // the dirty partition was rewritten into fewer files with fresh names
     val dirtyV2 = v2Files.keys.filter(_.startsWith(dirtyRel)).toSeq
     assert(dirtyV2.size < v1Files.keys.count(_.startsWith(dirtyRel)))
@@ -156,20 +158,28 @@ class IncrementalCompactionSpec extends SparkSpec {
       assert(d.rowDelta == 0L, s"compaction changed rows: $d")
       assert((d.added ++ d.removed).filter(_.endsWith(".parquet"))
         .forall(_.contains(s"date=$dirtyDate")), s"carried files moved: $d")
-      // vacuum must NOT reclaim v1: the live manifest references it
-      assert(GraftStore.vacuum(spark, root) == Seq.empty)
-      assert(GraftStore.listVersions(spark, root) == Seq(1, 2))
       // manifest-aware retention: the oldest date lives only as a carried
       // reference; dropping it is a manifest edit, physically nothing moves
+      val v1Objects = srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet"))
       val deleted = Retention.enforceHive(spark, root, dates(1))
       assert(deleted.size == 1 && deleted.head.contains(s"date=${dates.head}"))
+      assert(srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet")) == v1Objects)
       val remaining = GraftStore.readStore(spark, root)
       val remainingCount = remaining.count()
       assert(remaining.select(min($"date".cast("string"))).head.getString(0) == dates(1))
       // ...while the v1 snapshot still serves the dropped date (immutable)
       assert(GraftStore.readVersion(spark, root, 1).count() ==
         df.count() + df.filter($"date" === dirtyDate).count())
-      // a full rewrite makes v3 self-contained; vacuum then reclaims 1 and 2
+      // vacuum retires v1 to a holder: it deletes the dropped date and the
+      // small files the compaction replaced, and keeps every partition the
+      // live manifest still carries from v1
+      assert(GraftStore.vacuum(spark, root) == Seq(1))
+      assert(GraftStore.listVersions(spark, root) == Seq(2))
+      val v1Left = srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet"))
+      assert(v1Left.nonEmpty && v1Left.forall(v1Objects.contains))
+      assert(!v1Left.exists(k => k.contains(s"date=${dates.head}") || k.contains(s"date=$dirtyDate")))
+      assert(GraftStore.readStore(spark, root).count() == remainingCount)
+      // a full rewrite makes v3 self-contained; vacuum then reclaims the rest
       Compaction.compactHive(spark, root, partitionCols = parts, full = true)
       assert(GraftStore.readManifest(spark,
         s"$root/${GraftStore.readPointer(spark, root)}").isEmpty)
@@ -184,9 +194,8 @@ class IncrementalCompactionSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-lease").resolve("store").toString
     val df = fixture().limit(1000)
     LogIngest.writeHive(df, root, partitionCols = parts)
-    df.repartition(4).write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val total = spark.read.parquet(root).count()
+    appendRaw(df.repartition(4), root, parts, maxRecordsPerFile = 10)
+    val total = GraftStore.readStore(spark, root).count()
     // simulate a concurrent maintainer: lease present => compaction, retention
     // and vacuum all abort BEFORE touching anything, naming the holder
     val lease = MaintenanceLease.leasePath(spark, root)
@@ -196,14 +205,14 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(e.getMessage.contains("break-lease"))
     intercept[IllegalStateException](Retention.enforceHive(spark, root, "2099-01-01"))
     intercept[IllegalStateException](GraftStore.vacuum(spark, root))
-    assert(VersionedStore.currentVersion(root) == 1, "aborted maintainer must not commit")
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.currentVersion(spark, root) == 1, "aborted maintainer must not commit")
+    assert(GraftStore.readStore(spark, root).count() == total)
     // operator breaks the stale lease; maintenance proceeds
     assert(MaintenanceLease.breakLease(spark, root))
     assert(!MaintenanceLease.breakLease(spark, root)) // idempotent, reports absence
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() == total)
     // two racing compactors: at most one can hold the lease at a time; any
     // loser fails ONLY with the lease error and the store stays intact
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -219,7 +228,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(errors.size < 2, "at least one racer must win")
     errors.forEach(t => assert(t.isInstanceOf[MaintenanceLease.LeaseHeldException],
       s"loser must abort on the lease, got: $t"))
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.readStore(spark, root).count() == total)
     assert(!Files.exists(Paths.get(lease.toUri.getPath)), "lease must be released")
   }
 
@@ -233,27 +242,40 @@ class IncrementalCompactionSpec extends SparkSpec {
     // count of the version that replaced it at ITS commit instant.
     val liveAtCommit = scala.collection.mutable.Map.empty[Int, Long]
     for (round <- 2 to 4) {
-      df.limit(100 * round).repartition(3)
-        .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-        .mode("append").parquet(root)
-      val liveRows = spark.read.parquet(root).count()
+      appendRaw(df.limit(100 * round).repartition(3), root, parts,
+        maxRecordsPerFile = 10)
+      val liveRows = GraftStore.readStore(spark, root).count()
       Compaction.compactHive(spark, root, partitionCols = parts,
         retainSnapshots = 3)
       liveAtCommit(round) = liveRows // frozen content of v(round-1) AND of v(round) at commit
     }
-    assert(VersionedStore.currentVersion(root) == 4)
-    assert(VersionedStore.listVersions(root) == Seq(1, 2, 3, 4))
+    assert(GraftStore.currentVersion(spark, root) == 4)
+    assert(GraftStore.listVersions(spark, root) == Seq(1, 2, 3, 4))
     // every retained snapshot reads as of the commit that superseded it
     // (multi-step time travel); the live one reads the latest state
     for (v <- 1 to 3)
       assert(GraftStore.readVersion(spark, root, v).count() == liveAtCommit(v + 1),
         s"snapshot v$v")
     assert(GraftStore.readVersion(spark, root, 4).count() == liveAtCommit(4))
-    // vacuum to a retain-1 policy: v3 (one below live) survives, 1..2 drop
+    // v3 and v4 carry clean partitions from v1 and v2 by reference
+    assert(Seq(3, 4).flatMap(v => GraftStore.readManifest(spark,
+      s"$root/${GraftStore.versionPrefix(v)}")).map(_._1).toSet
+      .intersect(Set("v000001", "v000002")).nonEmpty)
+    val onDiskBefore = filesUnder(root).size
+    // vacuum to a retain-1 policy: v3 (one below live) survives, 1..2 stop
+    // being snapshots
     assert(GraftStore.vacuum(spark, root, retain = 1) == Seq(1, 2))
-    assert(VersionedStore.listVersions(root) == Seq(3, 4))
+    assert(GraftStore.listVersions(spark, root) == Seq(3, 4))
     assert(GraftStore.readVersion(spark, root, 3).count() == liveAtCommit(4))
-    assert(spark.read.parquet(root).count() == liveAtCommit(4))
+    assert(GraftStore.readStore(spark, root).count() == liveAtCommit(4))
+    // ...and their bytes go, except the partitions v3 and v4 still carry
+    // from them: every data file left on disk is read by a retained snapshot
+    val read = Seq(3, 4).flatMap(v => GraftStore.compositeEntries(spark, root, v))
+      .map(e => new org.apache.hadoop.fs.Path(e.physical).toUri.getPath).toSet
+    assert(filesUnder(root).map(_.getPath).toSet == read)
+    assert(read.size < onDiskBefore, "vacuum freed no file")
+    val kept = read.filter(f => f.contains("/v000001/") || f.contains("/v000002/"))
+    assert(kept.nonEmpty, "the carried partitions were not kept")
   }
 
   test("legacy tier: clean leaves are never staged or swapped") {
@@ -348,35 +370,63 @@ class IncrementalCompactionSpec extends SparkSpec {
       assert(d.rowDelta == -expiredRows, s"unexpected delta: $d")
       assert(d.removed.filter(_.endsWith(".parquet"))
         .forall(_.contains(s"date=${dates.head}")))
-      // vacuum keeps v1 while the live manifest references it... it does:
-      // survivors still live there physically
-      assert(GraftStore.vacuum(spark, root) == Seq.empty)
+      // vacuum retires v1 to a holder of the survivors: the expired date's
+      // objects go, every survivor stays where it physically lives
+      val expiredObjects = srv.keys.count(k => k.endsWith(".parquet") &&
+        k.contains(s"date=${dates.head}"))
+      assert(expiredObjects > 0)
+      assert(GraftStore.vacuum(spark, root) == Seq(1))
+      assert(srv.keys.count(_.endsWith(".parquet")) == objectsBefore - expiredObjects)
+      assert(GraftStore.readStore(spark, root).count() == total - expiredRows)
     } finally srv.stop()
   }
 
-  test("snapshot-isolated retention on a symlink store: survivors hard-link, v1 intact") {
-    val root = Files.createTempDirectory("graft-snapret").resolve("store").toString
+  test("local disk: compaction and retention free the bytes no retained snapshot reads") {
+    val root = Files.createTempDirectory("graft-reclaim").resolve("store").toString
     val df = fixture().limit(2000)
     LogIngest.writeHive(df, root, partitionCols = parts)
     val dates = df.select($"date").distinct().as[String].collect().sorted
-    val total = spark.read.parquet(root).count()
-    val expiredRows = df.filter($"date" === dates.head).count()
-    val v1Dir = VersionedStore.versionName(root, 1)
-    val survivorFile = filesUnder(v1Dir).find(!_.getPath.contains(s"date=${dates.head}")).get
+    assert(dates.length > 3)
+    appendRaw(df.filter($"date" === dates.last).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
+    val total = GraftStore.readStore(spark, root).count()
+    def onDisk = filesUnder(root).map(_.getPath).toSet
+    def liveFiles = GraftStore.compositeEntries(spark, root,
+      GraftStore.currentVersion(spark, root))
+      .map(e => new org.apache.hadoop.fs.Path(e.physical).toUri.getPath).toSet
+    def rowsOf(date: String) = GraftStore.readStore(spark, root)
+      .filter($"date".cast("string") === date).count()
 
-    val deleted = Retention.enforceHiveSnapshot(spark, root, dates(1))
-
-    assert(deleted.size == 1 && deleted.head.contains(s"date=${dates.head}"))
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == total - expiredRows)
-    // survivors carried by hard link: same inode in v2
-    val v2Twin = VersionedStore.versionName(root, 2) +
-      survivorFile.getPath.stripPrefix(v1Dir)
-    assert(inode(v2Twin) == inode(survivorFile.getPath))
-    // pre-retention snapshot intact (time travel), reclaimed only by vacuum
-    assert(GraftStore.readVersion(spark, root, 1).count() == total)
+    // compaction rewrites the small files into v2 and carries the rest from
+    // v1; once v1 is no longer retained, the replaced small files go while
+    // the partitions v2 carries from v1 stay
+    Compaction.compactHive(spark, root, partitionCols = parts)
+    val v1Messy = onDisk.filter(f => f.contains("/v000001/") && f.contains(s"date=${dates.last}"))
+    assert(v1Messy.size > 4, "mess is real")
     assert(GraftStore.vacuum(spark, root) == Seq(1))
-    assert(spark.read.parquet(root).count() == total - expiredRows)
+    assert(onDisk == liveFiles)
+    assert(onDisk.intersect(v1Messy).isEmpty)
+    assert(onDisk.exists(_.contains("/v000001/")), "carried partitions must stay")
+    assert(GraftStore.readStore(spark, root).count() == total)
+
+    // snapshot retention expires the oldest date, which lives in v1: its
+    // files go once the pre-retention snapshot is no longer retained
+    val expired = rowsOf(dates.head)
+    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    assert(onDisk.exists(_.contains(s"date=${dates.head}")), "the grace snapshot reads it")
+    assert(GraftStore.vacuum(spark, root) == Seq(2))
+    assert(onDisk == liveFiles)
+    assert(!onDisk.exists(_.contains(s"date=${dates.head}")))
+    assert(GraftStore.readStore(spark, root).count() == total - expired)
+
+    // in-place retention edits the live manifest; the next vacuum frees the
+    // dropped partition's files
+    val expired2 = rowsOf(dates(1))
+    Retention.enforceHive(spark, root, dates(2))
+    assert(GraftStore.vacuum(spark, root) == Seq.empty)
+    assert(onDisk == liveFiles)
+    assert(!onDisk.exists(_.contains(s"date=${dates(1)}")))
+    assert(GraftStore.readStore(spark, root).count() == total - expired - expired2)
   }
 
   test("composite (manifest) reads keep partition pruning in every leg") {
@@ -437,17 +487,18 @@ class IncrementalCompactionSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-retguard").resolve("store").toString
     val df = fixture().limit(500)
     LogIngest.writeHive(df, root, partitionCols = parts)
-    val total = spark.read.parquet(root).count()
+    val total = GraftStore.readStore(spark, root).count()
     // a crashed compaction's marker means recovery will re-promote the
     // PRE-retention tree — running retention now would be silently reverted
-    Files.writeString(Paths.get(root + ".compact-inflight"), total.toString)
+    val marker = Paths.get(root, "_compact-inflight")
+    Files.writeString(marker, total.toString)
     val e1 = intercept[IllegalArgumentException](
       Retention.enforceHiveSnapshot(spark, root, "2099-01-01"))
     assert(e1.getMessage.contains("in-flight compaction"))
     val e2 = intercept[IllegalArgumentException](
       Retention.enforceHive(spark, root, "2099-01-01"))
     assert(e2.getMessage.contains("in-flight compaction"))
-    Files.delete(Paths.get(root + ".compact-inflight"))
+    Files.delete(marker)
     // expiring EVERY partition would commit a dataless store whose reads
     // all fail — refuse loudly, store untouched
     val e3 = intercept[IllegalArgumentException](
@@ -458,12 +509,13 @@ class IncrementalCompactionSpec extends SparkSpec {
     val e3b = intercept[IllegalArgumentException](
       Retention.enforceHive(spark, root, "2099-01-01"))
     assert(e3b.getMessage.contains("every partition"))
-    assert(VersionedStore.currentVersion(root) == 1)
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.currentVersion(spark, root) == 1)
+    assert(GraftStore.readStore(spark, root).count() == total)
     // a streaming-sink commit log needs the explicit conversion opt-in in
     // snapshot mode too (the new version would silently orphan the log)
     val dates = df.select($"date").distinct().as[String].collect().sorted
-    Files.createDirectories(Paths.get(root, "_spark_metadata"))
+    val sinkLog = Paths.get(GraftStore.resolve(spark, root), "_spark_metadata")
+    Files.createDirectories(sinkLog)
     val e4 = intercept[IllegalArgumentException](
       Retention.enforceHiveSnapshot(spark, root, dates(1)))
     assert(e4.getMessage.contains("_spark_metadata"))
@@ -473,25 +525,24 @@ class IncrementalCompactionSpec extends SparkSpec {
     val e5 = intercept[IllegalArgumentException](
       Retention.enforceHive(spark, root, "2099-01-01", convertStreamingStore = true))
     assert(e5.getMessage.contains("every partition"))
-    assert(Files.exists(Paths.get(root, "_spark_metadata")),
+    assert(Files.exists(sinkLog),
       "refused retention deleted the streaming commit log anyway")
     val dropped = Retention.enforceHiveSnapshot(spark, root, dates(1),
       convertStreamingStore = true)
     assert(dropped.nonEmpty)
-    assert(spark.read.parquet(root).count() < total)
+    assert(GraftStore.readStore(spark, root).count() < total)
   }
 
-  test("symlink tier: a writer landing mid-commit aborts the compaction, loses nothing") {
+  test("local disk: a writer landing mid-commit aborts the compaction, loses nothing") {
     val root = Files.createTempDirectory("graft-race").resolve("store").toString
     val df = fixture().limit(1000)
     LogIngest.writeHive(df, root, partitionCols = parts)
     val dates = df.select($"date").distinct().as[String].collect().sorted
     val dirtyDate = dates.head
-    df.filter($"date" === dirtyDate).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val before = spark.read.parquet(root).count()
-    val dirtyDir = Paths.get(VersionedStore.versionName(root, 1),
+    appendRaw(df.filter($"date" === dirtyDate).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
+    val before = GraftStore.readStore(spark, root).count()
+    val dirtyDir = Paths.get(GraftStore.resolve(spark, root),
       s"cluster=dev/namespace=ns0/date=$dirtyDate")
     // the racing writer: duplicate one data file of the dirty partition
     // into the live tree after staging is verified, before the swap
@@ -507,16 +558,16 @@ class IncrementalCompactionSpec extends SparkSpec {
         Compaction.compactHive(spark, root, partitionCols = parts))
       assert(e.getMessage.contains("concurrent writer"))
       // nothing moved: v1 still live, the writer's rows are all visible,
-      // and the aborted staging tree is gone
-      assert(VersionedStore.currentVersion(root) == 1)
-      assert(spark.read.parquet(root).count() == before + appended)
-      assert(!Files.exists(Paths.get(root + ".compact-staging")))
-      assert(!Files.exists(Paths.get(root + ".compact-inflight")))
+      // and the aborted staged version is gone
+      assert(GraftStore.currentVersion(spark, root) == 1)
+      assert(GraftStore.readStore(spark, root).count() == before + appended)
+      assert(GraftStore.listVersions(spark, root) == Seq(1))
+      assert(!Files.exists(Paths.get(root, "_compact-inflight")))
     } finally Compaction.onBeforeCommit = () => ()
     // with the writer quiescent the same compaction commits cleanly
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == before + appended)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() == before + appended)
   }
 
   test("pointer tier: a NEW partition landing mid-commit aborts the flip, loses nothing") {
@@ -548,6 +599,8 @@ class IncrementalCompactionSpec extends SparkSpec {
         assert(GraftStore.currentVersion(spark, root) == 1)
         assert(GraftStore.listVersions(spark, root) == Seq(1))
         assert(GraftStore.readStore(spark, root).count() == before + 50)
+        assert(!new org.apache.hadoop.fs.Path(root).getFileSystem(hc)
+          .exists(new org.apache.hadoop.fs.Path(root, "_compact-inflight")))
       } finally Compaction.onBeforeCommit = () => ()
       // quiescent re-run carries the writer's new partition into v2
       Compaction.compactHive(spark, root, partitionCols = parts)
@@ -563,9 +616,8 @@ class IncrementalCompactionSpec extends SparkSpec {
     val df = fixture().limit(1500)
     LogIngest.writeHive(df, root, partitionCols = parts)
     val dates = df.select($"date").distinct().as[String].collect().sorted
-    df.filter($"date" === dates.last).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
+    appendRaw(df.filter($"date" === dates.last).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
     Compaction.compactHive(spark, root, partitionCols = parts)
     // bytes moved (the dirty partition rewrote) but no row changed
     assert(GraftStore.diffVersions(spark, root, 1, 2).added.nonEmpty)
@@ -600,9 +652,8 @@ class IncrementalCompactionSpec extends SparkSpec {
     LogIngest.writeHive(df, root, partitionCols = parts)
     val dates = df.select($"date").distinct().as[String].collect().sorted
     Thread.sleep(50) // separate the commits' mtime windows
-    df.filter($"date" === dates.last).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
+    appendRaw(df.filter($"date" === dates.last).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
     Compaction.compactHive(spark, root, partitionCols = parts)
     val t1 = GraftStore.commitTimeOf(spark, root, 1) // before retention vacuums v1
     Thread.sleep(50)
@@ -624,7 +675,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       GraftStore.versionAsOf(spark, root, t1 - 60000))
     assert(e.getMessage.contains("as old"))
     // a LATER append to the live version must not move v3's commit instant:
-    // the flip artifact (symlink/pointer mtime) is the commit time, so an
+    // the flip artifact (the pointer's mtime) is the commit time, so an
     // as-of read between the retention commit and the append still resolves
     // to v3 — not the pre-retention snapshot with expired rows resurfaced
     Thread.sleep(50)
@@ -634,53 +685,11 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(GraftStore.versionAsOf(spark, root, t3 + 10) == 3)
     // markerless staged-ahead debris (a crashed or in-flight commit) is not
     // a snapshot: even with the newest mtimes it must never serve a read
-    val debris = java.nio.file.Paths.get(VersionedStore.versionName(root, 9))
+    val debris = java.nio.file.Paths.get(root, GraftStore.versionPrefix(9))
     Files.createDirectories(debris)
     Files.writeString(debris.resolve("junk.parquet"), "not-a-snapshot")
-    assert(VersionedStore.listVersions(root).contains(9))
+    assert(GraftStore.listVersions(spark, root).contains(9))
     assert(GraftStore.versionAsOf(spark, root, System.currentTimeMillis() + 1000) == 3)
-  }
-
-  test("symlink tier: a NEW partition landing mid-commit aborts the swap, loses nothing") {
-    val root = Files.createTempDirectory("graft-newpart").resolve("store").toString
-    val df = fixture().limit(1000)
-    LogIngest.writeHive(df, root, partitionCols = parts)
-    val dates = df.select($"date").distinct().as[String].collect().sorted
-    val dirtyDate = dates.head
-    df.filter($"date" === dirtyDate).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val before = spark.read.parquet(root).count()
-    // the racing writer creates a BRAND-NEW partition dir — not in the
-    // inventory, so a scope-filtered re-check would miss it and the
-    // whole-tree swap would publish a version without it (silent row loss
-    // once grace snapshots are reclaimed)
-    var appended = 0L
-    val newDir = Paths.get(VersionedStore.versionName(root, 1),
-      "cluster=dev/namespace=ns0/date=2099-12-31")
-    Compaction.onBeforeCommit = () => {
-      val src = Files.list(Paths.get(VersionedStore.versionName(root, 1),
-          s"cluster=dev/namespace=ns0/date=$dirtyDate"))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      appended = spark.read.parquet(src.toString).count()
-      Files.createDirectories(newDir)
-      Files.copy(src, newDir.resolve("part-racer.parquet"))
-    }
-    try {
-      val e = intercept[IllegalStateException](
-        Compaction.compactHive(spark, root, partitionCols = parts))
-      assert(e.getMessage.contains("new partitions"))
-      assert(VersionedStore.currentVersion(root) == 1)
-      assert(spark.read.parquet(root).count() == before + appended)
-      assert(!Files.exists(Paths.get(root + ".compact-staging")))
-      assert(!Files.exists(Paths.get(root + ".compact-inflight")))
-    } finally Compaction.onBeforeCommit = () => ()
-    // quiescent re-run commits and carries the writer's new partition
-    Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == before + appended)
-    assert(spark.read.parquet(root)
-      .filter($"date".cast("string") === "2099-12-31").count() == appended)
   }
 
   test("store root nested under a partition-shaped path: carry still lands correctly") {
@@ -694,30 +703,30 @@ class IncrementalCompactionSpec extends SparkSpec {
     Files.createDirectories(rootParent)
     val root = rootParent.resolve("store").toString
     LogIngest.writeHive(df, root, partitionCols = parts)
-    df.filter($"date" === dates.last).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val total = spark.read.parquet(root).count()
+    appendRaw(df.filter($"date" === dates.last).repartition(4), root, parts,
+      maxRecordsPerFile = 10)
+    val total = GraftStore.readStore(spark, root).count()
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 2)
-    assert(spark.read.parquet(root).count() == total)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() == total)
     // the colliding-name partition was carried into v2 at the SAME relative
-    // path with the SAME inode (hard link, correctly rooted)
-    val v1Dir = VersionedStore.versionName(root, 1)
-    val v2Dir = VersionedStore.versionName(root, 2)
+    // key, reading the SAME physical file (carried by reference, correctly
+    // rooted)
+    val v1Dir = s"$root/${GraftStore.versionPrefix(1)}"
     val rel = s"/cluster=dev/namespace=ns0/date=${dates.head}"
+    val v2Snapshot = GraftStore.compositeEntries(spark, root, 2)
+      .map(e => e.key -> new org.apache.hadoop.fs.Path(e.physical).toUri.getPath).toMap
     // match on the path BELOW the version dir — the root's own (colliding)
     // path segments must not leak into the partition match
     val carried = filesUnder(v1Dir).filter(_.getPath.stripPrefix(v1Dir).startsWith(rel))
     assert(carried.nonEmpty)
     carried.foreach { f =>
-      val twin = v2Dir + f.getPath.stripPrefix(v1Dir)
-      assert(Files.exists(Paths.get(twin)), s"carry mis-rooted: $twin missing")
-      assert(inode(twin) == inode(f.getPath))
+      val key = f.getPath.stripPrefix(v1Dir)
+      assert(v2Snapshot.get(key).contains(f.getPath), s"carry mis-rooted: $key")
     }
   }
 
-  test("vacuum keeps the TRANSITIVE manifest closure: a holder's own refs survive") {
+  test("vacuum follows the TRANSITIVE manifest chain: no listed snapshot loses a partition") {
     val srv = new graft.sources.S3StubServer()
     try {
       val hc = spark.sparkContext.hadoopConfiguration
@@ -745,14 +754,20 @@ class IncrementalCompactionSpec extends SparkSpec {
       assert(GraftStore.currentVersion(spark, root) == 3)
       assert(GraftStore.readManifest(spark, s"$root/v000003").forall(_._1 == "v000002"))
       assert(GraftStore.readManifest(spark, s"$root/v000002").exists(_._1 == "v000001"))
-      // vacuum(retain=0) seeds from the live version only: a ONE-level
-      // closure would reclaim v1 and leave retained v2 listed but
-      // unreadable; the transitive closure keeps the chain
-      assert(GraftStore.vacuum(spark, root) == Seq.empty)
-      assert(GraftStore.listVersions(spark, root) == Seq(1, 2, 3))
-      // v2 is still a COMPLETE readable snapshot (the ADVICE failure mode:
-      // readVersion on a closure-kept version crashing on a missing path)
+      // the grace snapshot v2 is a COMPLETE readable snapshot
       assert(GraftStore.readVersion(spark, root, 2).count() == totalPreRetention)
+      // (v1 stopped being a snapshot at the retention commit: neither v3 nor
+      // v2 reads the small files v2's compaction replaced.)
+      assert(GraftStore.listVersions(spark, root) == Seq(2, 3))
+      // vacuum(retain=0) seeds from the live version only. v3 reads nothing
+      // of v1, so v1 goes whole; v2 holds v3's partition but carries
+      // expired ones from v1, so it is retired to a holder rather than left
+      // listed but unreadable (readVersion crashing on a missing path)
+      assert(GraftStore.vacuum(spark, root) == Seq(2))
+      assert(GraftStore.listVersions(spark, root) == Seq(3))
+      intercept[IllegalArgumentException](GraftStore.readVersion(spark, root, 2))
+      assert(!srv.keys.exists(_.contains("/v000001/")))
+      assert(srv.keys.exists(k => k.contains("/v000002/") && k.endsWith(".parquet")))
       assert(GraftStore.readStore(spark, root).count() == lastDateRows)
     } finally srv.stop()
   }
@@ -761,9 +776,9 @@ class IncrementalCompactionSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-noop").resolve("store").toString
     val df = fixture().limit(1000)
     LogIngest.writeHive(df, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 1)
+    assert(GraftStore.currentVersion(spark, root) == 1)
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(VersionedStore.currentVersion(root) == 1, "clean store must not commit")
-    assert(VersionedStore.listVersions(root) == Seq(1))
+    assert(GraftStore.currentVersion(spark, root) == 1, "clean store must not commit")
+    assert(GraftStore.listVersions(spark, root) == Seq(1))
   }
 }

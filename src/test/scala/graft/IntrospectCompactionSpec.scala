@@ -1,6 +1,6 @@
 package graft
 
-import graft.logs.{Compaction, Introspect, LogSchema}
+import graft.logs.{Compaction, GraftStore, Introspect, LogSchema}
 import graft.streaming.StreamAnalytics
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -96,27 +96,31 @@ class IntrospectCompactionSpec extends SparkSpec {
         lit("p1").as("pod"), lit("app").as("container"))
       .withColumn("date", date_format($"time", "yyyy-MM-dd"))
       .withColumn("hour", date_format($"time", "HH"))
-    // engine-created store: symlink-rooted, so the compaction swap is one
-    // atomic pointer rename (VersionedStore) — zero visibility window
-    graft.logs.VersionedStore.init(root)
-    df.repartition(8).write.partitionBy(parts: _*)
-      .option("maxRecordsPerFile", 10).mode("append").parquet(root)
-    val dateDirs = new java.io.File(s"$root/cluster=dev/namespace=ns0").list()
-      .filter(_.startsWith("date=")).toSet
+    // engine-created store: the compaction swap is one atomic pointer
+    // write (GraftStore) — zero visibility window
+    GraftStore.init(spark, root)
+    appendRaw(df.repartition(8), root, parts, maxRecordsPerFile = 10)
+    // the date partitions a reader resolving the live snapshot sees
+    def liveDates(): Set[String] =
+      GraftStore.compositeEntries(spark, root, GraftStore.currentVersion(spark, root))
+        .flatMap(_.key.split('/').find(_.startsWith("date="))).toSet
+    val dateDirs = liveDates()
     assert(dateDirs.size > 10)
-    // Hammer the listing while compaction runs, NO grace and no recheck: the
-    // root must exist and the date partition set must be complete at every
-    // single sample. The old dynamic-overwrite swap had a per-partition
-    // delete+rename window inside job commit that this caught under load;
-    // the symlink retarget has no window at all.
+    // Hammer the snapshot resolution while compaction runs, NO grace and no
+    // recheck: the root must exist, the pointer must be readable and the
+    // date partition set complete at every single sample. The old
+    // dynamic-overwrite swap had a per-partition delete+rename window
+    // inside job commit that this caught under load; a truncating pointer
+    // write has a window where `_current` reads empty; the atomic pointer
+    // flip has no window at all.
     @volatile var stop = false
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reader = new Thread(() => {
       while (!stop) {
         if (!new java.io.File(root).exists()) violations.add("live root missing")
-        val ns = new java.io.File(s"$root/cluster=dev/namespace=ns0")
-        val seen = Option(ns.list()).map(_.filter(_.startsWith("date=")).toSet)
-          .getOrElse(Set.empty[String])
+        val seen =
+          try liveDates()
+          catch { case e: Exception => violations.add(s"snapshot unreadable: $e"); dateDirs }
         if (seen != dateDirs)
           violations.add(s"partitions missing: ${(dateDirs -- seen).mkString(",")}")
       }
@@ -125,11 +129,11 @@ class IntrospectCompactionSpec extends SparkSpec {
     try Compaction.compactHive(spark, root, partitionCols = parts)
     finally { stop = true; reader.join() }
     assert(violations.isEmpty, s"concurrent reader saw: ${violations.toArray.mkString("; ")}")
-    assert(spark.read.parquet(root).count() == df.count())
+    assert(GraftStore.readStore(spark, root).count() == df.count())
     // the swap really happened: pointer moved on; the replaced version is
     // kept as a grace snapshot for in-flight readers (reclaimed next commit)
-    assert(graft.logs.VersionedStore.currentVersion(root) == 2)
-    assert(graft.logs.VersionedStore.listVersions(root) == Seq(1, 2))
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.listVersions(spark, root) == Seq(1, 2))
     // snapshot read (time travel): the grace version serves the
     // pre-compaction small-file view with identical rows
     val snap = graft.logs.GraftStore.resolveVersion(spark, root, 1)
@@ -142,10 +146,10 @@ class IntrospectCompactionSpec extends SparkSpec {
     assert(snaps(1).files < snaps(0).files)
     // vacuum reclaims the grace snapshot now instead of at the next commit
     assert(graft.logs.GraftStore.vacuum(spark, root) == Seq(1))
-    assert(graft.logs.VersionedStore.listVersions(root) == Seq(2))
+    assert(GraftStore.listVersions(spark, root) == Seq(2))
     intercept[IllegalArgumentException](
       graft.logs.GraftStore.resolveVersion(spark, root, 1))
-    assert(spark.read.parquet(root).count() == df.count())
+    assert(GraftStore.readStore(spark, root).count() == df.count())
   }
 
   test("versioned store recovers an interrupted commit from marker + staged version") {
@@ -160,32 +164,35 @@ class IntrospectCompactionSpec extends SparkSpec {
         lit("p1").as("pod"), lit("app").as("container"))
       .withColumn("date", date_format($"time", "yyyy-MM-dd"))
       .withColumn("hour", date_format($"time", "HH"))
-    graft.logs.VersionedStore.init(root)
-    df.write.partitionBy(parts: _*).mode("append").parquet(root)
-    val expected = spark.read.parquet(root).count()
-    // crash A: staging verified + marker written, but never promoted
-    // (inference off on a clone, like the real staging write)
+    GraftStore.init(spark, root)
+    appendRaw(df, root, parts)
+    val expected = GraftStore.readStore(spark, root).count()
+    val marker = java.nio.file.Paths.get(root, "_compact-inflight")
+    def versionDir(n: Int) = s"$root/${GraftStore.versionPrefix(n)}"
+    // crash A: next version staged + marker written, but the pointer never
+    // flipped (inference off on a clone, like the real staging write)
     ConfScope.withSessionConf(spark,
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
-      s.read.parquet(root).repartition(parts.map(col): _*)
-        .write.partitionBy(parts: _*).mode("overwrite").parquet(root + ".compact-staging")
+      s.read.parquet(versionDir(1)).repartition(parts.map(col): _*)
+        .write.partitionBy(parts: _*).mode("overwrite").parquet(versionDir(2))
     }
-    Files.writeString(java.nio.file.Paths.get(root + ".compact-inflight"), expected.toString)
+    Files.writeString(marker, expected.toString)
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(spark.read.parquet(root).count() == expected)
-    assert(graft.logs.VersionedStore.currentVersion(root) == 2)
-    assert(!new java.io.File(root + ".compact-inflight").exists)
-    assert(!new java.io.File(root + ".compact-staging").exists)
-    // crash B: version promoted but pointer never retargeted (marker only)
-    val v3 = graft.logs.VersionedStore.versionName(root, 3)
+    assert(GraftStore.readStore(spark, root).count() == expected)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(!marker.toFile.exists)
+    assert(GraftStore.listVersions(spark, root).max == 2, "nothing staged ahead")
+    // crash B: pointer flipped to a new version but the marker never cleared
     org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(graft.logs.VersionedStore.versionName(root, 2)), new java.io.File(v3))
-    Files.writeString(java.nio.file.Paths.get(root + ".compact-inflight"), expected.toString)
+      new java.io.File(versionDir(2)), new java.io.File(versionDir(3)))
+    GraftStore.writePointer(spark, root, 3)
+    Files.writeString(marker, expected.toString)
     Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(graft.logs.VersionedStore.currentVersion(root) == 3)
+    assert(GraftStore.currentVersion(spark, root) == 3)
+    assert(!marker.toFile.exists)
     // grace contract: v2 (the replaced current) survives, v1 is reclaimed
-    assert(graft.logs.VersionedStore.listVersions(root) == Seq(2, 3))
-    assert(spark.read.parquet(root).count() == expected)
+    assert(GraftStore.listVersions(spark, root) == Seq(2, 3))
+    assert(GraftStore.readStore(spark, root).count() == expected)
   }
 
   test("compaction recovers a partition lost mid-commit from the staging tree") {
@@ -253,10 +260,10 @@ class IntrospectCompactionSpec extends SparkSpec {
       .withColumn("date", date_format($"time", "yyyy-MM-dd"))
       .withColumn("hour", date_format($"time", "HH"))
     graft.logs.LogIngest.writeHive(df, root, partitionCols = Seq("cluster", "namespace", "date"))
-    val before = spark.read.parquet(root).count()
+    val before = GraftStore.readStore(spark, root).count()
     val deleted = graft.logs.Retention.enforceHive(spark, root, "2024-01-10")
     assert(deleted.nonEmpty && deleted.forall(_.contains("date=2024-01-0")))
-    val remaining = spark.read.parquet(root)
+    val remaining = GraftStore.readStore(spark, root)
     assert(remaining.count() < before)
     assert(remaining.select(min($"date".cast("string"))).head.getString(0) == "2024-01-10")
   }

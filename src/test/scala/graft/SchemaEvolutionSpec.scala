@@ -2,10 +2,10 @@ package graft
 
 import graft.logs._
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Schema evolution (round-7 gate): add-column commits are metadata-only
-  * (zero data files move, proven by inode/object identity), pre-evolution
+  * (zero data files move, proven by file/object identity), pre-evolution
   * rows null-backfill, post-evolution appends carry the column physically,
   * compaction materializes it into rewrites, and the overlay survives every
   * commit type.
@@ -30,32 +30,28 @@ class SchemaEvolutionSpec extends SparkSpec {
       lit("p1").as("pod"), lit("app").as("container"))
     .withColumn("date", date_format($"time", "yyyy-MM-dd"))
 
-  private def inode(p: String): Long =
-    Files.getAttribute(Paths.get(p), "unix:ino").asInstanceOf[java.lang.Long]
-
   private def filesUnder(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
     walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
   }
 
-  test("symlink tier: add-column is metadata-only; backfill, append, compact all agree") {
+  test("local disk: add-column is metadata-only; backfill, append, compact all agree") {
     val root = Files.createTempDirectory("graft-evolve").resolve("store").toString
     val df = fixture().limit(1000)
     LogIngest.writeHive(df, root, partitionCols = parts)
     val oldRows = df.count()
-    val v1Dir = VersionedStore.versionName(root, 1)
-    val v1Files = filesUnder(v1Dir).map(f =>
-      f.getPath.stripPrefix(v1Dir) -> inode(f.getPath)).toMap
+    def snapshotFiles(n: Int) = GraftStore.compositeEntries(spark, root, n)
+      .map(e => (e.key, e.physical, e.len)).toSet
+    val v1Files = snapshotFiles(1)
+    assert(v1Files.nonEmpty)
 
     val v2 = SchemaEvolution.addColumn(spark, root, "quality", "DOUBLE", parts)
     assert(v2 == 2)
-    // ZERO data movement: every v1 file is in v2 at the same relative path
-    // with the same inode (hard link), and nothing else appeared
-    val v2Dir = VersionedStore.versionName(root, 2)
-    val v2Files = filesUnder(v2Dir).map(f =>
-      f.getPath.stripPrefix(v2Dir) -> inode(f.getPath)).toMap
-    assert(v2Files == v1Files, "add-column moved or rewrote data files")
+    // ZERO data movement: v2 reads every v1 file at the same physical path
+    // and length, nothing else appeared, and v2 holds no data of its own
+    assert(snapshotFiles(2) == v1Files, "add-column moved or rewrote data files")
+    assert(filesUnder(s"$root/${GraftStore.versionPrefix(2)}").isEmpty)
     // the evolution commit changed no rows (CDC across it is empty)
     assert(GraftStore.rowDiff(spark, root, 1, 2).isEmpty)
     // null backfill through the store read
@@ -86,8 +82,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(compacted.filter($"quality".isNull).count() == oldRows)
     assert(compacted.agg(sum($"quality")).head.getDouble(0) == expectSum)
     // a rewritten file physically holds the column now
-    val aFile = filesUnder(VersionedStore.versionName(root,
-      VersionedStore.currentVersion(root))).head
+    val aFile = filesUnder(GraftStore.resolve(spark, root)).head
     assert(spark.read.parquet(aFile.getPath).columns.contains("quality"))
   }
 

@@ -19,6 +19,18 @@ trait SparkSpec extends AnyFunSuite {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** Append `df` straight into a store's live data dir
+    * (`GraftStore.resolve`), bypassing the commit protocol — how specs
+    * plant small-file debt or a racing writer. `maxRecordsPerFile` 0 = no
+    * cap.
+    */
+  def appendRaw(df: DataFrame, root: String, partitionCols: Seq[String],
+      maxRecordsPerFile: Long = 0L,
+      options: Map[String, String] = Map.empty): Unit =
+    df.write.partitionBy(partitionCols: _*)
+      .option("maxRecordsPerFile", maxRecordsPerFile).options(options)
+      .mode("append").parquet(logs.GraftStore.resolve(spark, root))
+
   /** Files the executed scans of `df` read: their `numFiles` metric after
     * a collect. (A file index's `inputFiles` lists the whole snapshot, not
     * what a pruned scan opened.)

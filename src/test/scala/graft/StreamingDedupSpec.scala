@@ -295,13 +295,9 @@ class StreamingDedupSpec extends SparkSpec {
     StreamingDedup.nearDupAppendBatch(spark, root,
       docsDF((2L, words("g", 11), "en")), "doc_id", "text", Seq("lang"),
       commitId = "gh-n0")
-    // wipe the store the way an operator would (root symlink + version
-    // dirs); BOTH sibling index trees survive — exactly the ledger-
-    // resurrection hazard, one layer out
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root))
-    Option(w.toFile.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("corpus.v"))
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    // wipe the store the way an operator would (the root dir); BOTH
+    // sibling index trees survive it
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     LogIngest.ensureStore(spark, root)
     // same text as the dead corpus: the fresh store must ADMIT it (and
     // rebuild its indexes), not drop it against ghost state

@@ -99,30 +99,31 @@ class StreamingIngestSpec extends SparkSpec {
       q.processAllAvailable()
       // the sink produced an ORDINARY versioned store: no _spark_metadata
       // commit log anywhere, version bumped by the batch commit
-      assert(VersionedStore.isVersioned(root))
-      assert(!Files.exists(java.nio.file.Paths.get(root, "_spark_metadata")))
-      assert(spark.read.parquet(root).count() == 2)
-      val vAfterB0 = VersionedStore.currentVersion(root)
+      assert(GraftStore.isPointerStore(spark, root))
+      assert(Seq(root, GraftStore.resolve(spark, root))
+        .forall(d => !Files.exists(java.nio.file.Paths.get(d, "_spark_metadata"))))
+      assert(GraftStore.readStore(spark, root).count() == 2)
+      val vAfterB0 = GraftStore.currentVersion(spark, root)
       assert(vAfterB0 >= 2, "first batch must commit a version, not write v1 in place")
       // second batch appends atomically on top
       put("pod-b", "2024-01-15T10:00:01.000000003Z stderr F three")
       q.processAllAvailable()
-      assert(spark.read.parquet(root).count() == 3)
-      assert(VersionedStore.currentVersion(root) > vAfterB0)
+      assert(GraftStore.readStore(spark, root).count() == 3)
+      assert(GraftStore.currentVersion(spark, root) > vAfterB0)
       // LIVE maintenance: compaction commits against the running ingest with
       // NO convertStreamingStore step — the round-6 refusal is gone because
       // there is no sink commit log to orphan; the store lease serializes
       // this commit with the sink's publishes
       Compaction.compactHive(spark, root)
-      assert(spark.read.parquet(root).count() == 3)
+      assert(GraftStore.readStore(spark, root).count() == 3)
       // and the stream keeps committing after the maintenance commit
       put("pod-c", "2024-01-15T10:00:02.000000004Z stdout F four")
       q.processAllAvailable()
-      assert(spark.read.parquet(root).count() == 4)
-      assert(spark.read.parquet(root).select("pod").distinct().count() == 3)
+      assert(GraftStore.readStore(spark, root).count() == 4)
+      assert(GraftStore.readStore(spark, root).select("pod").distinct().count() == 3)
     } finally q.stop()
     // time travel across micro-batch commits: every retained version opens
-    val vs = VersionedStore.listVersions(root)
+    val vs = GraftStore.listVersions(spark, root)
     vs.filter(_ >= 2).foreach { v =>
       assert(GraftStore.readVersion(spark, root, v).count() > 0)
     }
