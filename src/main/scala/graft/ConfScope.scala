@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * helper clones, copies the parent's runtime conf onto the clone (so the
   * clone behaves like the parent, not like a fresh default session),
   * re-installs the engine's session-scoped extensions (function registry +
-  * optimizer rule — both live in session state, which `newSession` resets),
+  * optimizer rules — both live in session state, which `newSession` resets),
   * applies the overrides to the CLONE only, and runs the body with it. The
   * parent session's conf is never touched, so there is nothing to restore
   * and no restore race to mis-nest.
@@ -42,15 +42,10 @@ object ConfScope {
       try s.conf.set(k, v) catch { case _: Exception => () }
     }
     // session-state extensions do not survive newSession: the SQL function
-    // surface and the metadata-aggregate rule are part of the engine's
-    // semantics, so a clone without them would plan differently
+    // surface and the optimizer rules are part of the engine's semantics,
+    // so a clone without them would plan differently
     GraftExtensions.register(s)
-    if (!s.experimental.extraOptimizations.contains(graft.plans.GraftMetadataAggregate))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.GraftMetadataAggregate
-    if (!s.experimental.extraOptimizations.contains(graft.plans.PlanRewrites))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.PlanRewrites
+    GraftSession.registerRules(s)
     overrides.foreach { case (k, v) => s.conf.set(k, v) }
     body(s)
   }

@@ -133,20 +133,28 @@ object GraftSession {
     // boilerplate shingle) re-plan into split partitions at execution time
     setTuningDefault(spark, "spark.sql.adaptive.skewJoin.enabled", "true")
     GraftExtensions.register(spark)
-    // metadata-only aggregates over format("graft") relations — runtime-
-    // injectable (experimental methods), so driver-owned sessions get the
-    // rule without builder-time extensions; idempotent across reconfigures
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.GraftMetadataAggregate))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.GraftMetadataAggregate
-    // exact-match routing to registered maintained artifacts (matviews,
-    // bucketed copies) — inert until something registers (PlanRewrites)
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.PlanRewrites))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PlanRewrites
+    registerRules(spark)
     spark
+  }
+
+  /** The engine's optimizer rules, appended to
+    * `spark.experimental.extraOptimizations` — runtime-injectable, so
+    * driver-owned sessions and [[ConfScope]] clones get them without
+    * builder-time extensions; idempotent across reconfigures:
+    *   - [[graft.plans.GraftMetadataAggregate]]: metadata-only aggregates
+    *     over `format("graft")` relations;
+    *   - [[graft.plans.PlanRewrites]]: exact-match routing to registered
+    *     maintained artifacts (matviews, bucketed copies) — inert until
+    *     something registers;
+    *   - [[graft.plans.SmallScanSort]]: a global sort over a small pruned
+    *     graft snapshot sorts in its one scan task, with no range shuffle.
+    */
+  def registerRules(spark: SparkSession): Unit = {
+    val missing = Seq(graft.plans.GraftMetadataAggregate, graft.plans.PlanRewrites,
+      graft.plans.SmallScanSort).filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations ++ missing
   }
 
   /** S3-compatible object-store access (SURVEY §2 row S9; the reference wires

@@ -2,6 +2,7 @@ package graft.logs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 
 /** The versioned store: one commit protocol on every Hadoop filesystem
   * (local disk, HDFS, object stores).
@@ -594,18 +595,12 @@ object GraftStore {
     // post-evolution files, and the sampled-footer schema would otherwise
     // hide the physical column from half the rows
     def rd(base: String, paths: Seq[String]): DataFrame = {
-      val r = spark.read.option("basePath", base)
-      val r2 = if (overlay.nonEmpty) r.option("mergeSchema", "true") else r
-      val df0 = r2.parquet(paths: _*)
+      val df0 = readLeg(spark, base, paths, mergeSchema = overlay.nonEmpty)
       applyOverlay(if (needMeta) DeleteVectors.tagMeta(df0) else df0, overlay)
     }
     val unioned =
-      if (entries.isEmpty) {
-        val r = if (overlay.nonEmpty) spark.read.option("mergeSchema", "true")
-        else spark.read
-        val df0 = r.parquet(dir)
-        applyOverlay(if (needMeta) DeleteVectors.tagMeta(df0) else df0, overlay)
-      } else {
+      if (entries.isEmpty) rd(dir, Seq(dir))
+      else {
         val own =
           if (hasDataFiles(spark, dir)) Seq(rd(dir, Seq(dir)))
           else Seq.empty // retention can empty a version that still carries refs
@@ -618,6 +613,28 @@ object GraftStore {
     if (dv.nonEmpty)
       DeleteVectors.applyTo(spark, unioned, dv, compositeEntries(spark, root, n))
     else unioned
+  }
+
+  /** One read leg — `paths` under `basePath = base` — as Spark's parquet
+    * reader plans it, without the one-task footer job of its schema
+    * inference: unless schemas merge, the data schema comes from the
+    * footer Spark's inference would open, read on the driver
+    * ([[graft.sources.GraftSourceProvider.inferSchema]]). A footer that
+    * also holds a partition column keeps Spark's inference, which places
+    * that column at its data position rather than after the data columns.
+    */
+  private def readLeg(spark: SparkSession, base: String, paths: Seq[String],
+      mergeSchema: Boolean): DataFrame = {
+    val r = spark.read.option("basePath", base)
+    if (mergeSchema) r.option("mergeSchema", "true").parquet(paths: _*)
+    else {
+      val index = new InMemoryFileIndex(spark, paths.map(new Path(_)),
+        Map("basePath" -> base), None)
+      val partCols = index.partitionSchema.fieldNames.map(_.toLowerCase).toSet
+      graft.sources.GraftSourceProvider.inferSchema(spark, Map.empty, index.allFiles())
+        .filterNot(_.fieldNames.exists(n => partCols(n.toLowerCase)))
+        .fold(r)(r.schema).parquet(paths: _*)
+    }
   }
 
   /** DataFrame read of the live snapshot: composite read for versioned
@@ -798,9 +815,8 @@ object GraftStore {
       val sideDv = dv.filter { case (k, _) => keys(k) }
       keys.groupBy(k => m(k).legBase).map {
         case (base, ks) =>
-          val r = spark.read.option("basePath", base)
-          val r2 = if (overlays.nonEmpty) r.option("mergeSchema", "true") else r
-          val df0 = r2.parquet(ks.map(m(_).physical).toSeq.sorted: _*)
+          val df0 = readLeg(spark, base, ks.map(m(_).physical).toSeq.sorted,
+            mergeSchema = overlays.nonEmpty)
           applyOverlay(
             if (sideDv.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlays)
       }.reduceOption(_.unionByName(_)).map { df =>

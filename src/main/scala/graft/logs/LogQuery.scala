@@ -63,6 +63,12 @@ object LogLayout {
   * are always also filtered (defense in depth; globs prune, filters prove).
   * Time predicates are applied on BOTH the µs `time` column and the `time_ns`
   * long so parquet row-group stats prune whichever column the file carries.
+  *
+  * The result is ordered by `time_ns`. On the hive layout, a pruned scan
+  * that fits one scan split sorts inside its scan task
+  * ([[graft.plans.SmallScanSort]]): one job, no range shuffle. A bigger
+  * scan, a store with pending deletion vectors and the positional layout
+  * keep Spark's range-partitioned sort.
   */
 final case class LogQuery(
     selector: LogSelector = LogSelector.empty,

@@ -42,7 +42,10 @@ import scala.util.control.NonFatal
   *
   * Planning lists the snapshot once, into the [[GraftFileIndex]], and runs
   * no Spark job unless schemas merge: a non-merging schema comes from one
-  * footer read on the driver ([[GraftSourceProvider.inferSchema]]).
+  * footer read on the driver ([[GraftSourceProvider.inferSchema]]). A
+  * global sort over a fast-tier scan whose pruned files fit one scan split
+  * sorts in that scan task, with no range exchange
+  * ([[graft.plans.SmallScanSort]]).
   *
   * Execution: two tiers, chosen per snapshot.
   *   - FAST (no live deletion vectors): a [[GraftFileIndex]] lists exactly

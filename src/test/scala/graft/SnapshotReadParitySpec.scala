@@ -1,19 +1,27 @@
 package graft
 
 import graft.logs._
+import graft.plans.{PlanScans, SmallScanSort}
 import graft.sources.GraftSourceProvider
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MetadataBuilder}
 import java.nio.file.Files
 
 /** The hive query path plans through the store's snapshot relation
   * (`format("graft")`), whose schema is resolved on the driver from one
-  * footer. Two parities pin it to what it replaced: the driver schema equals
-  * Spark's own parquet inference, and `LogQuery`'s output equals the same
-  * row-level query over [[GraftStore.readStore]], row for row and in order.
+  * footer, and sorts a small pruned scan in its one scan task
+  * ([[SmallScanSort]]). Parities pin it to what it replaced: the driver
+  * schema equals Spark's own parquet inference, and `LogQuery`'s output
+  * equals the same row-level query over [[GraftStore.readStore]] — whose
+  * sort keeps Spark's range exchange — row for row and in order.
+  * `readStore` itself resolves each leg's schema on the driver too, and
+  * matches Spark's per-leg inference.
   */
 class SnapshotReadParitySpec extends SparkSpec {
   import spark.implicits._
@@ -58,17 +66,72 @@ class SnapshotReadParitySpec extends SparkSpec {
   }
 
   /** `q` over the snapshot relation vs the same row-level query over
-    * `readStore`: identical rows in identical `time_ns` order. Returns the
-    * snapshot-side frame.
+    * `readStore`: identical rows in identical `time_ns` order. The
+    * reference keeps the range exchange; with `oneTask` the snapshot side
+    * plans no exchange and renders in exactly one job, otherwise it keeps
+    * the exchange plan too. Returns the snapshot-side frame.
     */
   private def assertQueryParity(root: String, q: LogQuery,
-      limit: Option[Int] = None): DataFrame = {
+      limit: Option[Int] = None, oneTask: Boolean = true): DataFrame = {
     def lim(df: DataFrame) = limit.fold(df)(df.limit)
     val got = lim(q.dataFrame(spark, root))
-    val want = lim(q.selectFrom(GraftStore.readStore(spark, root))).collect().toSeq
+    val ref = lim(q.selectFrom(GraftStore.readStore(spark, root)))
+    val want = ref.collect().toSeq
     assert(want.nonEmpty, s"$q: empty reference result")
     assert(got.collect().toSeq == want, s"$q: snapshot read differs from readStore")
+    // a sort under a limit plans TakeOrderedAndProject, with no exchange node
+    if (limit.isEmpty) assert(exchanges(ref) > 0, s"$q: the reference lost its exchange")
+    if (oneTask) {
+      assert(exchanges(got) == 0 && coalesced(got), s"$q: expected the one-task sort")
+      assert(jobsDuring(render(got, q.output)) == 1, s"$q: render ran more than one job")
+    } else {
+      assert(!coalesced(got), s"$q: the one-task sort fired off the native tier")
+      if (limit.isEmpty) assert(exchanges(got) > 0, s"$q: expected the range exchange")
+    }
     got
+  }
+
+  private def exchanges(df: DataFrame): Int =
+    PlanScans.finalNodes(df).count(_.isInstanceOf[ShuffleExchangeExec])
+
+  private def coalesced(df: DataFrame): Boolean =
+    PlanScans.finalNodes(df).exists(_.isInstanceOf[CoalesceExec])
+
+  /** `LogCli.render` into a buffer; returns the number of printed lines. */
+  private def render(df: DataFrame, output: LogOutput): Int = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(LogCli.render(df, output))
+    buf.toString("UTF-8").linesIterator.size
+  }
+
+  /** Spark jobs started by `body` on this thread. A marker job submitted
+    * after it flushes the listener bus: one bus queue delivers job starts
+    * in submission order.
+    */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val (counted, marker) = (s"counted-$id", s"marker-$id")
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`counted`) => started.incrementAndGet()
+          case Some(`marker`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(counted, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      started.get()
+    } finally sc.removeSparkListener(listener)
   }
 
   test("driver-resolved schema equals Spark's parquet inference") {
@@ -125,41 +188,146 @@ class SnapshotReadParitySpec extends SparkSpec {
     val total = spark.read.format("graft").load(root).inputFiles.length
     assert(total >= 6, s"fixture too small: $total files")
 
-    // `prunes`: the vector tier's delegate scan is hidden from the plan's
+    // `native`: the vector-free tier sorts in its one scan task; the vector
+    // tier keeps its plan, and its delegate scan is hidden from the plan's
     // file-scan nodes, so file counts are asserted on the native tier only
-    def shapes(prunes: Boolean): Unit = {
+    def shapes(native: Boolean): Unit = {
       // namespace scan
       assertQueryParity(root, LogQuery(LogSelector(Map("namespace" -> "ns-1")),
-        layout = LogLayout.Hive, output = LogOutput.Lines))
+        layout = LogLayout.Hive, output = LogOutput.Lines), oneTask = native)
       // pod + container probe
       assertQueryParity(root, LogQuery(
         LogSelector(Map("pod" -> "pod-2", "container" -> "app")),
-        layout = LogLayout.Hive, output = LogOutput.Json))
+        layout = LogLayout.Hive, output = LogOutput.Json), oneTask = native)
       // pinned --since: the cutoff falls on day two, so day one's files prune
       val asOf = t0 + 240 * stepNs
       val pinned = assertQueryParity(root, LogQuery(sinceSeconds = Some(20 * 3600),
-        asOfNanos = Some(asOf), layout = LogLayout.Hive, output = LogOutput.Raw))
-      if (prunes)
+        asOfNanos = Some(asOf), layout = LogLayout.Hive, output = LogOutput.Raw),
+        oneTask = native)
+      if (native)
         assert(scannedFiles(pinned) < total, "pinned --since must prune files")
       // un-pinned --since: the same cutoff against now(), half a row step
       // clear of the nearest row so seconds of test time cannot move it
       val cutoff = t0 + 150 * stepNs + stepNs / 2
       val since = (System.currentTimeMillis() * 1000000L - cutoff) / secNs
       val unpinned = assertQueryParity(root, LogQuery(sinceSeconds = Some(since),
-        layout = LogLayout.Hive, output = LogOutput.Columns))
-      if (prunes)
+        layout = LogLayout.Hive, output = LogOutput.Columns), oneTask = native)
+      if (native)
         assert(scannedFiles(unpinned) < total, "un-pinned --since must prune files")
       // selector-less --limit
       assertQueryParity(root, LogQuery(layout = LogLayout.Hive,
-        output = LogOutput.Raw), limit = Some(25))
+        output = LogOutput.Raw), limit = Some(25), oneTask = native)
     }
-    shapes(prunes = true)
+    shapes(native = true)
 
     // pending deletion vectors: the snapshot relation delegates to the
     // vector-applying frame; every shape must still match
     DeleteVectors.deleteWhere(spark, root, $"message".endsWith("7"))
     assert(DeleteVectors.read(spark, GraftStore.resolve(spark, root)).nonEmpty,
       "the store must carry pending deletion vectors")
-    shapes(prunes = false)
+    shapes(native = false)
+  }
+
+  test("the one-task sort fires only within the one-scan-task byte budget") {
+    val root = newRoot("budget")
+    LogIngest.writeHive(fixture(), root, partitionCols = parts)
+    val q = LogQuery(LogSelector(Map("namespace" -> "ns-1")),
+      layout = LogLayout.Hive, output = LogOutput.Raw)
+    val probe = q.dataFrame(spark, root)
+    probe.collect()
+    val bytes = PlanScans.finalNodes(probe).collect {
+      case s: FileSourceScanExec => s.metrics("filesSize").value
+    }.sum
+    val total = dataFiles(GraftStore.resolve(spark, root)).map(_.getLen).sum
+    assert(bytes > 0 && bytes < total, s"pruned $bytes of $total bytes")
+    // the budget counts the PRUNED files: it fires at exactly their size,
+    // below the whole snapshot's
+    def planned(budget: Long): (Int, Boolean, Seq[org.apache.spark.sql.Row]) =
+      ConfScope.withSessionConf(spark, "spark.sql.files.maxPartitionBytes" -> budget.toString) { s =>
+        val df = q.dataFrame(s, root)
+        val rows = df.collect().toSeq
+        (exchanges(df), coalesced(df), rows)
+      }
+    val (ex1, co1, fits) = planned(bytes)
+    assert(ex1 == 0 && co1, "at the budget the sort must run in the scan task")
+    val (ex2, co2, over) = planned(bytes - 1)
+    assert(ex2 > 0 && !co2, "over the budget the range exchange must stay")
+    assert(fits.nonEmpty && fits == over)
+  }
+
+  test("a sorted write over a graft snapshot keeps its file count") {
+    val root = newRoot("sorted-write")
+    LogIngest.writeHive(fixture(), root, partitionCols = parts)
+    // without partition coalescing the exchange plan writes one file per
+    // shuffle partition, so a rule that fired under the write would show
+    def written(rule: Boolean): Int = ConfScope.withSessionConf(spark,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.optimizer.excludedRules" -> (if (rule) "" else SmallScanSort.ruleName)) { s =>
+      val sorted = s.read.format("graft").load(root).orderBy($"time_ns")
+      sorted.collect()
+      assert(coalesced(sorted) == rule, s"read side: rule=$rule")
+      val out = Files.createTempDirectory("graft-sorted-write").resolve("out").toString
+      sorted.write.parquet(out)
+      new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
+    }
+    val exchangePlan = written(rule = false)
+    assert(exchangePlan > 1, s"the exchange plan wrote $exchangePlan file(s)")
+    assert(written(rule = true) == exchangePlan)
+  }
+
+  test("an empty pruned scan sorts to zero rows without error") {
+    val root = newRoot("empty")
+    LogIngest.writeHive(fixture(), root, partitionCols = parts)
+    val df = LogQuery(LogSelector(Map("namespace" -> "nope")),
+      layout = LogLayout.Hive, output = LogOutput.Raw).dataFrame(spark, root)
+    assert(df.collect().isEmpty)
+    assert(coalesced(df) && exchanges(df) == 0)
+    assert(render(df, LogOutput.Raw) == 0)
+    assert(render(df.limit(5), LogOutput.Raw) == 0)
+  }
+
+  /** The live snapshot read with Spark's own parquet inference per leg:
+    * `readStore`'s plan before it resolved leg schemas on the driver.
+    */
+  private def inferredRead(root: String): DataFrame = {
+    val n = GraftStore.currentVersion(spark, root)
+    val own = GraftStore.resolveVersion(spark, root, n)
+    GraftStore.compositeEntries(spark, root, n).groupBy(_.legBase).toSeq
+      .sortBy { case (base, _) => (base != own, base) }
+      .map { case (base, es) =>
+        spark.read.option("basePath", base).parquet(es.map(_.physical).sorted: _*)
+      }.reduce(_.unionByName(_))
+  }
+
+  test("readStore resolves leg schemas on the driver: same schema and rows, no job") {
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def check(tag: String, batch: DataFrame): String = {
+      val root = newRoot(tag)
+      val half = $"time_ns" < t0 + 120 * stepNs
+      LogIngest.writeHive(batch.filter(half), root, partitionCols = parts)
+      LogIngest.writeHive(batch.filter(!half), root, partitionCols = parts)
+      val n = GraftStore.currentVersion(spark, root)
+      val legs = GraftStore.compositeEntries(spark, root, n).map(_.legBase).distinct.size
+      assert(legs >= 2, s"$tag: expected a multi-leg snapshot, got $legs leg(s)")
+      val want = inferredRead(root)
+      val got = GraftStore.readStore(spark, root)
+      // partition columns and their inferred types included
+      assert(got.schema == want.schema, s"$tag: ${got.schema} vs ${want.schema}")
+      assert(got.schema("date").dataType == org.apache.spark.sql.types.DateType)
+      assert(rows(got) == rows(want) && rows(got).size == 240, s"$tag: rows differ")
+      assert(jobsDuring(GraftStore.readStore(spark, root)) == 0,
+        s"$tag: readStore planning ran a Spark job")
+      assert(jobsDuring(inferredRead(root)) >= legs, s"$tag: inference ran no job")
+      root
+    }
+    val root = check("legs", fixture())
+    check("legs-legacy", fixture().drop("pod_id"))
+    // a file that also holds its partition columns, first by path in the
+    // live leg: Spark places those columns at their data position
+    fixture().limit(3).withColumn("namespace", lit("aaa")).coalesce(1).write
+      .parquet(s"${GraftStore.resolve(spark, root)}/cluster=dev/namespace=aaa/date=2024-01-15")
+    val (got, want) = (GraftStore.readStore(spark, root), inferredRead(root))
+    assert(got.schema == want.schema, s"overlap: ${got.schema} vs ${want.schema}")
+    assert(rows(got) == rows(want) && rows(got).size == 243, "overlap: rows differ")
   }
 }
