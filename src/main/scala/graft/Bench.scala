@@ -99,14 +99,9 @@ object Bench {
     // sequential map out of the driver's bounded tail capture (r06)
     spark.sparkContext.setLogLevel("ERROR")
     // untimed warmup: session/codegen/FS init should not bill the first
-    // query. The base tables go through Spark's in-memory columnar cache
-    // (steady-state serving shape — the set re-reads lineitem ~25×);
-    // materialize the heavy ones here so the timed round measures query
-    // execution, not 25 repeated parquet decodes of the same file.
-    Tables.enableCache()
-    Seq("lineitem", "orders", "events", "documents", "embeddings", "part",
-      "customer", "supplier", "nation", "region")
-      .foreach(t => Tables.table(spark, sfDir, t).count())
+    // query, and the base tables sit in Spark's in-memory columnar cache
+    // (steady-state serving shape)
+    Tables.warm(spark, sfDir)
 
     val (wall, snapshot, finished) = runRound(spark, sfDir, parallel)
     val failedNames = snapshot.collect { case (n, t) if t == -1.0 => n }.toSeq.sorted

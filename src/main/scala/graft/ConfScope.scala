@@ -43,7 +43,9 @@ object ConfScope {
     }
     // session-state extensions do not survive newSession: the SQL function
     // surface and the optimizer rules are part of the engine's semantics,
-    // so a clone without them would plan differently
+    // so a clone without them would plan differently. With them, the
+    // copied GraftSession.ConfiguredKey marker holds on the clone too, so
+    // `Tables` loads on it leave the overrides below in place.
     GraftExtensions.register(s)
     GraftSession.registerRules(s)
     overrides.foreach { case (k, v) => s.conf.set(k, v) }

@@ -58,10 +58,10 @@ object GraftExtensions {
   )
 
   /** Install on an existing session (temp-function registry). Idempotent:
-    * already-registered names are left alone — re-registering on every
-    * `configure` call emitted one "replaced a previously registered
-    * function" WARN per function per call, flooding bounded log captures
-    * (the round-6 bench artifact lost its sequential map to exactly this).
+    * already-registered names are left alone — re-registering emits one
+    * "replaced a previously registered function" WARN per function per
+    * call, flooding bounded log captures (the round-6 bench artifact lost
+    * its sequential map to exactly this).
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

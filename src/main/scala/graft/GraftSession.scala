@@ -12,37 +12,32 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Keys the operator overrode via SPARK_GRAFT_CONF — tuning defaults must
-    * not clobber these when configure() re-runs (it runs on every Tables
-    * load so driver-owned sessions pick the settings up too).
+  /** Parse the `SPARK_GRAFT_CONF` format, `k=v;k2=v2`: entries split on
+    * `;`, each at its first `=`, keys and values trimmed. Blank entries
+    * are skipped; an entry with no `=` or an empty key throws, naming the
+    * entry, so a typo fails the run instead of being dropped.
     */
-  private lazy val envOverrides: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
-          case _ => None
-        }
-      }.toMap
+  private[graft] def parseConfOverrides(spec: String): Map[String, String] =
+    spec.split(';').iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      }
+    }.toMap
 
-  private lazy val envOverrideKeys: Set[String] = envOverrides.keySet
-
-  /** Apply the engine tuning default for `k` — unless the operator pinned
-    * the key via SPARK_GRAFT_CONF, in which case the OVERRIDE VALUE is
-    * applied instead of the default (r17, ADVICE r16): merely skipping the
-    * default left driver-owned sessions (configure-only path, no [[local]])
-    * on Spark's built-in default — neither the engine's choice nor the
-    * operator's. All keys routed through here are runtime-settable SQLConf
-    * keys, so conf.set is always legal.
+  /** The operator's overrides from SPARK_GRAFT_CONF (ops escape hatch for
+    * experiments and per-box tuning; unset in the driver contract, so
+    * official runs see the engine defaults).
     */
-  private def setTuningDefault(spark: SparkSession, k: String, v: String): Unit =
-    spark.conf.set(k, envOverrides.getOrElse(k, v))
+  private lazy val confOverrides: Map[String, String] =
+    sys.env.get("SPARK_GRAFT_CONF").fold(Map.empty[String, String])(parseConfOverrides)
 
   /** True when the operator pinned `key` via SPARK_GRAFT_CONF — engine code
     * that scopes its own tuning (e.g. the streaming-dedup body's AQE pin)
     * checks this so an explicit operator choice always wins.
     */
-  def isTuningOverridden(key: String): Boolean = envOverrideKeys.contains(key)
+  def isTuningOverridden(key: String): Boolean = confOverrides.contains(key)
 
   /** The session a foreachBatch micro-batch BODY should bind to: the
     * batch's own stream-session clone (per-query — never shared with
@@ -107,10 +102,22 @@ object GraftSession {
       spark.conf.set("spark.sql.shuffle.partitions", target.toString)
     }
 
-  /** Apply engine settings to an existing session (e.g. one the driver owns).
-    * All of these are runtime-settable SQLConf keys.
+  /** Conf marker [[configure]] sets last: a session carrying it holds the
+    * engine confs, functions and rules. [[ConfScope]] clones and streaming
+    * `cloneSession` clones copy it together with that state; a bare
+    * `newSession()` starts without it.
+    */
+  private val ConfiguredKey = "graft.session.configured"
+
+  /** Apply engine settings to an existing session (e.g. one the driver
+    * owns), then the SPARK_GRAFT_CONF overrides. Runs once per session: a
+    * session that carries [[ConfiguredKey]] is returned untouched, so
+    * every `Tables` load may call it and a later conf set is never reset.
+    * The steps are idempotent, so two threads racing on a fresh session
+    * install the same state.
     */
   def configure(spark: SparkSession): SparkSession = {
+    if (spark.conf.getOption(ConfiguredKey).isDefined) return spark
     // The reference stores Timestamp(ns) (compact_columns.c:69-93); parquet
     // TIMESTAMP(NANOS) is unreadable by Spark's µs TimestampType unless read
     // as a raw long. Lossless-ns-as-long IS our design (SURVEY §7.4).
@@ -122,25 +129,34 @@ object GraftSession {
     // column would be unprunable at the row-group tier. INT64 micros is
     // the modern type the driver testdata itself uses.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // TUNING defaults go through setTuningDefault: configure() is re-run by
-    // every Tables loader, and an unconditional set here would clobber a
-    // SPARK_GRAFT_CONF override mid-session — the escape hatch's contract is
-    // "overrides apply AFTER the engine defaults". Correctness pins above
-    // (ns-as-long, UTC, stats-bearing timestamps) stay unconditional.
-    setTuningDefault(spark, "spark.sql.adaptive.enabled", "true")
-    setTuningDefault(spark, "spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // runtime skew-join splitting: hot keys (one pod flooding logs, one
     // boilerplate shingle) re-plan into split partitions at execution time
-    setTuningDefault(spark, "spark.sql.adaptive.skewJoin.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     GraftExtensions.register(spark)
     registerRules(spark)
+    applyConfOverrides(spark, confOverrides)
+    spark.conf.set(ConfiguredKey, "true")
     spark
   }
+
+  /** Set `overrides` on `spark`, after the engine defaults. Keys that
+    * `spark.conf.isModifiable` rejects (static and core keys, and keys
+    * Spark does not define) are skipped — [[local]] passes them to the
+    * builder, where they take effect; a value Spark rejects for a runtime
+    * key throws.
+    */
+  private[graft] def applyConfOverrides(spark: SparkSession,
+      overrides: Map[String, String]): Unit =
+    overrides.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
+    }
 
   /** The engine's optimizer rules, appended to
     * `spark.experimental.extraOptimizations` — runtime-injectable, so
     * driver-owned sessions and [[ConfScope]] clones get them without
-    * builder-time extensions; idempotent across reconfigures:
+    * builder-time extensions; idempotent:
     *   - [[graft.plans.GraftMetadataAggregate]]: metadata-only aggregates
     *     over `format("graft")` relations;
     *   - [[graft.plans.PlanRewrites]]: exact-match routing to registered
@@ -218,35 +234,18 @@ object GraftSession {
   /** Build a local session sized from SPARK_GRAFT_CPUS (driver contract). */
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    var builder = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // ops escape hatch: SPARK_GRAFT_CONF="k=v;k2=v2" applies overrides after
-    // the engine defaults (experiments, per-box tuning) — unset in the driver
-    // contract, so official runs see defaults. Applied at BUILD time so core
-    // (static) keys like spark.io.compression.codec take effect too; for an
-    // already-running context the runtime-settable subset still applies via
-    // configure()'s conf.set path.
-    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.trim.nonEmpty => Some((k.trim, v.trim))
-          case _ => None
-        }
-      }
-    overrides.foreach { case (k, v) => builder = builder.config(k, v) }
+    // at BUILD time so static keys like spark.io.compression.codec take
+    // effect; configure() sets the runtime ones again after its defaults
+    confOverrides.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val configured = configureS3aFromEnv(configure(spark))
-    // re-assert runtime-settable overrides on top of configure()'s defaults
-    // (static keys already landed through the builder; skip their re-set)
-    overrides.foreach { case (k, v) =>
-      try configured.conf.set(k, v) catch { case _: Exception => () }
-    }
-    configured
+    configureS3aFromEnv(configure(spark))
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,15 +11,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter(e => only(e._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // queries are independent writes to disjoint dirs: run a few at a time so
     // Spark's scheduler fills the cores the small queries leave idle

@@ -3,6 +3,8 @@ package graft.logs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Atomic batch appends to versioned stores: append-as-commit.
   *
@@ -83,7 +85,7 @@ object AppendCommit {
       fs.delete(stagingPath, true)
     }
     stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    val stagedRows = countStaged(spark, fs, stagingPath)
+    val stagedRows = countStaged(spark, stagingPath)
     if (stagedRows == 0L) {
       fs.delete(stagingPath, true)
       return Committed(GraftStore.currentVersion(spark, root), 0L, replayed = false)
@@ -174,21 +176,25 @@ object AppendCommit {
     }
   }
 
-  /** Staged row count, empty-safe: a ZERO-ROW batch (an idle micro-batch,
-    * a filtered-out partition) stages only `_SUCCESS` — `spark.read
-    * .parquet` on that dir fails schema inference, so probe for data files
-    * first (a recursive metadata walk over the just-written staging tree)
-    * and only open footers when some exist.
+  /** Staged row count: the footer row counts of the staged data files,
+    * summed on the driver (a recursive walk over the just-written staging
+    * tree). A ZERO-ROW batch (an idle micro-batch, a filtered-out
+    * partition) stages only `_SUCCESS` and counts 0. Spark's reader would
+    * skip the staging dir itself: its `_append-` name marks it hidden.
     */
-  private def countStaged(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, stagingPath: Path): Long = {
-    def anyDataFile(p: Path): Boolean =
-      fs.listStatus(p).exists { s =>
-        Compaction.visible(s.getPath.getName) &&
-          (if (s.isDirectory) anyDataFile(s.getPath) else true)
-      }
-    if (!anyDataFile(stagingPath)) 0L
-    else spark.read.parquet(stagingPath.toString).count() // footer-only
+  private[logs] def countStaged(spark: SparkSession, stagingPath: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = stagingPath.getFileSystem(conf)
+    def rows(p: Path): Long =
+      fs.listStatus(p).iterator.filter(s => Compaction.visible(s.getPath.getName))
+        .map { s =>
+          if (s.isDirectory) rows(s.getPath)
+          else {
+            val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+            try reader.getRecordCount finally reader.close()
+          }
+        }.sum
+    rows(stagingPath)
   }
 
   /** Stage the batch under `stagingDir` with the store's physical write

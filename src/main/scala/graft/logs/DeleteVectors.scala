@@ -610,7 +610,7 @@ object DeleteVectors {
         .option("maxRecordsPerFile", maxRecordsPerFile)
         .options(LogSchema.parquetBloomOptions)
         .mode("overwrite").parquet(stagingDir)
-      val inserted = spark.read.parquet(stagingDir).count() // footer-only
+      val inserted = AppendCommit.countStaged(spark, stagingPath)
       if (inserted == 0L && additions.isEmpty) {
         fs.delete(stagingPath, true)
         return (MergeCommitted(cur, 0L, 0L, replayed = false), false)

@@ -9,10 +9,13 @@ import graft.{GraftSession, SparkEntry, Tables}
   *   sbt "runMain graft.tools.OptProbe q3_top_revenue q9_product_profit"`
   *
   * Prints one JSON line per query: {"name":..., "runs":[s,s,s], "min":s}.
-  * Plans land in plans/r16/<name>_<suffix>.txt. Measurement methodology is
-  * the guide §1.4 noop sink; repetitions separate plan/codegen warmup from
-  * steady-state execution (the bench's own warm numbers are the contract;
-  * this tool is the inner loop).
+  * Plans land in `$SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt` (default
+  * plans/r17). Measurement methodology is the guide §1.4 noop sink;
+  * repetitions separate plan/codegen warmup from steady-state execution
+  * (the bench's own warm numbers are the contract; this tool is the inner
+  * loop). For job-level attribution, run it under sbt with `GRAFT_LOG4J`
+  * naming a log4j2 file that sets `org.apache.spark.scheduler.DAGScheduler`
+  * to INFO: Spark then logs "Job N finished: ..., took T ms" per job.
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
@@ -26,10 +29,7 @@ object OptProbe {
     spark.sparkContext.setLogLevel("ERROR")
     // same cache-warm shape as Bench: the probe measures query execution,
     // not repeated parquet decodes of the shared base tables
-    Tables.enableCache()
-    Seq("lineitem", "orders", "events", "documents", "embeddings", "part",
-      "customer", "supplier", "nation", "region")
-      .foreach(t => Tables.table(spark, sfDir, t).count())
+    Tables.warm(spark, sfDir)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -21,7 +21,10 @@ import java.util.concurrent.CountDownLatch
   *     read path pins partition types from the manifest, conf-independent);
   *   - the x11∥x26 shape: a compaction frozen MID-COMMIT while the main
   *     thread runs metadata-only reads on another store — readless must
-  *     hold throughout and the shared conf must come out untouched.
+  *     hold throughout and the shared conf must come out untouched;
+  *   - [[GraftSession.configure]] sets a session up once: a bare
+  *     `newSession()` gets the engine state from its first `Tables` load,
+  *     and later loads leave the session's confs alone.
   */
 class ConfScopeSpec extends SparkSpec {
   import spark.implicits._
@@ -183,5 +186,50 @@ class ConfScopeSpec extends SparkSpec {
     assert(compactErr.get() == null, s"compaction failed: ${compactErr.get()}")
     assert(spark.conf.get(inferKey, "true") == "true",
       "no restore ran, because nothing was ever flipped on the shared session")
+  }
+
+  test("configure runs once per session: a fresh session is set up by its first Tables load, later loads keep its confs") {
+    val skew = "spark.sql.adaptive.skewJoin.enabled"
+    val rules = Seq(graft.plans.GraftMetadataAggregate, graft.plans.PlanRewrites,
+      graft.plans.SmallScanSort)
+    val fresh = spark.newSession()
+    assert(!rules.exists(fresh.experimental.extraOptimizations.contains),
+      "a bare newSession starts without the engine's session state")
+    Tables.table(fresh, sf, "nation")
+    val reg = fresh.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (name, _) =>
+      assert(reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)), name)
+    }
+    rules.foreach(r => assert(fresh.experimental.extraOptimizations.contains(r), r))
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(fresh.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(fresh.conf.get(skew) == "true")
+
+    // a tuning change on the session survives every later load
+    fresh.conf.set(skew, "false")
+    Tables.table(fresh, sf, "region")
+    Tables.events(fresh, sf)
+    assert(fresh.conf.get(skew) == "false", "a Tables load must not reset session confs")
+
+    // a scoped clone keeps the session's change and its own override, and
+    // plans with the engine rules: a store COUNT answers from metadata
+    val root = newRoot("once")
+    LogIngest.writeHive(fixture().limit(500), root, partitionCols = parts)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    ConfScope.withSessionConf(fresh, key -> "-1") { s =>
+      Tables.table(s, sf, "nation")
+      assert(s.conf.get(skew) == "false")
+      assert(s.conf.get(key) == "-1")
+      val total = s.read.format("graft").load(root).groupBy().count()
+      assert(graft.plans.PlanScans.readless(total))
+      assert(total.as[Long](org.apache.spark.sql.Encoders.scalaLong).head() == 500L)
+    }
+
+    val p2 = SparkEntry.queries("p2_since_time_filter")
+    def rows(s: org.apache.spark.sql.SparkSession) =
+      p2(s, sf).collect().map(_.toString).toSeq
+    assert(rows(fresh).nonEmpty)
+    assert(rows(fresh) == rows(spark))
   }
 }

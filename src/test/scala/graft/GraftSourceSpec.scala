@@ -186,6 +186,22 @@ class GraftSourceSpec extends SparkSpec {
     }
   }
 
+  test("append row count: exact over a many-file staged batch, zero for an empty batch") {
+    val root = newRoot("cnt")
+    val df = fixture()
+    val dates = df.select($"date").distinct().as[String].collect().sorted
+    LogIngest.writeHive(df.filter($"date" === dates.head), root, partitionCols = parts)
+    val batch = df.filter($"date" =!= dates.head)
+    val c = AppendCommit.commit(batch, root, parts, maxRecordsPerFile = 5L)
+    val staged = Files.walk(java.nio.file.Paths.get(root)).toArray.map(_.toString)
+      .count(p => p.contains(GraftStore.AppendPrefix) && p.endsWith(".parquet"))
+    assert(staged > dates.length, s"expected a many-file batch, staged $staged files")
+    assert(c.rows == batch.count())
+    assert(spark.read.format("graft").load(root).count() == df.count())
+    val empty = AppendCommit.commit(batch.limit(0), root, parts)
+    assert(empty.rows == 0L && empty.version == c.version)
+  }
+
   test("SQL surface: USING graft works for plain spark.sql queries") {
     val root = newRoot("sql")
     LogIngest.writeHive(fixture(), root, partitionCols = parts)
