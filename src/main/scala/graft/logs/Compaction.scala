@@ -243,16 +243,9 @@ object Compaction {
   private def fileIdentity(files: Seq[FileStatus]): Set[(String, Long, Long)] =
     files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
 
-  private[logs] def dataFilesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val it = GraftStore.walkFiles(fs, dir)
-    val out = Seq.newBuilder[FileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (visible(f.getPath.getName)) out += f
-    }
-    out.result()
-  }
+  private[logs] def dataFilesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else GraftStore.walkFiles(fs, dir, dataOnly = true).toSeq
 
   /** Partition dirs at exactly `depth` `col=` levels below `root`, each with
     * ALL data files recursively below it. Dirtiness and swapping operate at
@@ -360,7 +353,7 @@ object Compaction {
       rewrite(input, partitionCols, maxRecordsPerFile, staging.toString, cluster)
       // verify the rewrite BEFORE touching the live tree — a short row count
       // means lost data and must abort while the original is still in place
-      val stagedRows = spark.read.parquet(staging.toString).count()
+      val stagedRows = AppendCommit.countStaged(spark, staging)
       require(stagedRows == dirtyRows,
         s"compaction wrote $stagedRows rows, expected $dirtyRows; aborting with $live untouched")
       // Optimistic concurrency: the swap replaces the dirty leaves' files
@@ -426,7 +419,7 @@ object Compaction {
         val prev = GraftStore.currentVersion(spark, root)
         val newest = GraftStore.listVersions(spark, root).max
         if (newest > prev) GraftStore.writePointer(spark, root, newest)
-        val liveRows = GraftStore.readStore(spark, root).count()
+        val liveRows = GraftStore.scanCount(GraftStore.readStore(spark, root))
         require(liveRows == expected,
           s"recovered count $liveRows != expected $expected — inspect $root")
         fs.delete(marker, false)
@@ -491,6 +484,10 @@ object Compaction {
       // overlay-aware legs: pre-evolution files null-backfill the evolved
       // columns, so the rewrite MATERIALIZES them — the overlay shrinks to
       // irrelevance as maintenance touches partitions
+      // Spark's own reader, not the snapshot relation: under this session's
+      // inference-off conf partition values read as their directory strings,
+      // so rewritten dirs keep byte-identical names (`hour=07`), where the
+      // manifest-typed relation would read 7 and write `hour=7`
       val overlay = GraftStore.readSchemaOverlay(spark, curDir)
       val inputRaw = byRel.filter(e => dirtyRels(e._1)).values.flatten.toSeq
         .groupBy(_._2).toSeq.sortBy(_._1)
@@ -587,7 +584,7 @@ object Compaction {
           s"concurrent commit detected on $root during compaction publish " +
             s"(expected v$cur live); staged version removed — re-run compaction")
       }
-      val liveRows = GraftStore.readStore(spark, root).count()
+      val liveRows = GraftStore.scanCount(GraftStore.readStore(spark, root))
       require(liveRows == expectedRows,
         s"post-commit count $liveRows != expected $expectedRows — inspect $root")
       fs.delete(marker, false)

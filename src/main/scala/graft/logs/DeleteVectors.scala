@@ -417,20 +417,14 @@ object DeleteVectors {
       // reduced to ONE driver row per touched FILE with the positions
       // already run-length compressed executor-side ([[collectFileRanges]]).
       // A dataless store matches nothing (and has no schema to read).
-      // the matched-row scan runs with partition type inference PINNED on a
-      // cloned session: the delete condition must evaluate partition columns
-      // under the same typed view `format("graft")` exposes (manifest-typed),
-      // not whatever the caller's session conf happens to be — with
-      // inference off, an int-typed partition predicate like hour >= 9 would
-      // compare lexicographically ("10" < "9") and silently strike the
-      // wrong rows
+      // The scan is the snapshot relation, so the condition sees partition
+      // columns manifest-typed whatever the session's inference conf: an
+      // int partition predicate like hour >= 9 never compares as strings
+      // ("10" < "9") and strikes the wrong rows.
       val matched =
         if (entries.isEmpty) Array.empty[(String, Long, Array[Byte])]
-        else graft.ConfScope.withSessionConf(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "true") { s =>
-          collectFileRanges(
-            matchRows(taggedLiveRead(s, root, cur, prior, entries)))
-        }
+        else collectFileRanges(
+          matchRows(taggedLiveRead(spark, root, cur, prior, entries)))
       val keyOfNorm = entries.map(e => (normalizePath(e.physical), e)).toMap
       var newPositions = 0L
       val additions: Map[String, Dv] = matched.map { case (path, n, packed) =>
@@ -567,17 +561,13 @@ object DeleteVectors {
       //    ([[collectFileRanges]] — never the raw positions)
       val keys = updates.select(keyCols.map(col): _*).distinct()
       // a dataless store (fresh streaming sink, first batch) matches nothing.
-      // Same inference pin as the delete path (r16, ADVICE r15): if a merge
-      // key includes a partition column, key matching must evaluate it under
-      // the manifest-typed view, not the caller's session conf
+      // Like the delete path, a partition-column merge key matches
+      // manifest-typed, whatever the session's inference conf.
       val matched =
         if (entries.isEmpty) Array.empty[(String, Long, Array[Byte])]
-        else graft.ConfScope.withSessionConf(spark,
-          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "true") { s =>
-          collectFileRanges(
-            taggedLiveRead(s, root, cur, prior, entries)
-              .join(graft.plans.Hints.dimBroadcast(keys), keyCols, "left_semi"))
-        }
+        else collectFileRanges(
+          taggedLiveRead(spark, root, cur, prior, entries)
+            .join(graft.plans.Hints.dimBroadcast(keys), keyCols, "left_semi"))
       val keyOfNorm = entries.map(e => (normalizePath(e.physical), e)).toMap
       var matchedRows = 0L
       val additions: Map[String, Dv] = matched.map { case (path, n, packed) =>

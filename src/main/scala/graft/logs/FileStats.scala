@@ -378,26 +378,19 @@ object FileStats {
     all
   }
 
-  /** Visible data files directly under `dir` (recursive), keyed by
-    * dir-relative path — the self-contained-directory analogue of
-    * [[GraftStore.compositeEntries]]. Every path segment must be visible:
-    * a dir may hold metadata/staging subtrees whose FILES have plain names.
+  /** Data files under `dir` (recursive), keyed by dir-relative path — the
+    * self-contained-directory analogue of [[GraftStore.compositeEntries]],
+    * with the same visibility rule ([[GraftStore.walkFiles]] `dataOnly`).
     */
   def listDirEntries(spark: SparkSession, dir: String): Seq[GraftStore.FileEntry] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
     val base = p.toUri.getPath
-    val out = Seq.newBuilder[GraftStore.FileEntry]
-    val it = GraftStore.walkFiles(fs, p)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toUri.getPath.stripPrefix(base)
-      if (rel.split('/').filter(_.nonEmpty).forall(GraftStore.visibleName))
-        out += GraftStore.FileEntry(rel, dir, f.getPath.toString, f.getLen,
-          f.getModificationTime)
-    }
-    out.result()
+    GraftStore.walkFiles(fs, p, dataOnly = true).map { f =>
+      GraftStore.FileEntry(f.getPath.toUri.getPath.stripPrefix(base), dir,
+        f.getPath.toString, f.getLen, f.getModificationTime)
+    }.toSeq
   }
 
   /** Stamp a self-contained directory (staged version tree, plain store

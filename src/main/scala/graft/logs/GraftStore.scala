@@ -2,7 +2,6 @@ package graft.logs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 
 /** The versioned store: one commit protocol on every Hadoop filesystem
   * (local disk, HDFS, object stores).
@@ -23,10 +22,14 @@ import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
   * the filesystem, the manifest only says which version prefixes to list.
   *
   * Read-side contract: `resolve` names the live version's own directory
-  * (what appends write into); [[readStore]] is the composite DataFrame read
-  * (own + carried partitions) of store jobs and fixtures, while `y-logcli`
-  * queries plan through the snapshot relation, `format("graft")`. Plain
-  * unversioned dirs (reference-layout trees) pass through both unchanged.
+  * (what appends write into). Every snapshot read — [[readStore]],
+  * [[readVersion]] and its physical/tagged variants, [[rowDiff]]'s sides,
+  * and `format("graft")` behind `y-logcli` — plans through the one snapshot
+  * relation ([[graft.sources.GraftSourceProvider.snapshot]]): the
+  * manifest-built file index (own + carried partitions), manifest-typed
+  * partition columns, stats skipping, and deletion vectors. A plain
+  * unversioned dir (reference-layout tree) reads through Spark's parquet
+  * reader in [[readStore]].
   */
 object GraftStore {
 
@@ -42,15 +45,22 @@ object GraftStore {
     * here reads permissions or block locations, so the plain `FileStatus`
     * walk is semantically identical and process-fork-free. Iterative,
     * allocation-light; traversal order is unspecified like the original.
+    *
+    * `dataOnly` is the one visibility rule of snapshot listings: skip every
+    * hidden name ([[visibleName]]), so neither a hidden file nor anything
+    * under a hidden directory (a `_spark_metadata/0` sink log, a
+    * `_temporary` write) counts as data.
     */
-  private[graft] def walkFiles(fs: FileSystem, p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+  private[graft] def walkFiles(fs: FileSystem, p: Path,
+      dataOnly: Boolean = false): Iterator[org.apache.hadoop.fs.FileStatus] =
     new Iterator[org.apache.hadoop.fs.FileStatus] {
       private val dirs = scala.collection.mutable.Stack[Path](p)
       private var buf: List[org.apache.hadoop.fs.FileStatus] = Nil
       private def fill(): Unit =
         while (buf.isEmpty && dirs.nonEmpty) {
           fs.listStatus(dirs.pop()).foreach { s =>
-            if (s.isDirectory) dirs.push(s.getPath) else buf ::= s
+            if (dataOnly && !visibleName(s.getPath.getName)) ()
+            else if (s.isDirectory) dirs.push(s.getPath) else buf ::= s
           }
         }
       def hasNext: Boolean = { fill(); buf.nonEmpty }
@@ -465,10 +475,10 @@ object GraftStore {
     }
   }
 
-  /** Null-backfill overlay columns a frame's files do not carry physically.
-    * Applied PER LEG before the composite union, so pre-evolution legs align
-    * with post-evolution ones without `allowMissingColumns` (which would
-    * silently null genuine schema mismatches too).
+  /** Null-backfill overlay columns a frame's files do not carry physically,
+    * so pre-evolution reads align with post-evolution ones without
+    * `allowMissingColumns` (which would silently null genuine schema
+    * mismatches too): compaction's per-leg reads and [[rowDiff]]'s sides.
     */
   private[logs] def applyOverlay(df: DataFrame,
       overlay: Seq[(String, String)]): DataFrame =
@@ -547,29 +557,25 @@ object GraftStore {
     keep
   }
 
-  /** Composite snapshot read: the version's own files plus every carried
-    * partition, each leg anchored with `basePath` at its version prefix so
-    * hive partition columns resolve identically, then unioned. Partition
-    * pruning still applies per leg (the carried legs enumerate exactly the
-    * referenced leaf dirs). No-manifest versions take the plain one-dir
-    * read.
-    */
   /** Physical directory of a manifest holder: the version prefix dir for
     * `vNNNNNN` holders, `<root>/<holder>` for staged append dirs.
     */
   private def holderDir(root: String, holder: String): String =
     holderVersion(holder).map(versionDir(root, _)).getOrElse(s"$root/$holder")
 
+  /** Snapshot `n`'s rows: the scan of the snapshot relation
+    * `format("graft")` reads ([[graft.sources.GraftSourceProvider.snapshot]]),
+    * deletion vectors applied as a filter over it.
+    */
   def readVersion(spark: SparkSession, root: String, n: Int): DataFrame =
-    readVersionInternal(spark, root, n, applyDv = true, keepMeta = false)
+    snapshotOf(spark, root, n).rows
 
   /** Physical read: the snapshot's rows as stored, WITHOUT deletion vectors
-    * applied ([[DeleteVectors]]) — the frame commit verification counts
-    * against the stats sidecar (which is also physical). Query paths use
+    * applied ([[DeleteVectors]]) — the fast-tier relation. Query paths use
     * [[readVersion]].
     */
   def readVersionPhysical(spark: SparkSession, root: String, n: Int): DataFrame =
-    readVersionInternal(spark, root, n, applyDv = false, keepMeta = false)
+    spark.baseRelationToDataFrame(snapshotOf(spark, root, n).fast)
 
   /** Physical read with the file/position metadata columns
     * ([[DeleteVectors.PathCol]]/[[DeleteVectors.PosCol]]) retained —
@@ -578,67 +584,23 @@ object GraftStore {
     */
   private[graft] def readVersionTagged(spark: SparkSession, root: String,
       n: Int): DataFrame =
-    readVersionInternal(spark, root, n, applyDv = false, keepMeta = true)
+    DeleteVectors.tagMeta(readVersionPhysical(spark, root, n))
 
-  private def readVersionInternal(spark: SparkSession, root: String, n: Int,
-      applyDv: Boolean, keepMeta: Boolean): DataFrame = {
-    val dir = resolveVersion(spark, root, n)
-    val entries = readManifest(spark, dir)
-    val overlay = readSchemaOverlay(spark, dir)
-    val dv = if (applyDv) DeleteVectors.read(spark, dir)
-    else Map.empty[String, DeleteVectors.Dv]
-    // tag per LEG, before any union: _metadata resolves against a single
-    // file-source relation. Zero overhead when no vectors exist and no
-    // caller wants positions.
-    val needMeta = keepMeta || dv.nonEmpty
-    // mergeSchema when evolved: one holder dir can mix pre- and
-    // post-evolution files, and the sampled-footer schema would otherwise
-    // hide the physical column from half the rows
-    def rd(base: String, paths: Seq[String]): DataFrame = {
-      val df0 = readLeg(spark, base, paths, mergeSchema = overlay.nonEmpty)
-      applyOverlay(if (needMeta) DeleteVectors.tagMeta(df0) else df0, overlay)
-    }
-    val unioned =
-      if (entries.isEmpty) rd(dir, Seq(dir))
-      else {
-        val own =
-          if (hasDataFiles(spark, dir)) Seq(rd(dir, Seq(dir)))
-          else Seq.empty // retention can empty a version that still carries refs
-        val carried = entries.groupBy(_._1).toSeq.sortBy(_._1).map { case (h, es) =>
-          val vdir = holderDir(root, h)
-          rd(vdir, es.map(e => s"$vdir/${e._2}"))
-        }
-        (own ++ carried).reduce(_.unionByName(_))
-      }
-    if (dv.nonEmpty)
-      DeleteVectors.applyTo(spark, unioned, dv, compositeEntries(spark, root, n))
-    else unioned
-  }
+  private def snapshotOf(spark: SparkSession, root: String, n: Int) =
+    graft.sources.GraftSourceProvider.snapshot(spark, root, Some(n))
 
-  /** One read leg — `paths` under `basePath = base` — as Spark's parquet
-    * reader plans it, without the one-task footer job of its schema
-    * inference: unless schemas merge, the data schema comes from the
-    * footer Spark's inference would open, read on the driver
-    * ([[graft.sources.GraftSourceProvider.inferSchema]]). A footer that
-    * also holds a partition column keeps Spark's inference, which places
-    * that column at its data position rather than after the data columns.
+  /** Row count of `df` by scanning it — for commit and audit checks, which
+    * must read the data files: a plain `count()` over a snapshot relation
+    * may be answered from the stats sidecar
+    * ([[graft.plans.GraftMetadataAggregate]]), the very metadata such a
+    * check verifies.
     */
-  private def readLeg(spark: SparkSession, base: String, paths: Seq[String],
-      mergeSchema: Boolean): DataFrame = {
-    val r = spark.read.option("basePath", base)
-    if (mergeSchema) r.option("mergeSchema", "true").parquet(paths: _*)
-    else {
-      val index = new InMemoryFileIndex(spark, paths.map(new Path(_)),
-        Map("basePath" -> base), None)
-      val partCols = index.partitionSchema.fieldNames.map(_.toLowerCase).toSet
-      graft.sources.GraftSourceProvider.inferSchema(spark, Map.empty, index.allFiles())
-        .filterNot(_.fieldNames.exists(n => partCols(n.toLowerCase)))
-        .fold(r)(r.schema).parquet(paths: _*)
-    }
-  }
+  private[graft] def scanCount(df: DataFrame): Long =
+    df.select().queryExecution.toRdd.count()
 
-  /** DataFrame read of the live snapshot: composite read for versioned
-    * stores, plain read of a plain dir.
+  /** DataFrame read of the live snapshot: [[readVersion]] of the live
+    * version for versioned stores. A plain dir reads through Spark's own
+    * parquet reader, which honors a streaming sink's `_spark_metadata` log.
     */
   def readStore(spark: SparkSession, root: String): DataFrame =
     if (isPointerStore(spark, root))
@@ -650,17 +612,6 @@ object GraftStore {
     */
   private[logs] def visibleName(n: String): Boolean =
     !n.startsWith("_") && !n.startsWith(".")
-
-  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return false
-    val it = walkFiles(fs, p)
-    while (it.hasNext) {
-      if (visibleName(it.next().getPath.getName)) return true
-    }
-    false
-  }
 
   /** Physical DATA files of snapshot `n` (own + carried), keyed by
     * store-layout-relative path: a carried file keeps the SAME key across
@@ -687,15 +638,10 @@ object GraftStore {
       val fs = fsOf(spark, p)
       if (!fs.exists(p)) return Seq.empty
       val base = p.toUri.getPath
-      val it = walkFiles(fs, p)
-      val out = Seq.newBuilder[FileEntry]
-      while (it.hasNext) {
-        val f = it.next()
-        if (visibleName(f.getPath.getName))
-          out += FileEntry(keyPrefix + f.getPath.toUri.getPath.stripPrefix(base),
-            legBase, f.getPath.toString, f.getLen, f.getModificationTime)
-      }
-      out.result()
+      walkFiles(fs, p, dataOnly = true).map { f =>
+        FileEntry(keyPrefix + f.getPath.toUri.getPath.stripPrefix(base),
+          legBase, f.getPath.toString, f.getLen, f.getModificationTime)
+      }.toSeq
     }
     val dir = resolveVersion(spark, root, n)
     val own = list(dir, "", dir)
@@ -757,8 +703,8 @@ object GraftStore {
     val removed = (a.keySet -- b.keySet).toSeq.sorted
     SnapshotDiff(from, to, added, removed,
       bytesAdded = added.map(b).sum, bytesRemoved = removed.map(a).sum,
-      rowDelta = readVersion(spark, root, to).count() -
-        readVersion(spark, root, from).count())
+      rowDelta = scanCount(readVersion(spark, root, to)) -
+        scanCount(readVersion(spark, root, from)))
   }
 
   /** Row-level CDC between two retained snapshots: every row added or
@@ -809,21 +755,12 @@ object GraftStore {
     val overlays =
       (readSchemaOverlay(spark, resolveVersion(spark, root, from)) ++
         readSchemaOverlay(spark, resolveVersion(spark, root, to))).distinct
-    def readSide(m: Map[String, FileEntry], dv: Map[String, DeleteVectors.Dv])
-        : Option[DataFrame] = {
-      val keys = touched.intersect(m.keySet)
-      val sideDv = dv.filter { case (k, _) => keys(k) }
-      keys.groupBy(k => m(k).legBase).map {
-        case (base, ks) =>
-          val df0 = readLeg(spark, base, ks.map(m(_).physical).toSeq.sorted,
-            mergeSchema = overlays.nonEmpty)
-          applyOverlay(
-            if (sideDv.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlays)
-      }.reduceOption(_.unionByName(_)).map { df =>
-        if (sideDv.nonEmpty)
-          DeleteVectors.applyTo(spark, df, sideDv, keys.toSeq.map(m))
-        else df
-      }
+    // each side reads the snapshot relation restricted to its touched files
+    // (the vectors of untouched files match no row there)
+    def readSide(n: Int, m: Map[String, FileEntry]): Option[DataFrame] = {
+      val side = touched.intersect(m.keySet).toSeq.sorted.map(m)
+      Option.when(side.nonEmpty)(applyOverlay(graft.sources.GraftSourceProvider
+        .snapshot(spark, root, Some(n), files = Some(side)).rows, overlays))
     }
     // `_change` is the diff's RESERVED output name (the working columns
     // below collision-proof themselves via free(), but the output tag is
@@ -835,8 +772,8 @@ object GraftStore {
           "already has a data column of that name")
       df
     }
-    val tagged = (readSide(a, dvA).map(reserveChange),
-        readSide(b, dvB).map(reserveChange)) match {
+    val tagged = (readSide(from, a).map(reserveChange),
+        readSide(to, b).map(reserveChange)) match {
       case (Some(f), Some(t)) =>
         // ONE scan per side: a t.exceptAll(f) / f.exceptAll(t) pair would
         // each rewrite to its own union+count aggregate, scanning every

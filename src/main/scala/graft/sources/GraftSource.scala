@@ -21,11 +21,14 @@ import scala.util.control.NonFatal
   * store as an ordinary Spark data source (registered short name, so plain
   * SQL `CREATE TABLE ... USING graft` works too).
   *
-  * This is the store's one snapshot read: `y-logcli`'s hive queries
-  * ([[graft.logs.LogQuery]]) plan through it, and so does a reference
-  * operator switching to the library — every store behavior (composite
-  * manifests, schema overlays, deletion vectors, stats-based data skipping)
-  * applies without the reader knowing any of those exist. Reference anchor:
+  * This is the store's one snapshot read
+  * ([[GraftSourceProvider.snapshot]]): `y-logcli`'s hive queries
+  * ([[graft.logs.LogQuery]]), every [[GraftStore.readStore]] /
+  * `readVersion*` read of the store jobs, and [[GraftStore.rowDiff]]'s
+  * sides plan through it, and so does a reference operator switching to
+  * the library — every store behavior (composite manifests, schema
+  * overlays, deletion vectors, stats-based data skipping) applies without
+  * the reader knowing any of those exist. Reference anchor:
   * the reader side of the store contract (`y-logcli:106-123` resolves globs
   * against the committed tree; here the committed tree resolves against
   * `_current`).
@@ -243,94 +246,7 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
         case Some(ms) => GraftStore.versionAsOf(spark, root, ms)
         case None => GraftStore.liveVersionOf(spark, root)
       }))
-    val dir = version match {
-      case Some(v) => GraftStore.resolveVersion(spark, root, v)
-      case None => root
-    }
-    val entries = version match {
-      case Some(v) => GraftStore.compositeEntries(spark, root, v)
-      case None => FileStats.listDirEntries(spark, root)
-    }
-    val overlay = GraftStore.readSchemaOverlay(spark, dir)
-    val statsByKey = FileStats.read(spark, dir)
-    val statsByPhysical = entries.flatMap { e =>
-      statsByKey.get(e.key).filter(_.len == e.len)
-        .map(s => GraftFileIndex.normPath(e.physical) -> s)
-    }.toMap
-    val legDirs = entries.map(_.legBase).distinct.sorted.map(new Path(_))
-    val index = new GraftFileIndex(spark, legDirs, entries, statsByPhysical)
-    val fmtOptions =
-      if (overlay.nonEmpty) Map("mergeSchema" -> "true") else Map.empty[String, String]
-    val partCols = index.partitionSchema.fieldNames.toSet
-    // an empty snapshot (freshly initialized store, or a first append that
-    // committed zero files) is an empty DataFrame, not an error — like any
-    // parquet/Delta reader; its schema comes from the user or the overlay
-    val inferred: StructType = userSchema.getOrElse {
-      if (entries.isEmpty) new StructType()
-      else GraftSourceProvider.inferSchema(spark, fmtOptions, index.allFiles())
-        .getOrElse(throw new IllegalStateException(
-          s"could not infer a parquet schema for $root"))
-    }
-    val dataSchema = overlay.foldLeft(
-      StructType(inferred.filterNot(f => partCols(f.name)))) { case (s, (n, t)) =>
-      if (s.fieldNames.contains(n) || partCols(n)) s
-      else s.add(n, DataType.fromDDL(t), nullable = true)
-    }
-    require(dataSchema.nonEmpty || partCols.nonEmpty,
-      s"$root is empty and declares no schema — pass .schema(...) or commit data first")
-    // bucket-layout claim ([[ClusterSpec.BucketBy]] maintenance): honored
-    // only when every snapshot file's NAME parses a bucket id < N with
-    // Spark's own parser (graftshim.GraftShim.bucketId) — a plain append or
-    // an unbucketed carried partition fails the claim open to an ordinary
-    // scan. When honored, the relation reports
-    // HashPartitioning(key, N), so joins/aggregates on the bucket key plan
-    // with ZERO shuffle exchanges — the 100 TB co-located-join story served
-    // directly from the store.
-    val bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
-      GraftStore.readBucketSpec(spark, dir).collect {
-        case (key, n) if entries.nonEmpty &&
-            dataSchema.fieldNames.contains(key) &&
-            entries.forall(e =>
-              org.apache.spark.sql.graftshim.GraftShim
-                .bucketId(new Path(e.physical).getName)
-                .exists(b => b >= 0 && b < n)) =>
-          org.apache.spark.sql.catalyst.catalog.BucketSpec(n, Seq(key), Seq(key))
-      }
-    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema, bucketSpec,
-      new ParquetFileFormat, fmtOptions)(spark)
-
-    val dv = DeleteVectors.read(spark, dir)
-    if (dv.nonEmpty) {
-      // merge-on-read debt: the vector filter is a DataFrame operator, so
-      // the native file-scan tier can't express it — delegate a frame until
-      // compaction materializes the vectors. The delegate scans through the
-      // SAME manifest-derived GraftFileIndex as the fast tier (one relation,
-      // so `_metadata` resolves directly; partition column types pinned from
-      // the manifest — INDEPENDENT of the session's
-      // partitionColumnTypeInference conf, which a concurrent maintenance
-      // clone may legitimately differ on), with the vectors applied on top.
-      val df = DeleteVectors.applyTo(spark,
-        DeleteVectors.tagMeta(spark.baseRelationToDataFrame(relation)),
-        dv, entries)
-      // DV-aware metadata tier: the deletes sidecar knows EXACT per-file
-      // deleted counts, so live row counts are physical(stats) − deleted —
-      // [[GraftMetadataAggregate]] keeps answering COUNT with zero I/O even
-      // under merge-on-read debt. Built only when the snapshot is fully
-      // self-describing: fresh stats on every file, every vector keyed to a
-      // present entry with matching length (a mismatch must FAIL the scan,
-      // never be answered around).
-      val dvMeta: Option[GraftDvMeta] = {
-        val byKey = entries.map(e => (e.key, e)).toMap
-        val consistent = dv.forall { case (k, v) =>
-          byKey.get(k).forall(_.len == v.len)
-        }
-        if (!consistent) None
-        else index.statsWithDeletes(dv.map { case (k, v) => (k, v.positions) })
-          .map(GraftDvMeta(index.partitionSchema, _))
-      }
-      return new GraftFrameRelation(sqlContext, df, dvMeta)
-    }
-    relation
+    GraftSourceProvider.snapshot(spark, root, version, userSchema).relation
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -409,6 +325,129 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
 }
 
 private[graft] object GraftSourceProvider {
+
+  /** One resolved snapshot of a store: the fast-tier relation over its
+    * [[GraftFileIndex]].
+    *
+    * @param dir the version directory the sidecars are read from (the root
+    *            itself for a plain directory)
+    */
+  final class Snapshot(spark: SparkSession, dir: String,
+      entries: Seq[GraftStore.FileEntry], index: GraftFileIndex,
+      val fast: HadoopFsRelation) {
+
+    private lazy val dv = DeleteVectors.read(spark, dir)
+
+    /** The snapshot's rows: the fast-tier scan, with pending deletion
+      * vectors applied as a filter over it.
+      */
+    def rows: DataFrame = {
+      val scan = spark.baseRelationToDataFrame(fast)
+      if (dv.isEmpty) scan
+      else DeleteVectors.applyTo(spark, DeleteVectors.tagMeta(scan), dv, entries)
+    }
+
+    /** [[rows]] as one relation: the fast tier, or under pending deletion
+      * vectors the frame tier over [[rows]] — the vector filter is a
+      * DataFrame operator the native file-scan tier can't express, so
+      * merge-on-read debt costs this detour until compaction materializes
+      * the vectors.
+      */
+    def relation: BaseRelation = {
+      if (dv.isEmpty) return fast
+      // DV-aware metadata tier: the deletes sidecar knows EXACT per-file
+      // deleted counts, so live row counts are physical(stats) − deleted —
+      // [[GraftMetadataAggregate]] keeps answering COUNT with zero I/O even
+      // under merge-on-read debt. Built only when the snapshot is fully
+      // self-describing: fresh stats on every file, every vector keyed to a
+      // present entry with matching length (a mismatch must FAIL the scan,
+      // never be answered around).
+      val byKey = entries.map(e => (e.key, e)).toMap
+      val consistent = dv.forall { case (k, v) => byKey.get(k).forall(_.len == v.len) }
+      val dvMeta =
+        if (!consistent) None
+        else index.statsWithDeletes(dv.map { case (k, v) => (k, v.positions) })
+          .map(GraftDvMeta(index.partitionSchema, _))
+      new GraftFrameRelation(spark.sqlContext, rows, dvMeta)
+    }
+  }
+
+  /** THE snapshot read, built on the driver: `version` of the store at
+    * `root` (`None` = `root` is a plain directory) → its data files, schema
+    * overlay, stats, bucket claim and [[GraftFileIndex]], with no Spark job
+    * unless schemas merge. `format("graft")` and every
+    * [[GraftStore.readVersion]]-family read plan through it.
+    *
+    * @param files a subset of the snapshot's files, to read only those
+    */
+  def snapshot(spark: SparkSession, root: String, version: Option[Int],
+      userSchema: Option[StructType] = None,
+      files: Option[Seq[GraftStore.FileEntry]] = None): Snapshot = {
+    val dir = version.fold(root)(GraftStore.resolveVersion(spark, root, _))
+    val entries = files.getOrElse(version.fold(FileStats.listDirEntries(spark, root))(
+      GraftStore.compositeEntries(spark, root, _)))
+    val overlay = GraftStore.readSchemaOverlay(spark, dir)
+    val statsByKey = FileStats.read(spark, dir)
+    val statsByPhysical = entries.flatMap { e =>
+      statsByKey.get(e.key).filter(_.len == e.len)
+        .map(s => GraftFileIndex.normPath(e.physical) -> s)
+    }.toMap
+    val legDirs = entries.map(_.legBase).distinct.sorted.map(new Path(_))
+    val index = new GraftFileIndex(spark, legDirs, entries, statsByPhysical)
+    // mergeSchema when evolved: one holder dir can mix pre- and
+    // post-evolution files, and one sampled footer would hide the physical
+    // column from half the rows
+    val fmtOptions =
+      if (overlay.nonEmpty) Map("mergeSchema" -> "true") else Map.empty[String, String]
+    val partCols = index.partitionSchema.fieldNames.toSet
+    // the footer is the one Spark's read of the FIRST leg (the version's own
+    // directory, else the first carried holder) opens. A footer that also
+    // holds a partition column keeps it in the data schema, where
+    // HadoopFsRelation places it at its data position, as Spark's reader
+    // does; a user schema's partition columns go last, as in Spark.
+    val firstLeg = entries.map(_.legBase).minByOption(b => (b != dir, b))
+    // an empty snapshot (freshly initialized store, or a first append that
+    // committed zero files) is an empty DataFrame, not an error — like any
+    // parquet/Delta reader; its schema comes from the user or the overlay
+    val inferred: StructType = userSchema
+      .map(s => StructType(s.filterNot(f => partCols(f.name))))
+      .getOrElse {
+        if (entries.isEmpty) new StructType()
+        else inferSchema(spark, fmtOptions, entries
+            .filter(e => overlay.nonEmpty || firstLeg.contains(e.legBase))
+            .map(GraftFileIndex.statusOf))
+          .getOrElse(throw new IllegalStateException(
+            s"could not infer a parquet schema for $root"))
+      }
+    val dataSchema = overlay.foldLeft(inferred) { case (s, (n, t)) =>
+      if (s.fieldNames.contains(n) || partCols(n)) s
+      else s.add(n, DataType.fromDDL(t), nullable = true)
+    }
+    require(dataSchema.nonEmpty || partCols.nonEmpty,
+      s"$root is empty and declares no schema — pass .schema(...) or commit data first")
+    // bucket-layout claim ([[ClusterSpec.BucketBy]] maintenance): honored
+    // only when every snapshot file's NAME parses a bucket id < N with
+    // Spark's own parser (graftshim.GraftShim.bucketId) — a plain append or
+    // an unbucketed carried partition fails the claim open to an ordinary
+    // scan. When honored, the relation reports
+    // HashPartitioning(key, N), so joins/aggregates on the bucket key plan
+    // with ZERO shuffle exchanges — the 100 TB co-located-join story served
+    // directly from the store.
+    val bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
+      GraftStore.readBucketSpec(spark, dir).collect {
+        case (key, n) if entries.nonEmpty &&
+            dataSchema.fieldNames.contains(key) &&
+            entries.forall(e =>
+              org.apache.spark.sql.graftshim.GraftShim
+                .bucketId(new Path(e.physical).getName)
+                .exists(b => b >= 0 && b < n)) =>
+          org.apache.spark.sql.catalyst.catalog.BucketSpec(n, Seq(key), Seq(key))
+      }
+    new Snapshot(spark, dir, entries, index,
+      HadoopFsRelation(index, index.partitionSchema,
+        org.apache.spark.sql.graftshim.GraftShim.asNullable(dataSchema), bucketSpec,
+        new ParquetFileFormat, fmtOptions)(spark))
+  }
 
   /** The data schema `ParquetFileFormat.inferSchema` reports for `files`,
     * without its Spark job. Unless schemas merge (the option, or the
@@ -507,10 +546,6 @@ private[graft] class GraftFileIndex(
     })
   }
 
-  private def statusOf(e: GraftStore.FileEntry): FileStatus =
-    new FileStatus(e.len, false, 1, DefaultBlockSize,
-      e.mtime, new Path(e.physical))
-
   /** (partition values row, its files) — the snapshot's partition dirs. */
   private val partitions: Seq[(InternalRow, Seq[Any], Seq[GraftStore.FileEntry])] =
     perEntryKv.groupBy(_._2.map(_._2)).toSeq.sortBy(_._1.mkString("/"))
@@ -530,8 +565,6 @@ private[graft] class GraftFileIndex(
   override lazy val sizeInBytes: Long = entries.map(_.len).sum
 
   override def inputFiles: Array[String] = entries.map(_.physical).toArray
-
-  def allFiles(): Seq[FileStatus] = entries.map(statusOf)
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -627,6 +660,9 @@ private[graft] object GraftFileIndex {
   val DefaultBlockSize: Long = 128L * 1024 * 1024
 
   private[sources] def normPath(p: String): String = new Path(p).toUri.getPath
+
+  def statusOf(e: GraftStore.FileEntry): FileStatus =
+    new FileStatus(e.len, false, 1, DefaultBlockSize, e.mtime, new Path(e.physical))
 
   /** Hive percent-escaping, decoded (the engine writes alnum/dash values,
     * but pod names and labels can carry escapables).
@@ -962,15 +998,19 @@ private[graft] object GraftFileIndex {
   * pushed INTO the delegate, where they reach its parquet scans natively;
   * Spark re-applies every filter above ([[BaseRelation.unhandledFilters]]
   * default), so the translation is an optimization with no correctness
-  * surface.
+  * surface. Its input files are the delegate's, so `Dataset.inputFiles`
+  * names the snapshot's files on this tier too.
   */
 private[graft] class GraftFrameRelation(
     override val sqlContext: SQLContext, df: DataFrame,
     /** DV-tier metadata-count surface — see [[GraftDvMeta]]. */
     val dvMeta: Option[GraftDvMeta] = None)
-  extends BaseRelation with PrunedFilteredScan {
+  extends BaseRelation with PrunedFilteredScan
+    with org.apache.spark.sql.execution.FileRelation {
 
   override def schema: StructType = df.schema
+
+  override def inputFiles: Array[String] = df.inputFiles
 
   // the delegate's rows stay in Tungsten format end to end: with
   // needConversion=false the contract is an RDD of InternalRow (the same

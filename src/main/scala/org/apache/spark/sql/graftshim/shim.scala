@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between the public `Column` API and catalyst `Expression`s.
   *
@@ -26,4 +27,10 @@ object GraftShim {
     */
   def bucketId(fileName: String): Option[Int] =
     org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId(fileName)
+
+  /** `StructType.asNullable` (`private[spark]`): Spark's file sources read
+    * every data column as nullable, whatever a footer declares, and the
+    * store's snapshot relation declares its data schema the same way.
+    */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

@@ -51,7 +51,7 @@ class GraftSourceSpec extends SparkSpec {
     val got = spark.read.format("graft").load(root)
     // the read plans a native file scan (vectorized parquet, not an RDD shim)
     scanExec(got.filter($"time_ns" > 0L))
-    assert(sortedRows(got) == sortedRows(GraftStore.readStore(spark, root)))
+    assert(sortedRows(got) == sortedRows(inferredRead(root)))
     // partition columns parse per leg like the engine's basePath reads
     assert(got.schema.fieldNames.toSet.intersect(parts.toSet) == parts.toSet)
   }
@@ -60,10 +60,10 @@ class GraftSourceSpec extends SparkSpec {
     val root = newRoot("skip")
     val df = fixture()
     LogIngest.writeHive(df, root, partitionCols = parts)
-    val total = GraftStore.readStore(spark, root).inputFiles.length
+    val total = inferredRead(root).inputFiles.length
     val cutoff = df.agg(max($"time_ns")).as[Long].head() - 7L * 86400 * 1000000000L
     val q = spark.read.format("graft").load(root).filter($"time_ns" >= cutoff)
-    val expect = GraftStore.readStore(spark, root).filter($"time_ns" >= cutoff)
+    val expect = inferredRead(root).filter($"time_ns" >= cutoff)
     assert(sortedRows(q) == sortedRows(expect), "skipping must not change results")
     q.collect()
     val numFiles = scanExec(q).metrics("numFiles").value
@@ -86,7 +86,7 @@ class GraftSourceSpec extends SparkSpec {
     val v2 = GraftStore.liveVersionOf(spark, root)
     assert(v2 > v1)
     val old = spark.read.format("graft").option("versionAsOf", v1.toString).load(root)
-    assert(sortedRows(old) == sortedRows(GraftStore.readVersion(spark, root, v1)))
+    assert(sortedRows(old) == sortedRows(inferredRead(root, Some(v1))))
     val t1 = GraftStore.commitTimeOf(spark, root, v1)
     val asOf = spark.read.format("graft").option("timestampAsOf", t1.toString).load(root)
     assert(asOf.count() == old.count())
@@ -458,7 +458,7 @@ class GraftSourceSpec extends SparkSpec {
         commitId = Some("src-ptr-1"))
       val got = spark.read.format("graft").load(root)
       scanExec(got.filter($"time_ns" > 0L)) // native file scan, multi-leg index
-      assert(sortedRows(got) == sortedRows(GraftStore.readStore(spark, root)))
+      assert(sortedRows(got) == sortedRows(inferredRead(root)))
       // stats skipping works across legs on the object-store tier too
       val cutoff = df.agg(max($"time_ns")).as[Long].head() - 7L * 86400 * 1000000000L
       val q = got.filter($"time_ns" >= cutoff)
@@ -473,7 +473,7 @@ class GraftSourceSpec extends SparkSpec {
     LogIngest.writeHive(df, root, partitionCols = parts)
     val cutoff = df.agg(max($"time_ns")).as[Long].head() - 7L * 86400 * 1000000000L
     val got = spark.read.format("graft").option("sinceNs", cutoff.toString).load(root)
-    val expect = GraftStore.readStore(spark, root).filter($"time_ns" >= cutoff)
+    val expect = inferredRead(root).filter($"time_ns" >= cutoff)
     assert(got.count() == expect.count())
     val gotPod = spark.read.format("graft")
       .option("sinceNs", cutoff.toString).option("pod", "pod-2").load(root)

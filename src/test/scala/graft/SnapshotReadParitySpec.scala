@@ -16,12 +16,12 @@ import java.nio.file.Files
 /** The hive query path plans through the store's snapshot relation
   * (`format("graft")`), whose schema is resolved on the driver from one
   * footer, and sorts a small pruned scan in its one scan task
-  * ([[SmallScanSort]]). Parities pin it to what it replaced: the driver
-  * schema equals Spark's own parquet inference, and `LogQuery`'s output
-  * equals the same row-level query over [[GraftStore.readStore]] — whose
-  * sort keeps Spark's range exchange — row for row and in order.
-  * `readStore` itself resolves each leg's schema on the driver too, and
-  * matches Spark's per-leg inference.
+  * ([[SmallScanSort]]). Parities pin it to Spark's own reader: the driver
+  * schema equals Spark's parquet inference, and `LogQuery`'s output equals
+  * the same row-level query over Spark's per-leg read of the snapshot
+  * ([[SparkSpec.inferredRead]]) — whose sort keeps Spark's range exchange —
+  * row for row and in order. [[GraftStore.readStore]], which plans through
+  * the same snapshot relation, matches that read too.
   */
 class SnapshotReadParitySpec extends SparkSpec {
   import spark.implicits._
@@ -66,16 +66,17 @@ class SnapshotReadParitySpec extends SparkSpec {
   }
 
   /** `q` over the snapshot relation vs the same row-level query over
-    * `readStore`: identical rows in identical `time_ns` order. The
-    * reference keeps the range exchange; with `oneTask` the snapshot side
-    * plans no exchange and renders in exactly one job, otherwise it keeps
-    * the exchange plan too. Returns the snapshot-side frame.
+    * Spark's own per-leg read ([[inferredRead]]): identical rows in
+    * identical `time_ns` order. The reference keeps the range exchange;
+    * with `oneTask` the snapshot side plans no exchange and renders in
+    * exactly one job, otherwise it keeps the exchange plan too. Returns the
+    * snapshot-side frame.
     */
   private def assertQueryParity(root: String, q: LogQuery,
       limit: Option[Int] = None, oneTask: Boolean = true): DataFrame = {
     def lim(df: DataFrame) = limit.fold(df)(df.limit)
     val got = lim(q.dataFrame(spark, root))
-    val ref = lim(q.selectFrom(GraftStore.readStore(spark, root)))
+    val ref = lim(q.selectFrom(inferredRead(root)))
     val want = ref.collect().toSeq
     assert(want.nonEmpty, s"$q: empty reference result")
     assert(got.collect().toSeq == want, s"$q: snapshot read differs from readStore")
@@ -286,19 +287,6 @@ class SnapshotReadParitySpec extends SparkSpec {
     assert(render(df.limit(5), LogOutput.Raw) == 0)
   }
 
-  /** The live snapshot read with Spark's own parquet inference per leg:
-    * `readStore`'s plan before it resolved leg schemas on the driver.
-    */
-  private def inferredRead(root: String): DataFrame = {
-    val n = GraftStore.currentVersion(spark, root)
-    val own = GraftStore.resolveVersion(spark, root, n)
-    GraftStore.compositeEntries(spark, root, n).groupBy(_.legBase).toSeq
-      .sortBy { case (base, _) => (base != own, base) }
-      .map { case (base, es) =>
-        spark.read.option("basePath", base).parquet(es.map(_.physical).sorted: _*)
-      }.reduce(_.unionByName(_))
-  }
-
   test("readStore resolves leg schemas on the driver: same schema and rows, no job") {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     def check(tag: String, batch: DataFrame): String = {
@@ -330,4 +318,79 @@ class SnapshotReadParitySpec extends SparkSpec {
     assert(got.schema == want.schema, s"overlap: ${got.schema} vs ${want.schema}")
     assert(rows(got) == rows(want) && rows(got).size == 243, "overlap: rows differ")
   }
+
+  /** A two-commit store: v1's own files plus a carried append leg. */
+  private def multiLeg(tag: String): String = {
+    val root = newRoot(tag)
+    val half = $"time_ns" < t0 + 120 * stepNs
+    LogIngest.writeHive(fixture().filter(half), root, partitionCols = parts)
+    LogIngest.writeHive(fixture().filter(!half), root, partitionCols = parts)
+    root
+  }
+
+  test("every store read plans one GraftFileIndex scan, no union of parquet reads") {
+    val root = multiLeg("one-scan")
+    val n = GraftStore.currentVersion(spark, root)
+    val reads = Seq(
+      "readStore" -> GraftStore.readStore(spark, root),
+      "readVersion" -> GraftStore.readVersion(spark, root, n),
+      "readVersionPhysical" -> GraftStore.readVersionPhysical(spark, root, n),
+      "readVersionTagged" -> GraftStore.readVersionTagged(spark, root, n))
+    reads.foreach { case (name, df) =>
+      assert(df.count() == 240, s"$name: rows")
+      val scans = PlanScans.fileScans(df.filter($"time_ns" > 0L))
+      assert(scans.size == 1 &&
+        scans.head.relation.location.isInstanceOf[graft.sources.GraftFileIndex],
+        s"$name: expected one GraftFileIndex scan, got $scans")
+      assert(!df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+        s"$name: planned a union")
+    }
+  }
+
+  test("a version directory's _spark_metadata log is not data") {
+    val root = newRoot("sink-log")
+    LogIngest.writeHive(fixture(), root, partitionCols = parts)
+    // what a copy of a streaming sink's output into v000001 leaves behind
+    val log = new Path(GraftStore.resolve(spark, root), "_spark_metadata/0")
+    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(log)
+    try out.write(("v1\n{\"path\":\"file:///elsewhere/part-0.parquet\",\"size\":1," +
+      "\"isDir\":false,\"modificationTime\":0,\"blockReplication\":1," +
+      "\"blockSize\":1,\"action\":\"add\"}").getBytes("UTF-8"))
+    finally out.close()
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val graftRows = rows(spark.read.format("graft").load(root))
+    assert(graftRows.size == 240)
+    assert(rows(GraftStore.readStore(spark, root)) == graftRows)
+    assert(!GraftStore.readStore(spark, root).inputFiles.exists(_.contains("_spark_metadata")))
+  }
+
+  test("pending deletion vectors keep the snapshot's input files") {
+    val root = multiLeg("dv-files")
+    val before = spark.read.format("graft").load(root).inputFiles.toSet
+    assert(before.nonEmpty)
+    DeleteVectors.deleteWhere(spark, root, $"message".endsWith("7"))
+    assert(DeleteVectors.read(spark, GraftStore.resolve(spark, root)).nonEmpty,
+      "the store must carry pending deletion vectors")
+    assert(spark.read.format("graft").load(root).inputFiles.toSet == before)
+    assert(GraftStore.readStore(spark, root).inputFiles.toSet == before)
+  }
+
+  test("diffVersions counts rows from the data files, not the stats sidecar") {
+    val root = multiLeg("audit")
+    Compaction.compactHive(spark, root, partitionCols = parts, full = true)
+    val to = GraftStore.currentVersion(spark, root)
+    val from = GraftStore.listVersions(spark, root).filter(_ < to).max
+    assert(GraftStore.diffVersions(spark, root, from, to).rowDelta == 0L)
+    // one stats line claims 1000 more rows: same key, same length
+    val dir = GraftStore.resolve(spark, root)
+    val stats = FileStats.read(spark, dir)
+    val (key, st) = stats.head
+    FileStats.write(spark, dir, (stats + (key -> st.copy(rows = st.rows + 1000L))).values.toSeq)
+    assert(GraftStore.readVersion(spark, root, to).count() == 240L + 1000L,
+      "the metadata tier must answer a query-level count from the edited sidecar")
+    assert(GraftStore.diffVersions(spark, root, from, to).rowDelta == 0L)
+  }
 }
+

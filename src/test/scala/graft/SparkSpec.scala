@@ -31,6 +31,26 @@ trait SparkSpec extends AnyFunSuite {
       .option("maxRecordsPerFile", maxRecordsPerFile).options(options)
       .mode("append").parquet(logs.GraftStore.resolve(spark, root))
 
+  /** Snapshot `version` (default: the live one) of a versioned store read
+    * by Spark's own parquet reader: one `basePath` read per leg, the
+    * version's own directory first, partition types inferred by Spark,
+    * unioned by name, pending deletion vectors applied — the reference the
+    * store's snapshot relation is checked against.
+    */
+  def inferredRead(root: String, version: Option[Int] = None): DataFrame = {
+    val n = version.getOrElse(logs.GraftStore.currentVersion(spark, root))
+    val own = logs.GraftStore.resolveVersion(spark, root, n)
+    val entries = logs.GraftStore.compositeEntries(spark, root, n)
+    val dv = logs.DeleteVectors.read(spark, own)
+    val legs = entries.groupBy(_.legBase).toSeq
+      .sortBy { case (base, _) => (base != own, base) }
+      .map { case (base, es) =>
+        val leg = spark.read.option("basePath", base).parquet(es.map(_.physical).sorted: _*)
+        if (dv.isEmpty) leg else logs.DeleteVectors.tagMeta(leg)
+      }.reduce(_.unionByName(_))
+    if (dv.isEmpty) legs else logs.DeleteVectors.applyTo(spark, legs, dv, entries)
+  }
+
   /** Files the executed scans of `df` read: their `numFiles` metric after
     * a collect. (A file index's `inputFiles` lists the whole snapshot, not
     * what a pruned scan opened.)
