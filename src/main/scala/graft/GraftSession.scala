@@ -58,15 +58,6 @@ object GraftSession {
     val sess = batch.sparkSession
     if (!isTuningOverridden("spark.sql.adaptive.enabled"))
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-    // the body's per-batch index reads list slice trees bounded by the
-    // compaction contract (≤ maxIndexSlices × bucket fan-out ≈ 512 dirs):
-    // Spark's default 32-path threshold launched a parallel-listing JOB for
-    // every such read — 9 jobs per cold d11 gate, pure fixed cost. Listing
-    // a few hundred bounded paths on the driver is strictly cheaper; data-
-    // scale directories (store versions with thousands of files) still
-    // exceed the raised threshold and keep the distributed listing.
-    if (!isTuningOverridden("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-      sess.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     // mark the clone as a stream-body session: batch operators that learn
     // their trigger's cardinality may size per-batch tuning (shuffle width)
     // on it — batches are sequential per query and the clone is never a
@@ -116,7 +107,11 @@ object GraftSession {
     * The steps are idempotent, so two threads racing on a fresh session
     * install the same state.
     */
-  def configure(spark: SparkSession): SparkSession = {
+  def configure(spark: SparkSession): SparkSession = configure(spark, confOverrides)
+
+  /** [[configure]] with `overrides` in place of SPARK_GRAFT_CONF's. */
+  private[graft] def configure(spark: SparkSession,
+      overrides: Map[String, String]): SparkSession = {
     if (spark.conf.getOption(ConfiguredKey).isDefined) return spark
     // The reference stores Timestamp(ns) (compact_columns.c:69-93); parquet
     // TIMESTAMP(NANOS) is unreadable by Spark's µs TimestampType unless read
@@ -134,9 +129,18 @@ object GraftSession {
     // runtime skew-join splitting: hot keys (one pod flooding logs, one
     // boilerplate shingle) re-plan into split partitions at execution time
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    // list up to 1024 root paths on the driver instead of in a Spark job.
+    // A file stream source lists with the session it was created on, at
+    // least twice per trigger (offsets, then the batch relation), and at
+    // Spark's default of 32 each listing of a CRI tail's few dozen
+    // container files was a job of ~300 ms; stream-body index reads list
+    // slice trees of a few hundred dirs. Stream clones inherit the setting. Data-scale
+    // listings (store versions with thousands of files) still exceed it
+    // and keep the distributed listing.
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     GraftExtensions.register(spark)
     registerRules(spark)
-    applyConfOverrides(spark, confOverrides)
+    applyConfOverrides(spark, overrides)
     spark.conf.set(ConfiguredKey, "true")
     spark
   }

@@ -1,10 +1,8 @@
 package graft.logs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Atomic batch appends to versioned stores: append-as-commit.
   *
@@ -85,14 +83,16 @@ object AppendCommit {
       fs.delete(stagingPath, true)
     }
     stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    val stagedRows = countStaged(spark, stagingPath)
+    // the one footer pass over the staged files, on the driver: it gives
+    // the staged row count and the staged files' stats lines
+    val staged = FileStats.collectStaged(spark, FileStats.listDirEntries(spark, stagingDir))
+    val stagedRows = staged.iterator.map(_.rows).sum
     if (stagedRows == 0L) {
       fs.delete(stagingPath, true)
       return Committed(GraftStore.currentVersion(spark, root), 0L, replayed = false)
     }
     val depth = partitionCols.length
-    val stagedLeaves =
-      Compaction.partitionLeaves(fs, stagingPath, depth).map(_._1)
+    val stagedLeaves = Compaction.leavesOf(staged.map(_.key), depth)
     require(stagedLeaves.nonEmpty,
       s"staged append has rows but no partition dirs at depth $depth — " +
         s"partitionCols mismatch with the store layout?")
@@ -128,17 +128,18 @@ object AppendCommit {
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("append",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
         System.currentTimeMillis()))
-      // per-file pruning stats, O(delta): carried files reuse the
-      // predecessor's lines by (key, len); only the staged files are
-      // footer-read. Written pre-flip so stats publish atomically with the
-      // snapshot — and BEFORE the verify below, which they accelerate.
+      // per-file pruning stats, O(delta) and with no footer read: carried
+      // files reuse the predecessor's lines by (key, len), staged files the
+      // lines of the footer pass above. Written pre-flip so stats publish
+      // atomically with the snapshot — and BEFORE the verify below, which
+      // they accelerate.
       val nextEntries = GraftStore.compositeEntries(spark, root, next)
       // deletion vectors ride the carry: every predecessor file is still in
       // the snapshot, so the sidecar carries whole (staged files are new and
       // vector-free by construction)
       DeleteVectors.carryInto(spark, curDir, nextDir, nextEntries.map(_.key).toSet)
       FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, curDir))
+        FileStats.read(spark, curDir) ++ staged.map(s => s.key -> s))
       if (verifyCounts) {
         // counts from the stats sidecar when it fully covers the snapshot
         // (metadata-object reads), falling back to footer counting — the
@@ -151,12 +152,9 @@ object AppendCommit {
         // PHYSICAL counts on both sides: the stats sidecar counts stored
         // rows, and deletion vectors (carried unchanged) cancel out of the
         // prev-vs-staged comparison
-        val prevRows =
-          if (GraftStore.compositeEntries(spark, root, cur).isEmpty) 0L
-          else FileStats.rowCountFromStats(spark, root, cur)
-            .getOrElse(GraftStore.readVersionPhysical(spark, root, cur).count())
-        val stagedTotal = FileStats.rowCountFromStats(spark, root, next)
-          .getOrElse(GraftStore.readVersionPhysical(spark, root, next).count())
+        val prevRows = FileStats.physicalRows(spark, root, cur,
+          GraftStore.compositeEntries(spark, root, cur))
+        val stagedTotal = FileStats.physicalRows(spark, root, next, nextEntries)
         if (stagedTotal != prevRows + stagedRows)
           abort(s"staged snapshot holds $stagedTotal rows, expected " +
             s"$prevRows + $stagedRows; aborting with $curDir live")
@@ -174,27 +172,6 @@ object AppendCommit {
         .filter(_ < next).takeRight(retainSnapshots).toSet + next)
       Committed(next, stagedRows, replayed = false)
     }
-  }
-
-  /** Staged row count: the footer row counts of the staged data files,
-    * summed on the driver (a recursive walk over the just-written staging
-    * tree). A ZERO-ROW batch (an idle micro-batch, a filtered-out
-    * partition) stages only `_SUCCESS` and counts 0. Spark's reader would
-    * skip the staging dir itself: its `_append-` name marks it hidden.
-    */
-  private[logs] def countStaged(spark: SparkSession, stagingPath: Path): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = stagingPath.getFileSystem(conf)
-    def rows(p: Path): Long =
-      fs.listStatus(p).iterator.filter(s => Compaction.visible(s.getPath.getName))
-        .map { s =>
-          if (s.isDirectory) rows(s.getPath)
-          else {
-            val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-            try reader.getRecordCount finally reader.close()
-          }
-        }.sum
-    rows(stagingPath)
   }
 
   /** Stage the batch under `stagingDir` with the store's physical write

@@ -269,6 +269,18 @@ object Compaction {
     if (!fs.exists(root)) Seq.empty else walk(root, "", depth)
   }
 
+  /** The [[partitionLeaves]] names for already-listed files, from their
+    * dir-relative keys (`/k=v/k2=v2/part-….parquet`) and with no listing:
+    * the distinct `depth`-level `col=` dirs that hold a file, sorted.
+    */
+  private[logs] def leavesOf(keys: Seq[String], depth: Int): Seq[String] =
+    keys.flatMap { k =>
+      val segs = k.stripPrefix("/").split('/')
+      if (segs.length > depth && segs.take(depth).forall(_.contains("=")))
+        Some(segs.take(depth).mkString("/"))
+      else None
+    }.distinct.sorted
+
   /** Legacy plain (unversioned) roots: per-leaf rename swap. */
   private def compactPlainRoot(spark0: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
@@ -353,7 +365,8 @@ object Compaction {
       rewrite(input, partitionCols, maxRecordsPerFile, staging.toString, cluster)
       // verify the rewrite BEFORE touching the live tree — a short row count
       // means lost data and must abort while the original is still in place
-      val stagedRows = AppendCommit.countStaged(spark, staging)
+      val stagedRows = FileStats.collectStaged(spark,
+        FileStats.listDirEntries(spark, staging.toString)).iterator.map(_.rows).sum
       require(stagedRows == dirtyRows,
         s"compaction wrote $stagedRows rows, expected $dirtyRows; aborting with $live untouched")
       // Optimistic concurrency: the swap replaces the dirty leaves' files

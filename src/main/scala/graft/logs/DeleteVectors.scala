@@ -468,19 +468,18 @@ object DeleteVectors {
         fs.delete(new Path(nextDir), true)
         throw new IllegalStateException(msg)
       }
-      stageCarryAll(spark, root, cur, next)
+      stageCarryAll(spark, root, cur, next, entries)
       write(spark, nextDir, merged)
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("delete",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
         System.currentTimeMillis()))
-      FileStats.refreshInto(spark, nextDir,
-        GraftStore.compositeEntries(spark, root, next),
-        FileStats.read(spark, curDir))
+      val nextEntries = GraftStore.compositeEntries(spark, root, next)
+      FileStats.refreshInto(spark, nextDir, nextEntries, FileStats.read(spark, curDir))
       // metadata-only verification: the commit moves no data, so the staged
       // snapshot must hold exactly the predecessor's physical rows, and its
       // vector total must have grown by exactly the matched count
-      val prevPhys = physicalCount(spark, root, cur)
-      val stagedPhys = physicalCount(spark, root, next)
+      val prevPhys = FileStats.physicalRows(spark, root, cur, entries)
+      val stagedPhys = FileStats.physicalRows(spark, root, next, nextEntries)
       if (stagedPhys != prevPhys)
         abort(s"delete commit staged $stagedPhys physical rows, expected " +
           s"$prevPhys; aborting with $curDir live")
@@ -600,7 +599,9 @@ object DeleteVectors {
         .option("maxRecordsPerFile", maxRecordsPerFile)
         .options(LogSchema.parquetBloomOptions)
         .mode("overwrite").parquet(stagingDir)
-      val inserted = AppendCommit.countStaged(spark, stagingPath)
+      // one footer pass over the staged rows: their count and stats lines
+      val staged = FileStats.collectStaged(spark, FileStats.listDirEntries(spark, stagingDir))
+      val inserted = staged.iterator.map(_.rows).sum
       if (inserted == 0L && additions.isEmpty) {
         fs.delete(stagingPath, true)
         return (MergeCommitted(cur, 0L, 0L, replayed = false), false)
@@ -613,17 +614,17 @@ object DeleteVectors {
       }
       // 3. one commit: carry everything + reference the staged files +
       //    the merged vector sidecar
-      stageCarryAll(spark, root, cur, next,
-        extraAppend = if (inserted > 0) Some((stageName, stagingPath)) else None)
+      stageCarryAll(spark, root, cur, next, entries,
+        extraAppend = if (inserted > 0) Some((stageName, staged.map(_.key))) else None)
       write(spark, nextDir, merged)
       GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("merge",
         commitId.getOrElse(java.util.UUID.randomUUID().toString),
         System.currentTimeMillis()))
-      FileStats.refreshInto(spark, nextDir,
-        GraftStore.compositeEntries(spark, root, next),
-        FileStats.read(spark, curDir))
-      val prevPhys = physicalCount(spark, root, cur)
-      val stagedPhys = physicalCount(spark, root, next)
+      val nextEntries = GraftStore.compositeEntries(spark, root, next)
+      FileStats.refreshInto(spark, nextDir, nextEntries,
+        FileStats.read(spark, curDir) ++ staged.map(s => s.key -> s))
+      val prevPhys = FileStats.physicalRows(spark, root, cur, entries)
+      val stagedPhys = FileStats.physicalRows(spark, root, next, nextEntries)
       if (stagedPhys != prevPhys + inserted)
         abort(s"merge staged $stagedPhys physical rows, expected " +
           s"$prevPhys + $inserted; aborting with $curDir live")
@@ -657,7 +658,7 @@ object DeleteVectors {
     */
   private def taggedLiveRead(spark: SparkSession, root: String, cur: Int,
       prior: Map[String, Dv], entries: Seq[GraftStore.FileEntry]): DataFrame = {
-    val tagged = GraftStore.readVersionTagged(spark, root, cur)
+    val tagged = GraftStore.readVersionTagged(spark, root, cur, Some(entries))
     if (prior.isEmpty) tagged else applyKeep(spark, tagged, prior, entries)
   }
 
@@ -707,20 +708,21 @@ object DeleteVectors {
 
   /** Stage version `next` as a pure carry of version `cur` by manifest
     * reference, plus optionally one staged-append holder (the merge's
-    * inserted files).
+    * inserted files, by their staging-dir keys). `entries` is the live
+    * snapshot's listing, so the carry lists nothing again.
     */
   private def stageCarryAll(spark: SparkSession, root: String, cur: Int,
-      next: Int, extraAppend: Option[(String, Path)] = None): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      next: Int, entries: Seq[GraftStore.FileEntry],
+      extraAppend: Option[(String, Seq[String])] = None): Unit = {
     val curPrefix = GraftStore.versionPrefix(cur)
     val curDir = s"$root/$curPrefix"
     val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
     val carried = GraftStore.readManifest(spark, curDir)
-    val depth = partitionDepthOf(fs, curDir, carried)
-    val own = Compaction.partitionLeaves(fs, new Path(curDir), depth)
-      .map { case (rel, _) => (curPrefix, rel) }
-    val added = extraAppend.toSeq.flatMap { case (name, p) =>
-      Compaction.partitionLeaves(fs, p, depth).map { case (rel, _) => (name, rel) }
+    val ownKeys = entries.filter(_.legBase == curDir).map(_.key)
+    val depth = partitionDepthOf(ownKeys, carried)
+    val own = Compaction.leavesOf(ownKeys, depth).map((curPrefix, _))
+    val added = extraAppend.toSeq.flatMap { case (name, keys) =>
+      Compaction.leavesOf(keys, depth).map((name, _))
     }
     require(extraAppend.isEmpty || added.nonEmpty,
       "staged merge rows landed in no partition dirs — partitionCols " +
@@ -730,33 +732,21 @@ object DeleteVectors {
     GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
   }
 
-  /** Partition depth of the store layout, measured from the live tree (the
-    * deepest all-`col=` chain above the data files). Delete/merge commits
+  /** Partition depth of the store layout: the all-`col=` chain above the
+    * live version's first own data file (by key). Delete/merge commits
     * carry at this granularity; a flat (unpartitioned) store carries depth 0.
     */
-  private def partitionDepthOf(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, manifest: Seq[(String, String)]): Int = {
-    def depthUnder(p: Path, d: Int): Int = {
-      if (!fs.exists(p)) return -1
-      val subs = fs.listStatus(p).toSeq.filter(s => s.isDirectory &&
-        s.getPath.getName.contains("=") && Compaction.visible(s.getPath.getName))
-      if (subs.isEmpty) d else depthUnder(subs.head.getPath, d + 1)
-    }
-    val own = depthUnder(new Path(dir), 0)
-    if (own >= 0 && own > 0) return own
+  private def partitionDepthOf(ownKeys: Seq[String],
+      manifest: Seq[(String, String)]): Int = {
+    val own = ownKeys.minOption.fold(0)(
+      _.stripPrefix("/").split('/').init.takeWhile(_.contains("=")).length)
+    if (own > 0) own
     // own dir may be empty/manifest-only: measure a carried holder instead.
     // rel is the partition path at carry granularity — "" for a FLAT store
     // (depth 0), "k=v" for depth 1, "k=v/k2=v2" for depth 2
-    manifest.headOption.map { case (_, rel) =>
+    else manifest.headOption.fold(0) { case (_, rel) =>
       if (rel.isEmpty) 0 else rel.count(_ == '/') + 1
-    }.getOrElse(math.max(own, 0))
-  }
-
-  private def physicalCount(spark: SparkSession, root: String, n: Int): Long = {
-    val entries = GraftStore.compositeEntries(spark, root, n)
-    if (entries.isEmpty) 0L
-    else FileStats.rowCountFromStats(spark, root, n)
-      .getOrElse(GraftStore.readVersionPhysical(spark, root, n).count())
+    }
   }
 
   private def flip(spark: SparkSession, root: String, cur: Int, next: Int,

@@ -236,122 +236,8 @@ object FileStats {
         try {
           val reader = ParquetFileReader.open(
             HadoopInputFile.fromPath(new Path(physical), conf))
-          try {
-            val blocks = reader.getFooter.getBlocks
-            val nBlocks = blocks.size()
-            // exact string stats only from parquet-mr footers (see
-            // [[ColStat]]); the metadata API surfaces no per-column
-            // exactness flag, so writer identity is the gate
-            val exactStrings = Option(
-              reader.getFooter.getFileMetaData.getCreatedBy)
-              .exists(_.startsWith("parquet-mr"))
-            var rows = 0L
-            var mn, mx = Option.empty[Long]
-            var pmn, pmx = Option.empty[String]
-            var statsOk = true
-            var podOk = true
-            // per-column whole-file accumulators — a column is usable only
-            // when EVERY block witnessed non-null stats for it
-            final class Acc(val kind: Char) {
-              var ok = true; var blocksSeen = 0
-              var loL, hiL = 0L; var loD, hiD = 0.0d
-              var loS, hiS: String = null
-            }
-            val acc = scala.collection.mutable.HashMap.empty[String, Acc]
-            val bit = blocks.iterator()
-            while (bit.hasNext) {
-              val b = bit.next()
-              rows += b.getRowCount
-              val cols = b.getColumns
-              var foundT = false
-              var foundP = false
-              val cit = cols.iterator()
-              while (cit.hasNext) {
-                val c = cit.next()
-                val name = c.getPath.toDotString
-                val st = c.getStatistics
-                val usable = st != null && !st.isEmpty &&
-                  st.getNumNulls < b.getRowCount &&
-                  st.genericGetMin != null && st.genericGetMax != null
-                val kind: Char = statKind(c.getPrimitiveType)
-                if (kind != ' ') {
-                  val a = acc.getOrElseUpdate(name, new Acc(kind))
-                  if (a.kind != kind || !usable) a.ok = false
-                  else {
-                    a.blocksSeen += 1
-                    kind match {
-                      case 'l' =>
-                        val lo = st.genericGetMin.asInstanceOf[Number].longValue()
-                        val hi = st.genericGetMax.asInstanceOf[Number].longValue()
-                        if (a.blocksSeen == 1) { a.loL = lo; a.hiL = hi }
-                        else { a.loL = math.min(a.loL, lo); a.hiL = math.max(a.hiL, hi) }
-                      case 'd' =>
-                        val lo = st.genericGetMin.asInstanceOf[Number].doubleValue()
-                        val hi = st.genericGetMax.asInstanceOf[Number].doubleValue()
-                        if (lo.isNaN || hi.isNaN) a.ok = false
-                        else if (a.blocksSeen == 1) { a.loD = lo; a.hiD = hi }
-                        else { a.loD = math.min(a.loD, lo); a.hiD = math.max(a.hiD, hi) }
-                      case 's' =>
-                        val lo = st.minAsString; val hi = st.maxAsString
-                        if (lo == null || hi == null) a.ok = false
-                        else if (a.blocksSeen == 1) { a.loS = lo; a.hiS = hi }
-                        else {
-                          // merge in UTF-8 BYTE order — the ordering each
-                          // block's own min/max already obeys (parquet
-                          // compares unsigned bytes). Java's UTF-16 `<`
-                          // disagrees above U+E000 vs supplementary
-                          // characters, and a bound merged under the wrong
-                          // ordering is one a future consumer could
-                          // wrongly trust
-                          if (utf8Lt(lo, a.loS)) a.loS = lo
-                          if (utf8Lt(a.hiS, hi)) a.hiS = hi
-                        }
-                    }
-                  }
-                }
-                if (name == timeColumn) {
-                  foundT = true
-                  if (!usable) statsOk = false
-                  else {
-                    val lo = st.genericGetMin.asInstanceOf[Number].longValue()
-                    val hi = st.genericGetMax.asInstanceOf[Number].longValue()
-                    mn = Some(mn.fold(lo)(math.min(_, lo)))
-                    mx = Some(mx.fold(hi)(math.max(_, hi)))
-                  }
-                } else if (name == podColumn) {
-                  foundP = true
-                  if (st == null || st.isEmpty) podOk = false
-                  else {
-                    val lo = st.minAsString; val hi = st.maxAsString
-                    if (lo == null || hi == null) podOk = false
-                    else {
-                      // same UTF-8 byte-order merge as the generic column
-                      // accumulators (identical for the ASCII names the
-                      // consumer is willing to prune on)
-                      pmn = Some(pmn.fold(lo)(p => if (utf8Lt(lo, p)) lo else p))
-                      pmx = Some(pmx.fold(hi)(p => if (utf8Lt(p, hi)) hi else p))
-                    }
-                  }
-                }
-              }
-              if (!foundT) statsOk = false
-              if (!foundP) podOk = false
-            }
-            val colStats = acc.iterator.collect {
-              case (n, a) if a.ok && a.blocksSeen == nBlocks =>
-                n -> (a.kind match {
-                  case 'l' => ColStat('l', a.loL.toString, a.hiL.toString)
-                  case 'd' => ColStat('d', a.loD.toString, a.hiD.toString)
-                  case 's' => ColStat(if (exactStrings) 's' else 'S', a.loS, a.hiS)
-                })
-            }.filter { case (_, c) =>
-              c.min.length <= MaxStatStringLen && c.max.length <= MaxStatStringLen
-            }.toSeq.sortBy(_._1).take(MaxStatCols).toMap
-            Some(FileStat(key, len, rows,
-              if (statsOk) mn else None, if (statsOk) mx else None,
-              if (podOk) pmn else None, if (podOk) pmx else None,
-              colStats))
-          } finally reader.close()
+          try Some(footerStat(key, len, reader.getFooter, timeColumn, podColumn))
+          finally reader.close()
         } catch {
           // unreadable footer (transient store error, foreign file): emit NO
           // line — an absent line already means "always scan, shortcuts
@@ -361,6 +247,142 @@ object FileStats {
         }
       }
     }.collect().toSeq
+  }
+
+  /** Stats of files a commit has just staged, footers read on the driver
+    * in one pass: the sum of their `rows` is the staged row count, and
+    * passed to [[refreshInto]] as `prior` they make the commit's sidecar
+    * refresh read no footer again. `files` are keyed as the next snapshot
+    * keys them ([[listDirEntries]] of the staging dir). A staged footer
+    * that cannot be read fails the commit.
+    */
+  def collectStaged(spark: SparkSession,
+      files: Seq[GraftStore.FileEntry]): Seq[FileStat] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.physical), conf))
+      try footerStat(f.key, f.len, reader.getFooter) finally reader.close()
+    }
+  }
+
+  /** One file's stats line from its parquet footer: row count, `time_ns`
+    * and `pod` bounds, and every tracked leaf column's whole-file min/max.
+    */
+  private def footerStat(key: String, len: Long,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      timeColumn: String = "time_ns", podColumn: String = "pod"): FileStat = {
+    val blocks = footer.getBlocks
+    val nBlocks = blocks.size()
+    // exact string stats only from parquet-mr footers (see [[ColStat]]);
+    // the metadata API surfaces no per-column exactness flag, so writer
+    // identity is the gate
+    val exactStrings = Option(footer.getFileMetaData.getCreatedBy)
+      .exists(_.startsWith("parquet-mr"))
+    var rows = 0L
+    var mn, mx = Option.empty[Long]
+    var pmn, pmx = Option.empty[String]
+    var statsOk = true
+    var podOk = true
+    // per-column whole-file accumulators — a column is usable only when
+    // EVERY block witnessed non-null stats for it
+    final class Acc(val kind: Char) {
+      var ok = true; var blocksSeen = 0
+      var loL, hiL = 0L; var loD, hiD = 0.0d
+      var loS, hiS: String = null
+    }
+    val acc = scala.collection.mutable.HashMap.empty[String, Acc]
+    val bit = blocks.iterator()
+    while (bit.hasNext) {
+      val b = bit.next()
+      rows += b.getRowCount
+      val cols = b.getColumns
+      var foundT = false
+      var foundP = false
+      val cit = cols.iterator()
+      while (cit.hasNext) {
+        val c = cit.next()
+        val name = c.getPath.toDotString
+        val st = c.getStatistics
+        val usable = st != null && !st.isEmpty &&
+          st.getNumNulls < b.getRowCount &&
+          st.genericGetMin != null && st.genericGetMax != null
+        val kind: Char = statKind(c.getPrimitiveType)
+        if (kind != ' ') {
+          val a = acc.getOrElseUpdate(name, new Acc(kind))
+          if (a.kind != kind || !usable) a.ok = false
+          else {
+            a.blocksSeen += 1
+            kind match {
+              case 'l' =>
+                val lo = st.genericGetMin.asInstanceOf[Number].longValue()
+                val hi = st.genericGetMax.asInstanceOf[Number].longValue()
+                if (a.blocksSeen == 1) { a.loL = lo; a.hiL = hi }
+                else { a.loL = math.min(a.loL, lo); a.hiL = math.max(a.hiL, hi) }
+              case 'd' =>
+                val lo = st.genericGetMin.asInstanceOf[Number].doubleValue()
+                val hi = st.genericGetMax.asInstanceOf[Number].doubleValue()
+                if (lo.isNaN || hi.isNaN) a.ok = false
+                else if (a.blocksSeen == 1) { a.loD = lo; a.hiD = hi }
+                else { a.loD = math.min(a.loD, lo); a.hiD = math.max(a.hiD, hi) }
+              case 's' =>
+                val lo = st.minAsString; val hi = st.maxAsString
+                if (lo == null || hi == null) a.ok = false
+                else if (a.blocksSeen == 1) { a.loS = lo; a.hiS = hi }
+                else {
+                  // merge in UTF-8 BYTE order — the ordering each block's
+                  // own min/max already obeys (parquet compares unsigned
+                  // bytes). Java's UTF-16 `<` disagrees above U+E000 vs
+                  // supplementary characters, and a bound merged under the
+                  // wrong ordering is one a future consumer could wrongly
+                  // trust
+                  if (utf8Lt(lo, a.loS)) a.loS = lo
+                  if (utf8Lt(a.hiS, hi)) a.hiS = hi
+                }
+            }
+          }
+        }
+        if (name == timeColumn) {
+          foundT = true
+          if (!usable) statsOk = false
+          else {
+            val lo = st.genericGetMin.asInstanceOf[Number].longValue()
+            val hi = st.genericGetMax.asInstanceOf[Number].longValue()
+            mn = Some(mn.fold(lo)(math.min(_, lo)))
+            mx = Some(mx.fold(hi)(math.max(_, hi)))
+          }
+        } else if (name == podColumn) {
+          foundP = true
+          if (st == null || st.isEmpty) podOk = false
+          else {
+            val lo = st.minAsString; val hi = st.maxAsString
+            if (lo == null || hi == null) podOk = false
+            else {
+              // same UTF-8 byte-order merge as the generic column
+              // accumulators (identical for the ASCII names the consumer
+              // is willing to prune on)
+              pmn = Some(pmn.fold(lo)(p => if (utf8Lt(lo, p)) lo else p))
+              pmx = Some(pmx.fold(hi)(p => if (utf8Lt(p, hi)) hi else p))
+            }
+          }
+        }
+      }
+      if (!foundT) statsOk = false
+      if (!foundP) podOk = false
+    }
+    val colStats = acc.iterator.collect {
+      case (n, a) if a.ok && a.blocksSeen == nBlocks =>
+        n -> (a.kind match {
+          case 'l' => ColStat('l', a.loL.toString, a.hiL.toString)
+          case 'd' => ColStat('d', a.loD.toString, a.hiD.toString)
+          case 's' => ColStat(if (exactStrings) 's' else 'S', a.loS, a.hiS)
+        })
+    }.filter { case (_, c) =>
+      c.min.length <= MaxStatStringLen && c.max.length <= MaxStatStringLen
+    }.toSeq.sortBy(_._1).take(MaxStatCols).toMap
+    FileStat(key, len, rows,
+      if (statsOk) mn else None, if (statsOk) mx else None,
+      if (podOk) pmn else None, if (podOk) pmx else None,
+      colStats)
   }
 
   /** Write `dir`'s stats sidecar for the given composite file set, reusing
@@ -408,15 +430,27 @@ object FileStats {
     * objects) instead of O(file footers) — the difference between a listing
     * and 10⁸ footer opens on a 100 TB store.
     */
-  def rowCountFromStats(spark: SparkSession, root: String, n: Int): Option[Long] = {
+  def rowCountFromStats(spark: SparkSession, root: String, n: Int,
+      files: Option[Seq[GraftStore.FileEntry]] = None): Option[Long] = {
     val dir = GraftStore.resolveVersion(spark, root, n)
     val stats = read(spark, dir)
     if (stats.isEmpty) return None
-    val entries = GraftStore.compositeEntries(spark, root, n)
+    val entries = files.getOrElse(GraftStore.compositeEntries(spark, root, n))
     if (entries.forall(e => stats.get(e.key).exists(_.len == e.len)))
       Some(entries.iterator.map(e => stats(e.key).rows).sum)
     else None
   }
+
+  /** Stored row count of snapshot `n` (deletion vectors not applied) over
+    * its already-listed `files`: 0 with no files, the sidecar's sum when it
+    * covers every file, else a scan. Commits verify a staged snapshot with
+    * it.
+    */
+  def physicalRows(spark: SparkSession, root: String, n: Int,
+      files: Seq[GraftStore.FileEntry]): Long =
+    if (files.isEmpty) 0L
+    else rowCountFromStats(spark, root, n, Some(files))
+      .getOrElse(GraftStore.readVersionPhysical(spark, root, n, Some(files)).count())
 
   /** Recompute the live snapshot's sidecar from scratch-or-prior — the
     * backfill/repair entry point (pre-stats stores, foreign writers).

@@ -573,9 +573,13 @@ object GraftStore {
   /** Physical read: the snapshot's rows as stored, WITHOUT deletion vectors
     * applied ([[DeleteVectors]]) — the fast-tier relation. Query paths use
     * [[readVersion]].
+    *
+    * @param files the snapshot's [[compositeEntries]] when the caller has
+    *   already listed them; `None` lists them
     */
-  def readVersionPhysical(spark: SparkSession, root: String, n: Int): DataFrame =
-    spark.baseRelationToDataFrame(snapshotOf(spark, root, n).fast)
+  def readVersionPhysical(spark: SparkSession, root: String, n: Int,
+      files: Option[Seq[FileEntry]] = None): DataFrame =
+    spark.baseRelationToDataFrame(snapshotOf(spark, root, n, files).fast)
 
   /** Physical read with the file/position metadata columns
     * ([[DeleteVectors.PathCol]]/[[DeleteVectors.PosCol]]) retained —
@@ -583,11 +587,12 @@ object GraftStore {
     * the retained positions.
     */
   private[graft] def readVersionTagged(spark: SparkSession, root: String,
-      n: Int): DataFrame =
-    DeleteVectors.tagMeta(readVersionPhysical(spark, root, n))
+      n: Int, files: Option[Seq[FileEntry]] = None): DataFrame =
+    DeleteVectors.tagMeta(readVersionPhysical(spark, root, n, files))
 
-  private def snapshotOf(spark: SparkSession, root: String, n: Int) =
-    graft.sources.GraftSourceProvider.snapshot(spark, root, Some(n))
+  private def snapshotOf(spark: SparkSession, root: String, n: Int,
+      files: Option[Seq[FileEntry]] = None) =
+    graft.sources.GraftSourceProvider.snapshot(spark, root, Some(n), files = files)
 
   /** Row count of `df` by scanning it — for commit and audit checks, which
     * must read the data files: a plain `count()` over a snapshot relation

@@ -19,30 +19,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object LogStreamIngest {
 
-  /** The shared stream-side read+parse chain (one definition: `start`,
-    * `startDualFormat`, and the batch `LogIngest.readCri` must not drift).
+  /** The stream-side read: a tail of `inputGlob` through the one CRI
+    * chain the batch reader uses too ([[LogIngest.criFrame]]).
     */
   private def parsedStream(spark: SparkSession, inputGlob: String,
-      clusterName: String, nodeName: String, maxFilesPerTrigger: Int) = {
-    val raw = spark.readStream
+      clusterName: String, nodeName: String, maxFilesPerTrigger: Int) =
+    LogIngest.criFrame(spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       // the kubelet DELETES logs under a live tail (pod reap, rotation GC);
       // a file listed for this batch but gone by read time must be skipped,
       // not crash the query — its close marker / idle timeout finalizes the
       // stream, exactly like the reference's tail surviving file removal
       .option("ignoreMissingFiles", "true")
-      .text(inputGlob)
-      .withColumn("file_path", col("_metadata.file_path"))
-      .filter(!col("file_path").rlike(LogIngest.defaultExcludeRegex))
-      .filter(octet_length(col("value")) < LogIngest.defaultMaxLineBytes)
-    CriFunctions.parsed(raw, clusterName)
-      .withColumn("namespace", regexp_extract(col("file_path"), LogIngest.podPathRegex, 1))
-      .withColumn("pod", regexp_extract(col("file_path"), LogIngest.podPathRegex, 2))
-      .withColumn("pod_id", regexp_extract(col("file_path"), LogIngest.podPathRegex, 3))
-      .withColumn("container", regexp_extract(col("file_path"), LogIngest.podPathRegex, 4))
-      .withColumn("node", lit(nodeName))
-      .drop("file_path")
-  }
+      .text(inputGlob), clusterName, nodeName)
 
   def start(spark: SparkSession, inputGlob: String, outputRoot: String,
       checkpoint: String, clusterName: String,

@@ -35,4 +35,14 @@ class GraftSessionSpec extends SparkSpec {
     }
     assert(spark.conf.get(aqe) == "true", "the parent session is untouched")
   }
+
+  test("configure lists up to 1024 paths on the driver; a SPARK_GRAFT_CONF entry wins") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert(spark.conf.get(key) == "1024")
+    // a bare newSession() carries no marker, so configure runs on it
+    val fresh = GraftSession.configure(spark.newSession(), Map.empty[String, String])
+    assert(fresh.conf.get(key) == "1024")
+    val pinned = GraftSession.configure(spark.newSession(), Map(key -> "32"))
+    assert(pinned.conf.get(key) == "32")
+  }
 }

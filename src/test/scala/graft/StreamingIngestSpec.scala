@@ -129,6 +129,83 @@ class StreamingIngestSpec extends SparkSpec {
     }
   }
 
+  test("store sink drops the lines of a fluent-bit decoy pod") {
+    val work = Files.createTempDirectory("graft-streamexcl")
+    val in = work.resolve("varlog")
+    val root = work.resolve("lake").toString
+    def put(rel: String, line: String): Unit = {
+      val p = in.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, line + "\n")
+    }
+    put("pods/default_pod-a_u1/app/0.log", "2024-01-15T10:00:00.000000001Z stdout F kept")
+    // fluent-bit only in the container name: not a decoy, kept
+    put("pods/default_pod-b_u2/fluent-bit/0.log", "2024-01-15T10:00:00.000000002Z stdout F kept too")
+    put("pods/kube-system_fluent-bit-x_u3/fluent-bit/0.log",
+      "2024-01-15T10:00:00.000000003Z stdout F must-be-excluded")
+    val q = LogStreamIngest.startStoreSink(spark, in.toString + "/pods/*/*/*.log",
+      root, work.resolve("ckpt").toString, clusterName = "dev",
+      triggerInterval = "1 seconds")
+    try q.processAllAvailable() finally q.stop()
+    val got = GraftStore.readStore(spark, root).select($"message", $"pod").as[(String, String)]
+      .collect().toSet
+    assert(got == Set("kept" -> "pod-a", "kept too" -> "pod-b"))
+  }
+
+  test("a store-sink trigger over more than 32 CRI files runs one Spark job per batch") {
+    val work = Files.createTempDirectory("graft-streamjobs")
+    val in = work.resolve("varlog")
+    val root = work.resolve("lake").toString
+    // each file lands whole (written aside, then renamed in), so a trigger
+    // never reads a half-written file
+    def put(batch: Int, pods: Int): Unit = (0 until pods).foreach { i =>
+      val p = in.resolve(s"pods/ns${i % 4}_pod-${i}_u$i/app/$batch.log")
+      Files.createDirectories(p.getParent)
+      val tmp = Files.writeString(work.resolve("tmp.log"),
+        s"2024-01-15T10:00:0$batch.00000000${i % 10}Z stdout F b$batch line $i\n")
+      Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    put(0, 40)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    // the stream thread tags every job it starts with its query id
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == marker)) flushed.countDown()
+        props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => jobs.put(e.jobId, id))
+      }
+    }
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = LogStreamIngest.startStoreSink(spark, in.toString + "/pods/*/*/*.log",
+        root, work.resolve("ckpt").toString, clusterName = "dev",
+        triggerInterval = "1 seconds", partitionCols = Seq("cluster", "namespace", "date"))
+      try {
+        q.processAllAvailable()
+        put(1, 40)
+        q.processAllAvailable()
+      } finally q.stop()
+      // a marker job submitted after the stream stopped flushes the
+      // listener bus: one bus queue delivers job starts in order
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      q
+    } finally sc.removeSparkListener(listener)
+    assert(GraftStore.readStore(spark, root).count() == 80)
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches >= 2)
+    // the staging write only: the tail listings run on the driver, and the
+    // commit's stats come from its one footer pass on the driver
+    val ofQuery = jobs.values.toArray.count(_ == q.id.toString)
+    assert(ofQuery == batches, s"$ofQuery jobs for $batches non-empty batches")
+  }
+
   test("upsert sink: each micro-batch merges atomically; later batches supersede keys") {
     import spark.implicits._
     val work = Files.createTempDirectory("graft-upsink")
