@@ -8,8 +8,8 @@ import graft.GraftSession
   * or a long-running watcher):
   *
   * {{{
-  * runMain graft.logs.AdminCli compact   --root=/data/lake [--max-records=N] [--convert-streaming=true]
-  * runMain graft.logs.AdminCli retention --root=/data/lake --cutoff-date=2024-01-01 [--convert-streaming=true]
+  * runMain graft.logs.AdminCli compact   --root=/data/lake [--max-records=N]
+  * runMain graft.logs.AdminCli retention --root=/data/lake --cutoff-date=2024-01-01
   * runMain graft.logs.AdminCli finalize  --root=/data/lake --close-events=/data/close
   * runMain graft.logs.AdminCli watch     --root=/data/lake --close-events=/data/close \
   *     --checkpoint=/data/ckpt/finalize [--interval='60 seconds']
@@ -17,9 +17,10 @@ import graft.GraftSession
   * runMain graft.logs.AdminCli vacuum    --root=/data/lake
   * }}}
   *
-  * `compact` rewrites a hive store's partitions into scan-sized files
-  * (atomic per-partition swap); `retention` drops partitions older than the
-  * cutoff at directory granularity (no data scan); `finalize` consumes
+  * `compact` rewrites a store's dirty partitions into scan-sized files;
+  * `retention` drops partitions older than the cutoff at directory
+  * granularity (no data scan). Both commit a new version with one atomic
+  * pointer flip, and refuse a root that is not a store. `finalize` consumes
   * pending close events once; `watch` runs the auto-finalize loop until
   * terminated (SIGTERM stops the streaming query cleanly — K6 semantics);
   * `snapshots` inventories the retained versions of a versioned store (live
@@ -29,23 +30,23 @@ import graft.GraftSession
   * in-flight commit are kept).
   *
   * All argument validation happens BEFORE the SparkSession starts: a typo'd
-  * command, a missing required key, or an unrecognized option fails
-  * instantly with the usage text, never with a Spark spin-up and a stack
-  * trace — and never by silently falling back to a default the operator did
-  * not ask for.
+  * command, a missing required key, an unrecognized option, or a boolean
+  * flag that is neither `true` nor `false` fails instantly with the usage
+  * text, never with a Spark spin-up and a stack trace — and never by
+  * silently falling back to a default the operator did not ask for.
   */
 object AdminCli {
   private val usage =
-    """usage: AdminCli <compact|retention|finalize|watch> --key=value...
-      |  compact   --root=DIR [--max-records=N] [--convert-streaming=true]
+    """usage: AdminCli <command> --key=value...
+      |  compact   --root=DIR [--max-records=N]
       |            [--full=true] [--retain=N] [--cluster-by=col,..]
       |            [--zorder=true]   (incremental by default: only dirty
       |            partitions rewrite; --retain keeps N grace snapshots,
       |            default 1; --cluster-by overrides the time_ns sort,
       |            --zorder interleaves the cluster-by columns)
-      |  retention --root=DIR --cutoff-date=YYYY-MM-DD [--convert-streaming=true]
-      |            [--snapshot=true]   (commit the drop as a new version;
-      |            pre-retention snapshot stays time-travelable)
+      |  retention --root=DIR --cutoff-date=YYYY-MM-DD   (commits the drop
+      |            as a new version; the pre-retention snapshot stays
+      |            time-travelable)
       |  finalize  --root=DIR --close-events=DIR [--max-records=N]
       |  watch     --root=DIR --close-events=DIR --checkpoint=DIR [--interval=DUR]
       |  snapshots --root=DIR
@@ -76,11 +77,14 @@ object AdminCli {
       |            the view's base snapshot — O(changed files + view))
       |  break-lease --root=DIR   (remove a lease left by a crashed maintainer)""".stripMargin
 
+  // options that take `true` or `false` and nothing else
+  private val boolKeys = Set("full", "zorder", "refresh", "compact-indexes")
+
   // per-command (required, optional) option keys — anything else is a typo
   private val commands: Map[String, (Set[String], Set[String])] = Map(
     "compact" -> (Set("root"),
-      Set("max-records", "convert-streaming", "full", "retain", "cluster-by", "zorder")),
-    "retention" -> (Set("root", "cutoff-date"), Set("convert-streaming", "snapshot")),
+      Set("max-records", "full", "retain", "cluster-by", "zorder")),
+    "retention" -> (Set("root", "cutoff-date"), Set.empty[String]),
     "finalize" -> (Set("root", "close-events"), Set("max-records")),
     "watch" -> (Set("root", "close-events", "checkpoint"), Set("interval")),
     "snapshots" -> (Set("root"), Set.empty[String]),
@@ -112,15 +116,13 @@ object AdminCli {
     val missing = required -- opts.keySet
     require(missing.isEmpty,
       s"missing required option(s) for $cmd: ${missing.map("--" + _).mkString(", ")}\n$usage")
-    // strict booleans: "--convert-streaming=True" silently meaning false
-    // would drop operator intent
-    def boolOpt(k: String): Boolean = opts.get(k) match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(v) => throw new IllegalArgumentException(
+    // strict booleans, checked before Spark starts: "--full=True" silently
+    // meaning false would drop operator intent
+    opts.foreach { case (k, v) =>
+      require(!boolKeys(k) || v == "true" || v == "false",
         s"--$k must be true or false, got '$v'\n$usage")
     }
+    def boolOpt(k: String): Boolean = opts.get(k).contains("true")
     val maxRecords = opts.get("max-records").map(_.toLong).getOrElse(4000000L)
 
     val spark = GraftSession.local("graft-admin")
@@ -128,7 +130,6 @@ object AdminCli {
       case "compact" =>
         Compaction.compactHive(spark, opts("root"),
           maxRecordsPerFile = maxRecords,
-          convertStreamingStore = boolOpt("convert-streaming"),
           full = boolOpt("full"),
           retainSnapshots = opts.get("retain").map(_.toInt).getOrElse(1),
           cluster = opts.get("cluster-by").map(_.split(',').toSeq.map(_.trim)) match {
@@ -141,12 +142,7 @@ object AdminCli {
           })
         println(s"[admin] compacted ${opts("root")}")
       case "retention" =>
-        val dropped =
-          if (boolOpt("snapshot"))
-            Retention.enforceHiveSnapshot(spark, opts("root"), opts("cutoff-date"),
-              convertStreamingStore = boolOpt("convert-streaming"))
-          else Retention.enforceHive(spark, opts("root"), opts("cutoff-date"),
-            convertStreamingStore = boolOpt("convert-streaming"))
+        val dropped = Retention.enforceHive(spark, opts("root"), opts("cutoff-date"))
         println(s"[admin] dropped ${dropped.size} partitions: ${dropped.mkString(", ")}")
       case "finalize" =>
         val done = StreamFinalize.finalizeClosed(spark, opts("close-events"),
@@ -205,13 +201,10 @@ object AdminCli {
         }
         val dir = GraftStore.resolve(spark, opts("root"))
         val stats = FileStats.read(spark, dir)
-        // composite inventory on the pointer tier: carried files live in
-        // other holders and a live-dir listing would miss them
-        val entries =
-          if (GraftStore.isPointerStore(spark, opts("root")))
-            GraftStore.compositeEntries(spark, opts("root"),
-              GraftStore.currentVersion(spark, opts("root")))
-          else FileStats.listDirEntries(spark, dir)
+        // composite inventory: carried files live in other holders and a
+        // live-dir listing would miss them
+        val entries = GraftStore.compositeEntries(spark, opts("root"),
+          GraftStore.currentVersion(spark, opts("root")))
         val covered = entries.count(e => stats.get(e.key).exists(_.len == e.len))
         val rows = stats.values.map(_.rows).sum
         val withNs = stats.values.count(_.minNs.nonEmpty)

@@ -61,9 +61,7 @@ object AppendCommit {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    require(GraftStore.isPointerStore(spark, root),
-      s"$root is not a versioned store — atomic appends need a commit " +
-        "primitive; plain directories take .mode(append) writes directly")
+    GraftStore.requireStore(spark, root)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
       return Committed(v, 0L, replayed = true)

@@ -14,38 +14,32 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * version without data I/O — so maintenance cost is proportional to dirty
   * data, not store size, which is the difference between "correct at sf1"
   * and "operable at 100 TB" (the same economics as Delta/Iceberg OPTIMIZE).
-  * How a partition is carried:
-  *  - versioned stores: by REFERENCE — a `_graft_manifest` beside the new
-  *    version's data maps each carried partition to the version prefix that
-  *    physically holds it ([[GraftStore.readManifest]]); zero bytes move.
-  *  - legacy plain roots: untouched leaves are simply never swapped.
+  * An untouched partition is carried by REFERENCE: a `_graft_manifest`
+  * beside the new version's data maps it to the version prefix that
+  * physically holds it ([[GraftStore.readManifest]]); zero bytes move.
   *
   * Rewritten partitions are `sortWithinPartitions(time_ns)` (when present),
   * matching the finalize path (StreamFinalize.scala:142): near-disjoint
   * row-group time ranges keep the engine's `--since` row-group pruning
   * effective after compaction destroys ingest order.
   *
-  * Swap protocol:
-  *  - [[GraftStore]] versioned roots: stage under the next version prefix,
-  *    flip `_current` with ONE atomic write (no rename on object stores).
-  *    Snapshot-isolated.
-  *  - legacy plain-dir roots: two metadata-only renames per dirty leaf.
+  * Commit protocol: stage the rewritten partitions under the next version
+  * prefix, then flip `_current` with ONE atomic write (no rename on object
+  * stores) — snapshot-isolated, like every store change.
   *
   * Crash safety: an in-flight marker (holding the expected TOTAL row count)
-  * brackets the swap; recovery re-applies the staged version / the
-  * verified staging tree. Mutual exclusion: the whole operation holds the
-  * root's [[MaintenanceLease]], so two compactors (or compaction racing
-  * retention or vacuum) cannot interleave — the loser aborts before
-  * touching anything.
+  * brackets the flip; recovery finishes the staged version. Mutual
+  * exclusion: the whole operation holds the root's [[MaintenanceLease]],
+  * so two compactors (or compaction racing retention or vacuum) cannot
+  * interleave — the loser aborts before touching anything.
   *
   * WRITERS are a separate discipline: appends land in the live version
   * directory, so rows appended after this job's inventory but before its
   * pointer flip could survive only in the grace snapshot, not the new live
   * tree. Like Delta/Iceberg OPTIMIZE under optimistic concurrency, the
   * commit DETECTS this instead of assuming it away: immediately before the
-  * marker/flip it re-inventories the partitions whose files the commit
-  * would replace (dirty partitions, plus the partition-dir set of a
-  * versioned store, where a brand-new partition would miss the carry
+  * marker/flip it re-inventories the dirty partitions and the live
+  * version's partition-dir set (a brand-new partition would miss the carry
   * manifest) and ABORTS cleanly on any change — staged data is removed,
   * the live tree is untouched, and the writer's rows are safe. Appends to
   * partitions carried BY REFERENCE are no conflict at all: the new version
@@ -84,24 +78,32 @@ object ClusterSpec {
 
 object Compaction {
 
+  /** Compact the store at `root`; a directory that is not a store is
+    * refused ([[GraftStore.requireStore]]) before anything is touched.
+    */
   def compactHive(spark: SparkSession, root: String,
       maxRecordsPerFile: Long = 4000000L,
       partitionCols: Seq[String] = LogSchema.hivePartitionColumns,
-      convertStreamingStore: Boolean = false,
       dirtyMaxFiles: Int = 4,
       dirtyMinAvgBytes: Long = 32L << 20,
       full: Boolean = false,
       retainSnapshots: Int = 1,
-      cluster: ClusterSpec = ClusterSpec.TimeMajor): Unit =
+      cluster: ClusterSpec = ClusterSpec.TimeMajor): Unit = {
+    GraftStore.requireStore(spark, root)
     MaintenanceLease.withLease(spark, root, "compact") {
-      if (GraftStore.isPointerStore(spark, root))
-        compactPointerStore(spark, root, maxRecordsPerFile, partitionCols,
-          convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full,
-          retainSnapshots, cluster)
-      else
-        compactPlainRoot(spark, root, maxRecordsPerFile, partitionCols,
-          convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full, cluster)
+      // keep partition dir names byte-identical: type inference would read
+      // 'hour=00' back as int 0 and rewrite the dir as 'hour=0', forking
+      // the partition from future string-valued appends. Scoped to a
+      // CLONED session (ConfScope) — flipping the shared session's conf
+      // would disable the metadata-only planner tier for every concurrent
+      // query for the duration of the rewrite (the round-14 bench failure).
+      graft.ConfScope.withSessionConf(spark,
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
+        compactOn(s, root, maxRecordsPerFile, partitionCols, dirtyMaxFiles,
+          dirtyMinAvgBytes, full, retainSnapshots, cluster)
+      }
     }
+  }
 
   /** A partition needs rewrite when its file count exceeds `dirtyMaxFiles`,
     * or it holds several files averaging under `dirtyMinAvgBytes`. A
@@ -281,147 +283,20 @@ object Compaction {
       else None
     }.distinct.sorted
 
-  /** Legacy plain (unversioned) roots: per-leaf rename swap. */
-  private def compactPlainRoot(spark0: SparkSession, root: String,
-      maxRecordsPerFile: Long, partitionCols: Seq[String],
-      convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean,
-      cluster: ClusterSpec): Unit = {
-    // keep partition dir names byte-identical: type inference would read
-    // 'hour=00' back as int 0 and rewrite the dir as 'hour=0', forking the
-    // partition from future string-valued appends. Scoped to a CLONED
-    // session (ConfScope) — flipping the shared session's conf would
-    // disable the metadata-only planner tier for every concurrent query
-    // for the duration of the rewrite (the round-14 bench failure).
-    graft.ConfScope.withSessionConf(spark0,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { spark =>
-      compactPlainRootOn(spark, root, maxRecordsPerFile, partitionCols,
-        convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full, cluster)
-    }
-  }
-
-  private def compactPlainRootOn(spark: SparkSession, root: String,
-      maxRecordsPerFile: Long, partitionCols: Seq[String],
-      convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean,
-      cluster: ClusterSpec): Unit = {
-    // the per-leaf swap requires an atomic rename primitive; object-store
-    // "rename" is copy+delete, so a plain (unversioned) store there must be
-    // migrated, not silently swapped with a seconds-long partition-missing
-    // window per leaf
-    val scheme = Option(new Path(root).toUri.getScheme).getOrElse("file")
-    require(!GraftStore.objectStoreSchemes.contains(scheme),
-      s"$root is a plain directory on an object store ($scheme), where rename " +
-        "is non-atomic copy+delete. Create the store with LogIngest.writeHive " +
-        "(pointer-versioned) or migrate it: copy the tree under <root>/v000001 " +
-        "and GraftStore.init-style-write <root>/_current")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(root)
-    val staging = new Path(root + ".compact-staging")
-    val marker = new Path(root + ".compact-inflight")
-    locally {
-      if (fs.exists(marker)) {
-        // A previous run crashed between swap start and verified cleanup.
-        // Staging was verified complete before the marker was written, so it
-        // is authoritative — re-apply it rather than re-staging from a live
-        // tree that may have lost a partition mid-commit.
-        require(fs.exists(staging),
-          s"$marker exists but $staging is gone — a previous swap crashed and " +
-            "its staging tree was removed; restore from backup/upstream")
-        applyStaging(spark, live, staging, marker, fs, readMarker(fs, marker))
-        return
-      }
-      // staging without a marker is derived data from an attempt that died
-      // BEFORE the swap started — the live tree is still complete; re-stage
-      if (fs.exists(staging)) fs.delete(staging, true)
-      // A store written by the STREAMING sink carries a _spark_metadata commit
-      // log: spark.read.parquet(root) then trusts the log, so files appended
-      // by batch writers (not in the log) would be INVISIBLE to this read —
-      // and the swap below would delete them permanently. Mirror
-      // Retention.enforceHive: require an explicit opt-in that drops the log
-      // (converting the store to listing-based; only safe with no live
-      // streaming writer), otherwise refuse.
-      val sinkLog = new Path(live, "_spark_metadata")
-      if (fs.exists(sinkLog)) {
-        require(convertStreamingStore,
-          s"$root was written by the streaming sink (_spark_metadata present); " +
-            "compacting through the commit log would drop any batch-appended " +
-            "files. Stop the streaming query and pass convertStreamingStore=true " +
-            "to drop the log and compact the full listing")
-        fs.delete(sinkLog, true)
-      }
-      // deletion vectors commit only on versioned stores (deleteWhere
-      // refuses plain roots), so a plain root never carries a sidecar
-      require(DeleteVectors.read(spark, root).isEmpty,
-        s"$root is a plain directory carrying a deletion-vector sidecar — " +
-          "unsupported; vectors commit only on versioned stores")
-      val leaves = partitionLeaves(fs, live, partitionCols.length)
-      val dirty = leaves.filter(l => full || isDirty(l._2, dirtyMaxFiles, dirtyMinAvgBytes))
-      if (dirty.isEmpty) return // every partition already compact: no commit
-      val expectedRows = spark.read.parquet(root).count() // footer metadata only
-      val input = spark.read.option("basePath", root)
-        .parquet(dirty.map(d => s"$root/${d._1}"): _*)
-      val dirtyRows = input.count()
-      rewrite(input, partitionCols, maxRecordsPerFile, staging.toString, cluster)
-      // verify the rewrite BEFORE touching the live tree — a short row count
-      // means lost data and must abort while the original is still in place
-      val stagedRows = FileStats.collectStaged(spark,
-        FileStats.listDirEntries(spark, staging.toString)).iterator.map(_.rows).sum
-      require(stagedRows == dirtyRows,
-        s"compaction wrote $stagedRows rows, expected $dirtyRows; aborting with $live untouched")
-      // Optimistic concurrency: the swap replaces the dirty leaves' files
-      // captured at inventory time, so a writer landing in one of them
-      // after it would have its rows silently dropped. Untouched leaves are
-      // never renamed, so appends to them are harmless and must not abort
-      // an otherwise-finished rewrite. Verify no dirty leaf moved and abort
-      // cleanly BEFORE the marker — staging without a marker is swept, the
-      // live tree is still complete, the writer's rows are safe.
-      onBeforeCommit()
-      val dirtyRels = dirty.map(_._1).toSet
-      val now = partitionLeaves(fs, live, partitionCols.length).filter(l => dirtyRels(l._1))
-      if (fileIdentity(now.flatMap(_._2)) != fileIdentity(dirty.flatMap(_._2))) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(
-          s"concurrent writer detected on $root during compaction; staging " +
-            "removed, live tree untouched — re-run compaction after the " +
-            "writer finishes (maintenance requires the store quiescent or " +
-            "it aborts, never loses rows)")
-      }
-      writeMarker(fs, marker, expectedRows)
-      applyStaging(spark, live, staging, marker, fs, expectedRows)
-    }
-  }
-
-  /** Versioned stores: stage ONLY the dirty partitions under the NEXT
-    * version prefix — readers only ever list the pointed-at prefix, so
-    * staging is invisible — write the carried-partition manifest beside
-    * them, verify the composite, persist the marker, then commit by
-    * overwriting `_current` with ONE atomic write. No data rename anywhere,
-    * which is what object stores (rename = copy+delete, non-atomic) require.
-    * Carried partitions chain to the version that PHYSICALLY holds them
-    * (an entry carried across N commits still names its original prefix),
-    * and cleanup keeps every partition a retained snapshot reads.
+  /** Stage ONLY the dirty partitions under the NEXT version prefix —
+    * readers only ever list the pointed-at prefix, so staging is invisible
+    * — write the carried-partition manifest beside them, verify the
+    * composite, persist the marker, then commit by overwriting `_current`
+    * with ONE atomic write. No data rename anywhere, which is what object
+    * stores (rename = copy+delete, non-atomic) require. Carried partitions
+    * chain to the version that PHYSICALLY holds them (an entry carried
+    * across N commits still names its original prefix), and cleanup keeps
+    * every partition a retained snapshot reads.
     */
-  private def compactPointerStore(spark0: SparkSession, root: String,
+  private def compactOn(spark: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
-      convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean, retainSnapshots: Int,
-      cluster: ClusterSpec): Unit =
-    // inference pinned off on a CLONED session, never the shared one — see
-    // compactPlainRoot for the byte-identical-dir-names rationale and the
-    // concurrency hazard a shared-session flip creates
-    graft.ConfScope.withSessionConf(spark0,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { spark =>
-      compactPointerStoreOn(spark, root, maxRecordsPerFile, partitionCols,
-        convertStreamingStore, dirtyMaxFiles, dirtyMinAvgBytes, full,
-        retainSnapshots, cluster)
-    }
-
-  private def compactPointerStoreOn(spark: SparkSession, root: String,
-      maxRecordsPerFile: Long, partitionCols: Seq[String],
-      convertStreamingStore: Boolean, dirtyMaxFiles: Int,
-      dirtyMinAvgBytes: Long, full: Boolean, retainSnapshots: Int,
-      cluster: ClusterSpec): Unit = {
+      dirtyMaxFiles: Int, dirtyMinAvgBytes: Long, full: Boolean,
+      retainSnapshots: Int, cluster: ClusterSpec): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(root, "_compact-inflight")
     locally {
@@ -447,13 +322,6 @@ object Compaction {
         fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
       }
       val curDir = s"$root/${GraftStore.versionPrefix(cur)}"
-      val sinkLog = new Path(curDir, "_spark_metadata")
-      if (fs.exists(sinkLog)) {
-        require(convertStreamingStore,
-          s"$root was written by the streaming sink (_spark_metadata present); " +
-            "stop the streaming query and pass convertStreamingStore=true")
-        fs.delete(sinkLog, true)
-      }
       // composite partition inventory: the current prefix's own leaves plus
       // everything its manifest carries; a partition can span both (appends
       // after a carry), in which case its file set is the union
@@ -620,82 +488,6 @@ object Compaction {
     // retained snapshot references a staged dir it is reclaimable (the 24 h
     // age guard protects writers staging concurrently with this commit)
     GraftStore.sweepOrphanAppendDirs(spark, root, 24L * 3600 * 1000)
-  }
-
-  /** Swap each STAGED leaf partition directory with two single renames: the
-    * old leaf moves to a hidden `.compact-trash` dir inside the live root
-    * (names starting with `.` are pruned by Spark's file listing, so readers
-    * never see trash as a partition), then the staged leaf renames in. Only
-    * dirty leaves are staged, so untouched partitions are never renamed at
-    * all; the live root is never renamed away, and a partition's unreadable
-    * window is two metadata operations — not the per-file delete+rename a
-    * job commit does.
-    *
-    * Idempotent for recovery: a leaf already swapped is gone from staging
-    * and is skipped; a leaf whose old dir was trashed but whose replacement
-    * never landed (crash between the two renames) still has its staged copy,
-    * which renames straight in. A crash anywhere in here leaves the marker +
-    * staging in place for the recovery path above. Requires no concurrent
-    * WRITER (appends racing the swap into a replaced partition would be
-    * trashed with the old files).
-    */
-  private def applyStaging(spark: SparkSession, live: Path, staging: Path,
-      marker: Path, fs: FileSystem, expectedRows: Long): Unit = {
-    val trashRoot = new Path(live, ".compact-trash")
-    for (rel <- leafPartitionDirs(fs, staging)) {
-      val stagedLeaf = new Path(staging, rel)
-      val liveLeaf = new Path(live, rel)
-      val trashLeaf = new Path(trashRoot, rel)
-      // a trash leaf surviving a crashed attempt is superseded: the staged
-      // copy (verified complete before the marker was written) is authoritative
-      if (fs.exists(trashLeaf)) fs.delete(trashLeaf, true)
-      fs.mkdirs(trashLeaf.getParent)
-      fs.mkdirs(liveLeaf.getParent)
-      if (fs.exists(liveLeaf))
-        require(fs.rename(liveLeaf, trashLeaf), s"rename $liveLeaf -> $trashLeaf failed")
-      require(fs.rename(stagedLeaf, liveLeaf), s"rename $stagedLeaf -> $liveLeaf failed")
-    }
-    val liveRows = spark.read.parquet(live.toString).count()
-    // ≥, not ==: on this tier untouched leaves are never swapped, so a
-    // concurrent append to one (legal — the conflict check deliberately
-    // scopes to the dirty leaves) GROWS the store mid-commit. Loss still
-    // trips the wire; benign growth must not wedge an otherwise-complete
-    // swap (or its crash recovery) behind a spurious mismatch.
-    require(liveRows >= expectedRows,
-      s"post-swap count $liveRows < expected $expectedRows — inspect $live against $staging")
-    // refresh the pruning sidecar on stores that carry one (untouched files
-    // reuse their lines; swapped leaves are footer-read). Stat-less plain
-    // stores stay stat-less — backfill is FileStats.refresh, not compaction.
-    val priorStats = FileStats.read(spark, live.toString)
-    if (priorStats.nonEmpty) FileStats.refreshDir(spark, live.toString, priorStats)
-    // marker FIRST: leftover staging without a marker is just re-staged on
-    // the next run, but a leftover marker without staging reads as an
-    // unrecoverable crash and blocks compaction on a healthy store
-    fs.delete(marker, false)
-    fs.delete(staging, true)
-    fs.delete(trashRoot, true)
-  }
-
-  /** Relative paths of the hive leaf partition dirs under `root`: the
-    * deepest directories whose every path component is `col=value` AND that
-    * actually hold data files. The file check is load-bearing for recovery:
-    * a crashed swap leaves intermediate staging dirs whose leaves were
-    * already renamed out — without it, recovery would mistake such an
-    * EMPTIED intermediate dir for a leaf and swap it over a populated live
-    * subtree. Hidden/metadata names (`_SUCCESS`, `.compact-trash`) are
-    * skipped at both levels.
-    */
-  private def leafPartitionDirs(fs: FileSystem, root: Path): Seq[String] = {
-    def walk(dir: Path, rel: String): Seq[String] = {
-      val entries = fs.listStatus(dir)
-      val subDirs = entries.filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.contains("=") && visible(p.getName))
-      val hasData = entries.exists(e => e.isFile && visible(e.getPath.getName))
-      if (subDirs.isEmpty) { if (rel.nonEmpty && hasData) Seq(rel) else Seq.empty }
-      else subDirs.toSeq.flatMap(p =>
-        walk(p, if (rel.isEmpty) p.getName else s"$rel/${p.getName}"))
-    }
-    walk(root, "")
   }
 
   /** Atomic marker write (temp + rename): a torn marker would wedge every

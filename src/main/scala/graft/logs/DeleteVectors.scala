@@ -384,9 +384,7 @@ object DeleteVectors {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    require(GraftStore.isPointerStore(spark, root),
-      s"$root is not a versioned store — row-level deletes commit as a new " +
-        "version and need a commit primitive")
+    GraftStore.requireStore(spark, root)
     MaintenanceLease.withLeaseRetry(spark, root, "delete", leaseAttempts) {
       commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
         // A crash between the original over-cap vector commit and its
@@ -515,8 +513,7 @@ object DeleteVectors {
     commitId.foreach { id =>
       require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
     }
-    require(GraftStore.isPointerStore(spark, root),
-      s"$root is not a versioned store — merge commits need a commit primitive")
+    GraftStore.requireStore(spark, root)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pair = mergeCommit(spark, root, updates, keyCols, partitionCols,
       commitId, retainSnapshots, maxRecordsPerFile, maxRanges, leaseAttempts,

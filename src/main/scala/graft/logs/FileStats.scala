@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * non-overlapping files from the scan list before any footer (or, on object
   * stores, any GET) is issued.
   *
-  * One `_graft_filestats` object per version dir (or plain store root), one
+  * One `_graft_filestats` object per version dir, one
   * TSV line per data file keyed by the store-layout-relative path that
   * [[GraftStore.compositeEntries]] uses: `key  len  rows  minNs  maxNs
   * minPod  maxPod`. `len` doubles as an identity check — a same-key length
@@ -415,8 +415,8 @@ object FileStats {
     }.toSeq
   }
 
-  /** Stamp a self-contained directory (staged version tree, plain store
-    * root) with its sidecar, reusing `prior` lines by (key, len).
+  /** Stamp a self-contained directory (a staged or fresh version tree)
+    * with its sidecar, reusing `prior` lines by (key, len).
     */
   def refreshDir(spark: SparkSession, dir: String,
       prior: Map[String, FileStat] = Map.empty): Seq[FileStat] =
@@ -453,19 +453,13 @@ object FileStats {
       .getOrElse(GraftStore.readVersionPhysical(spark, root, n, Some(files)).count())
 
   /** Recompute the live snapshot's sidecar from scratch-or-prior — the
-    * backfill/repair entry point (pre-stats stores, foreign writers).
-    * Versioned stores stamp the LIVE version dir; plain directories
-    * stamp the root itself.
+    * backfill/repair entry point (pre-stats stores, foreign writers). It
+    * stamps the LIVE version dir.
     */
   def refresh(spark: SparkSession, root: String): Seq[FileStat] = {
-    if (GraftStore.isPointerStore(spark, root)) {
-      val cur = GraftStore.currentVersion(spark, root)
-      val dir = GraftStore.resolve(spark, root)
-      refreshInto(spark, dir, GraftStore.compositeEntries(spark, root, cur),
-        read(spark, dir))
-    } else {
-      val dir = GraftStore.resolve(spark, root)
-      refreshDir(spark, dir, read(spark, dir))
-    }
+    val cur = GraftStore.liveVersionOf(spark, root)
+    val dir = GraftStore.resolveVersion(spark, root, cur)
+    refreshInto(spark, dir, GraftStore.compositeEntries(spark, root, cur),
+      read(spark, dir))
   }
 }

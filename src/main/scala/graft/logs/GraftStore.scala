@@ -27,9 +27,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and `format("graft")` behind `y-logcli` — plans through the one snapshot
   * relation ([[graft.sources.GraftSourceProvider.snapshot]]): the
   * manifest-built file index (own + carried partitions), manifest-typed
-  * partition columns, stats skipping, and deletion vectors. A plain
-  * unversioned dir (reference-layout tree) reads through Spark's parquet
-  * reader in [[readStore]].
+  * partition columns, stats skipping, and deletion vectors.
+  *
+  * This is the one store tier: every store is created by [[init]] and
+  * changes only by a version commit. A directory without `_current` (a
+  * plain Spark-written parquet tree, a `_spark_metadata` sink output) is
+  * not a store, and every store operation refuses it through
+  * [[requireStore]].
   */
 object GraftStore {
 
@@ -103,12 +107,13 @@ object GraftStore {
     fsOf(spark, p).exists(p)
   }
 
-  /** Data root readers should scan: `<root>/<version>` for versioned
-    * stores, `root` itself for plain dirs.
+  /** The live version's own directory, `<root>/<version>` — where a
+    * version's sidecars live and raw appends land.
     */
-  def resolve(spark: SparkSession, root: String): String =
-    if (isPointerStore(spark, root)) s"$root/${readPointer(spark, root)}"
-    else root
+  def resolve(spark: SparkSession, root: String): String = {
+    requireStore(spark, root)
+    s"$root/${readPointer(spark, root)}"
+  }
 
   /** Snapshot read (time travel, one step): the data root of a SPECIFIC
     * retained version. Commits keep the replaced version as a grace
@@ -592,7 +597,7 @@ object GraftStore {
 
   private def snapshotOf(spark: SparkSession, root: String, n: Int,
       files: Option[Seq[FileEntry]] = None) =
-    graft.sources.GraftSourceProvider.snapshot(spark, root, Some(n), files = files)
+    graft.sources.GraftSourceProvider.snapshot(spark, root, n, files = files)
 
   /** Row count of `df` by scanning it — for commit and audit checks, which
     * must read the data files: a plain `count()` over a snapshot relation
@@ -604,13 +609,10 @@ object GraftStore {
     df.select().queryExecution.toRdd.count()
 
   /** DataFrame read of the live snapshot: [[readVersion]] of the live
-    * version for versioned stores. A plain dir reads through Spark's own
-    * parquet reader, which honors a streaming sink's `_spark_metadata` log.
+    * version.
     */
   def readStore(spark: SparkSession, root: String): DataFrame =
-    if (isPointerStore(spark, root))
-      readVersion(spark, root, currentVersion(spark, root))
-    else spark.read.parquet(root)
+    readVersion(spark, root, liveVersionOf(spark, root))
 
   /** Hidden/metadata names (`_SUCCESS`, `_graft_manifest`, `.crc`, trash)
     * are invisible to Spark's file listing and to store accounting.
@@ -657,8 +659,9 @@ object GraftStore {
     own ++ carried
   }
 
-  /** Live version number; unlike [[currentVersion]] it refuses a plain dir
-    * with an `IllegalArgumentException` instead of a missing-file error.
+  /** Live version number; unlike [[currentVersion]] it refuses a
+    * non-store directory with an `IllegalArgumentException` instead of a
+    * missing-file error.
     */
   def liveVersionOf(spark: SparkSession, root: String): Int = {
     requireStore(spark, root)
@@ -765,7 +768,7 @@ object GraftStore {
     def readSide(n: Int, m: Map[String, FileEntry]): Option[DataFrame] = {
       val side = touched.intersect(m.keySet).toSeq.sorted.map(m)
       Option.when(side.nonEmpty)(applyOverlay(graft.sources.GraftSourceProvider
-        .snapshot(spark, root, Some(n), files = Some(side)).rows, overlays))
+        .snapshot(spark, root, n, files = Some(side)).rows, overlays))
     }
     // `_change` is the diff's RESERVED output name (the working columns
     // below collision-proof themselves via free(), but the output tag is
@@ -956,12 +959,16 @@ object GraftStore {
       .map { s => fs.delete(s.getPath, true); s.getPath.toString }
   }
 
-  private def requireStore(spark: SparkSession, root: String): Unit =
+  /** Refuses, with an `IllegalArgumentException` naming `root`, anything
+    * that is not a store: a missing path, or a directory without the
+    * `_current` pointer. Store jobs call it before they touch the root.
+    */
+  def requireStore(spark: SparkSession, root: String): Unit =
     require(isPointerStore(spark, root),
       s"$root is not a versioned store (no $PointerName pointer)")
 
-  /** (retained versions, live version) of a versioned store; refuses plain
-    * unversioned directories.
+  /** (retained versions, live version) of a versioned store; refuses
+    * non-store directories.
     */
   private def versionsOf(spark: SparkSession, root: String): (Seq[Int], Int) = {
     requireStore(spark, root)

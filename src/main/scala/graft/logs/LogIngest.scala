@@ -91,28 +91,21 @@ object LogIngest {
     */
   def writeHive(df: DataFrame, root: String,
       maxRecordsPerFile: Long = 1000000L,
-      partitionCols: Seq[String] = LogSchema.hivePartitionColumns,
-      atomic: Boolean = true): Unit = {
-    // Fresh stores are created versioned ([[GraftStore]] — version prefixes
-    // plus a `_current` pointer, on every filesystem) so maintenance
-    // rewrites can swap the whole tree atomically under readers. Existing
-    // plain roots are appended to as-is. A concurrent first writer can lose
-    // the init race — benign, the store the winner created is exactly the
-    // one the loser wanted.
-    //
-    // APPENDS to an existing versioned store commit atomically through
-    // [[AppendCommit]] (stage invisibly, publish by manifest-add + pointer
-    // flip): readers polling mid-append see none or all of the batch, a
-    // crashed writer leaves zero visible rows, and the commit bumps the
-    // version (grace snapshot + time travel apply). The
-    // FIRST write of a fresh store still lands directly in v1: no reader
-    // can hold a reference to a store that does not exist yet, so there is
-    // no torn-read window to defend. `atomic=false` forces the legacy
-    // in-place append (torn-visible; compaction's conflict detection is the
-    // only guard) — for layouts the commit protocol cannot stage, e.g.
-    // appends deeper than the store's partition column depth.
+      partitionCols: Seq[String] = LogSchema.hivePartitionColumns): Unit = {
+    // Every write lands in a store ([[GraftStore]] — version prefixes plus
+    // a `_current` pointer, on every filesystem). A write to an existing
+    // store commits atomically through [[AppendCommit]] (stage invisibly,
+    // publish by manifest-add + pointer flip): readers polling mid-append
+    // see none or all of the batch, a crashed writer leaves zero visible
+    // rows, and the commit bumps the version (grace snapshot + time travel
+    // apply). The FIRST write of a fresh store lands directly in v1: no
+    // reader can hold a reference to a store that does not exist yet, so
+    // there is no torn-read window to defend. A concurrent first writer
+    // can lose the init race — benign, the store the winner created is
+    // exactly the one the loser wanted. An existing directory that is not
+    // a store is refused, never written into.
     val spark = df.sparkSession
-    if (atomic && GraftStore.isPointerStore(spark, root)) {
+    if (GraftStore.isPointerStore(spark, root)) {
       AppendCommit.commit(df, root, partitionCols, maxRecordsPerFile)
       return
     }
@@ -125,15 +118,16 @@ object LogIngest {
       .options(LogSchema.parquetBloomOptions)
       .mode("append")
       .parquet(dataDir)
-    // stamp the pruning sidecar ([[FileStats]]): pre-existing files reuse
-    // their lines by (key, len), so repeated appends footer-read only the
-    // files this write added
+    // stamp the pruning sidecar ([[FileStats]]): lines a racing first
+    // writer already stamped are reused by (key, len)
     FileStats.refreshDir(spark, dataDir, FileStats.read(spark, dataDir))
   }
 
   /** Create the versioned store for `root` ([[GraftStore.init]]) if nothing
-    * exists there yet. Idempotent; losing a concurrent-creation race is
-    * benign.
+    * exists there yet, or `root` is an empty directory. Idempotent; losing
+    * a concurrent-creation race is benign. A non-empty directory without
+    * `_current` is left untouched; the store jobs that then find no store
+    * there refuse it ([[GraftStore.requireStore]]).
     * A fresh store is EMPTY (v1 holds no data): the streaming sink relies
     * on this so its first micro-batch goes through the same atomic
     * [[AppendCommit]] as every later one — replayable by commit id.
@@ -146,7 +140,7 @@ object LogIngest {
     // already be bootstrapping its sibling index, and deleting it from the
     // loser would silently discard a freshly built index (self-healing via
     // the dataless guard, but at the cost of a full corpus rescan)
-    if (!fs.exists(rootPath)) {
+    if (!fs.exists(rootPath) || fs.listStatus(rootPath).isEmpty) {
       val created =
         try { GraftStore.init(spark, root); true }
         catch {

@@ -14,8 +14,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - `total_file_size 1M` (fluent-bit.conf:42,59) → `maxRecordsPerFile`.
   *  - tail checkpoint DB (fluent-bit.conf:8-9) → the streaming checkpoint.
   *  - SIGTERM flush (reference test.sh:427-541) → `StreamingQuery.stop()`
-  *    after the in-flight batch commits; the file-sink commit log guarantees
-  *    no partial files — strictly stronger than the reference's behavior.
+  *    after the in-flight batch commits; each micro-batch is one atomic
+  *    store commit, so a stop or crash never leaves partial files visible —
+  *    strictly stronger than the reference's behavior.
+  *
+  * Every sink here that writes the log store commits through
+  * [[startStoreSink]]: the store is an ordinary versioned store from the
+  * first batch, read with [[GraftStore.readStore]] or `format("graft")`.
   */
 object LogStreamIngest {
 
@@ -33,47 +38,20 @@ object LogStreamIngest {
       .option("ignoreMissingFiles", "true")
       .text(inputGlob), clusterName, nodeName)
 
-  def start(spark: SparkSession, inputGlob: String, outputRoot: String,
-      checkpoint: String, clusterName: String,
-      nodeName: String = "local-node",
-      triggerInterval: String = "60 seconds",
-      maxFilesPerTrigger: Int = 1000,
-      maxRecordsPerFile: Long = 1000000L): StreamingQuery = {
-    val parsed = parsedStream(spark, inputGlob, clusterName, nodeName, maxFilesPerTrigger)
-      .withColumn("date", date_format(col("time"), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col("time"), "HH"))
-
-    parsed.writeStream
-      .format("parquet")
-      .partitionBy(LogSchema.hivePartitionColumns: _*)
-      .option("path", outputRoot)
-      .option("checkpointLocation", checkpoint)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      // same physical contract as the batch writer and the compaction
-      // rewrite: selector columns are prunable (dictionary or bloom) from
-      // the first streamed file, not only after a maintenance rewrite
-      .options(LogSchema.parquetBloomOptions)
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
-
-  /** FIRST-CLASS streaming store (round 7): every micro-batch commits
-    * through the store protocol ([[AppendCommit]] — stage invisibly,
-    * publish by manifest-add + pointer flip) instead
-    * of the parquet sink's `_spark_metadata` commit log. The resulting
-    * store is an ordinary versioned store from the first batch, so
-    * compaction / retention / vacuum / time travel run against the LIVE
-    * ingest — no stop-the-stream `convertStreamingStore` step, matching the
-    * reference's lake, which is queried while the DaemonSet keeps writing
-    * (test.sh:207-330). Maintenance and the sink serialize on the store
-    * lease; the sink's publish retries behind a running compaction.
+  /** The log-store stream sink: every micro-batch commits through the
+    * store protocol ([[AppendCommit]] — stage invisibly, publish by
+    * manifest-add + pointer flip). The store is an ordinary versioned
+    * store from the first batch, so compaction / retention / vacuum / time
+    * travel run against the LIVE ingest, matching the reference's lake,
+    * which is queried while the DaemonSet keeps writing (test.sh:207-330).
+    * Maintenance and the sink serialize on the store lease; the sink's
+    * publish retries behind a running compaction.
     *
     * Exactly-once: the commit id is `s<sinkId>-b<batchId>`, with `sinkId`
     * derived from the CHECKPOINT path — stable across restarts, so a
     * micro-batch replayed after a crash short-circuits on the recorded id
-    * instead of committing twice. (The parquet sink gets the same guarantee
-    * from `_spark_metadata`; this moves it into the store's own commit
-    * records.) Batches yielding zero rows publish nothing.
+    * instead of committing twice. Batches yielding zero rows publish
+    * nothing.
     */
   def startStoreSink(spark: SparkSession, inputGlob: String, storeRoot: String,
       checkpoint: String, clusterName: String,
@@ -164,9 +142,10 @@ object LogStreamIngest {
       .start()
   }
 
-  /** K5 wired live: the main partitioned sink PLUS a close-write side channel
-    * — the engine analogue of the reference's `_flb_close_write` sentinel +
-    * per-tag force flush (close-write-flush.patch:20-156). A second streaming
+  /** K5 wired live: the store sink ([[startStoreSink]] into `outputRoot`)
+    * PLUS a close-write side channel — the engine analogue of the
+    * reference's `_flb_close_write` sentinel + per-tag force flush
+    * (close-write-flush.patch:20-156). A second streaming
     * query runs [[graft.streaming.CloseWriteDetector]] over the same tail
     * source and appends one `PodClosed` row per (pod, container) stream that
     * has been idle for `idleTimeout` — the signal a downstream
@@ -185,7 +164,7 @@ object LogStreamIngest {
       maxFilesPerTrigger: Int = 1000,
       maxRecordsPerFile: Long = 1000000L): (StreamingQuery, StreamingQuery) = {
     import spark.implicits._
-    val main = start(spark, inputGlob, outputRoot, s"$checkpoint/main",
+    val main = startStoreSink(spark, inputGlob, outputRoot, s"$checkpoint/main",
       clusterName, nodeName, triggerInterval, maxFilesPerTrigger, maxRecordsPerFile)
     val activity = parsedStream(spark, inputGlob, clusterName, nodeName, maxFilesPerTrigger)
       .select(col("cluster"), col("namespace"), col("pod"), col("container"),
@@ -252,7 +231,7 @@ object LogStreamIngest {
     // any setup failure below must not leak the watcher's thread +
     // WatchService + scheduler — there would be no handle left to close
     try {
-      val main = start(spark, inputGlob, outputRoot, s"$checkpoint/main",
+      val main = startStoreSink(spark, inputGlob, outputRoot, s"$checkpoint/main",
         clusterName, nodeName, triggerInterval, maxFilesPerTrigger, maxRecordsPerFile)
       val closeQ =
         try {

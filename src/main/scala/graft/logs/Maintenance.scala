@@ -54,11 +54,8 @@ object Maintenance {
       views: Seq[String] = Seq.empty,
       dirtyMaxFiles: Int = 4,
       dirtyMinAvgBytes: Long = 32L << 20): Debt = {
-    val versioned = GraftStore.isPointerStore(spark, root)
-    val live = if (versioned) GraftStore.currentVersion(spark, root) else 0
-    val entries: Seq[GraftStore.FileEntry] =
-      if (versioned) GraftStore.compositeEntries(spark, root, live)
-      else FileStats.listDirEntries(spark, root)
+    val live = GraftStore.liveVersionOf(spark, root)
+    val entries = GraftStore.compositeEntries(spark, root, live)
     val byPartition = entries.groupBy(e =>
       e.key.split('/').filter(_.nonEmpty).dropRight(1).mkString("/"))
     val dirty = byPartition.values.count { fs =>
@@ -67,8 +64,7 @@ object Maintenance {
         (n > 1 && fs.map(_.len).sum / n < dirtyMinAvgBytes)
     }
     val dv = DeleteVectors.read(spark, GraftStore.resolve(spark, root))
-    val stale = views.filter(v =>
-      live > 0 && MatView.baseVersionOf(spark, v) < live)
+    val stale = views.filter(v => MatView.baseVersionOf(spark, v) < live)
     Debt(live, byPartition.size, dirty, entries.size,
       dv.size, DeleteVectors.totalPositions(dv), stale)
   }
@@ -81,9 +77,7 @@ object Maintenance {
     */
   def inferPartitionCols(spark: SparkSession, root: String): Option[Seq[String]] = {
     val entries =
-      if (GraftStore.isPointerStore(spark, root))
-        GraftStore.compositeEntries(spark, root, GraftStore.currentVersion(spark, root))
-      else FileStats.listDirEntries(spark, root)
+      GraftStore.compositeEntries(spark, root, GraftStore.liveVersionOf(spark, root))
     val layouts = entries.map(_.key.split('/').filter(_.nonEmpty).dropRight(1)
       .toSeq.takeWhile(_.contains('=')).map(_.takeWhile(_ != '='))).distinct
     layouts match {

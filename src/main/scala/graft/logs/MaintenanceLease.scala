@@ -15,12 +15,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * cleanly before touching anything.
   *
   * Lease placement: inside the root (`_maintenance-lease`, `_`-prefix keeps
-  * it out of Spark listings) for versioned stores — a single-object
-  * create-if-absent, which [[graft.sources.S3LiteFileSystem]] honors with a
-  * HEAD-then-PUT; a SIBLING file (`<root>.maintenance-lease`) for plain
-  * roots, whose per-leaf swap stages beside the root. On `file:` roots
-  * the acquire uses `Files.createFile` (atomic CREATE_NEW at the syscall
-  * level) rather than Hadoop's check-then-create.
+  * it out of Spark listings) — a single-object create-if-absent, which
+  * [[graft.sources.S3LiteFileSystem]] honors with a HEAD-then-PUT. The
+  * root is a store, a materialized view, or a dedup-state lock directory;
+  * it is created when missing. On `file:` roots the acquire uses
+  * `Files.createFile` (atomic CREATE_NEW at the syscall level) rather than
+  * Hadoop's check-then-create.
   *
   * A crashed maintainer leaves its lease behind — deliberately: the lease
   * names the holder and acquire time, and the operator breaks it explicitly
@@ -40,9 +40,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object MaintenanceLease {
 
-  def leasePath(spark: SparkSession, root: String): Path =
-    if (GraftStore.isPointerStore(spark, root)) new Path(root, "_maintenance-lease")
-    else new Path(root + ".maintenance-lease")
+  def leasePath(root: String): Path = new Path(root, "_maintenance-lease")
 
   final class LeaseHeldException(msg: String) extends IllegalStateException(msg)
 
@@ -74,7 +72,7 @@ object MaintenanceLease {
   }
 
   private def acquire(spark: SparkSession, root: String, op: String): Path = {
-    val p = leasePath(spark, root)
+    val p = leasePath(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val payload =
       s"$op pid=${ProcessHandle.current().pid()} since=${java.time.Instant.now()}"
@@ -94,6 +92,7 @@ object MaintenanceLease {
     try {
       if (scheme == "file") {
         val nio = Paths.get(p.toUri.getPath)
+        Files.createDirectories(nio.getParent)
         Files.write(nio, payload.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW,
           StandardOpenOption.WRITE)
       } else {
@@ -116,7 +115,7 @@ object MaintenanceLease {
     * when a lease existed and was removed.
     */
   def breakLease(spark: SparkSession, root: String): Boolean = {
-    val p = leasePath(spark, root)
+    val p = leasePath(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 }

@@ -30,8 +30,7 @@ object SchemaEvolution {
       partitionCols: Seq[String] = LogSchema.hivePartitionColumns): Int = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name '$name'")
     org.apache.spark.sql.types.DataType.fromDDL(typeDDL) // fail fast
-    require(GraftStore.isPointerStore(spark, root),
-      s"$root is not a versioned store — schema evolution needs a commit primitive")
+    GraftStore.requireStore(spark, root)
     MaintenanceLease.withLeaseRetry(spark, root, "add-column") {
       addHeld(spark, root, name, typeDDL, partitionCols)
     }

@@ -74,7 +74,7 @@ object StreamIngestCli {
       Runtime.getRuntime.removeShutdownHook(stop)
       main.stop(); closeQ.stop(); watcher.close()
       // drive summary: rows ingested + close events emitted
-      val rows = spark.read.parquet(root.get).count()
+      val rows = GraftStore.readStore(spark, root.get).count()
       val closes =
         try spark.read.parquet(closeEvents.get)
           .select("namespace", "pod", "container").collect()

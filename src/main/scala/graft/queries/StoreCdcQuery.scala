@@ -85,7 +85,7 @@ object StoreCdcQuery {
       .select($"time_ns", $"message")
     val expectedCnt = expected.count()
 
-    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    Retention.enforceHive(spark, root, dates(1))
     val cdc = GraftStore.rowDiff(spark, root, 3, 4).cache()
     val removed = cdc.filter($"_change" === "removed")
       .select($"time_ns", $"message")

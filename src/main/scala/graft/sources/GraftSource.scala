@@ -36,7 +36,7 @@ import scala.util.control.NonFatal
   * Read options:
   *   - `versionAsOf` (int) / `timestampAsOf` (epoch-millis, ISO-8601
   *     instant, or `yyyy-MM-dd HH:mm:ss` UTC): time travel — mutually
-  *     exclusive, versioned stores only.
+  *     exclusive.
   *   - `sinceNs` (long) / `pod` (string): the reference CLI's `--since` /
   *     pod-probe shortcuts — the same `time_ns >=` / `pod =` filters over
   *     the snapshot relation that `.filter($"time_ns" >= cutoff)` spells
@@ -172,15 +172,15 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
   private def isCdc(parameters: Map[String, String]): Boolean =
     parameters.get("cdc").exists(_.trim.equalsIgnoreCase("true"))
 
-  /** Check stream options and the store tier; returns the normalized root. */
+  /** Check stream options and that the root is a store; returns the
+    * normalized root.
+    */
   private def validateStreamOptions(sqlContext: SQLContext,
       parameters: Map[String, String]): String = {
     val root = normRoot(parameters.getOrElse("path",
       throw new IllegalArgumentException(
         "graft stream needs a path: spark.readStream.format(\"graft\").load(<store root>)")))
-    require(GraftStore.isPointerStore(sqlContext.sparkSession, root),
-      s"$root is not a versioned store — streaming tails the commit log, " +
-        "which only versioned tiers have")
+    GraftStore.requireStore(sqlContext.sparkSession, root)
     val starting = parameters.getOrElse("startingVersion", "latest")
     require(starting == "latest" || starting.trim.matches("\\d+"),
       s"startingVersion must be 'latest' or a version number, got '$starting'")
@@ -217,13 +217,11 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
       throw new IllegalArgumentException(
         "graft source needs a path: spark.read.format(\"graft\").load(<store root>)"))
     )
-    val versioned = GraftStore.isPointerStore(spark, root)
+    GraftStore.requireStore(spark, root)
     val verOpt = parameters.get("versionAsOf").map(_.trim.toInt)
     val tsOpt = parameters.get("timestampAsOf").map(parseTimestampMillis)
     require(verOpt.isEmpty || tsOpt.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive")
-    require(versioned || (verOpt.isEmpty && tsOpt.isEmpty),
-      s"$root is not a versioned store — time travel options need one")
     val sinceOpt = parameters.get("sinceNs").map(_.trim.toLong)
     val podOpt = parameters.get("pod")
     require((sinceOpt.isEmpty && podOpt.isEmpty) || (verOpt.isEmpty && tsOpt.isEmpty),
@@ -240,12 +238,10 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
       return new GraftFrameRelation(sqlContext, df)
     }
 
-    val version =
-      if (!versioned) None
-      else Some(verOpt.getOrElse(tsOpt match {
-        case Some(ms) => GraftStore.versionAsOf(spark, root, ms)
-        case None => GraftStore.liveVersionOf(spark, root)
-      }))
+    val version = verOpt.getOrElse(tsOpt match {
+      case Some(ms) => GraftStore.versionAsOf(spark, root, ms)
+      case None => GraftStore.currentVersion(spark, root)
+    })
     GraftSourceProvider.snapshot(spark, root, version, userSchema).relation
   }
 
@@ -258,14 +254,9 @@ class GraftSourceProvider extends RelationProvider with SchemaRelationProvider
     require(mode == SaveMode.Append,
       s"graft writes are atomic APPEND commits; got $mode — overwrite of a " +
         "versioned store is maintenance (compaction/retention), not a write mode")
-    if (!GraftStore.isPointerStore(spark, root)) {
-      val p = new Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!fs.exists(p) || fs.listStatus(p).isEmpty,
-        s"$root exists and is not a versioned store — the graft sink only " +
-          "appends through the commit protocol")
-      GraftStore.init(spark, root)
-    }
+    // a missing or empty root becomes a fresh store; any other directory
+    // without `_current` is refused by the commit below
+    graft.logs.LogIngest.ensureStore(spark, root)
     // `.partitionBy(...)` reaches a v1 source as the JSON-encoded
     // __partition_columns option — honor it like the explicit option, or a
     // partitioned write would silently stage FLAT against the store layout
@@ -329,8 +320,7 @@ private[graft] object GraftSourceProvider {
   /** One resolved snapshot of a store: the fast-tier relation over its
     * [[GraftFileIndex]].
     *
-    * @param dir the version directory the sidecars are read from (the root
-    *            itself for a plain directory)
+    * @param dir the version directory the sidecars are read from
     */
   final class Snapshot(spark: SparkSession, dir: String,
       entries: Seq[GraftStore.FileEntry], index: GraftFileIndex,
@@ -373,19 +363,18 @@ private[graft] object GraftSourceProvider {
   }
 
   /** THE snapshot read, built on the driver: `version` of the store at
-    * `root` (`None` = `root` is a plain directory) → its data files, schema
+    * `root` → its data files, schema
     * overlay, stats, bucket claim and [[GraftFileIndex]], with no Spark job
     * unless schemas merge. `format("graft")` and every
     * [[GraftStore.readVersion]]-family read plan through it.
     *
     * @param files a subset of the snapshot's files, to read only those
     */
-  def snapshot(spark: SparkSession, root: String, version: Option[Int],
+  def snapshot(spark: SparkSession, root: String, version: Int,
       userSchema: Option[StructType] = None,
       files: Option[Seq[GraftStore.FileEntry]] = None): Snapshot = {
-    val dir = version.fold(root)(GraftStore.resolveVersion(spark, root, _))
-    val entries = files.getOrElse(version.fold(FileStats.listDirEntries(spark, root))(
-      GraftStore.compositeEntries(spark, root, _)))
+    val dir = GraftStore.resolveVersion(spark, root, version)
+    val entries = files.getOrElse(GraftStore.compositeEntries(spark, root, version))
     val overlay = GraftStore.readSchemaOverlay(spark, dir)
     val statsByKey = FileStats.read(spark, dir)
     val statsByPhysical = entries.flatMap { e =>

@@ -394,7 +394,7 @@ class DeleteVectorSpec extends SparkSpec {
     assert(GraftStore.readVersionPhysical(spark, root, 2).count() == total)
 
     // snapshot retention drops the oldest date and carries survivor vectors
-    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    Retention.enforceHive(spark, root, dates(1))
     val survivorsView = df.filter($"date" >= dates(1) && !delCond)
     val live = GraftStore.readStore(spark, root)
     assert(live.count() == survivorsView.count())

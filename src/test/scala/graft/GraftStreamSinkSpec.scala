@@ -92,23 +92,29 @@ class GraftStreamSinkSpec extends SparkSpec {
     // commits twice
     val w = tmp("confck")
     val root = w.resolve("store").toString
-    spark.conf.set("spark.sql.streaming.checkpointLocation",
-      w.resolve("ckroot").toString)
-    try {
+    // Spark calls addBatch with frames of a per-query stream-session clone;
+    // calling it directly runs on a clone too, so the sink's micro-batch
+    // settings (AQE off) never reach the shared session of later suites
+    ConfScope.withSessionConf(spark,
+      "spark.sql.streaming.checkpointLocation" -> w.resolve("ckroot").toString) { s =>
       val provider = new graft.sources.GraftSourceProvider
-      def mkSink(name: String) = provider.createSink(spark.sqlContext,
+      def mkSink(name: String) = provider.createSink(s.sqlContext,
         Map("path" -> root, "queryName" -> name), Seq("lang"),
         org.apache.spark.sql.streaming.OutputMode.Append())
-      mkSink("confq").addBatch(0L, docs((1L, "a", "en")))
+      def batch(rows: (Long, String, String)*) =
+        s.createDataFrame(rows).toDF("doc_id", "text", "lang")
+      mkSink("confq").addBatch(0L, batch((1L, "a", "en")))
       assert(GraftStore.readStore(spark, root).count() == 1)
       // a NEW sink instance (the restart) replaying batch 0 must no-op
-      mkSink("confq").addBatch(0L, docs((1L, "a", "en")))
+      mkSink("confq").addBatch(0L, batch((1L, "a", "en")))
       assert(GraftStore.readStore(spark, root).count() == 1,
         "replayed batch under a conf-resolved checkpoint must not double")
       // a different queryName is a different lineage: its batch 0 commits
-      mkSink("otherq").addBatch(0L, docs((2L, "b", "en")))
+      mkSink("otherq").addBatch(0L, batch((2L, "b", "en")))
       assert(GraftStore.readStore(spark, root).count() == 2)
-    } finally spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "the sink's micro-batch settings leaked into the shared session")
   }
 
   test("deleted store re-created at the same path starts with a clean ledger") {

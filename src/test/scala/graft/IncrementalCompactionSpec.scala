@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Incremental compaction (round-6 gate): a maintenance commit must be
-  * proportional to DIRTY data, not store size. Covers both kinds of root:
-  * versioned stores (local disk and object store) carry untouched
-  * partitions by `_graft_manifest` reference (zero bytes move — the next
-  * snapshot reads the very same physical files), and the legacy per-leaf
-  * swap never touches clean leaves. Plus: time_ns-sorted rewrites (row-group pruning survives
+  * proportional to DIRTY data, not store size. Stores (local disk and
+  * object store) carry untouched partitions by `_graft_manifest` reference
+  * (zero bytes move — the next snapshot reads the very same physical
+  * files). Plus: time_ns-sorted rewrites (row-group pruning survives
   * compaction), the maintenance lease (two maintainers can't interleave),
   * retain-N snapshots with multi-step time travel, and manifest-aware
   * retention/vacuum.
@@ -34,9 +33,6 @@ class IncrementalCompactionSpec extends SparkSpec {
       lit("ns0").as("namespace"), lit("n1").as("node"),
       lit("p1").as("pod"), lit("app").as("container"))
     .withColumn("date", date_format($"time", "yyyy-MM-dd"))
-
-  private def inode(p: String): Long =
-    Files.getAttribute(Paths.get(p), "unix:ino").asInstanceOf[java.lang.Long]
 
   private def filesUnder(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -97,9 +93,9 @@ class IncrementalCompactionSpec extends SparkSpec {
     // several row groups at the shrunken block size below
     val df = fixture().withColumn("date", lit("2024-01-01"))
     // ingest in SHUFFLED order so time clustering is genuinely destroyed
-    df.orderBy($"message").repartition(8)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 2000)
-      .mode("overwrite").parquet(root)
+    GraftStore.init(spark, root)
+    appendRaw(df.orderBy($"message").repartition(8), root, parts,
+      maxRecordsPerFile = 2000)
     val hc = spark.sparkContext.hadoopConfiguration
     val prevBlock = hc.get("parquet.block.size")
     hc.set("parquet.block.size", "16384") // force several row groups per file
@@ -107,7 +103,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     finally if (prevBlock == null) hc.unset("parquet.block.size")
     else hc.set("parquet.block.size", prevBlock)
     // every rewritten file is internally sorted by time_ns
-    val aFile = filesUnder(root).head.getPath
+    val aFile = filesUnder(GraftStore.resolve(spark, root)).head.getPath
     val ts = spark.read.parquet(aFile).select($"time_ns").as[Long].collect()
     assert(ts.length > 1)
     assert(ts.zip(ts.tail).forall { case (a, b) => a <= b }, "file not time-sorted")
@@ -159,22 +155,26 @@ class IncrementalCompactionSpec extends SparkSpec {
       assert((d.added ++ d.removed).filter(_.endsWith(".parquet"))
         .forall(_.contains(s"date=$dirtyDate")), s"carried files moved: $d")
       // manifest-aware retention: the oldest date lives only as a carried
-      // reference; dropping it is a manifest edit, physically nothing moves
+      // reference; dropping it commits v3, a manifest and no data object,
+      // and no object of the dropped date is deleted while the v2 grace
+      // snapshot reads it
       val v1Objects = srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet"))
+      val expiredObjects = v1Objects.filter(_.contains(s"date=${dates.head}"))
+      assert(expiredObjects.nonEmpty)
       val deleted = Retention.enforceHive(spark, root, dates(1))
       assert(deleted.size == 1 && deleted.head.contains(s"date=${dates.head}"))
-      assert(srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet")) == v1Objects)
+      assert(GraftStore.currentVersion(spark, root) == 3)
+      assert(!srv.keys.exists(k => k.contains("/v000003/") && k.endsWith(".parquet")))
+      assert(expiredObjects.forall(srv.keys.contains))
       val remaining = GraftStore.readStore(spark, root)
       val remainingCount = remaining.count()
       assert(remaining.select(min($"date".cast("string"))).head.getString(0) == dates(1))
-      // ...while the v1 snapshot still serves the dropped date (immutable)
-      assert(GraftStore.readVersion(spark, root, 1).count() ==
-        df.count() + df.filter($"date" === dirtyDate).count())
-      // vacuum retires v1 to a holder: it deletes the dropped date and the
-      // small files the compaction replaced, and keeps every partition the
-      // live manifest still carries from v1
-      assert(GraftStore.vacuum(spark, root) == Seq(1))
-      assert(GraftStore.listVersions(spark, root) == Seq(2))
+      // ...while the v2 snapshot still serves the dropped date (immutable)
+      assert(GraftStore.readVersion(spark, root, 2).count() == total)
+      // vacuum retires v2 to a holder: the dropped date's objects go, and
+      // every partition the live manifest still carries from v1 and v2 stays
+      assert(GraftStore.vacuum(spark, root) == Seq(2))
+      assert(GraftStore.listVersions(spark, root) == Seq(3))
       val v1Left = srv.keys.filter(k => k.contains("/v000001/") && k.endsWith(".parquet"))
       assert(v1Left.nonEmpty && v1Left.forall(v1Objects.contains))
       assert(!v1Left.exists(k => k.contains(s"date=${dates.head}") || k.contains(s"date=$dirtyDate")))
@@ -198,7 +198,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     val total = GraftStore.readStore(spark, root).count()
     // simulate a concurrent maintainer: lease present => compaction, retention
     // and vacuum all abort BEFORE touching anything, naming the holder
-    val lease = MaintenanceLease.leasePath(spark, root)
+    val lease = MaintenanceLease.leasePath(root)
     Files.writeString(Paths.get(lease.toUri.getPath), "compact pid=999 since=test")
     val e = intercept[IllegalStateException](
       Compaction.compactHive(spark, root, partitionCols = parts))
@@ -278,60 +278,6 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(kept.nonEmpty, "the carried partitions were not kept")
   }
 
-  test("legacy tier: clean leaves are never staged or swapped") {
-    val root = Files.createTempDirectory("graft-legacy").resolve("store").toString
-    val df = fixture()
-    df.repartition(parts.map(col): _*).write.partitionBy(parts: _*)
-      .mode("overwrite").parquet(root) // one file per partition: all clean
-    val dates = df.select($"date").distinct().as[String].collect().sorted
-    val dirtyDate = dates.head
-    df.filter($"date" === dirtyDate).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val total = spark.read.parquet(root).count()
-    val cleanBefore = filesUnder(root)
-      .filterNot(_.getPath.contains(s"date=$dirtyDate"))
-      .map(f => f.getPath -> inode(f.getPath)).toMap
-    Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(spark.read.parquet(root).count() == total)
-    // clean leaves: same paths, same inodes — they were never renamed
-    val cleanAfter = filesUnder(root)
-      .filterNot(_.getPath.contains(s"date=$dirtyDate"))
-      .map(f => f.getPath -> inode(f.getPath)).toMap
-    assert(cleanAfter == cleanBefore)
-    // the dirty leaf got compacted
-    assert(filesUnder(root).count(_.getPath.contains(s"date=$dirtyDate")) <= 2)
-  }
-
-  test("legacy tier: an append to a CLEAN leaf mid-commit does NOT abort the compaction") {
-    val root = Files.createTempDirectory("graft-legacyrace").resolve("store").toString
-    val df = fixture().limit(1000)
-    df.repartition(parts.map(col): _*).write.partitionBy(parts: _*)
-      .mode("overwrite").parquet(root)
-    val dates = df.select($"date").distinct().as[String].collect().sorted
-    df.filter($"date" === dates.head).repartition(4)
-      .write.partitionBy(parts: _*).option("maxRecordsPerFile", 10)
-      .mode("append").parquet(root)
-    val before = spark.read.parquet(root).count()
-    // clean leaves are never renamed on this tier, so a writer landing in
-    // one is harmless — the conflict check must not livelock maintenance
-    // behind steady append traffic to partitions it never touches
-    val cleanDir = java.nio.file.Paths.get(root,
-      s"cluster=dev/namespace=ns0/date=${dates.last}")
-    var appended = 0L
-    Compaction.onBeforeCommit = () => {
-      val src = Files.list(cleanDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      appended = spark.read.parquet(src.toString).count()
-      Files.copy(src, cleanDir.resolve("part-racer.parquet"))
-    }
-    try Compaction.compactHive(spark, root, partitionCols = parts)
-    finally Compaction.onBeforeCommit = () => ()
-    // committed despite the append; every row visible
-    assert(spark.read.parquet(root).count() == before + appended)
-    assert(filesUnder(root).count(_.getPath.contains(s"date=${dates.head}")) <= 2)
-  }
-
   test("snapshot-isolated retention: the drop is a versioned commit, zero bytes move") {
     val srv = new graft.sources.S3StubServer()
     try {
@@ -347,7 +293,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       val expiredRows = df.filter($"date" === dates.head).count()
       val objectsBefore = srv.keys.count(_.endsWith(".parquet"))
 
-      val deleted = Retention.enforceHiveSnapshot(spark, root, dates(1))
+      val deleted = Retention.enforceHive(spark, root, dates(1))
 
       assert(deleted.size == 1 && deleted.head.contains(s"date=${dates.head}"))
       assert(GraftStore.currentVersion(spark, root) == 2)
@@ -361,8 +307,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       val live = GraftStore.readStore(spark, root)
       assert(live.count() == total - expiredRows)
       assert(live.select(min($"date".cast("string"))).head.getString(0) == dates(1))
-      // the pre-retention snapshot is COMPLETE and time-travelable — the
-      // isolation the in-place mode cannot give
+      // the pre-retention snapshot is COMPLETE and time-travelable
       assert(GraftStore.readVersion(spark, root, 1).count() == total)
       // the snapshot diff audits the drop: removed = the expired partition's
       // files, row delta = exactly the expired rows
@@ -409,21 +354,21 @@ class IncrementalCompactionSpec extends SparkSpec {
     assert(onDisk.exists(_.contains("/v000001/")), "carried partitions must stay")
     assert(GraftStore.readStore(spark, root).count() == total)
 
-    // snapshot retention expires the oldest date, which lives in v1: its
-    // files go once the pre-retention snapshot is no longer retained
+    // retention expires the oldest date, which lives in v1: its files go
+    // once the pre-retention snapshot is no longer retained
     val expired = rowsOf(dates.head)
-    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    Retention.enforceHive(spark, root, dates(1))
     assert(onDisk.exists(_.contains(s"date=${dates.head}")), "the grace snapshot reads it")
     assert(GraftStore.vacuum(spark, root) == Seq(2))
     assert(onDisk == liveFiles)
     assert(!onDisk.exists(_.contains(s"date=${dates.head}")))
     assert(GraftStore.readStore(spark, root).count() == total - expired)
 
-    // in-place retention edits the live manifest; the next vacuum frees the
-    // dropped partition's files
+    // a second retention commit: the next commit's reclaim keeps only the
+    // live version and its grace snapshot, and vacuum frees the rest
     val expired2 = rowsOf(dates(1))
     Retention.enforceHive(spark, root, dates(2))
-    assert(GraftStore.vacuum(spark, root) == Seq.empty)
+    assert(GraftStore.vacuum(spark, root) == Seq(3))
     assert(onDisk == liveFiles)
     assert(!onDisk.exists(_.contains(s"date=${dates(1)}")))
     assert(GraftStore.readStore(spark, root).count() == total - expired - expired2)
@@ -468,7 +413,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       .mode("append").parquet(GraftStore.resolve(spark, root))
     val dates = df.select($"date").distinct().as[String].collect().sorted
     Thread.sleep(50)
-    Retention.enforceHiveSnapshot(spark, root, dates(1)) // v2 drops the oldest
+    Retention.enforceHive(spark, root, dates(1)) // v2 drops the oldest
     val t2 = GraftStore.commitTimeOf(spark, root, 2)
     Thread.sleep(50)
     // a post-commit append lands in the live version dir; the commit
@@ -483,7 +428,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       .filter($"date".cast("string") === dates.head).count() == 0)
   }
 
-  test("retention refuses hazardous states: pending recovery, all-expired, streaming log") {
+  test("retention refuses hazardous states: pending recovery, all-expired") {
     val root = Files.createTempDirectory("graft-retguard").resolve("store").toString
     val df = fixture().limit(500)
     LogIngest.writeHive(df, root, partitionCols = parts)
@@ -493,42 +438,18 @@ class IncrementalCompactionSpec extends SparkSpec {
     val marker = Paths.get(root, "_compact-inflight")
     Files.writeString(marker, total.toString)
     val e1 = intercept[IllegalArgumentException](
-      Retention.enforceHiveSnapshot(spark, root, "2099-01-01"))
-    assert(e1.getMessage.contains("in-flight compaction"))
-    val e2 = intercept[IllegalArgumentException](
       Retention.enforceHive(spark, root, "2099-01-01"))
-    assert(e2.getMessage.contains("in-flight compaction"))
+    assert(e1.getMessage.contains("in-flight compaction"))
     Files.delete(marker)
     // expiring EVERY partition would commit a dataless store whose reads
     // all fail — refuse loudly, store untouched
     val e3 = intercept[IllegalArgumentException](
-      Retention.enforceHiveSnapshot(spark, root, "2099-01-01"))
-    assert(e3.getMessage.contains("every partition"))
-    // the in-place path refuses the same hazard (found by a CLI drive:
-    // it used to empty the store, leaving every read failing on schema)
-    val e3b = intercept[IllegalArgumentException](
       Retention.enforceHive(spark, root, "2099-01-01"))
-    assert(e3b.getMessage.contains("every partition"))
+    assert(e3.getMessage.contains("every partition"))
     assert(GraftStore.currentVersion(spark, root) == 1)
     assert(GraftStore.readStore(spark, root).count() == total)
-    // a streaming-sink commit log needs the explicit conversion opt-in in
-    // snapshot mode too (the new version would silently orphan the log)
     val dates = df.select($"date").distinct().as[String].collect().sorted
-    val sinkLog = Paths.get(GraftStore.resolve(spark, root), "_spark_metadata")
-    Files.createDirectories(sinkLog)
-    val e4 = intercept[IllegalArgumentException](
-      Retention.enforceHiveSnapshot(spark, root, dates(1)))
-    assert(e4.getMessage.contains("_spark_metadata"))
-    // a REFUSED run must not half-convert: with conversion granted but the
-    // cutoff expiring everything, the refusal fires and the commit log is
-    // still there afterwards
-    val e5 = intercept[IllegalArgumentException](
-      Retention.enforceHive(spark, root, "2099-01-01", convertStreamingStore = true))
-    assert(e5.getMessage.contains("every partition"))
-    assert(Files.exists(sinkLog),
-      "refused retention deleted the streaming commit log anyway")
-    val dropped = Retention.enforceHiveSnapshot(spark, root, dates(1),
-      convertStreamingStore = true)
+    val dropped = Retention.enforceHive(spark, root, dates(1))
     assert(dropped.nonEmpty)
     assert(GraftStore.readStore(spark, root).count() < total)
   }
@@ -625,7 +546,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     val expected = GraftStore.readVersion(spark, root, 2)
       .filter($"date".cast("string") === dates.head)
       .select($"time_ns", $"message")
-    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    Retention.enforceHive(spark, root, dates(1))
     // pruning shape first (cache substitution would hide the file scan):
     // the CDC scan reads only the files the commit touched — every input
     // file of the diff belongs to the expired partition
@@ -657,7 +578,7 @@ class IncrementalCompactionSpec extends SparkSpec {
     Compaction.compactHive(spark, root, partitionCols = parts)
     val t1 = GraftStore.commitTimeOf(spark, root, 1) // before retention vacuums v1
     Thread.sleep(50)
-    Retention.enforceHiveSnapshot(spark, root, dates(1))
+    Retention.enforceHive(spark, root, dates(1))
     val t2 = GraftStore.commitTimeOf(spark, root, 2)
     val t3 = GraftStore.commitTimeOf(spark, root, 3)
     assert(t1 < t2 && t2 < t3, s"commit times not ordered: $t1 $t2 $t3")
@@ -750,7 +671,7 @@ class IncrementalCompactionSpec extends SparkSpec {
       // retention expires every v1-carried date → v3's manifest references
       // ONLY v2 (the physical holder of the surviving date); v2's own
       // manifest still references v1 — the two-level chain
-      Retention.enforceHiveSnapshot(spark, root, dates.last)
+      Retention.enforceHive(spark, root, dates.last)
       assert(GraftStore.currentVersion(spark, root) == 3)
       assert(GraftStore.readManifest(spark, s"$root/v000003").forall(_._1 == "v000002"))
       assert(GraftStore.readManifest(spark, s"$root/v000002").exists(_._1 == "v000001"))

@@ -39,21 +39,18 @@ class IntrospectCompactionSpec extends SparkSpec {
       .withColumn("date", date_format($"time", "yyyy-MM-dd"))
       .withColumn("hour", date_format($"time", "HH"))
     // force a small-files mess: every writer task hits every date-dir
-    df.repartition(8).write.partitionBy(parts: _*)
-      .option("maxRecordsPerFile", 10).mode("overwrite").parquet(root)
-    def parquetFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(root)).filter(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles.size
-    val rowsBefore = spark.read.parquet(root).count()
+    GraftStore.init(spark, root)
+    appendRaw(df.repartition(8), root, parts, maxRecordsPerFile = 10)
+    def liveFiles =
+      GraftStore.compositeEntries(spark, root, GraftStore.currentVersion(spark, root)).size
+    val before = liveFiles
+    val rowsBefore = GraftStore.readStore(spark, root).count()
     Compaction.compactHive(spark, root, partitionCols = parts)
-    val after = parquetFiles.size
+    val after = liveFiles
     assert(after < before / 4, s"files $before -> $after")
     assert(after <= 31) // one file per date partition
-    assert(spark.read.parquet(root).count() == rowsBefore)
-    assert(spark.read.parquet(root).agg(sum(crc32($"message".cast("binary")))).head ==
+    assert(GraftStore.readStore(spark, root).count() == rowsBefore)
+    assert(GraftStore.readStore(spark, root).agg(sum(crc32($"message".cast("binary")))).head ==
       df.agg(sum(crc32($"message".cast("binary")))).head)
   }
 
@@ -195,59 +192,6 @@ class IntrospectCompactionSpec extends SparkSpec {
     assert(GraftStore.readStore(spark, root).count() == expected)
   }
 
-  test("compaction recovers a partition lost mid-commit from the staging tree") {
-    val root = Files.createTempDirectory("graft-compact4").resolve("store").toString
-    val parts = Seq("cluster", "namespace", "date")
-    val df = Tables.events(spark, sf)
-      .select(
-        graft.logs.CriFunctions.nanosToTimestamp($"ts").as("time"),
-        $"ts".as("time_ns"), lit("stdout").as("stream"), lit("F").as("logtag"),
-        $"props".as("message"), lit("dev").as("cluster"),
-        lit("ns0").as("namespace"), lit("n1").as("node"),
-        lit("p1").as("pod"), lit("app").as("container"))
-      .withColumn("date", date_format($"time", "yyyy-MM-dd"))
-      .withColumn("hour", date_format($"time", "HH"))
-    df.repartition(4).write.partitionBy(parts: _*).mode("overwrite").parquet(root)
-    val expected = spark.read.parquet(root).count()
-    // simulate a crash inside the swap's job commit: staging fully written
-    // and the marker persisted, but one live partition is gone (deleted but
-    // its replacement never renamed in)
-    ConfScope.withSessionConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
-      s.read.parquet(root).repartition(parts.map(col): _*)
-        .write.partitionBy(parts: _*).mode("overwrite").parquet(root + ".compact-staging")
-    }
-    Files.writeString(java.nio.file.Paths.get(root + ".compact-inflight"),
-      expected.toString)
-    val lost = new java.io.File(s"$root/cluster=dev/namespace=ns0").listFiles()
-      .filter(_.getName.startsWith("date=")).head
-    org.apache.commons.io.FileUtils.deleteDirectory(lost)
-    assert(spark.read.parquet(root).count() < expected) // the partition IS lost
-    Compaction.compactHive(spark, root, partitionCols = parts)
-    assert(spark.read.parquet(root).count() == expected, "recovery must restore the lost partition")
-    assert(!new java.io.File(root + ".compact-inflight").exists)
-    assert(!new java.io.File(root + ".compact-staging").exists)
-  }
-
-  test("compaction refuses a streaming store unless conversion is requested") {
-    val root = Files.createTempDirectory("graft-compact2").resolve("store").toString
-    val parts = Seq("cluster", "date")
-    val df = Tables.events(spark, sf).limit(100)
-      .select($"props".as("message"), lit("dev").as("cluster"),
-        lit("2024-01-01").as("date"))
-    df.write.partitionBy(parts: _*).mode("overwrite").parquet(root)
-    val rows = spark.read.parquet(root).count()
-    // a commit log marks the store as streaming-sink-owned: compacting through
-    // it would silently drop batch-appended files (ADVICE r1 medium)
-    Files.createDirectories(java.nio.file.Paths.get(root, "_spark_metadata"))
-    intercept[IllegalArgumentException](
-      Compaction.compactHive(spark, root, partitionCols = parts))
-    Compaction.compactHive(spark, root, partitionCols = parts,
-      convertStreamingStore = true)
-    assert(!new java.io.File(root, "_spark_metadata").exists)
-    assert(spark.read.parquet(root).count() == rows)
-  }
-
   test("retention drops date partitions older than the cutoff") {
     val root = Files.createTempDirectory("graft-retention").resolve("store").toString
     val df = Tables.events(spark, sf)
@@ -266,21 +210,6 @@ class IntrospectCompactionSpec extends SparkSpec {
     val remaining = GraftStore.readStore(spark, root)
     assert(remaining.count() < before)
     assert(remaining.select(min($"date".cast("string"))).head.getString(0) == "2024-01-10")
-  }
-
-  test("retention refuses a streaming store unless conversion is requested") {
-    val root = Files.createTempDirectory("graft-ret2").resolve("store")
-    Files.createDirectories(root.resolve("_spark_metadata"))
-    Files.createDirectories(root.resolve("cluster=dev/namespace=ns/date=2020-01-01"))
-    // a partition that SURVIVES the cutoff — an all-expired cutoff now trips
-    // the empty-store refusal before the streaming-log guard under test
-    Files.createDirectories(root.resolve("cluster=dev/namespace=ns/date=2099-01-01"))
-    intercept[IllegalArgumentException](
-      graft.logs.Retention.enforceHive(spark, root.toString, "2024-01-01"))
-    val deleted = graft.logs.Retention.enforceHive(spark, root.toString,
-      "2024-01-01", convertStreamingStore = true)
-    assert(deleted.size == 1)
-    assert(!root.resolve("_spark_metadata").toFile.exists)
   }
 
   test("bucketed tables join without a shuffle (co-located join)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.logs.{AppendCommit, GraftStore, LogIngest}
+import graft.logs.{AppendCommit, Compaction, GraftStore, LogIngest, Retention}
 import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -38,36 +38,85 @@ object PointerCrashFs {
 
 /** A crash at the pointer flip — the one mutation that publishes a commit —
   * must leave the old snapshot live and readable, and the next commit must
-  * land on top of it.
+  * land on top of it. Every store change flips the pointer this way: an
+  * append, a compaction and a retention commit are each checked here.
   */
 class PointerFlipCrashSpec extends SparkSpec {
   import spark.implicits._
 
-  test("a crash inside the pointer write leaves the old snapshot live and readable") {
+  private val parts = Seq("cluster", "namespace", "date")
+
+  private def rows(date: String, msgs: String*) =
+    msgs.map(m => ("dev", "ns0", date, m)).toDF("cluster", "namespace", "date", "message")
+
+  /** A fresh store root on the `crashfs:` scheme. */
+  private def crashRoot(tag: String): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.crashfs.impl", classOf[PointerCrashFs].getName)
-    val root = "crashfs://" +
-      Files.createTempDirectory("graft-ptrcrash").resolve("store").toString
-    val parts = Seq("cluster", "namespace", "date")
-    def rows(msgs: String*) = msgs.map(m => ("dev", "ns0", "2024-01-15", m))
-      .toDF("cluster", "namespace", "date", "message")
-    LogIngest.writeHive(rows("a", "b", "c"), root, partitionCols = parts)
-    assert(GraftStore.currentVersion(spark, root) == 1)
+    "crashfs://" + Files.createTempDirectory(s"graft-$tag").resolve("store").toString
+  }
 
+  /** Runs `op` with the pointer write armed to crash; it must fail there. */
+  private def crashAtFlip(op: => Any): Unit = {
     PointerCrashFs.armed = true
     val e =
-      try intercept[java.io.IOException](AppendCommit.commit(rows("d", "e"), root, parts))
+      try intercept[java.io.IOException](op)
       finally PointerCrashFs.armed = false
     assert(e.getMessage.contains("injected crash"))
+  }
+
+  private def messages(root: String): Seq[String] =
+    GraftStore.readStore(spark, root).select($"message").as[String].collect().sorted.toSeq
+
+  test("a crash inside the pointer write leaves the old snapshot live and readable") {
+    val root = crashRoot("ptrcrash")
+    LogIngest.writeHive(rows("2024-01-15", "a", "b", "c"), root, partitionCols = parts)
+    assert(GraftStore.currentVersion(spark, root) == 1)
+
+    crashAtFlip(AppendCommit.commit(rows("2024-01-15", "d", "e"), root, parts))
     // the flip never happened: v1 is still named live and reads whole
     assert(GraftStore.currentVersion(spark, root) == 1)
-    assert(GraftStore.readStore(spark, root).select($"message").as[String]
-      .collect().sorted.toSeq == Seq("a", "b", "c"))
+    assert(messages(root) == Seq("a", "b", "c"))
 
     // the next commit sweeps the crashed attempt's staged version and lands
-    val c = AppendCommit.commit(rows("f"), root, parts)
+    val c = AppendCommit.commit(rows("2024-01-15", "f"), root, parts)
     assert(c.version == 2 && !c.replayed)
     assert(GraftStore.readStore(spark, root).count() == 4)
+  }
+
+  test("a crash inside compaction's pointer write leaves the old snapshot live; a re-run commits") {
+    val root = crashRoot("compactcrash")
+    LogIngest.writeHive(rows("2024-01-15", "a", "b", "c"), root, partitionCols = parts)
+    // one-row files: the partition is dirty
+    appendRaw(rows("2024-01-15", "d", "e", "f"), root, parts, maxRecordsPerFile = 1)
+    val all = Seq("a", "b", "c", "d", "e", "f")
+
+    crashAtFlip(Compaction.compactHive(spark, root, partitionCols = parts))
+    assert(GraftStore.currentVersion(spark, root) == 1)
+    assert(messages(root) == all)
+
+    // the re-run finds the staged, verified v2 and publishes it
+    Compaction.compactHive(spark, root, partitionCols = parts)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(messages(root) == all)
+    assert(GraftStore.compositeEntries(spark, root, 2).size == 1)
+  }
+
+  test("a crash inside retention's pointer write leaves the old snapshot live; a re-run commits") {
+    val root = crashRoot("retcrash")
+    LogIngest.writeHive(rows("2024-01-14", "a", "b").unionByName(rows("2024-01-15", "c")),
+      root, partitionCols = parts)
+
+    crashAtFlip(Retention.enforceHive(spark, root, "2024-01-15"))
+    assert(GraftStore.currentVersion(spark, root) == 1)
+    assert(messages(root) == Seq("a", "b", "c"))
+
+    // the re-run sweeps the crashed attempt's staged version and commits
+    val dropped = Retention.enforceHive(spark, root, "2024-01-15")
+    assert(dropped.size == 1 && dropped.head.contains("date=2024-01-14"))
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(messages(root) == Seq("c"))
+    assert(GraftStore.readVersion(spark, root, 1).count() == 3)
   }
 
   test("racing creators of one fresh local store both succeed") {

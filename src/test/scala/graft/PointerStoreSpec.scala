@@ -98,28 +98,32 @@ class PointerStoreSpec extends SparkSpec {
       // pre-compaction view
       assert(spark.read.parquet(GraftStore.resolveVersion(spark, root, 1)).count() == rows)
 
-      // retention drops the oldest date inside the current version prefix
+      // retention commits v3 without the oldest date: a manifest-only
+      // version and one pointer flip, no object deleted inside v2
       val cutoff = dateDirs.map(_.stripPrefix("date=")).toSeq.sorted.apply(1)
+      val v2Objects = objectsOf("v000002")
       val deleted = Retention.enforceHive(spark, root, cutoff)
       assert(deleted.size == 1 && deleted.head.contains(dateDirs.toSeq.sorted.head))
-      val remaining = spark.read.parquet(GraftStore.resolve(spark, root))
+      assert(GraftStore.currentVersion(spark, root) == 3)
+      assert(objectsOf("v000003") == 0 && objectsOf("v000002") == v2Objects)
+      val remaining = GraftStore.readStore(spark, root)
       assert(remaining.select(min($"date".cast("string"))).head.getString(0) == cutoff)
-      // ...while the v1 snapshot still holds the dropped date (retention is
-      // scoped to the CURRENT version; snapshots are immutable)
-      assert(spark.read.parquet(GraftStore.resolveVersion(spark, root, 1)).count() == rows)
+      // ...while the v2 snapshot still holds the dropped date (snapshots
+      // are immutable)
+      assert(GraftStore.readVersion(spark, root, 2).count() == rows)
       // a reclaimed version fails fast
       intercept[IllegalArgumentException](GraftStore.resolveVersion(spark, root, 7))
-      // snapshot inventory over s3l: both versions, live flag on v2
+      // snapshot inventory over s3l: the retention commit kept its grace
+      // snapshot v2 and reclaimed the compaction's grace snapshot v1
       val snaps = GraftStore.snapshots(spark, root)
-      assert(snaps.map(s => (s.version, s.current)) == Seq((1, false), (2, true)))
+      assert(snaps.map(s => (s.version, s.current)) == Seq((2, false), (3, true)))
       assert(snaps.forall(s => s.files > 0 && s.bytes > 0))
-      // vacuum drops the grace prefix with object-store deletes; the live
-      // version keeps serving (minus the retained date drop above)
-      assert(GraftStore.vacuum(spark, root) == Seq(1))
-      assert(GraftStore.listVersions(spark, root) == Seq(2))
-      intercept[IllegalArgumentException](GraftStore.resolveVersion(spark, root, 1))
-      assert(spark.read.parquet(GraftStore.resolve(spark, root)).count() ==
-        remaining.count())
+      // vacuum retires the grace snapshot with object-store deletes; the
+      // live version keeps serving (minus the dropped date above)
+      assert(GraftStore.vacuum(spark, root) == Seq(2))
+      assert(GraftStore.listVersions(spark, root) == Seq(3))
+      intercept[IllegalArgumentException](GraftStore.resolveVersion(spark, root, 2))
+      assert(GraftStore.readStore(spark, root).count() == remaining.count())
     } finally srv.stop()
   }
 

@@ -159,7 +159,7 @@ class SchemaEvolutionSpec extends SparkSpec {
         .filter($"quality".isNotNull).count() == 0)
       // retention snapshot commit carries the overlay forward
       val dates = df.select($"date").distinct().as[String].collect().sorted
-      Retention.enforceHiveSnapshot(spark, root, dates(1))
+      Retention.enforceHive(spark, root, dates(1))
       val live = GraftStore.resolve(spark, root)
       assert(GraftStore.readSchemaOverlay(spark, live).nonEmpty)
       assert(GraftStore.readStore(spark, root).columns.contains("quality"))

@@ -156,10 +156,12 @@ class SnapshotReadParitySpec extends SparkSpec {
       .write.parquet(s"$keyed/namespace=a")
     assert(assertSchemaParity(keyed)("time_ns").metadata == tagged)
 
-    // TIMESTAMP(NANOS) from a non-Spark writer reads as a long
+    // TIMESTAMP(NANOS) from a non-Spark writer, planted in a store, reads
+    // as a long
     val nanos = newRoot("schema-nanos")
-    writeNanosFile(s"$nanos/namespace=a/part-0.parquet")
-    assert(assertSchemaParity(nanos)("time_ns").dataType == LongType)
+    GraftStore.init(spark, nanos)
+    writeNanosFile(s"${GraftStore.resolve(spark, nanos)}/namespace=a/part-0.parquet")
+    assert(assertSchemaParity(GraftStore.resolve(spark, nanos))("time_ns").dataType == LongType)
     assert(spark.read.format("graft").load(nanos)
       .select($"time_ns").as[Long].collect().toSeq == Seq(t0, t0 + stepNs))
   }

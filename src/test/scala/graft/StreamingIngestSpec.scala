@@ -24,7 +24,7 @@ class StreamingIngestSpec extends SparkSpec {
     }
     put("pod-a", "2024-01-15T10:00:00.000000001Z stdout F first batch")
 
-    val q = LogStreamIngest.start(spark, in.toString + "/pods/*/*/*.log",
+    val q = LogStreamIngest.startStoreSink(spark, in.toString + "/pods/*/*/*.log",
       out.toString, ckpt.toString, clusterName = "dev",
       triggerInterval = "1 seconds")
     try {
@@ -34,13 +34,15 @@ class StreamingIngestSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop() // SIGTERM flush (K6): committed batches stay visible
 
-    val got = spark.read.parquet(out.toString)
+    val got = GraftStore.readStore(spark, out.toString)
     assert(got.count() == 2)
     assert(got.select("pod").distinct().as[String].collect().toSet == Set("pod-a", "pod-b"))
     val ns = got.orderBy("time_ns").select("time_ns").as[Long].collect()
     assert(ns.toSeq == Seq(1705312800000000001L, 1705312801000000002L))
     // hive partition dirs present (K1 partitioned sink)
-    assert(out.toFile.listFiles().exists(_.getName.startsWith("cluster=dev")))
+    val live = GraftStore.compositeEntries(spark, out.toString,
+      GraftStore.currentVersion(spark, out.toString))
+    assert(live.nonEmpty && live.forall(_.key.startsWith("/cluster=dev/")))
   }
 
   test("store sink refreshes registered materialized views per micro-batch") {
@@ -111,9 +113,7 @@ class StreamingIngestSpec extends SparkSpec {
       assert(GraftStore.readStore(spark, root).count() == 3)
       assert(GraftStore.currentVersion(spark, root) > vAfterB0)
       // LIVE maintenance: compaction commits against the running ingest with
-      // NO convertStreamingStore step — the round-6 refusal is gone because
-      // there is no sink commit log to orphan; the store lease serializes
-      // this commit with the sink's publishes
+      // the store lease serializes this commit with the sink's publishes
       Compaction.compactHive(spark, root)
       assert(GraftStore.readStore(spark, root).count() == 3)
       // and the stream keeps committing after the maintenance commit
@@ -261,7 +261,7 @@ class StreamingIngestSpec extends SparkSpec {
       triggerInterval = "1 seconds", idleTimeout = "1 seconds")
     try {
       main.processAllAvailable()
-      assert(spark.read.parquet(work.resolve("lake").toString).count() == 2)
+      assert(GraftStore.readStore(spark, work.resolve("lake").toString).count() == 2)
       // processing-time timeouts fire on subsequent (empty) micro-batches —
       // poll the side sink until the close event lands
       val deadline = System.nanoTime() + 60L * 1000000000L
