@@ -245,6 +245,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // `file:` without a process fork per create and rename; at build time,
+    // before anything creates (and Hadoop caches) the first `file:` FS
+    graft.fs.LocalDisk.sparkConfs.foreach { case (k, v) => builder.config(k, v) }
     // at BUILD time so static keys like spark.io.compression.codec take
     // effect; configure() sets the runtime ones again after its defaults
     confOverrides.foreach { case (k, v) => builder.config(k, v) }

@@ -3,7 +3,6 @@ package graft.logs
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Introspection / metadata operators (SURVEY §2.12).
@@ -41,7 +40,7 @@ object Introspect {
       f: (Path, ParquetFileReader, BlockMetaData, Int) => Seq[T]): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
     parquetFiles(spark, pathGlob).flatMap { file =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val reader = FileStats.openFooter(file, conf)
       try reader.getFooter.getBlocks.toArray.toSeq.zipWithIndex.flatMap {
         case (b: BlockMetaData, rg) => f(file, reader, b, rg)
         case _ => Seq.empty

@@ -18,8 +18,13 @@ object LogIngest {
 
   /** Kubernetes CRI pod-log path grammar (reference fluent-bit.conf:12-14
     * `Tag_Regex`): `/var/log/pods/<namespace>_<pod>_<pod_uid>/<container>/N.log`.
+    * `regexp_extract` matches with `find`, so the pattern has no leading
+    * `.*`: its classes exclude `/` and it ends at `$`, so `/pods/` can only
+    * match as the fourth segment from the end. A leading `.*` would only
+    * add a backtrack over the whole path to each of the four extracts of
+    * every ingested line.
     */
-  val podPathRegex = ".*/pods/([^_/]+)_([^_/]+)_([^_/]+)/([^/]+)/[^/]+\\.log$"
+  val podPathRegex = "/pods/([^_/]+)_([^_/]+)_([^_/]+)/([^/]+)/[^/]+\\.log$"
 
   /** Path exclusion — fluent-bit excludes its own logs to avoid a feedback
     * loop (fluent-bit.conf:15-16): a path with a `/pods/` segment whose

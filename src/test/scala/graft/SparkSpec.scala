@@ -13,6 +13,7 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(graft.fs.LocalDisk.sparkConfs.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     GraftSession.configure(s)
