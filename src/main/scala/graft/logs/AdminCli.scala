@@ -10,8 +10,8 @@ import graft.GraftSession
   * {{{
   * runMain graft.logs.AdminCli compact   --root=/data/lake [--max-records=N]
   * runMain graft.logs.AdminCli retention --root=/data/lake --cutoff-date=2024-01-01
-  * runMain graft.logs.AdminCli finalize  --root=/data/lake --close-events=/data/close
-  * runMain graft.logs.AdminCli watch     --root=/data/lake --close-events=/data/close \
+  * runMain graft.logs.AdminCli finalize  --root=/data/poslake --close-events=/data/close
+  * runMain graft.logs.AdminCli watch     --root=/data/poslake --close-events=/data/close \
   *     --checkpoint=/data/ckpt/finalize [--interval='60 seconds']
   * runMain graft.logs.AdminCli snapshots --root=/data/lake
   * runMain graft.logs.AdminCli vacuum    --root=/data/lake
@@ -22,7 +22,11 @@ import graft.GraftSession
   * granularity (no data scan). Both commit a new version with one atomic
   * pointer flip, and refuse a root that is not a store. `finalize` consumes
   * pending close events once; `watch` runs the auto-finalize loop until
-  * terminated (SIGTERM stops the streaming query cleanly — K6 semantics);
+  * terminated (SIGTERM stops the streaming query cleanly — K6 semantics).
+  * Both rewrite a POSITIONAL lake (`IngestCli --layout=positional`) and
+  * refuse a versioned store root — a store, including what
+  * `StreamIngestCli` writes under the same `--root`, is compacted with
+  * `compact` or `maintain`;
   * `snapshots` inventories the retained versions of a versioned store (live
   * one flagged `*`, each readable via `GraftStore.resolveVersion` — one-step
   * time travel); `vacuum` reclaims grace snapshots immediately instead of at
@@ -49,6 +53,8 @@ object AdminCli {
       |            time-travelable)
       |  finalize  --root=DIR --close-events=DIR [--max-records=N]
       |  watch     --root=DIR --close-events=DIR --checkpoint=DIR [--interval=DUR]
+      |            (finalize/watch: positional lakes only; a versioned
+      |            store is compacted with compact or maintain)
       |  snapshots --root=DIR
       |  vacuum    --root=DIR [--retain=N]   (keep N snapshots below live, default 0)
       |  maintain  --root=DIR [--views=DIR,..] [--dirty-max-files=N]

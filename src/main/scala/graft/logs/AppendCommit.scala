@@ -19,27 +19,18 @@ import org.apache.hadoop.fs.Path
   *     `<root>/_append-<id>` (the `_` prefix hides the subtree from Spark
   *     listings and `listVersions`). A crash here leaves zero visible
   *     rows; the debris is age-guard-swept by vacuum.
-  *  2. PUBLISH — a short metadata-only critical section under the store's
-  *     [[MaintenanceLease]] (writers queue behind maintenance and each
-  *     other with bounded retry): create the next version prefix holding
-  *     ONLY a manifest (current version's own partitions + its carried
-  *     entries + the staged partitions as `_append-<id>` holders) and the
-  *     commit record, verify the composite count, then ONE atomic pointer
-  *     write. Zero data bytes move — the Iceberg manifest-add commit
-  *     shape. A reader resolving the store at ANY instant sees the
-  *     complete old snapshot or the complete new one — never a partial
-  *     append.
+  *  2. PUBLISH — [[GraftStore.commit]]: the next version holds ONLY a
+  *     manifest (the live partitions + the staged partitions as
+  *     `_append-<id>` holders) and its sidecars, published by one
+  *     compare-and-swap pointer write. Zero data bytes move — the Iceberg
+  *     manifest-add commit shape. A reader resolving the store at ANY
+  *     instant sees the complete old snapshot or the complete new one —
+  *     never a partial append.
   *
-  * Optimistic concurrency: the lease serializes publishes exactly on
-  * `file:` roots (CREATE_NEW at the syscall level); on object stores it is
-  * best-effort (HEAD-then-PUT — see [[MaintenanceLease]]), so immediately
-  * before its flip the publish re-checks that the current version is still
-  * the one its manifest was built from and aborts (staged data intact,
-  * retryable) when a racing commit won.
-  *
-  * Exactly-once replay: a caller-supplied `commitId` is recorded in the
-  * version's commit record; a later commit with the same id short-circuits
-  * to the already-published version. Streaming sinks pass
+  * Writers queue behind maintenance and each other for the lease with
+  * bounded retry (`leaseAttempts`). Exactly-once replay: a caller-supplied
+  * `commitId` is recorded with the commit; a later commit with the same id
+  * short-circuits to the already-published version. Streaming sinks pass
   * `q<queryId>-b<batchId>` so a micro-batch replayed after a restart
   * commits once ([[LogStreamIngest]] round 7).
   */
@@ -55,120 +46,57 @@ object AppendCommit {
       maxRecordsPerFile: Long = 1000000L,
       commitId: Option[String] = None,
       retainSnapshots: Int = 1,
-      verifyCounts: Boolean = true,
       leaseAttempts: Int = 10): Committed = {
     val spark = df.sparkSession
-    commitId.foreach { id =>
-      require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
-    }
-    GraftStore.requireStore(spark, root)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
-      return Committed(v, 0L, replayed = true)
-    }
-
     val name = GraftStore.AppendPrefix +
       commitId.getOrElse(java.util.UUID.randomUUID().toString)
     val stagingDir = s"$root/$name"
     val stagingPath = new Path(stagingDir)
-    if (fs.exists(stagingPath)) {
-      // a crashed prior attempt with the same id; never referenced (a
-      // referenced dir means a lost commit record — refuse, don't corrupt)
-      val referenced = GraftStore.listVersions(spark, root)
-        .exists(n => GraftStore.referencedAppendDirs(spark, root, n).contains(name))
-      require(!referenced, s"$stagingDir is referenced by a retained version " +
-        "but carries no matching commit record — inspect the store")
-      fs.delete(stagingPath, true)
-    }
-    stage(df, stagingDir, partitionCols, maxRecordsPerFile)
-    // the one footer pass over the staged files, on the driver: it gives
-    // the staged row count and the staged files' stats lines
-    val staged = FileStats.collectStaged(spark, FileStats.listDirEntries(spark, stagingDir))
-    val stagedRows = staged.iterator.map(_.rows).sum
-    if (stagedRows == 0L) {
-      fs.delete(stagingPath, true)
-      return Committed(GraftStore.currentVersion(spark, root), 0L, replayed = false)
-    }
     val depth = partitionCols.length
-    val stagedLeaves = Compaction.leavesOf(staged.map(_.key), depth)
-    require(stagedLeaves.nonEmpty,
-      s"staged append has rows but no partition dirs at depth $depth — " +
-        s"partitionCols mismatch with the store layout?")
-    MaintenanceLease.withLeaseRetry(spark, root, "append", leaseAttempts) {
-      // replay could have landed while we waited for the lease
-      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
-        fs.delete(stagingPath, true)
-        return Committed(v, 0L, replayed = true)
-      }
-      require(!fs.exists(new Path(root, "_compact-inflight")),
-        s"$root has an in-flight compaction marker — run compaction (recovery) first")
-      val cur = GraftStore.currentVersion(spark, root)
-      // markerless staged-ahead prefixes are debris (we hold the lease, so
-      // no healthy commit is mid-stage)
-      GraftStore.listVersions(spark, root).filter(_ > cur).foreach { n =>
-        fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
-      }
-      val curPrefix = GraftStore.versionPrefix(cur)
-      val curDir = s"$root/$curPrefix"
-      val own = Compaction.partitionLeaves(fs, new Path(curDir), depth)
-        .map { case (rel, _) => (curPrefix, rel) }
-      val carried = GraftStore.readManifest(spark, curDir)
-      val added = stagedLeaves.map(rel => (name, rel))
-      val next = cur + 1
-      val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
-      def abort(msg: String): Nothing = {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(msg)
-      }
-      GraftStore.writeManifest(spark, nextDir,
-        (own ++ carried ++ added).sortBy(e => (e._2, e._1)))
-      GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
-      GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("append",
-        commitId.getOrElse(java.util.UUID.randomUUID().toString),
-        System.currentTimeMillis()))
-      // per-file pruning stats, O(delta) and with no footer read: carried
-      // files reuse the predecessor's lines by (key, len), staged files the
-      // lines of the footer pass above. Written pre-flip so stats publish
-      // atomically with the snapshot — and BEFORE the verify below, which
-      // they accelerate.
-      val nextEntries = GraftStore.compositeEntries(spark, root, next)
-      // deletion vectors ride the carry: every predecessor file is still in
-      // the snapshot, so the sidecar carries whole (staged files are new and
-      // vector-free by construction)
-      DeleteVectors.carryInto(spark, curDir, nextDir, nextEntries.map(_.key).toSet)
-      FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, curDir) ++ staged.map(s => s.key -> s))
-      if (verifyCounts) {
-        // counts from the stats sidecar when it fully covers the snapshot
-        // (metadata-object reads), falling back to footer counting — the
-        // knob exists for stores where even the listing is too much per
-        // batch. The check keeps its power: file inventory comes from the
-        // manifest+listing, counts from footers-at-stat-time — a manifest
-        // entry lost or doubled still flips the sum. A fresh (streaming-
-        // created) store's v1 is EMPTY: no schema to infer, so its count
-        // is zero by listing, not by read.
-        // PHYSICAL counts on both sides: the stats sidecar counts stored
-        // rows, and deletion vectors (carried unchanged) cancel out of the
-        // prev-vs-staged comparison
-        val prevRows = FileStats.physicalRows(spark, root, cur,
-          GraftStore.compositeEntries(spark, root, cur))
-        val stagedTotal = FileStats.physicalRows(spark, root, next, nextEntries)
-        if (stagedTotal != prevRows + stagedRows)
-          abort(s"staged snapshot holds $stagedTotal rows, expected " +
-            s"$prevRows + $stagedRows; aborting with $curDir live")
-      }
-      // THE commit: one compare-and-swap pointer PUT. On conditional-write
-      // stores (S3 If-Match via ConditionalWrites) the precondition rides
-      // the PUT itself — no interleaving can lose an update; elsewhere it
-      // degrades to the optimistic re-check + plain PUT. Either way the
-      // loser aborts with its staged data intact, retryable.
-      if (!GraftStore.casWritePointer(spark, root, cur, next))
-        abort(s"concurrent commit detected on $root during append publish " +
-          s"(expected v$cur live); staged data kept at $stagingDir — retry")
-      commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      GraftStore.reclaim(spark, root, GraftStore.listVersions(spark, root)
-        .filter(_ < next).takeRight(retainSnapshots).toSet + next)
-      Committed(next, stagedRows, replayed = false)
+    var staged = false
+    GraftStore.commit[Seq[FileStats.FileStat], Committed](spark, root, "append",
+      commitId, leaseAttempts, retainSnapshots, prepare = {
+        if (fs.exists(stagingPath)) {
+          // a crashed prior attempt with the same id; never referenced by a
+          // published version (a referenced dir means a lost commit record —
+          // refuse, don't corrupt). A version staged ahead of the pointer is
+          // that attempt's own debris.
+          val live = GraftStore.currentVersion(spark, root)
+          val referenced = GraftStore.listVersions(spark, root).filter(_ <= live)
+            .exists(n => GraftStore.referencedAppendDirs(spark, root, n).contains(name))
+          require(!referenced, s"$stagingDir is referenced by a retained version " +
+            "but carries no matching commit record — inspect the store")
+          fs.delete(stagingPath, true)
+        }
+        stage(df, stagingDir, partitionCols, maxRecordsPerFile)
+        staged = true
+        // the one footer pass over the staged files, on the driver: it gives
+        // the staged row count and the staged files' stats lines
+        val files = FileStats.collectStaged(spark, FileStats.listDirEntries(spark, stagingDir))
+        if (files.exists(_.rows > 0)) Right(files)
+        else {
+          fs.delete(stagingPath, true)
+          Left(Committed(GraftStore.currentVersion(spark, root), 0L, replayed = false))
+        }
+      }) { (live, files) =>
+      val stagedRows = files.iterator.map(_.rows).sum
+      val stagedLeaves = Compaction.leavesOf(files.map(_.key), depth)
+      require(stagedLeaves.nonEmpty,
+        s"staged append has rows but no partition dirs at depth $depth — " +
+          s"partitionCols mismatch with the store layout?")
+      // zero data bytes move: the next version references the staged
+      // partitions beside every live one
+      Right(GraftStore.Staged(Committed(live.version + 1, stagedRows, replayed = false),
+        rows = live.physicalRows() + stagedRows,
+        manifest = live.carryAll(depth) ++ stagedLeaves.map((name, _)),
+        stats = files))
+    } match {
+      case Right(c) => c
+      case Left(v) =>
+        // replay could have landed while this call staged
+        if (staged) fs.delete(stagingPath, true)
+        Committed(v, 0L, replayed = true)
     }
   }
 

@@ -23,22 +23,21 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * row-group time ranges keep the engine's `--since` row-group pruning
   * effective after compaction destroys ingest order.
   *
-  * Commit protocol: stage the rewritten partitions under the next version
-  * prefix, then flip `_current` with ONE atomic write (no rename on object
-  * stores) — snapshot-isolated, like every store change.
-  *
-  * Crash safety: an in-flight marker (holding the expected TOTAL row count)
-  * brackets the flip; recovery finishes the staged version. Mutual
-  * exclusion: the whole operation holds the root's [[MaintenanceLease]],
-  * so two compactors (or compaction racing retention or vacuum) cannot
-  * interleave — the loser aborts before touching anything.
+  * Commit protocol: [[GraftStore.commit]], like every store change — the
+  * rewritten partitions are staged under the next version prefix, then
+  * `_current` flips with ONE atomic write (no rename on object stores). A
+  * crash before the flip leaves staged-ahead debris the next commit sweeps;
+  * after it, the new snapshot is complete. Mutual exclusion: the whole
+  * operation holds the root's [[MaintenanceLease]] (fail-fast), so two
+  * compactors (or compaction racing retention or vacuum) cannot interleave
+  * — the loser aborts before touching anything.
   *
   * WRITERS are a separate discipline: appends land in the live version
   * directory, so rows appended after this job's inventory but before its
   * pointer flip could survive only in the grace snapshot, not the new live
   * tree. Like Delta/Iceberg OPTIMIZE under optimistic concurrency, the
   * commit DETECTS this instead of assuming it away: immediately before the
-  * marker/flip it re-inventories the dirty partitions and the live
+  * flip it re-inventories the dirty partitions and the live
   * version's partition-dir set (a brand-new partition would miss the carry
   * manifest) and ABORTS cleanly on any change — staged data is removed,
   * the live tree is untouched, and the writer's rows are safe. Appends to
@@ -88,31 +87,27 @@ object Compaction {
       dirtyMinAvgBytes: Long = 32L << 20,
       full: Boolean = false,
       retainSnapshots: Int = 1,
-      cluster: ClusterSpec = ClusterSpec.TimeMajor): Unit = {
-    GraftStore.requireStore(spark, root)
-    MaintenanceLease.withLease(spark, root, "compact") {
-      // keep partition dir names byte-identical: type inference would read
-      // 'hour=00' back as int 0 and rewrite the dir as 'hour=0', forking
-      // the partition from future string-valued appends. Scoped to a
-      // CLONED session (ConfScope) — flipping the shared session's conf
-      // would disable the metadata-only planner tier for every concurrent
-      // query for the duration of the rewrite (the round-14 bench failure).
-      graft.ConfScope.withSessionConf(spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
-        compactOn(s, root, maxRecordsPerFile, partitionCols, dirtyMaxFiles,
-          dirtyMinAvgBytes, full, retainSnapshots, cluster)
-      }
+      cluster: ClusterSpec = ClusterSpec.TimeMajor): Unit =
+    // keep partition dir names byte-identical: type inference would read
+    // 'hour=00' back as int 0 and rewrite the dir as 'hour=0', forking
+    // the partition from future string-valued appends. Scoped to a
+    // CLONED session (ConfScope) — flipping the shared session's conf
+    // would disable the metadata-only planner tier for every concurrent
+    // query for the duration of the rewrite (the round-14 bench failure).
+    graft.ConfScope.withSessionConf(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
+      compactOn(s, root, maxRecordsPerFile, partitionCols, dirtyMaxFiles,
+        dirtyMinAvgBytes, full, retainSnapshots, cluster)
     }
-  }
 
   /** A partition needs rewrite when its file count exceeds `dirtyMaxFiles`,
     * or it holds several files averaging under `dirtyMinAvgBytes`. A
     * single-file partition is never dirty — rewriting it buys nothing.
     */
-  private def isDirty(files: Seq[FileStatus], dirtyMaxFiles: Int,
+  private def isDirty(files: Seq[GraftStore.FileEntry], dirtyMaxFiles: Int,
       dirtyMinAvgBytes: Long): Boolean = {
     val n = files.size
-    n > dirtyMaxFiles || (n > 1 && files.map(_.getLen).sum / n < dirtyMinAvgBytes)
+    n > dirtyMaxFiles || (n > 1 && files.map(_.len).sum / n < dirtyMinAvgBytes)
   }
 
   /** The one data-moving step: shuffle the dirty rows onto their partition
@@ -238,13 +233,6 @@ object Compaction {
     */
   private[graft] var onBeforeCommit: () => Unit = () => ()
 
-  /** Identity of a file set for conflict detection: path + length + mtime.
-    * An append, replace, or delete by a concurrent writer changes the set;
-    * source files this job never touches keep theirs.
-    */
-  private def fileIdentity(files: Seq[FileStatus]): Set[(String, Long, Long)] =
-    files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
-
   private[logs] def dataFilesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] =
     if (!fs.exists(dir)) Seq.empty
     else GraftStore.walkFiles(fs, dir, dataOnly = true).toSeq
@@ -276,233 +264,143 @@ object Compaction {
     * the distinct `depth`-level `col=` dirs that hold a file, sorted.
     */
   private[logs] def leavesOf(keys: Seq[String], depth: Int): Seq[String] =
-    keys.flatMap { k =>
-      val segs = k.stripPrefix("/").split('/')
-      if (segs.length > depth && segs.take(depth).forall(_.contains("=")))
-        Some(segs.take(depth).mkString("/"))
-      else None
-    }.distinct.sorted
+    keys.flatMap(leafOf(_, depth)).distinct.sorted
+
+  /** The `depth`-level `col=` partition dir of one file key, if any. */
+  private def leafOf(key: String, depth: Int): Option[String] = {
+    val segs = key.stripPrefix("/").split('/')
+    Option.when(segs.length > depth && segs.take(depth).forall(_.contains("=")))(
+      segs.take(depth).mkString("/"))
+  }
 
   /** Stage ONLY the dirty partitions under the NEXT version prefix —
     * readers only ever list the pointed-at prefix, so staging is invisible
-    * — write the carried-partition manifest beside them, verify the
-    * composite, persist the marker, then commit by overwriting `_current`
-    * with ONE atomic write. No data rename anywhere, which is what object
-    * stores (rename = copy+delete, non-atomic) require. Carried partitions
-    * chain to the version that PHYSICALLY holds them (an entry carried
-    * across N commits still names its original prefix), and cleanup keeps
-    * every partition a retained snapshot reads.
+    * — and carry every other partition by manifest reference; the commit
+    * ([[GraftStore.commit]]) verifies the staged row count and flips the
+    * pointer. No data rename anywhere, which is what object stores (rename
+    * = copy+delete, non-atomic) require. Carried partitions chain to the
+    * version that PHYSICALLY holds them (an entry carried across N commits
+    * still names its original prefix), and reclaim keeps every partition a
+    * retained snapshot reads.
     */
   private def compactOn(spark: SparkSession, root: String,
       maxRecordsPerFile: Long, partitionCols: Seq[String],
       dirtyMaxFiles: Int, dirtyMinAvgBytes: Long, full: Boolean,
-      retainSnapshots: Int, cluster: ClusterSpec): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_compact-inflight")
-    locally {
-      if (fs.exists(marker)) {
-        // marker certifies the newest version prefix is a verified complete
-        // snapshot (data + manifest): finish the flip, re-verify, clean up
-        val expected = readMarker(fs, marker)
-        val prev = GraftStore.currentVersion(spark, root)
-        val newest = GraftStore.listVersions(spark, root).max
-        if (newest > prev) GraftStore.writePointer(spark, root, newest)
-        val liveRows = GraftStore.scanCount(GraftStore.readStore(spark, root))
-        require(liveRows == expected,
-          s"recovered count $liveRows != expected $expected — inspect $root")
-        fs.delete(marker, false)
-        cleanupPointer(spark, root, retainSnapshots)
-        return
-      }
-      // version prefixes AHEAD of the pointer without a marker are debris
-      // from an attempt that died mid-stage; versions BEHIND it are grace
-      // snapshots for in-flight readers and die only at commit below
-      val cur = GraftStore.currentVersion(spark, root)
-      GraftStore.listVersions(spark, root).filter(_ > cur).foreach { n =>
-        fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
-      }
-      val curDir = s"$root/${GraftStore.versionPrefix(cur)}"
-      // composite partition inventory: the current prefix's own leaves plus
-      // everything its manifest carries; a partition can span both (appends
-      // after a carry), in which case its file set is the union
+      retainSnapshots: Int, cluster: ClusterSpec): Unit =
+    GraftStore.commit[Unit, Unit](spark, root, "compact", None,
+        leaseAttempts = 1, retainSnapshots, Right(())) { (live, _) =>
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // composite partition inventory from the live listing: the live
+      // prefix's own files by `depth`-level partition, carried files under
+      // the manifest entry that carries them; a partition can span both
+      // (appends after a carry), in which case its file set is the union
       val depth = partitionCols.length
-      val curPrefix = GraftStore.versionPrefix(cur)
-      val own = partitionLeaves(fs, new Path(curDir), depth)
-        .map { case (rel, fls) => (rel, curPrefix, fls) }
-      val carried = GraftStore.readManifest(spark, curDir).map { case (h, rel) =>
-        (rel, h, dataFilesUnder(fs, new Path(s"$root/$h/$rel")))
-      }
-      val byRel = (own ++ carried).groupBy(_._1)
+      val carried = live.manifest.map { case (h, rel) =>
+        ((GraftStore.holderDir(root, h), rel), h) }.toMap
+      val carriedDepths = live.manifest.map(e => leafDepth(e._2)).distinct
+      val byRel = live.entries.groupBy { e =>
+        if (e.legBase == live.dir) leafOf(e.key, depth).map((_, live.prefix))
+        else carriedDepths.iterator.flatMap(leafOf(e.key, _))
+          .collectFirst { case rel if carried.contains((e.legBase, rel)) =>
+            (rel, carried((e.legBase, rel))) }
+      }.collect { case (Some((rel, h)), fls) => (rel, h, fls) }.toSeq.groupBy(_._1)
+      val ownRels = byRel.filter(_._2.exists(_._2 == live.prefix)).keySet
       // deletion vectors ([[DeleteVectors]]): rewritten partitions read
       // vector-APPLIED and come out clean (materialization); carried files
-      // keep their vectors. All counts below are in vector-applied terms so
-      // the marker/recovery invariant stays "the live row count is
-      // unchanged" whether or not vectors exist.
-      val curEntries = GraftStore.compositeEntries(spark, root, cur)
-      val curKeys = curEntries.map(_.key).toSet
-      val dvCur = DeleteVectors.read(spark, curDir).filter { case (k, _) => curKeys(k) }
+      // keep their vectors
+      val curKeys = live.entries.map(_.key).toSet
+      val dvCur = live.vectors.filter { case (k, _) => curKeys(k) }
       // a partition holding vectored files is worth rewriting even when its
       // file count looks healthy: materialization retires the read-side
-      // anti-join debt (Delta's OPTIMIZE-applies-DVs contract)
-      val dvRels = dvCur.keySet.map { k =>
-        val segs = k.split('/').filter(_.nonEmpty)
-        segs.take(depth).mkString("/")
-      }
+      // anti-join debt (Delta's OPTIMIZE-applies-DVs contract). Partitions
+      // go by their inventory rel, which for a carried one is its manifest
+      // entry's depth, not the rewrite depth
       val dirtyRels = byRel.collect { case (rel, legs)
-        if full || dvRels(rel) ||
+        if full || legs.exists(_._3.exists(e => dvCur.contains(e.key))) ||
           isDirty(legs.flatMap(_._3), dirtyMaxFiles, dirtyMinAvgBytes) => rel
       }.toSet
-      if (dirtyRels.isEmpty) return // every partition already compact
-      // stats-backed when the sidecar fully covers the snapshot (metadata
-      // reads, not 10⁸ footer opens); footer-count fallback otherwise
-      val expectedRows = FileStats.rowCountFromStats(spark, root, cur)
-        .map(_ - DeleteVectors.totalPositions(dvCur))
-        .getOrElse(GraftStore.readVersion(spark, root, cur).count())
-      val next = cur + 1
-      val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
-      // read ONLY the dirty partitions, one leg per version prefix that
-      // physically holds some of them
-      // overlay-aware legs: pre-evolution files null-backfill the evolved
-      // columns, so the rewrite MATERIALIZES them — the overlay shrinks to
-      // irrelevance as maintenance touches partitions
-      // Spark's own reader, not the snapshot relation: under this session's
-      // inference-off conf partition values read as their directory strings,
-      // so rewritten dirs keep byte-identical names (`hour=07`), where the
-      // manifest-typed relation would read 7 and write `hour=7`
-      val overlay = GraftStore.readSchemaOverlay(spark, curDir)
-      val inputRaw = byRel.filter(e => dirtyRels(e._1)).values.flatten.toSeq
-        .groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (h, legs) =>
-          val vdir = s"$root/$h"
-          val r = spark.read.option("basePath", vdir)
-          val r2 = if (overlay.nonEmpty) r.option("mergeSchema", "true") else r
-          val df0 = r2.parquet(legs.map(l => s"$vdir/${l._1}"): _*)
-          GraftStore.applyOverlay(
-            if (dvCur.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlay)
-        }
-        .reduce(_.unionByName(_))
-      // vector-applied input: the rewrite writes the dirty partitions CLEAN
-      // (vectors for files outside the dirty set are inert — no row matches)
-      val input =
-        if (dvCur.nonEmpty) DeleteVectors.applyTo(spark, inputRaw, dvCur, curEntries)
-        else inputRaw
-      rewrite(input, partitionCols, maxRecordsPerFile, nextDir, cluster)
-      GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
-      // carry every untouched partition by reference, chained to the holder
-      // (version prefix or staged-append dir) that physically holds its
-      // files — zero data movement
-      val carryEntries = byRel.filter(e => !dirtyRels(e._1)).values.flatten.toSeq
-        .collect { case (rel, h, fls) if fls.nonEmpty => (h, rel) }
-        .sortBy(e => (e._2, e._1))
-      if (carryEntries.nonEmpty)
-        GraftStore.writeManifest(spark, nextDir, carryEntries)
-      commitBucketSpec(spark, cluster, priorDir = curDir, destDir = nextDir,
-        anyCarried = carryEntries.nonEmpty)
-      // per-file pruning stats ([[FileStats]]), O(delta): carried partitions
-      // reuse the predecessor's lines by (key, len); only the rewritten
-      // files are footer-read. Written before the staged verify (which they
-      // accelerate) and pre-flip, so stats publish with the snapshot.
-      val nextEntries = GraftStore.compositeEntries(spark, root, next)
-      // rewritten files shed their vectors (materialized above); carried
-      // files keep theirs — filter the sidecar to keys still in the snapshot
-      val dvNext = DeleteVectors.carryInto(spark, curDir, nextDir,
-        nextEntries.map(_.key).toSet)
-      FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, curDir))
-      val stagedRows = FileStats.rowCountFromStats(spark, root, next)
-        .map(_ - DeleteVectors.totalPositions(dvNext))
-        .getOrElse(GraftStore.readVersion(spark, root, next).count())
-      require(stagedRows == expectedRows,
-        s"staged snapshot holds $stagedRows rows, expected $expectedRows; " +
-          s"aborting with $curDir live")
-      onBeforeCommit()
-      // Optimistic concurrency: the staged snapshot fixes (a) the dirty
-      // partitions' contents and (b) the carry manifest's partition-dir
-      // set, both as of inventory time. A writer can only land in the live
-      // prefix, so conflicts are: new files under a dirty partition, or a
-      // NEW own-partition dir (brand-new partition, or the first live-
-      // prefix files of a partition previously held only by reference) —
-      // either would vanish from the flipped snapshot. Appends to a
-      // partition dir the manifest carries are NOT conflicts: the new
-      // version lists that same physical dir, so the files stay visible.
-      // Abort BEFORE the marker — the staged prefix is markerless debris
-      // the next run sweeps; nothing live moved.
-      val ownNowByRel = partitionLeaves(fs, new Path(curDir), depth).toMap
-      val newOwnRels = ownNowByRel.keySet -- own.map(_._1).toSet
-      val dirtyChanged = dirtyRels.filter { rel =>
-        val before = fileIdentity(byRel(rel).flatMap(_._3))
-        val carriedNow = byRel(rel).collect { case (r, h, _) if h != curPrefix =>
-          dataFilesUnder(fs, new Path(s"$root/$h/$r"))
-        }.flatten
-        before != fileIdentity(ownNowByRel.getOrElse(rel, Seq.empty) ++ carriedNow)
+      if (dirtyRels.isEmpty) Left(()) // every partition already compact
+      else {
+        // read ONLY the dirty partitions, one leg per version prefix that
+        // physically holds some of them
+        // overlay-aware legs: pre-evolution files null-backfill the evolved
+        // columns, so the rewrite MATERIALIZES them — the overlay shrinks to
+        // irrelevance as maintenance touches partitions
+        // Spark's own reader, not the snapshot relation: under this session's
+        // inference-off conf partition values read as their directory strings,
+        // so rewritten dirs keep byte-identical names (`hour=07`), where the
+        // manifest-typed relation would read 7 and write `hour=7`
+        val overlay = live.overlay
+        val inputRaw = byRel.filter(e => dirtyRels(e._1)).values.flatten.toSeq
+          .groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (h, legs) =>
+            val vdir = s"$root/$h"
+            val r = spark.read.option("basePath", vdir)
+            val r2 = if (overlay.nonEmpty) r.option("mergeSchema", "true") else r
+            val df0 = r2.parquet(legs.map(l => s"$vdir/${l._1}"): _*)
+            GraftStore.applyOverlay(
+              if (dvCur.nonEmpty) DeleteVectors.tagMeta(df0) else df0, overlay)
+          }
+          .reduce(_.unionByName(_))
+        // vector-applied input: the rewrite writes the dirty partitions CLEAN
+        // (vectors for files outside the dirty set are inert — no row matches)
+        val input =
+          if (dvCur.nonEmpty) DeleteVectors.applyTo(spark, inputRaw, dvCur, live.entries)
+          else inputRaw
+        rewrite(input, partitionCols, maxRecordsPerFile, live.nextDir, cluster)
+        // carry every untouched partition by reference, chained to the holder
+        // (version prefix or staged-append dir) that physically holds its
+        // files — zero data movement
+        val carryEntries = byRel.filter(e => !dirtyRels(e._1)).values.flatten.toSeq
+          .map { case (rel, h, _) => (h, rel) }
+        commitBucketSpec(spark, cluster, priorDir = live.dir, destDir = live.nextDir,
+          anyCarried = carryEntries.nonEmpty)
+        // the live rows are unchanged: the staged snapshot stores them less
+        // the positions the rewrite materialized, i.e. the vectors of the
+        // files it consumed
+        val rewritten = byRel.filter(e => dirtyRels(e._1)).values.flatten
+          .flatMap(_._3).map(_.key).toSet
+        val materialized = dvCur.filter { case (k, _) => rewritten(k) }
+        Right(GraftStore.Staged((),
+          rows = live.physicalRows() - DeleteVectors.totalPositions(materialized),
+          manifest = carryEntries,
+          check = _ => {
+            onBeforeCommit()
+            // Optimistic concurrency: the staged snapshot fixes (a) the dirty
+            // partitions' contents and (b) the carry manifest's partition-dir
+            // set, both as of inventory time. A writer can only land in the
+            // live prefix, so conflicts are: new files under a dirty
+            // partition, or a NEW own-partition dir (brand-new partition, or
+            // the first live-prefix files of a partition previously held only
+            // by reference) — either would vanish from the flipped snapshot.
+            // Appends to a partition dir the manifest carries are NOT
+            // conflicts: the new version lists that same physical dir, so
+            // the files stay visible. Identity is path + length + mtime.
+            val ownNowByRel = partitionLeaves(fs, new Path(live.dir), depth).toMap
+            val newOwnRels = ownNowByRel.keySet -- ownRels
+            def idsOf(fls: Seq[FileStatus]) =
+              fls.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+            val dirtyChanged = dirtyRels.filter { rel =>
+              val before = byRel(rel).flatMap(_._3).map(e => (e.physical, e.len, e.mtime)).toSet
+              val carriedNow = byRel(rel).collect { case (r, h, _) if h != live.prefix =>
+                dataFilesUnder(fs, new Path(s"$root/$h/$r"))
+              }.flatten
+              before != idsOf(ownNowByRel.getOrElse(rel, Seq.empty) ++ carriedNow)
+            }
+            if (newOwnRels.nonEmpty || dirtyChanged.nonEmpty)
+              throw new IllegalStateException(
+                s"concurrent writer detected on $root during compaction " +
+                  s"(new partitions: [${newOwnRels.mkString(",")}], changed: " +
+                  s"[${dirtyChanged.mkString(",")}]); staged version removed, " +
+                  "live store untouched — re-run compaction after the writer " +
+                  "finishes (maintenance aborts on a racing writer, never loses rows)")
+          },
+          // compaction absorbs append-dir files into version prefixes; once
+          // no retained snapshot references a staged dir it is reclaimable
+          sweepAppendDirs = true))
       }
-      if (newOwnRels.nonEmpty || dirtyChanged.nonEmpty) {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(
-          s"concurrent writer detected on $root during compaction " +
-            s"(new partitions: [${newOwnRels.mkString(",")}], changed: " +
-            s"[${dirtyChanged.mkString(",")}]); staged version removed, " +
-            "live store untouched — re-run compaction after the writer " +
-            "finishes (maintenance aborts on a racing writer, never loses rows)")
-      }
-      GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo(
-        "compact", java.util.UUID.randomUUID().toString, System.currentTimeMillis()))
-      // pre-flight re-check before the marker lands (a racing commit's
-      // flip would also have swept this staged prefix)
-      if (GraftStore.currentVersion(spark, root) != cur) {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(
-          s"concurrent commit detected on $root during compaction publish " +
-            s"(expected v$cur live); staged version removed — re-run compaction")
-      }
-      writeMarker(fs, marker, expectedRows)
-      // THE commit: compare-and-swap where the store supports conditional
-      // writes, re-check + plain PUT elsewhere (see casWritePointer)
-      if (!GraftStore.casWritePointer(spark, root, cur, next)) {
-        fs.delete(marker, false)
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(
-          s"concurrent commit detected on $root during compaction publish " +
-            s"(expected v$cur live); staged version removed — re-run compaction")
-      }
-      val liveRows = GraftStore.scanCount(GraftStore.readStore(spark, root))
-      require(liveRows == expectedRows,
-        s"post-commit count $liveRows != expected $expectedRows — inspect $root")
-      fs.delete(marker, false)
-      cleanupPointer(spark, root, retainSnapshots)
     }
-  }
 
-  /** Reclaim after a pointer commit: keep the live version and the newest
-    * `retainSnapshots` versions below it (grace snapshots for in-flight
-    * readers / time travel); the replaced small files go once no retained
-    * snapshot reads them ([[GraftStore.reclaim]]).
-    */
-  private def cleanupPointer(spark: SparkSession, root: String,
-      retainSnapshots: Int): Unit = {
-    val live = GraftStore.currentVersion(spark, root)
-    val versions = GraftStore.listVersions(spark, root)
-    GraftStore.reclaim(spark, root,
-      versions.filter(_ < live).takeRight(retainSnapshots).toSet + live)
-    // compaction absorbs append-dir files into version prefixes; once no
-    // retained snapshot references a staged dir it is reclaimable (the 24 h
-    // age guard protects writers staging concurrently with this commit)
-    GraftStore.sweepOrphanAppendDirs(spark, root, 24L * 3600 * 1000)
-  }
-
-  /** Atomic marker write (temp + rename): a torn marker would wedge every
-    * future run inside the recovery branch.
-    */
-  private def writeMarker(fs: FileSystem, marker: Path, rows: Long): Unit = {
-    val tmp = new Path(marker.getParent, marker.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, marker), s"atomic rename $tmp -> $marker failed")
-  }
-
-  private def readMarker(fs: FileSystem, marker: Path): Long = {
-    val in = fs.open(marker)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong
-    finally in.close()
-  }
+  /** Number of `col=` levels in a manifest partition path. */
+  private[logs] def leafDepth(rel: String): Int = if (rel.isEmpty) 0 else rel.count(_ == '/') + 1
 }

@@ -209,17 +209,6 @@ object DeleteVectors {
     GraftStore.atomicWriteBytes(spark, p, lines.mkString("\n").getBytes("UTF-8"))
   }
 
-  /** Carry the predecessor's sidecar into a staged version dir, keeping only
-    * vectors whose file is still part of the new snapshot (`keepKeys`) —
-    * rewritten/dropped files shed their vectors. Returns what was written.
-    */
-  def carryInto(spark: SparkSession, fromDir: String, toDir: String,
-      keepKeys: Set[String]): Map[String, Dv] = {
-    val kept = read(spark, fromDir).filter { case (k, _) => keepKeys(k) }
-    write(spark, toDir, kept)
-    kept
-  }
-
   // ---- read-side application --------------------------------------------
 
   private[graft] val PathCol = "__graft_dv_path"
@@ -343,16 +332,14 @@ object DeleteVectors {
     */
   private def materializeIfOverCap(spark: SparkSession, root: String,
       committed: DeleteCommitted, retainSnapshots: Int): DeleteCommitted = {
-    val (liveBefore, _, _) = liveVersion(spark, root)
-    val cols = partitionColsOf(
-      GraftStore.compositeEntries(spark, root, liveBefore)).getOrElse(
+    val cols = partitionColsOf(GraftStore.compositeEntries(spark, root,
+      GraftStore.currentVersion(spark, root))).getOrElse(
       throw new IllegalStateException(
         s"over-cap delete on $root needs partition dirs to rewrite " +
           "copy-on-write, but the layout is flat or mixed"))
     Compaction.compactHive(spark, root, partitionCols = cols,
       retainSnapshots = retainSnapshots)
-    val (live, _, _) = liveVersion(spark, root)
-    committed.copy(version = live, materialized = true)
+    committed.copy(version = GraftStore.currentVersion(spark, root), materialized = true)
   }
 
   /** Partition columns parsed from the layout's `k=v` chains — defined only
@@ -380,36 +367,11 @@ object DeleteVectors {
       retainSnapshots: Int,
       maxRanges: Int,
       leaseAttempts: Int,
-      allowOverCap: Boolean = false): (DeleteCommitted, Boolean) = {
-    commitId.foreach { id =>
-      require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
-    }
-    GraftStore.requireStore(spark, root)
-    MaintenanceLease.withLeaseRetry(spark, root, "delete", leaseAttempts) {
-      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
-        // A crash between the original over-cap vector commit and its
-        // copy-on-write compaction leaves the big sidecar live; re-report
-        // over-cap from the LIVE sidecar so the retry re-runs the deferred
-        // rewrite (idempotent — a materialized original reads back under
-        // cap and replays with over=false). See [[deleteWhere]]'s scaladoc
-        // for the current-sidecar/current-cap semantics. If the layout has
-        // since become flat/mixed (out-of-protocol mutation), compaction
-        // cannot route — skip the rewrite with a warning instead of
-        // throwing from an idempotent replay.
-        val (liveV, liveDir, _) = liveVersion(spark, root)
-        val over = allowOverCap && totalRanges(read(spark, liveDir)) > maxRanges
-        val routable = !over || partitionColsOf(
-          GraftStore.compositeEntries(spark, root, liveV)).isDefined
-        if (over && !routable)
-          log.warn(s"replayed delete on $root finds the live sidecar over " +
-            s"cap but the layout is flat or mixed — skipping the deferred " +
-            "copy-on-write rewrite; run Compaction.compactHive(full=true)")
-        return (DeleteCommitted(v, 0L, replayed = true), over && routable)
-      }
-      requireNoCompactMarker(spark, root)
-      val (cur, curDir, dirOf) = liveVersion(spark, root)
-      val entries = GraftStore.compositeEntries(spark, root, cur)
-      val prior = read(spark, curDir)
+      allowOverCap: Boolean = false): (DeleteCommitted, Boolean) =
+    GraftStore.commit[Unit, (DeleteCommitted, Boolean)](spark, root, "delete",
+        commitId, leaseAttempts, retainSnapshots, Right(())) { (live, _) =>
+      val entries = live.entries
+      val prior = live.vectors
       // matched rows: the live view (existing vectors applied — a re-delete
       // of already-deleted rows is a no-op) through the caller's matcher,
       // reduced to ONE driver row per touched FILE with the positions
@@ -422,72 +384,58 @@ object DeleteVectors {
       val matched =
         if (entries.isEmpty) Array.empty[(String, Long, Array[Byte])]
         else collectFileRanges(
-          matchRows(taggedLiveRead(spark, root, cur, prior, entries)))
-      val keyOfNorm = entries.map(e => (normalizePath(e.physical), e)).toMap
-      var newPositions = 0L
-      val additions: Map[String, Dv] = matched.map { case (path, n, packed) =>
-        val e = keyOfNorm.getOrElse(path, throw new IllegalStateException(
-          s"matched file $path is not in the snapshot inventory"))
-        newPositions += n
-        (e.key, Dv(e.len, unpackRanges(packed)))
-      }.toMap
+          matchRows(taggedLiveRead(spark, root, live.version, prior, entries)))
+      val (additions, newPositions) = vectorsOf(matched, entries)
       if (additions.isEmpty)
-        return (DeleteCommitted(cur, 0L, replayed = false), false)
-      val merged = (prior.keySet ++ additions.keySet).iterator.map { k =>
-        (prior.get(k), additions.get(k)) match {
-          case (Some(a), Some(b)) =>
-            require(a.len == b.len, s"vector length mismatch for '$k'")
-            (k, Dv(a.len, mergeRanges(a.ranges, b.ranges)))
-          case (Some(a), None) => (k, a)
-          case (None, Some(b)) => (k, b)
-          case _ => throw new IllegalStateException("unreachable")
-        }
-      }.toMap
-      val overCap = totalRanges(merged) > maxRanges
-      // the copy-on-write fallback needs a uniform k=v layout to route the
-      // rewrite through partition-scoped compaction — refuse BEFORE the
-      // commit lands when it can't run, so the caller never sees an
-      // exception with the delete already committed behind it
-      val canMaterialize = allowOverCap && partitionColsOf(entries).isDefined
-      require(!overCap || canMaterialize,
-        s"merged deletion vectors hold ${totalRanges(merged)} ranges " +
-          s"(> $maxRanges): this delete is too large for merge-on-read" +
-          (if (allowOverCap)
-            " and the layout is flat or mixed, so the copy-on-write " +
-              "fallback cannot route through partition compaction — " +
-              "rewrite the store instead (Compaction.compactHive(full=true))"
-          else
-            " — rewrite instead (Compaction.compactHive(full=true) " +
-              "materializes vectors, or filter-and-rewrite the store)"))
-      val next = cur + 1
-      val nextDir = dirOf(next)
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def abort(msg: String): Nothing = {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(msg)
+        Left((DeleteCommitted(live.version, 0L, replayed = false), false))
+      else {
+        val merged = mergeVectors(prior, additions)
+        val overCap = totalRanges(merged) > maxRanges
+        // the copy-on-write fallback needs a uniform k=v layout to route the
+        // rewrite through partition-scoped compaction — refuse BEFORE the
+        // commit lands when it can't run, so the caller never sees an
+        // exception with the delete already committed behind it
+        val canMaterialize = allowOverCap && partitionColsOf(entries).isDefined
+        require(!overCap || canMaterialize,
+          s"merged deletion vectors hold ${totalRanges(merged)} ranges " +
+            s"(> $maxRanges): this delete is too large for merge-on-read" +
+            (if (allowOverCap)
+              " and the layout is flat or mixed, so the copy-on-write " +
+                "fallback cannot route through partition compaction — " +
+                "rewrite the store instead (Compaction.compactHive(full=true))"
+            else
+              " — rewrite instead (Compaction.compactHive(full=true) " +
+                "materializes vectors, or filter-and-rewrite the store)"))
+        if (totalPositions(merged) != totalPositions(prior) + newPositions)
+          throw new IllegalStateException("deletion-vector bookkeeping mismatch; aborting")
+        // the commit moves no data: every file is carried, so the staged
+        // snapshot holds exactly the predecessor's stored rows
+        Right(GraftStore.Staged(
+          (DeleteCommitted(live.version + 1, newPositions, replayed = false), overCap),
+          rows = live.physicalRows(), manifest = live.carryAll(partitionDepthOf(live)),
+          vectors = Some(merged)))
       }
-      stageCarryAll(spark, root, cur, next, entries)
-      write(spark, nextDir, merged)
-      GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("delete",
-        commitId.getOrElse(java.util.UUID.randomUUID().toString),
-        System.currentTimeMillis()))
-      val nextEntries = GraftStore.compositeEntries(spark, root, next)
-      FileStats.refreshInto(spark, nextDir, nextEntries, FileStats.read(spark, curDir))
-      // metadata-only verification: the commit moves no data, so the staged
-      // snapshot must hold exactly the predecessor's physical rows, and its
-      // vector total must have grown by exactly the matched count
-      val prevPhys = FileStats.physicalRows(spark, root, cur, entries)
-      val stagedPhys = FileStats.physicalRows(spark, root, next, nextEntries)
-      if (stagedPhys != prevPhys)
-        abort(s"delete commit staged $stagedPhys physical rows, expected " +
-          s"$prevPhys; aborting with $curDir live")
-      if (totalPositions(merged) != totalPositions(prior) + newPositions)
-        abort("deletion-vector bookkeeping mismatch; aborting")
-      flip(spark, root, cur, next, retainSnapshots, abort)
-      commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      (DeleteCommitted(next, newPositions, replayed = false), overCap)
+    } match {
+      case Right(r) => r
+      case Left(v) =>
+        // A crash between the original over-cap vector commit and its
+        // copy-on-write compaction leaves the big sidecar live; re-report
+        // over-cap from the LIVE sidecar so the retry re-runs the deferred
+        // rewrite (idempotent — a materialized original reads back under
+        // cap and replays with over=false). See [[deleteWhere]]'s scaladoc
+        // for the current-sidecar/current-cap semantics. If the layout has
+        // since become flat/mixed (out-of-protocol mutation), compaction
+        // cannot route — skip the rewrite with a warning instead of
+        // throwing from an idempotent replay.
+        val over = allowOverCap && overLiveCap(spark, root, maxRanges)
+        val routable = !over || partitionColsOf(GraftStore.compositeEntries(
+          spark, root, GraftStore.currentVersion(spark, root))).isDefined
+        if (over && !routable)
+          log.warn(s"replayed delete on $root finds the live sidecar over " +
+            s"cap but the layout is flat or mixed — skipping the deferred " +
+            "copy-on-write rewrite; run Compaction.compactHive(full=true)")
+        (DeleteCommitted(v, 0L, replayed = true), over && routable)
     }
-  }
 
   /** MERGE/upsert keyed on `keyCols`: in ONE commit, rows of the live
     * snapshot whose key appears in `updates` are deleted (by vector) and
@@ -510,21 +458,14 @@ object DeleteVectors {
       leaseAttempts: Int = 10,
       materializeOverCap: Boolean = true): MergeCommitted = {
     require(keyCols.nonEmpty, "mergeByKey needs at least one key column")
-    commitId.foreach { id =>
-      require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
-    }
-    GraftStore.requireStore(spark, root)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pair = mergeCommit(spark, root, updates, keyCols, partitionCols,
-      commitId, retainSnapshots, maxRecordsPerFile, maxRanges, leaseAttempts,
-      materializeOverCap, fs)
-    val (committed, overCapOut) = pair
+    val (committed, overCapOut) = mergeCommit(spark, root, updates, keyCols,
+      partitionCols, commitId, retainSnapshots, maxRecordsPerFile, maxRanges,
+      leaseAttempts, materializeOverCap)
     if (overCapOut) {
       // same copy-on-write fallback as deleteWhere, after the lease releases
       Compaction.compactHive(spark, root, maxRecordsPerFile = maxRecordsPerFile,
         partitionCols = partitionCols, retainSnapshots = retainSnapshots)
-      val (live, _, _) = liveVersion(spark, root)
-      committed.copy(version = live, materialized = true)
+      committed.copy(version = GraftStore.currentVersion(spark, root), materialized = true)
     } else committed
   }
 
@@ -532,21 +473,12 @@ object DeleteVectors {
       updates: DataFrame, keyCols: Seq[String], partitionCols: Seq[String],
       commitId: Option[String], retainSnapshots: Int,
       maxRecordsPerFile: Long, maxRanges: Int, leaseAttempts: Int,
-      materializeOverCap: Boolean,
-      fs: org.apache.hadoop.fs.FileSystem): (MergeCommitted, Boolean) =
-    MaintenanceLease.withLeaseRetry(spark, root, "merge", leaseAttempts) {
-      commitId.flatMap(GraftStore.committedVersion(spark, root, _)).foreach { v =>
-        // see deleteCommit's replay note: a crash between the over-cap
-        // vector commit and its compaction must be repairable by retry
-        val (_, liveDir, _) = liveVersion(spark, root)
-        val over = materializeOverCap &&
-          totalRanges(read(spark, liveDir)) > maxRanges
-        return (MergeCommitted(v, 0L, 0L, replayed = true), over)
-      }
-      requireNoCompactMarker(spark, root)
-      val (cur, curDir, dirOf) = liveVersion(spark, root)
-      val entries = GraftStore.compositeEntries(spark, root, cur)
-      val prior = read(spark, curDir)
+      materializeOverCap: Boolean): (MergeCommitted, Boolean) =
+    GraftStore.commit[Unit, (MergeCommitted, Boolean)](spark, root, "merge",
+        commitId, leaseAttempts, retainSnapshots, Right(())) { (live, _) =>
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val entries = live.entries
+      val prior = live.vectors
       // 1. vector for matched keys: semi-join the live view against the
       //    update keys (size-guarded broadcast — update batches are small
       //    next to the store in the streaming-upsert pattern, but a BULK
@@ -562,24 +494,10 @@ object DeleteVectors {
       val matched =
         if (entries.isEmpty) Array.empty[(String, Long, Array[Byte])]
         else collectFileRanges(
-          taggedLiveRead(spark, root, cur, prior, entries)
+          taggedLiveRead(spark, root, live.version, prior, entries)
             .join(graft.plans.Hints.dimBroadcast(keys), keyCols, "left_semi"))
-      val keyOfNorm = entries.map(e => (normalizePath(e.physical), e)).toMap
-      var matchedRows = 0L
-      val additions: Map[String, Dv] = matched.map { case (path, n, packed) =>
-        val e = keyOfNorm.getOrElse(path, throw new IllegalStateException(
-          s"matched file $path is not in the snapshot inventory"))
-        matchedRows += n
-        (e.key, Dv(e.len, unpackRanges(packed)))
-      }.toMap
-      val merged = (prior.keySet ++ additions.keySet).iterator.map { k =>
-        (prior.get(k), additions.get(k)) match {
-          case (Some(a), Some(b)) => (k, Dv(a.len, mergeRanges(a.ranges, b.ranges)))
-          case (Some(a), None) => (k, a)
-          case (None, Some(b)) => (k, b)
-          case _ => throw new IllegalStateException("unreachable")
-        }
-      }.toMap
+      val (additions, matchedRows) = vectorsOf(matched, entries)
+      val merged = mergeVectors(prior, additions)
       val overCap = totalRanges(merged) > maxRanges
       require(!overCap || materializeOverCap,
         s"merged deletion vectors hold ${totalRanges(merged)} ranges " +
@@ -601,54 +519,64 @@ object DeleteVectors {
       val inserted = staged.iterator.map(_.rows).sum
       if (inserted == 0L && additions.isEmpty) {
         fs.delete(stagingPath, true)
-        return (MergeCommitted(cur, 0L, 0L, replayed = false), false)
+        Left((MergeCommitted(live.version, 0L, 0L, replayed = false), false))
+      } else {
+        // 3. one commit: carry everything + reference the staged files +
+        //    the merged vector sidecar
+        val depth = partitionDepthOf(live)
+        val added =
+          if (inserted == 0L) Nil
+          else Compaction.leavesOf(staged.map(_.key), depth).map((stageName, _))
+        require(inserted == 0L || added.nonEmpty,
+          "staged merge rows landed in no partition dirs — partitionCols " +
+            "mismatch with the store layout?")
+        Right(GraftStore.Staged(
+          (MergeCommitted(live.version + 1, matchedRows, inserted, replayed = false), overCap),
+          rows = live.physicalRows() + inserted,
+          manifest = live.carryAll(depth) ++ added,
+          vectors = Some(merged), stats = staged))
       }
-      val next = cur + 1
-      val nextDir = dirOf(next)
-      def abort(msg: String): Nothing = {
-        fs.delete(new Path(nextDir), true)
-        throw new IllegalStateException(msg)
-      }
-      // 3. one commit: carry everything + reference the staged files +
-      //    the merged vector sidecar
-      stageCarryAll(spark, root, cur, next, entries,
-        extraAppend = if (inserted > 0) Some((stageName, staged.map(_.key))) else None)
-      write(spark, nextDir, merged)
-      GraftStore.writeCommitInfo(spark, nextDir, GraftStore.CommitInfo("merge",
-        commitId.getOrElse(java.util.UUID.randomUUID().toString),
-        System.currentTimeMillis()))
-      val nextEntries = GraftStore.compositeEntries(spark, root, next)
-      FileStats.refreshInto(spark, nextDir, nextEntries,
-        FileStats.read(spark, curDir) ++ staged.map(s => s.key -> s))
-      val prevPhys = FileStats.physicalRows(spark, root, cur, entries)
-      val stagedPhys = FileStats.physicalRows(spark, root, next, nextEntries)
-      if (stagedPhys != prevPhys + inserted)
-        abort(s"merge staged $stagedPhys physical rows, expected " +
-          s"$prevPhys + $inserted; aborting with $curDir live")
-      flip(spark, root, cur, next, retainSnapshots, abort)
-      commitId.foreach(GraftStore.recordTxn(spark, root, _, next))
-      (MergeCommitted(next, matchedRows, inserted, replayed = false), overCap)
+    } match {
+      case Right(r) => r
+      // see deleteCommit's replay note: a crash between the over-cap
+      // vector commit and its compaction must be repairable by retry
+      case Left(v) => (MergeCommitted(v, 0L, 0L, replayed = true),
+        materializeOverCap && overLiveCap(spark, root, maxRanges))
     }
 
   // ---- shared commit plumbing -------------------------------------------
 
-  private def requireNoCompactMarker(spark: SparkSession, root: String): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(root, "_compact-inflight")),
-      s"$root has an in-flight compaction marker — run compaction (recovery) first")
+  /** The live sidecar holds more than `maxRanges` ranges. */
+  private def overLiveCap(spark: SparkSession, root: String, maxRanges: Int): Boolean =
+    totalRanges(read(spark, GraftStore.resolve(spark, root))) > maxRanges
+
+  /** Matched `(path, positions, packed ranges)` rows → vectors keyed by
+    * store-layout key, and their position total.
+    */
+  private def vectorsOf(matched: Array[(String, Long, Array[Byte])],
+      entries: Seq[GraftStore.FileEntry]): (Map[String, Dv], Long) = {
+    val keyOfNorm = entries.map(e => (normalizePath(e.physical), e)).toMap
+    val additions = matched.map { case (path, _, packed) =>
+      val e = keyOfNorm.getOrElse(path, throw new IllegalStateException(
+        s"matched file $path is not in the snapshot inventory"))
+      (e.key, Dv(e.len, unpackRanges(packed)))
+    }.toMap
+    (additions, matched.iterator.map(_._2).sum)
   }
 
-  private def liveVersion(spark: SparkSession,
-      root: String): (Int, String, Int => String) = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = GraftStore.currentVersion(spark, root)
-    // markerless staged-ahead prefixes are debris (we hold the lease)
-    GraftStore.listVersions(spark, root).filter(_ > cur).foreach { n =>
-      fs.delete(new Path(root, GraftStore.versionPrefix(n)), true)
-    }
-    (cur, s"$root/${GraftStore.versionPrefix(cur)}",
-      n => s"$root/${GraftStore.versionPrefix(n)}")
-  }
+  /** The live vectors with `additions` merged in, file by file. */
+  private def mergeVectors(prior: Map[String, Dv],
+      additions: Map[String, Dv]): Map[String, Dv] =
+    (prior.keySet ++ additions.keySet).iterator.map { k =>
+      (prior.get(k), additions.get(k)) match {
+        case (Some(a), Some(b)) =>
+          require(a.len == b.len, s"vector length mismatch for '$k'")
+          (k, Dv(a.len, mergeRanges(a.ranges, b.ranges)))
+        case (Some(a), None) => (k, a)
+        case (None, Some(b)) => (k, b)
+        case _ => throw new IllegalStateException("unreachable")
+      }
+    }.toMap
 
   /** The live snapshot with metadata columns retained and EXISTING vectors
     * applied — the frame delete/merge matching runs over.
@@ -703,57 +631,17 @@ object DeleteVectors {
       graft.expr.Compat.expression(col(PosCol)), bc)))
   }
 
-  /** Stage version `next` as a pure carry of version `cur` by manifest
-    * reference, plus optionally one staged-append holder (the merge's
-    * inserted files, by their staging-dir keys). `entries` is the live
-    * snapshot's listing, so the carry lists nothing again.
-    */
-  private def stageCarryAll(spark: SparkSession, root: String, cur: Int,
-      next: Int, entries: Seq[GraftStore.FileEntry],
-      extraAppend: Option[(String, Seq[String])] = None): Unit = {
-    val curPrefix = GraftStore.versionPrefix(cur)
-    val curDir = s"$root/$curPrefix"
-    val nextDir = s"$root/${GraftStore.versionPrefix(next)}"
-    val carried = GraftStore.readManifest(spark, curDir)
-    val ownKeys = entries.filter(_.legBase == curDir).map(_.key)
-    val depth = partitionDepthOf(ownKeys, carried)
-    val own = Compaction.leavesOf(ownKeys, depth).map((curPrefix, _))
-    val added = extraAppend.toSeq.flatMap { case (name, keys) =>
-      Compaction.leavesOf(keys, depth).map((name, _))
-    }
-    require(extraAppend.isEmpty || added.nonEmpty,
-      "staged merge rows landed in no partition dirs — partitionCols " +
-        "mismatch with the store layout?")
-    GraftStore.writeManifest(spark, nextDir,
-      (own ++ carried ++ added).sortBy(e => (e._2, e._1)))
-    GraftStore.carrySchemaOverlay(spark, curDir, nextDir)
-  }
-
   /** Partition depth of the store layout: the all-`col=` chain above the
     * live version's first own data file (by key). Delete/merge commits
     * carry at this granularity; a flat (unpartitioned) store carries depth 0.
     */
-  private def partitionDepthOf(ownKeys: Seq[String],
-      manifest: Seq[(String, String)]): Int = {
-    val own = ownKeys.minOption.fold(0)(
+  private def partitionDepthOf(live: GraftStore.Live): Int = {
+    val own = live.entries.filter(_.legBase == live.dir).map(_.key).minOption.fold(0)(
       _.stripPrefix("/").split('/').init.takeWhile(_.contains("=")).length)
     if (own > 0) own
     // own dir may be empty/manifest-only: measure a carried holder instead.
     // rel is the partition path at carry granularity — "" for a FLAT store
     // (depth 0), "k=v" for depth 1, "k=v/k2=v2" for depth 2
-    else manifest.headOption.fold(0) { case (_, rel) =>
-      if (rel.isEmpty) 0 else rel.count(_ == '/') + 1
-    }
-  }
-
-  private def flip(spark: SparkSession, root: String, cur: Int, next: Int,
-      retainSnapshots: Int, abort: String => Nothing): Unit = {
-    // compare-and-swap on conditional-write stores, re-check + atomic write
-    // elsewhere (see casWritePointer)
-    if (!GraftStore.casWritePointer(spark, root, cur, next))
-      abort(s"concurrent commit detected on $root during publish " +
-        s"(expected v$cur live) — staged version removed, retry")
-    GraftStore.reclaim(spark, root, GraftStore.listVersions(spark, root)
-      .filter(_ < next).takeRight(retainSnapshots).toSet + next)
+    else live.manifest.headOption.fold(0)(e => Compaction.leafDepth(e._2))
   }
 }

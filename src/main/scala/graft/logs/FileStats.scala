@@ -28,11 +28,11 @@ import org.apache.spark.sql.SparkSession
   * (conservative). Absent sidecar or absent line = file is kept: pruning is
   * an optimization, never a correctness gate.
   *
-  * Commit integration: maintenance and append commits call [[refreshInto]]
-  * with the PREDECESSOR version's stats — carried files (same key+len) reuse
-  * their lines with zero I/O, so an append commit footer-reads only the
-  * files it staged, and stats stay O(delta) per commit like the commits
-  * themselves.
+  * Commit integration: every commit ([[GraftStore.commit]]) calls
+  * [[refreshInto]] with the PREDECESSOR version's stats — carried files
+  * (same key+len) reuse their lines with zero I/O, so an append commit
+  * footer-reads only the files it staged, and stats stay O(delta) per
+  * commit like the commits themselves.
   */
 object FileStats {
 
@@ -434,35 +434,37 @@ object FileStats {
       prior: Map[String, FileStat] = Map.empty): Seq[FileStat] =
     refreshInto(spark, dir, listDirEntries(spark, dir), prior)
 
-  /** Exact row count of snapshot `n` from the stats sidecar alone — `Some`
-    * only when EVERY composite data file has a fresh line (key AND length
-    * match), in which case the sum of footer-derived per-file counts equals
-    * what a full `count()` would return. `None` → the caller falls back to
-    * counting. This is what makes commit-time count verification O(metadata
+  /** Exact row count of snapshot `n` from its stats sidecar alone, `None`
+    * when the sidecar is missing or stale ([[statsRows]]).
+    */
+  def rowCountFromStats(spark: SparkSession, root: String, n: Int): Option[Long] = {
+    val stats = read(spark, GraftStore.resolveVersion(spark, root, n))
+    if (stats.isEmpty) None
+    else statsRows(GraftStore.compositeEntries(spark, root, n), stats)
+  }
+
+  /** The rows of `files` summed from `stats` — `Some` only when EVERY file
+    * has a fresh line (key AND length match), in which case the sum of
+    * footer-derived per-file counts equals what a full `count()` would
+    * return. This is what makes commit-time count verification O(metadata
     * objects) instead of O(file footers) — the difference between a listing
     * and 10⁸ footer opens on a 100 TB store.
     */
-  def rowCountFromStats(spark: SparkSession, root: String, n: Int,
-      files: Option[Seq[GraftStore.FileEntry]] = None): Option[Long] = {
-    val dir = GraftStore.resolveVersion(spark, root, n)
-    val stats = read(spark, dir)
-    if (stats.isEmpty) return None
-    val entries = files.getOrElse(GraftStore.compositeEntries(spark, root, n))
-    if (entries.forall(e => stats.get(e.key).exists(_.len == e.len)))
-      Some(entries.iterator.map(e => stats(e.key).rows).sum)
-    else None
-  }
+  private def statsRows(files: Seq[GraftStore.FileEntry],
+      stats: Map[String, FileStat]): Option[Long] =
+    Option.when(files.forall(e => stats.get(e.key).exists(_.len == e.len)))(
+      files.iterator.map(e => stats(e.key).rows).sum)
 
   /** Stored row count of snapshot `n` (deletion vectors not applied) over
-    * its already-listed `files`: 0 with no files, the sidecar's sum when it
-    * covers every file, else a scan. Commits verify a staged snapshot with
-    * it.
+    * its already-listed `files`: 0 with no files, the sum of `stats` when
+    * it has a fresh line for every file, else a scan. Commits verify a
+    * staged snapshot with it.
     */
   def physicalRows(spark: SparkSession, root: String, n: Int,
-      files: Seq[GraftStore.FileEntry]): Long =
+      files: Seq[GraftStore.FileEntry], stats: Map[String, FileStat]): Long =
     if (files.isEmpty) 0L
-    else rowCountFromStats(spark, root, n, Some(files))
-      .getOrElse(GraftStore.readVersionPhysical(spark, root, n, Some(files)).count())
+    else statsRows(files, stats).getOrElse(
+      GraftStore.readVersionPhysical(spark, root, n, Some(files)).count())
 
   /** Recompute the live snapshot's sidecar from scratch-or-prior — the
     * backfill/repair entry point (pre-stats stores, foreign writers). It

@@ -11,11 +11,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * single-object PUT IS atomic; filesystems have an atomic overwrite-rename.
   * So the store root holds version prefixes (`<root>/v000001`, `v000002`,
   * ...) plus one tiny pointer object `<root>/_current` naming the live
-  * version; a maintenance commit writes the whole replacement tree under
-  * the next prefix — invisible to readers, who only ever list the
-  * pointed-at prefix — verifies it, then flips the pointer with one atomic
-  * write ([[writePointer]]). Readers resolving at any instant get the
-  * complete old tree or the complete new tree. This is the "current pointer"
+  * version; every store change ([[commit]], the one commit protocol)
+  * stages the next version under the next prefix — invisible to readers,
+  * who only ever list the pointed-at prefix — verifies it, then flips the
+  * pointer with one atomic compare-and-swap write ([[casWritePointer]]).
+  * Readers resolving at any instant get the complete old tree or the
+  * complete new tree. This is the "current pointer"
   * commit (Iceberg's version-hint file); since round 6 a version may also
   * carry a partition→version manifest ([[readManifest]]) so maintenance
   * commits stage only DIRTY partitions — partition listing still comes from
@@ -229,7 +230,7 @@ object GraftStore {
     * atomic primitive; on filesystems `create(overwrite)` truncates first —
     * a crash mid-write would leave a torn manifest whose missing carried
     * entries make vacuum delete live data — so there the write goes through
-    * temp + rename like the compaction marker.
+    * temp + rename ([[atomicWriteBytes]]).
     */
   def writeManifest(spark: SparkSession, versionDir: String,
       entries: Seq[(String, String)]): Unit = {
@@ -283,14 +284,6 @@ object GraftStore {
       .take(16).map(b => f"${b & 0xff}%02x").mkString
   }
 
-  private[logs] def recordTxn(spark: SparkSession, root: String, id: String,
-      version: Int): Unit = {
-    val dir = txnDir(root)
-    fsOf(spark, dir).mkdirs(dir)
-    atomicWriteBytes(spark, new Path(dir, id),
-      version.toString.getBytes("UTF-8"))
-  }
-
   private def txnVersion(spark: SparkSession, root: String,
       id: String): Option[Int] = {
     val p = new Path(txnDir(root), id)
@@ -303,23 +296,6 @@ object GraftStore {
       finally in.close()
     }
   }
-
-  /** The already-committed version for commit id `id`, if any: the durable
-    * ledger first — it survives snapshot retention, so a replay detected
-    * there is safe even after interleaved maintenance reclaimed the version
-    * that carried the commit record — then the retained versions' commit
-    * records. A hit found only by the scan (a pre-ledger store, or a crash
-    * between flip and marker) is written back to the ledger.
-    */
-  private[logs] def committedVersion(spark: SparkSession, root: String,
-      id: String): Option[Int] =
-    txnVersion(spark, root, id).orElse {
-      val scanned = listVersions(spark, root)
-        .filter(n => readCommitInfo(spark, s"$root/${versionPrefix(n)}").exists(_.id == id))
-        .maxOption
-      scanned.foreach(v => recordTxn(spark, root, id, v))
-      scanned
-    }
 
   /** Atomic metadata-object write — single PUT on object stores, temp +
     * overwrite-rename elsewhere (see [[writeManifest]]'s rationale): a
@@ -391,20 +367,10 @@ object GraftStore {
     * that physically lack an overlay column read it as NULL (the
     * Iceberg/Delta add-column contract — null backfill, no rewrite); files
     * written after the evolution carry the column physically and read it
-    * as-is. Carried forward by every commit so evolved columns survive
-    * appends and maintenance; no-op when the source version has no overlay.
+    * as-is. Carried forward by every commit ([[commit]]) so evolved
+    * columns survive appends and maintenance.
     */
   val SchemaOverlayName = "_graft_schema"
-
-  def carrySchemaOverlay(spark: SparkSession, fromDir: String, toDir: String): Unit = {
-    val src = new Path(fromDir, SchemaOverlayName)
-    val fs = fsOf(spark, src)
-    if (!fs.exists(src)) return
-    val in = fs.open(src)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val out = fs.create(new Path(toDir, SchemaOverlayName), true)
-    try out.write(bytes) finally out.close()
-  }
 
   /** `(column, typeDDL)` overlay entries of a version dir, in add order. */
   def readSchemaOverlay(spark: SparkSession, versionDir: String): Seq[(String, String)] = {
@@ -506,7 +472,8 @@ object GraftStore {
     * mtimes (which coarse-mtime filesystems, copies, and backup restores
     * all scramble).
     */
-  def writeCommitInfo(spark: SparkSession, versionDir: String, info: CommitInfo): Unit = {
+  private def writeCommitInfo(spark: SparkSession, versionDir: String,
+      info: CommitInfo): Unit = {
     val p = new Path(versionDir, CommitInfoName)
     val out = fsOf(spark, p).create(p, true)
     try out.write(s"${info.op}\t${info.id}\t${info.millis}".getBytes("UTF-8"))
@@ -565,7 +532,7 @@ object GraftStore {
   /** Physical directory of a manifest holder: the version prefix dir for
     * `vNNNNNN` holders, `<root>/<holder>` for staged append dirs.
     */
-  private def holderDir(root: String, holder: String): String =
+  private[logs] def holderDir(root: String, holder: String): String =
     holderVersion(holder).map(versionDir(root, _)).getOrElse(s"$root/$holder")
 
   /** Snapshot `n`'s rows: the scan of the snapshot relation
@@ -1023,6 +990,170 @@ object GraftStore {
       case _ =>
         if (currentVersion(spark, root) != expected) false
         else { writePointer(spark, root, next); true }
+    }
+  }
+
+  /** The live snapshot a [[commit]] stages its successor from, listed once:
+    * its version, its directory and its data files, own and carried. The
+    * sidecars are read on first use.
+    */
+  final class Live private[GraftStore] (spark: SparkSession, root: String,
+      val version: Int, val entries: Seq[FileEntry]) {
+    val prefix: String = versionPrefix(version)
+    val dir: String = versionDir(root, version)
+    /** Where the successor is staged; an operation may write data here. */
+    val nextDir: String = versionDir(root, version + 1)
+    lazy val manifest: Seq[(String, String)] = readManifest(spark, dir)
+    lazy val overlay: Seq[(String, String)] = readSchemaOverlay(spark, dir)
+    lazy val vectors: Map[String, DeleteVectors.Dv] = DeleteVectors.read(spark, dir)
+    lazy val stats: Map[String, FileStats.FileStat] = FileStats.read(spark, dir)
+
+    /** Every live partition as a manifest entry: the version's own
+      * `depth`-level partition dirs, then what its manifest carries.
+      */
+    def carryAll(depth: Int): Seq[(String, String)] =
+      Compaction.leavesOf(entries.filter(_.legBase == dir).map(_.key), depth)
+        .map((prefix, _)) ++ manifest
+
+    /** Stored rows of `files` (deletion vectors not applied). */
+    def physicalRows(files: Seq[FileEntry] = entries): Long =
+      FileStats.physicalRows(spark, root, version, files, stats)
+  }
+
+  /** What one operation stages as the next version.
+    *
+    * @param value what [[commit]] returns once the version is live
+    * @param rows the stored rows (deletion vectors not applied) the staged
+    *   snapshot must hold
+    * @param manifest the `(holder, partition)` entries the version carries
+    * @param overlay the version's schema overlay; `None` carries the live one
+    * @param vectors the version's deletion vectors; `None` carries the live
+    *   ones. Vectors of files the snapshot no longer holds are dropped.
+    * @param stats stats lines of the files the operation staged, so the
+    *   sidecar refresh reads none of their footers again
+    * @param check runs on the staged snapshot's files just before the flip;
+    *   a throw aborts the commit
+    * @param sweepAppendDirs after the reclaim, still under the lease, also
+    *   delete the `_append-*` dirs no version references any more
+    *   ([[sweepOrphanAppendDirs]], 24 h age guard) — what a compaction that
+    *   absorbed them leaves behind
+    */
+  final case class Staged[T](value: T, rows: Long, manifest: Seq[(String, String)],
+      overlay: Option[Seq[(String, String)]] = None,
+      vectors: Option[Map[String, DeleteVectors.Dv]] = None,
+      stats: Seq[FileStats.FileStat] = Nil,
+      check: Seq[FileEntry] => Unit = _ => (),
+      sweepAppendDirs: Boolean = false)
+
+  /** THE commit protocol: append, delete, merge, compaction, retention and
+    * add-column all change a store through it, and `stage` decides only
+    * what the next version holds. In order:
+    *
+    *  1. validate `commitId` and require a store. A commit id already
+    *     committed returns `Left(version)` and writes nothing: the
+    *     `_graft_txns` ledger answers first (it survives snapshot
+    *     retention), then the commit records of the retained versions up to
+    *     the live one, a hit there being written back to the ledger;
+    *  2. `prepare` runs outside the lease (an append stages its data there);
+    *     `Left` ends the commit with that value;
+    *  3. take the [[MaintenanceLease]] (`leaseAttempts` tries), check for a
+    *     replay again, and delete the version dirs ahead of the pointer:
+    *     no healthy commit stages without the lease, so they are debris of
+    *     a crashed one;
+    *  4. list the live snapshot once ([[Live]]) and hand it to `stage`,
+    *     which may write data into [[Live.nextDir]]; `Left` ends the commit
+    *     with nothing staged;
+    *  5. write the next version's manifest, schema overlay, commit record
+    *     (`commitId`, or a fresh UUID), deletion vectors and stats; list it,
+    *     and require [[Staged.rows]] stored rows, then [[Staged.check]];
+    *  6. flip `_current` with one compare-and-swap ([[casWritePointer]]);
+    *  7. record `commitId` in the ledger, and [[reclaim]] what neither the
+    *     new version nor the newest `retain` versions below it read (plus
+    *     the orphaned append dirs, when [[Staged.sweepAppendDirs]]).
+    *
+    * A failure in 4–5 or a lost flip deletes the staged version. A crash,
+    * which cleans nothing up, leaves the old snapshot live before the flip
+    * and the new one after it; either way the next commit goes through
+    * (step 3 sweeps a staged version, step 1 finds a flipped but unrecorded
+    * commit id).
+    */
+  def commit[P, T](spark: SparkSession, root: String, op: String,
+      commitId: Option[String], leaseAttempts: Int, retain: Int,
+      prepare: => Either[T, P])(
+      stage: (Live, P) => Either[T, Staged[T]]): Either[Int, T] = {
+    commitId.foreach { id =>
+      require(id.matches("[A-Za-z0-9._-]+"), s"commit id '$id' must be [A-Za-z0-9._-]+")
+    }
+    requireStore(spark, root)
+    val fs = fsOf(spark, new Path(root))
+    def recordTxn(id: String, version: Int): Unit = {
+      fs.mkdirs(txnDir(root))
+      atomicWriteBytes(spark, new Path(txnDir(root), id),
+        version.toString.getBytes("UTF-8"))
+    }
+    def replayed(): Option[Int] = commitId.flatMap { id =>
+      txnVersion(spark, root, id).orElse {
+        val cur = currentVersion(spark, root)
+        val hit = listVersions(spark, root).filter(_ <= cur)
+          .filter(n => readCommitInfo(spark, versionDir(root, n)).exists(_.id == id))
+          .maxOption
+        hit.foreach(recordTxn(id, _))
+        hit
+      }
+    }
+    replayed().foreach(v => return Left(v))
+    val prepared = prepare match {
+      case Left(t) => return Right(t)
+      case Right(p) => p
+    }
+    MaintenanceLease.withLeaseRetry(spark, root, op, leaseAttempts) {
+      replayed().foreach(v => return Left(v))
+      val cur = currentVersion(spark, root)
+      listVersions(spark, root).filter(_ > cur)
+        .foreach(n => fs.delete(new Path(versionDir(root, n)), true))
+      val live = new Live(spark, root, cur, compositeEntries(spark, root, cur))
+      val next = cur + 1
+      val staged = try {
+        val s = stage(live, prepared) match {
+          case Left(t) => return Right(t)
+          case Right(s) => s
+        }
+        if (s.manifest.nonEmpty)
+          writeManifest(spark, live.nextDir, s.manifest.sortBy(e => (e._2, e._1)))
+        val overlay = s.overlay.getOrElse(live.overlay)
+        if (overlay.nonEmpty) writeSchemaOverlay(spark, live.nextDir, overlay)
+        writeCommitInfo(spark, live.nextDir, CommitInfo(op,
+          commitId.getOrElse(java.util.UUID.randomUUID().toString),
+          System.currentTimeMillis()))
+        val nextEntries = compositeEntries(spark, root, next)
+        val keys = nextEntries.map(_.key).toSet
+        DeleteVectors.write(spark, live.nextDir,
+          s.vectors.getOrElse(live.vectors).filter { case (k, _) => keys(k) })
+        val stats = FileStats.refreshInto(spark, live.nextDir, nextEntries,
+          live.stats ++ s.stats.map(st => st.key -> st))
+        val rows = FileStats.physicalRows(spark, root, next, nextEntries,
+          stats.map(st => st.key -> st).toMap)
+        if (rows != s.rows)
+          throw new IllegalStateException(s"$op staged $rows rows, expected " +
+            s"${s.rows}; aborting with ${live.dir} live")
+        s.check(nextEntries)
+        s
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          try fs.delete(new Path(live.nextDir), true)
+          catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
+      if (!casWritePointer(spark, root, cur, next)) {
+        fs.delete(new Path(live.nextDir), true)
+        throw new IllegalStateException(s"concurrent commit detected on $root " +
+          s"during $op publish (expected v$cur live); staged version removed — retry")
+      }
+      commitId.foreach(recordTxn(_, next))
+      reclaim(spark, root,
+        listVersions(spark, root).filter(_ < next).takeRight(retain).toSet + next)
+      if (staged.sweepAppendDirs) sweepOrphanAppendDirs(spark, root, 24L * 3600 * 1000)
+      Right(staged.value)
     }
   }
 

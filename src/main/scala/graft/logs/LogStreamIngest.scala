@@ -271,12 +271,14 @@ object LogStreamIngest {
     * decoupled from the streaming checkpoint: replaying a batch after a crash
     * re-runs a no-op, and events that arrived while the loop was down are
     * still found because the ledger — not the checkpoint — is the source of
-    * truth.
+    * truth. Like finalize, it refuses a versioned store root
+    * ([[StreamFinalize.requirePositional]]) before it starts.
     */
   def startAutoFinalize(spark: SparkSession, closeEventsRoot: String,
       storeRoot: String, checkpoint: String,
       triggerInterval: String = "60 seconds",
       maxRecordsPerFile: Long = 4000000L): StreamingQuery = {
+    StreamFinalize.requirePositional(spark, storeRoot)
     // the detector sink creates this dir on its first commit; create it up
     // front so the finalize loop can start before any stream has closed
     val root = new org.apache.hadoop.fs.Path(closeEventsRoot)

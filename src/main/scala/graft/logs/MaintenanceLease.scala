@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Mutual exclusion for store maintenance (compaction, retention, vacuum).
   *
-  * The commit protocols in [[Compaction]] are atomic against READERS, but
-  * two concurrent MAINTAINERS on one root could both observe no in-flight
-  * marker, both stage the next version, and race the pointer flip — or
-  * retention could delete partitions out of a tree a compactor is staging.
+  * The commit protocol ([[GraftStore.commit]]) is atomic against READERS,
+  * but two concurrent committers on one root could both stage the next
+  * version and race the pointer flip — or one could sweep the other's
+  * staged version as crash debris.
   * A lease object acquired with an if-absent create closes that: exactly
   * one maintainer holds the root at a time; a second aborts fast and
   * cleanly before touching anything.
@@ -31,9 +31,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * `create(p, overwrite=false)` is check-then-put, not a conditional PUT —
   * two maintainers racing within the HEAD/PUT window can BOTH acquire. The
   * lease there is best-effort contention avoidance, not the safety
-  * mechanism: correctness still rests on the marker + single-PUT pointer
-  * flip protocol (a double commit serializes on the flip; the loser's
-  * staged prefix becomes markerless debris, never a torn store). On stores
+  * mechanism: correctness still rests on the staged-version + single-PUT
+  * pointer flip protocol (a double commit serializes on the flip; the
+  * loser's staged prefix becomes debris, never a torn store). On stores
   * with conditional writes (S3 `If-None-Match`, GCS preconditions) a
   * vendor `FileSystem` whose `create(overwrite=false)` maps to them makes
   * the lease exact with no code change here.

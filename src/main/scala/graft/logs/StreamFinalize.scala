@@ -55,8 +55,20 @@ object StreamFinalize {
   private val ledgerSchema = StructType(
     closeEventSchema.filter(f => ledgerKey.contains(f.name)))
 
+  /** Refuses, with an `IllegalArgumentException` naming `root`, a
+    * versioned store: close-event finalize rewrites a positional lake's
+    * stream subtrees in place, and would find none under a store's version
+    * dirs — yet record every event as finalized. Stores are compacted by
+    * [[Compaction.compactHive]] (`AdminCli compact`/`maintain`).
+    */
+  private[logs] def requirePositional(spark: SparkSession, root: String): Unit =
+    require(!GraftStore.isPointerStore(spark, root),
+      s"$root is a versioned store: close-event finalize rewrites positional " +
+        "lakes only — compact a store with AdminCli compact or maintain")
+
   /** Compact every closed stream recorded under `closeEventsRoot` that the
-    * ledger has not seen yet. Returns the finalized stream keys.
+    * ledger has not seen yet. Returns the finalized stream keys. The store
+    * must be a positional lake ([[requirePositional]]).
     *
     * `maxStreams` bounds one run's driver-side working set (the pending key
     * list is collected): a long-lived deployment accumulates closed streams
@@ -69,6 +81,7 @@ object StreamFinalize {
   def finalizeClosed(spark: SparkSession, closeEventsRoot: String,
       storeRoot: String, maxRecordsPerFile: Long = 4000000L,
       maxStreams: Int = 10000): Seq[(String, String, String, String)] = {
+    requirePositional(spark, storeRoot)
     val fs = new Path(closeEventsRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ledgerPath = s"${closeEventsRoot.stripSuffix("/")}/_finalized"
     if (!fs.exists(new Path(closeEventsRoot))) return Seq.empty

@@ -18,6 +18,11 @@ import graft.GraftSession
   * `--run-seconds=N` bounds the run for drives/fixtures; on exit (either
   * path) the queries stop through Spark's graceful stop — committed
   * batches stay committed, the K6 contract.
+  *
+  * `--root` is a versioned store (read it with `GraftStore.readStore`).
+  * Its small files are compacted with `AdminCli compact` or `maintain`;
+  * `AdminCli finalize`/`watch` rewrite positional lakes only and refuse
+  * this root.
   */
 object StreamIngestCli {
   def main(args: Array[String]): Unit = {

@@ -428,19 +428,19 @@ class IncrementalCompactionSpec extends SparkSpec {
       .filter($"date".cast("string") === dates.head).count() == 0)
   }
 
-  test("retention refuses hazardous states: pending recovery, all-expired") {
+  test("retention refuses hazardous states: all-expired; commits over crash debris") {
     val root = Files.createTempDirectory("graft-retguard").resolve("store").toString
     val df = fixture().limit(500)
     LogIngest.writeHive(df, root, partitionCols = parts)
     val total = GraftStore.readStore(spark, root).count()
-    // a crashed compaction's marker means recovery will re-promote the
-    // PRE-retention tree — running retention now would be silently reverted
-    val marker = Paths.get(root, "_compact-inflight")
-    Files.writeString(marker, total.toString)
-    val e1 = intercept[IllegalArgumentException](
-      Retention.enforceHive(spark, root, "2099-01-01"))
-    assert(e1.getMessage.contains("in-flight compaction"))
-    Files.delete(marker)
+    // a crashed compaction's state: v2 fully staged, the pointer never
+    // flipped — debris no recovery re-promotes, so retention sweeps it
+    ConfScope.withSessionConf(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
+      s.read.parquet(GraftStore.resolve(spark, root)).repartition(parts.map(col): _*)
+        .write.partitionBy(parts: _*).mode("overwrite")
+        .parquet(s"$root/${GraftStore.versionPrefix(2)}")
+    }
     // expiring EVERY partition would commit a dataless store whose reads
     // all fail — refuse loudly, store untouched
     val e3 = intercept[IllegalArgumentException](
@@ -451,7 +451,12 @@ class IncrementalCompactionSpec extends SparkSpec {
     val dates = df.select($"date").distinct().as[String].collect().sorted
     val dropped = Retention.enforceHive(spark, root, dates(1))
     assert(dropped.nonEmpty)
-    assert(GraftStore.readStore(spark, root).count() < total)
+    assert(GraftStore.currentVersion(spark, root) == 2)
+    assert(GraftStore.readStore(spark, root).count() ==
+      total - df.filter($"date" === dates.head).count())
+    // the commit is a manifest over v1's partitions: the debris is gone
+    assert(!Files.walk(Paths.get(root, GraftStore.versionPrefix(2))).toArray
+      .exists(_.toString.endsWith(".parquet")))
   }
 
   test("local disk: a writer landing mid-commit aborts the compaction, loses nothing") {
@@ -483,7 +488,6 @@ class IncrementalCompactionSpec extends SparkSpec {
       assert(GraftStore.currentVersion(spark, root) == 1)
       assert(GraftStore.readStore(spark, root).count() == before + appended)
       assert(GraftStore.listVersions(spark, root) == Seq(1))
-      assert(!Files.exists(Paths.get(root, "_compact-inflight")))
     } finally Compaction.onBeforeCommit = () => ()
     // with the writer quiescent the same compaction commits cleanly
     Compaction.compactHive(spark, root, partitionCols = parts)
@@ -520,8 +524,6 @@ class IncrementalCompactionSpec extends SparkSpec {
         assert(GraftStore.currentVersion(spark, root) == 1)
         assert(GraftStore.listVersions(spark, root) == Seq(1))
         assert(GraftStore.readStore(spark, root).count() == before + 50)
-        assert(!new org.apache.hadoop.fs.Path(root).getFileSystem(hc)
-          .exists(new org.apache.hadoop.fs.Path(root, "_compact-inflight")))
       } finally Compaction.onBeforeCommit = () => ()
       // quiescent re-run carries the writer's new partition into v2
       Compaction.compactHive(spark, root, partitionCols = parts)

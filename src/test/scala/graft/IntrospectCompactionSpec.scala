@@ -149,7 +149,7 @@ class IntrospectCompactionSpec extends SparkSpec {
     assert(GraftStore.readStore(spark, root).count() == df.count())
   }
 
-  test("versioned store recovers an interrupted commit from marker + staged version") {
+  test("versioned store recovers an interrupted commit") {
     val root = Files.createTempDirectory("graft-compact5").resolve("store").toString
     val parts = Seq("cluster", "namespace", "date")
     val df = Tables.events(spark, sf).limit(2000)
@@ -164,30 +164,31 @@ class IntrospectCompactionSpec extends SparkSpec {
     GraftStore.init(spark, root)
     appendRaw(df, root, parts)
     val expected = GraftStore.readStore(spark, root).count()
-    val marker = java.nio.file.Paths.get(root, "_compact-inflight")
     def versionDir(n: Int) = s"$root/${GraftStore.versionPrefix(n)}"
-    // crash A: next version staged + marker written, but the pointer never
-    // flipped (inference off on a clone, like the real staging write)
+    // crash A: next version fully staged, but the pointer never flipped
+    // (inference off on a clone, like the real staging write). The staged
+    // version is debris: the next compaction sweeps it and commits its own
+    // (full: the store may already be compact)
     ConfScope.withSessionConf(spark,
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
       s.read.parquet(versionDir(1)).repartition(parts.map(col): _*)
         .write.partitionBy(parts: _*).mode("overwrite").parquet(versionDir(2))
     }
-    Files.writeString(marker, expected.toString)
-    Compaction.compactHive(spark, root, partitionCols = parts)
+    Compaction.compactHive(spark, root, partitionCols = parts, full = true)
     assert(GraftStore.readStore(spark, root).count() == expected)
     assert(GraftStore.currentVersion(spark, root) == 2)
-    assert(!marker.toFile.exists)
     assert(GraftStore.listVersions(spark, root).max == 2, "nothing staged ahead")
-    // crash B: pointer flipped to a new version but the marker never cleared
+    // crash B: pointer flipped to a new version before anything after the
+    // flip ran — the new snapshot is complete, and a compaction finds
+    // nothing to do
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(versionDir(2)), new java.io.File(versionDir(3)))
     GraftStore.writePointer(spark, root, 3)
-    Files.writeString(marker, expected.toString)
     Compaction.compactHive(spark, root, partitionCols = parts)
     assert(GraftStore.currentVersion(spark, root) == 3)
-    assert(!marker.toFile.exists)
-    // grace contract: v2 (the replaced current) survives, v1 is reclaimed
+    // grace contract: v2 (the replaced current) survives the reclaim the
+    // crash skipped, v1 does not
+    GraftStore.vacuum(spark, root, retain = 1)
     assert(GraftStore.listVersions(spark, root) == Seq(2, 3))
     assert(GraftStore.readStore(spark, root).count() == expected)
   }

@@ -127,7 +127,7 @@ class PointerStoreSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("pointer store crash recovery: marker resumes the flip; debris is swept") {
+  test("pointer store crash recovery: staged debris is swept and the store recommits") {
     val srv = new graft.sources.S3StubServer()
     try {
       val hc = spark.sparkContext.hadoopConfiguration
@@ -139,26 +139,22 @@ class PointerStoreSpec extends SparkSpec {
       val df = fixture()
       LogIngest.writeHive(df, root, partitionCols = parts)
       val expected = spark.read.parquet(GraftStore.resolve(spark, root)).count()
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-      // crash A: v2 fully staged + marker written, pointer never flipped
+      // crash A: v2 fully staged, pointer never flipped; the next
+      // compaction sweeps it and commits its own v2 (full: the store may
+      // already be compact)
       ConfScope.withSessionConf(spark,
         "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") { s =>
         s.read.parquet(s"$root/v000001").repartition(parts.map(col): _*)
           .write.partitionBy(parts: _*).mode("overwrite").parquet(s"$root/v000002")
       }
-      val marker = new org.apache.hadoop.fs.Path(root, "_compact-inflight")
-      val out = fs.create(marker, true)
-      try out.write(expected.toString.getBytes("UTF-8")) finally out.close()
-      Compaction.compactHive(spark, root, partitionCols = parts)
+      Compaction.compactHive(spark, root, partitionCols = parts, full = true)
       assert(GraftStore.currentVersion(spark, root) == 2)
       assert(GraftStore.listVersions(spark, root) == Seq(1, 2))
       assert(spark.read.parquet(GraftStore.resolve(spark, root)).count() == expected)
-      assert(!fs.exists(marker))
 
-      // crash B: debris — a staged v3 with NO marker (died mid-stage, maybe
-      // incomplete); a fresh compaction must sweep it and commit its own
+      // crash B: debris — a staged v3 (died mid-stage, maybe incomplete);
+      // a fresh compaction must sweep it and commit its own
       // (full=true: v2 is already compact, so the incremental default would
       // correctly no-op after sweeping — force a rewrite to prove recommit)
       spark.read.parquet(s"$root/v000002").limit(10)
